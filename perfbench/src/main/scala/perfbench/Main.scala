@@ -10,7 +10,7 @@ import java.io.File
 import java.nio.file.{Files, Paths}
 import scala.collection.mutable.ArrayBuffer
 
-/** The benchmark driver: one workload, one seed, one process.
+/** The benchmark program: one workload, one seed, one process.
   *
   * {{{
   * perfbench.Main --workload ask|curate --seed N --seconds S --trace 0|1
