@@ -31,7 +31,16 @@ PINS = os.path.join(BENCH, "pins.json")
 DATA = os.environ.get("PERFBENCH_DATA", os.path.join(os.path.expanduser("~"), "testdata"))
 
 BUILD_TIMEOUT_S = 700
-RUN_TIMEOUT_S = 170
+
+
+def run_timeout(seconds, trace):
+    """Seconds a run may take before it is killed: JVM start, the cold
+    set-up and cold pass, and the warm set-ups take up to 60 s on a 4-core
+    host and get twice that; the measured passes get three times
+    `seconds`. A traced run adds traced-only operations to its traced
+    passes and, on curate, a count pass, so its measured part gets 1.6
+    times more."""
+    return 120 + 3 * seconds * (1.6 if trace else 1.0)
 
 # Spark on JDK 17 outside spark-submit needs these (the program's build.sbt
 # passes the same list to its forked runs).
@@ -106,10 +115,12 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", required=True, choices=["ask", "curate"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=20)
+    ap.add_argument("--seconds", type=int, help="measured time; required unless --pin")
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--pin", action="store_true", help="store result hashes instead of measuring")
     a = ap.parse_args()
+    if not a.pin and (a.seconds is None or a.seconds < 1):
+        ap.error("--seconds N (N >= 1) is required")
 
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt")) and os.path.isdir(os.path.join(ROOT, "src", "main"))):
         fail(f"no program sources next to {BENCH}: run from a full checkout of the repository")
@@ -135,11 +146,11 @@ def main():
            "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
            "-Dderby.system.home=" + run_dir,
            "-cp", cp, "perfbench.Main",
-           "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
+           "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds or 1),
            "--trace", str(a.trace), "--data", DATA, "--work", run_dir, "--pins", PINS]
     if a.pin:
         cmd.append("--pin")
-    rc = run_child(cmd, cwd=run_dir, timeout=RUN_TIMEOUT_S)
+    rc = run_child(cmd, cwd=run_dir, timeout=run_timeout(a.seconds or 1, a.trace))
     # keep the trace of the last run next to the build
     for f in glob.glob(os.path.join(run_dir, "trace-*.jsonl")):
         shutil.copy(f, WORK)

@@ -48,10 +48,14 @@ final class Layers(run: Run) {
     median(setupOps.map(o => selfOf(Set(o), name)))
 
   private val tracedPasses = run.passes.filter(_._2)
-  private val untracedWalls = run.passes.filter(p => !p._2 && p._1 >= Run.FirstMeasured).map(p => secs(p._4 - p._3))
+  // the workload's own operations only: traced-only ones run in every pass
+  // of a traced run, but their time is not what tracing added
+  private def opTime(pass: Int): Double =
+    run.records.filter(r => r.pass == pass && run.regular(r.key)).map(_.latency).sum
+  private val untracedTimes = run.passes.filter(p => !p._2 && p._1 >= Run.FirstMeasured).map(p => opTime(p._1))
   private val overhead =
-    if (untracedWalls.isEmpty) 0.0
-    else median(tracedPasses.map(p => secs(p._4 - p._3))) / median(untracedWalls)
+    if (untracedTimes.isEmpty) 0.0
+    else median(tracedPasses.map(p => opTime(p._1))) / median(untracedTimes)
 
   private def passMetrics(pass: Int, start: Long, end: Long): Seq[(String, Double, String)] = {
     val recs = run.records.filter(_.pass == pass)

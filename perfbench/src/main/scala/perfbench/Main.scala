@@ -20,18 +20,19 @@ import scala.collection.mutable.ArrayBuffer
   * }}}
   *
   * A run opens the engine, makes one cold pass over the workload
-  * (`first_pass_s`) and [[Run.FirstMeasured]] - 1 warm-up passes, then
-  * measures a fixed number of passes, enough to fill about `--seconds`.
-  * Passes after the cold one go in seeded order. One caller, a closed
-  * loop. With `--trace 1` untraced and traced passes alternate, and the
-  * traced ones give the per-layer numbers. The run then stops the engine
-  * and opens it [[SetupReps]] more times in the warm JVM; their median is
-  * `setup_s`. The last line of standard output is the result object.
+  * (`first_pass_s`), then measures a fixed number of passes, enough to
+  * fill about `--seconds`. Passes after the cold one go in seeded order.
+  * One caller, a closed loop. With `--trace 1` untraced and traced passes
+  * alternate, and the traced ones give the per-layer numbers. The run then
+  * stops the engine and opens it [[SetupReps]] more times in the warm
+  * JVM; their median is `setup_s`. The last line of standard output is the
+  * result object.
   */
 object Main {
-  val SetupReps = 5
+  val SetupReps = 3
 
-  final case class Args(workload: String = "", seed: Long = 0, seconds: Int = 10, trace: Boolean = false,
+  // `seconds` has no value of its own: run.py always passes one
+  final case class Args(workload: String = "", seed: Long = 0, seconds: Int = -1, trace: Boolean = false,
                         data: String = "", work: String = "", pins: String = "", pin: Boolean = false)
 
   def parse(argv: List[String], a: Args = Args()): Args = argv match {
@@ -113,6 +114,10 @@ final class Run(a: Main.Args) {
   val tracer = new Tracer(a.trace)
   private val exportDir = new File(a.work, "exports")
   private lazy val entries = SparkEntry.queries
+  // a traced run adds the workload's traced-only operations to the cold
+  // pass, which warms them, and to its traced passes
+  private val allOps = workload.ops ++ (if (a.trace) workload.tracedOps else Nil)
+  val regular: Set[String] = workload.ops.map(_.key).toSet
   private val pins: Map[String, String] = Pins.load(a.pins)
 
   // the tracer of the pass in progress: the run's own in a traced pass
@@ -134,6 +139,7 @@ final class Run(a: Main.Args) {
   def apply(): Int = {
     require(new File(dir).isDirectory, s"data directory $dir not found")
     require(a.pin || pins.nonEmpty, s"no pinned hashes in ${a.pins}")
+    require(a.pin || a.seconds > 0, "--seconds must be given and positive")
     exportDir.mkdirs()
     val host0 = Host.snapshot(cores)
     Host.progress("start")
@@ -142,22 +148,19 @@ final class Run(a: Main.Args) {
 
     if (a.pin) return pin()
 
-    val cold = pass(0, workload.ops, traced = false)
+    pass(0, allOps, traced = false)
     Host.progress("cold pass")
-    (1 until Run.FirstMeasured).foreach(i => pass(i, rnd.shuffle(workload.ops), traced = false))
-    Host.progress("warm-up passes")
     // a fixed number of passes, so every run measures the same work at the
     // same warmth; trace mode alternates untraced and traced passes, so the
-    // ratio of their walls is the tracing overhead
-    val measuredPasses = math.max(1, math.ceil(a.seconds / Workloads.PassSeconds).toInt)
-    val last = Run.FirstMeasured + (if (a.trace) 2 * measuredPasses else measuredPasses)
-    (Run.FirstMeasured until last).foreach { n =>
+    // ratio of their times is the tracing overhead
+    val measuredPasses = math.max(if (a.trace) 2 else 1, math.round(a.seconds / workload.passSeconds).toInt)
+    (Run.FirstMeasured until Run.FirstMeasured + measuredPasses).foreach { n =>
       val traced = a.trace && (n - Run.FirstMeasured) % 2 == 1
       if (traced) {
         spark.sparkContext.addSparkListener(execL)
         spark.streams.addListener(streamL)
       }
-      pass(n, rnd.shuffle(workload.ops), traced)
+      pass(n, rnd.shuffle(if (traced) allOps else workload.ops), traced)
       if (traced) {
         org.apache.spark.ListenerBusDrain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(execL)
@@ -171,31 +174,43 @@ final class Run(a: Main.Args) {
     val coldSetup = setupTimes.head
     setupTimes.clear()
     setupOps.clear()
-    (1 to SetupReps).foreach(_ => openEngine(keep = false))
+    // each set-up starts from a collected heap, not the workload's garbage
+    (1 to SetupReps).foreach { _ => System.gc(); openEngine(keep = false) }
     Host.progress(s"warm set-ups ${setupTimes.map(t => f"$t%.2f").mkString(" ")}")
 
     val attempted = records.size
     val failures = records.filterNot(_.ok)
     failures.take(10).foreach(r => System.err.println(s"[perfbench] FAILED ${r.key}: ${r.error}"))
-    val measured = records.filter(r => r.pass >= Run.FirstMeasured && r.ok && !r.traced)
-    val lat = measured.map(_.latency).toSeq
+    // end-to-end numbers come from the workload's own operations only
+    val mine = records.filter(r => regular(r.key) && r.ok)
+    val cold = mine.filter(_.pass == 0).map(_.latency).sum
+    val measured = mine.filter(r => r.pass >= Run.FirstMeasured && !r.traced)
+    // the rate of a pass made of each operation's median run: one slow
+    // sample does not move it
+    val perOp = measured.groupBy(_.key).values.map(rs => median(rs.map(_.latency))).toSeq
+    val latencies =
+      if (workload.passLatency) measured.groupBy(_.pass).values.map(rs => rs.map(_.latency).sum / rs.size).toSeq
+      else measured.map(_.latency).toSeq
     println(s"host before: $host0")
     println(s"host after:  $host1")
     println(f"cold set-up (JVM start included): $coldSetup%.3f s")
     println(s"workload ${workload.name} at ${workload.sf}: ${workload.ops.size} operations per pass, " +
-      s"$measuredPasses measured passes after a cold pass and ${Run.FirstMeasured - 1} warm-up passes, seed ${a.seed}, local[$cores], one closed-loop caller")
+      s"$measuredPasses measured passes after a cold pass, seed ${a.seed}, local[$cores], one closed-loop caller" +
+      (if (a.trace && workload.tracedOps.nonEmpty) s"; traced run adds ${workload.tracedOps.map(_.key).mkString(", ")}" else ""))
 
     val e2e: Seq[(String, Double, String)] = Seq(
       ("setup_s", median(setupTimes.toSeq), "s"),
       ("first_pass_s", cold, "s"),
-      ("latency_p50_s", quantile(lat, 0.5), "s"),
-      ("latency_p90_s", quantile(lat, 0.9), "s"),
-      ("ops_per_s", if (lat.isEmpty) 0.0 else lat.size / lat.sum, "1/s"),
+      ("latency_p50_s", quantile(latencies, 0.5), "s"),
+      ("latency_p90_s", quantile(latencies, 0.9), "s"),
+      ("ops_per_s", perOp.size / perOp.sum, "1/s"),
       ("rss_peak_mb", Host.rssPeakMb(), "MB"))
     val errorRate = failures.size.toDouble / attempted
     e2e.foreach { case (k, v, u) => println(f"metric $k%-16s $v%.6f $u") }
     println(f"metric error_rate       $errorRate%.6f ratio (${failures.size} of $attempted operations failed)")
-    println(s"latency samples: ${lat.size} (p90 has ${lat.count(_ > quantile(lat, 0.9))} samples above it)")
+    println(s"latency quantiles over ${latencies.size} " +
+      (if (workload.passLatency) s"passes' mean operation latency (${measured.size} operations)" else "operation samples") +
+      s"; ops_per_s: ${perOp.size} operations over the sum of their median latencies")
 
     val metrics: Seq[(String, Double, String)] =
       if (!a.trace) e2e
@@ -260,13 +275,12 @@ final class Run(a: Main.Args) {
 
   // ---- passes --------------------------------------------------------
 
-  /** Run every operation once; returns the pass's wall time in seconds. */
-  private def pass(n: Int, ops: Seq[Op], traced: Boolean): Double = {
+  /** Run every operation once, from a settled JVM. */
+  private def pass(n: Int, ops: Seq[Op], traced: Boolean): Unit = {
+    Host.progress(f"pass $n settled after ${Host.settle()}%.2f s")
     val t0 = tracer.now()
     ops.foreach(op => records += runOp(op, n, traced))
-    val t1 = tracer.now()
-    passes += ((n, traced, t0, t1))
-    (t1 - t0) / 1e9
+    passes += ((n, traced, t0, tracer.now()))
   }
 
   private def runOp(op: Op, n: Int, traced: Boolean): OpRecord = {
@@ -353,7 +367,7 @@ final class Run(a: Main.Args) {
   /** Traced run, curate only: each entry's `.count()` the way graft.Bench
     * times it (build + count), next to its materialized time. */
   private def countVsMaterialize(): Unit = {
-    workload.ops.foreach { op =>
+    allOps.foreach { op =>
       val t0 = System.nanoTime()
       tracer.op(s"count:${op.key}")(tracer.span("SparkEntry.count")(entries(op.key)(spark, dir).count()))
       val c = (System.nanoTime() - t0) / 1e9
@@ -370,7 +384,7 @@ final class Run(a: Main.Args) {
     * checks (`SparkEntry.queries(id)`), so the request path and the
     * checked entry agree. */
   private def pin(): Int = {
-    val got = workload.ops.map(op => op -> runOp(op, 0, traced = false))
+    val got = (workload.ops ++ workload.tracedOps).map(op => op -> runOp(op, 0, traced = false))
     val bad = got.collect { case (op, r) if !r.ok => s"${op.key}: ${r.error}" }
     val mismatch = got.collect {
       case (q: AskOp, r) if r.ok && Results.resultHash(entries(q.key)(spark, dir)) != r.hash => q.key
@@ -402,8 +416,8 @@ final class Run(a: Main.Args) {
 object Run {
   val off = new Tracer(false)
 
-  /** Pass 0 is the cold pass, pass 1 warms up; measuring starts here. */
-  val FirstMeasured = 2
+  /** Pass 0 is the cold pass; measuring starts here. */
+  val FirstMeasured = 1
 
   /** Broadcasts the library still tracks for release (graft.operators.
     * Broadcasts keeps them in a private queue). */
@@ -422,6 +436,24 @@ object Host {
   /** Seconds since the JVM started, with a label, on standard error. */
   def progress(label: String): Unit =
     System.err.println(f"[perfbench] ${(System.currentTimeMillis() - jvmStart) / 1e3}%.1f s: $label")
+
+  /** Collect the heap, then wait until the JIT compiler has been idle for
+    * 300 ms, at most 10 s; returns the seconds waited. Without it, the
+    * compile backlog the cold set-up leaves made the first seconds of the
+    * cold pass up to 1.8 times slower in some runs and not in others. */
+  def settle(): Double = {
+    val t0 = System.nanoTime()
+    System.gc()
+    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+    var last = jit.getTotalCompilationTime
+    var idle = 0
+    while (idle < 3 && System.nanoTime() - t0 < 10000000000L) {
+      Thread.sleep(100)
+      val now = jit.getTotalCompilationTime
+      if (now == last) idle += 1 else { idle = 0; last = now }
+    }
+    (System.nanoTime() - t0) / 1e9
+  }
 
   private def loadavg(): String =
     try new String(Files.readAllBytes(Paths.get("/proc/loadavg")), "UTF-8").split(" ").take(3).mkString(" ")
