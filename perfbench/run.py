@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Run one benchmark workload and print its result object as the last line.
 
-    python3 perfbench/run.py --workload ask --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload ask --seed 1 --seconds 24 --trace 0
 
 Run it from the root of the repository. The first run builds the program
 and the benchmark with sbt (perfbench/build.sbt); later runs reuse that
@@ -39,8 +39,9 @@ def run_timeout(seconds, trace):
     host and get twice that; the measured passes get three times
     `seconds`. A traced run adds traced-only operations to its traced
     passes and, on curate, a count pass, so its measured part gets 1.6
-    times more."""
-    return 120 + 3 * seconds * (1.6 if trace else 1.0)
+    times more. Never more than 170 s: a run must end within 180 s, and
+    one killed here still ends, with an error, inside that."""
+    return min(170, 120 + 3 * seconds * (1.6 if trace else 1.0))
 
 # Spark on JDK 17 outside spark-submit needs these (the program's build.sbt
 # passes the same list to its forked runs).
@@ -112,6 +113,9 @@ def build():
 
 
 def main():
+    # a SIGTERM ends the run the way a timeout does: the JVM's process group
+    # is killed and waited for (run_child), then the run exits
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--workload", required=True, choices=["ask", "curate"])
     ap.add_argument("--seed", type=int, default=1)

@@ -87,6 +87,7 @@ final class Layers(run: Run) {
       ("plans.analysis_s", durOf(ops, "plans.analysis"), "s"),
       ("plans.optimization_s", durOf(ops, "plans.optimization"), "s"),
       ("plans.planning_s", durOf(ops, "plans.planning"), "s"),
+      ("plans.codegen_compiles", recs.map(_.compiles).sum.toDouble, "count"),
       ("exec.jobs", jobs.size.toDouble, "count"),
       ("exec.stages", tot(_.stages), "count"),
       ("exec.tasks", tot(_.tasks), "count"),

@@ -21,9 +21,10 @@ import scala.collection.mutable.ArrayBuffer
   *
   * A run opens the engine, makes one cold pass over the workload
   * (`first_pass_s`), then measures a fixed number of passes, enough to
-  * fill about `--seconds`. Passes after the cold one go in seeded order.
-  * One caller, a closed loop. With `--trace 1` untraced and traced passes
-  * alternate, and the traced ones give the per-layer numbers. The run then
+  * fill about `--seconds`. Every pass goes round the operations in one
+  * cycle whose start the seed picks. One caller, a closed loop. With
+  * `--trace 1` untraced and traced passes alternate, and the traced ones
+  * give the per-layer numbers. The run then
   * stops the engine and opens it [[SetupReps]] more times in the warm
   * JVM; their median is `setup_s`. The last line of standard output is the
   * result object.
@@ -100,6 +101,7 @@ final case class Leftovers(persistedRdds: Int, broadcasts: Int, storageBytes: Lo
 /** One executed operation. `latency` covers only the timed region. */
 final case class OpRecord(key: String, family: String, pass: Int, traced: Boolean, op: Int,
                           latency: Double, hash: String, error: String, resultRows: Long, scannedRows: Long,
+                          compiles: Long,
                           bytesWritten: Long, left: Leftovers) {
   def ok: Boolean = error.isEmpty
 }
@@ -110,13 +112,25 @@ final class Run(a: Main.Args) {
   val cores: Int = Runtime.getRuntime.availableProcessors()
   private val workload = Workloads(a.workload, a.seed)
   private val dir = s"${a.data}/${workload.sf}"
-  private val rnd = new scala.util.Random(a.seed)
   val tracer = new Tracer(a.trace)
   private val exportDir = new File(a.work, "exports")
   private lazy val entries = SparkEntry.queries
   // a traced run adds the workload's traced-only operations to the cold
   // pass, which warms them, and to its traced passes
   private val allOps = workload.ops ++ (if (a.trace) workload.tracedOps else Nil)
+  // Every pass goes round the operations in one cycle; the seed picks where
+  // the cycle starts. Spark keeps at most 100 compiled classes
+  // (spark.sql.codegen.cache.maxEntries) and a pass generates more, so
+  // which classes a pass finds cached depends on the order. Under a fresh
+  // shuffle per pass, an operation that came right after itself skipped
+  // its compiles and ran up to twice as fast; under a shuffle per seed, a
+  // warm ask pass compiled 96 to 122 classes. Every rotation of one cycle
+  // gives each operation the same predecessors, so every warm pass of
+  // every run compiles the same classes.
+  private val order: Seq[Op] = {
+    val k = java.lang.Math.floorMod(a.seed, allOps.size.toLong).toInt
+    allOps.drop(k) ++ allOps.take(k)
+  }
   val regular: Set[String] = workload.ops.map(_.key).toSet
   private val pins: Map[String, String] = Pins.load(a.pins)
 
@@ -148,7 +162,7 @@ final class Run(a: Main.Args) {
 
     if (a.pin) return pin()
 
-    pass(0, allOps, traced = false)
+    pass(0, order, traced = false)
     Host.progress("cold pass")
     // a fixed number of passes, so every run measures the same work at the
     // same warmth; trace mode alternates untraced and traced passes, so the
@@ -160,7 +174,7 @@ final class Run(a: Main.Args) {
         spark.sparkContext.addSparkListener(execL)
         spark.streams.addListener(streamL)
       }
-      pass(n, rnd.shuffle(if (traced) allOps else workload.ops), traced)
+      pass(n, if (traced) order else order.filter(op => regular(op.key)), traced)
       if (traced) {
         org.apache.spark.ListenerBusDrain(spark.sparkContext)
         spark.sparkContext.removeSparkListener(execL)
@@ -188,9 +202,7 @@ final class Run(a: Main.Args) {
     // the rate of a pass made of each operation's median run: one slow
     // sample does not move it
     val perOp = measured.groupBy(_.key).values.map(rs => median(rs.map(_.latency))).toSeq
-    val latencies =
-      if (workload.passLatency) measured.groupBy(_.pass).values.map(rs => rs.map(_.latency).sum / rs.size).toSeq
-      else measured.map(_.latency).toSeq
+    val latencies = if (workload.entryLatency) perOp else measured.map(_.latency).toSeq
     println(s"host before: $host0")
     println(s"host after:  $host1")
     println(f"cold set-up (JVM start included): $coldSetup%.3f s")
@@ -209,7 +221,7 @@ final class Run(a: Main.Args) {
     e2e.foreach { case (k, v, u) => println(f"metric $k%-16s $v%.6f $u") }
     println(f"metric error_rate       $errorRate%.6f ratio (${failures.size} of $attempted operations failed)")
     println(s"latency quantiles over ${latencies.size} " +
-      (if (workload.passLatency) s"passes' mean operation latency (${measured.size} operations)" else "operation samples") +
+      (if (workload.entryLatency) s"operations' median latencies (${measured.size} samples)" else "operation samples") +
       s"; ops_per_s: ${perOp.size} operations over the sum of their median latencies")
 
     val metrics: Seq[(String, Double, String)] =
@@ -291,6 +303,7 @@ final class Run(a: Main.Args) {
     var bytes = 0L
     var resultRows = 0L
     val family = op match { case e: EntryOp => e.family; case _ => "ask" }
+    val compiles0 = Run.compiles()
     val outcome: Either[String, String] =
       try t.op(s"${workload.name}:${op.key}") {
         op match {
@@ -339,6 +352,7 @@ final class Run(a: Main.Args) {
       }
       scanned = ScanRows(qe.executedPlan)
     }
+    val compiles = Run.compiles() - compiles0
     val left = sweep()
     val (hash, err) = outcome match {
       case Left(msg) => ("", msg)
@@ -349,7 +363,8 @@ final class Run(a: Main.Args) {
         case None => "no pinned hash"
       })
     }
-    OpRecord(op.key, family, n, traced, if (traced) opId else -1, latency, hash, err, resultRows, scanned, bytes, left)
+    OpRecord(op.key, family, n, traced, if (traced) opId else -1, latency, hash, err, resultRows, scanned,
+      compiles, bytes, left)
   }
 
   /** Count what the operation left behind, then release it outside any
@@ -404,7 +419,7 @@ final class Run(a: Main.Args) {
     try {
       w.println(s"""{"run":{"workload":"${workload.name}","sf":"${workload.sf}","seed":${a.seed},"trace":${a.trace},"host_before":"$host0","host_after":"$host1"}}""")
       records.foreach { r =>
-        w.println(s"""{"record":{"key":"${r.key}","family":"${r.family}","pass":${r.pass},"traced":${r.traced},"op":${r.op},"latency_s":${r.latency},"ok":${r.ok},"persisted_rdds_left":${r.left.persistedRdds},"broadcasts_left":${r.left.broadcasts},"storage_bytes_left":${r.left.storageBytes}}}""")
+        w.println(s"""{"record":{"key":"${r.key}","family":"${r.family}","pass":${r.pass},"traced":${r.traced},"op":${r.op},"latency_s":${r.latency},"codegen_compiles":${r.compiles},"ok":${r.ok},"persisted_rdds_left":${r.left.persistedRdds},"broadcasts_left":${r.left.broadcasts},"storage_bytes_left":${r.left.storageBytes}}}""")
       }
       countRecords.foreach { case (k, c, m) => w.println(s"""{"count_vs_materialize":{"key":"$k","count_s":$c,"materialize_s":$m}}""") }
       tracer.jsonLines().foreach(w.println)
@@ -415,6 +430,9 @@ final class Run(a: Main.Args) {
 
 object Run {
   val off = new Tracer(false)
+
+  /** Classes Spark's code generator has compiled in this JVM so far. */
+  def compiles(): Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** Pass 0 is the cold pass; measuring starts here. */
   val FirstMeasured = 1
