@@ -153,6 +153,15 @@ object SparkEntry {
     f.delete(); ()
   }
 
+  /** Fresh work directory for a sharded entry (q223/q224), removed when
+    * the JVM exits: the returned frame scans `workDir/pairs` lazily, so
+    * the tree cannot go any sooner. */
+  private def shardWorkDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(rmTree(dir))
+    dir.toString
+  }
+
   /** q101's per-language mix quotas in basis points — one constant for the
     * Spark entry AND the generated DuckDB text (documents.lang takes
     * exactly these five values, FIXTURES.md). */
@@ -2752,7 +2761,8 @@ object SparkEntry {
     // Sharded past-bound embedding near-dup (round 17, verdict #1): the
     // shipped 100-TB policy promoted into the oracle gate. shardRows is
     // FORCED to n/3+1 so the gate fixture runs S = 3 (3 within-shard +
-    // 3 cross-shard broadcast-regime jobs over xxhash64 id-shards) —
+    // 3 cross-shard broadcast-verify jobs over xxhash64 id-shards, read
+    // back from signature tables materialized once) —
     // the decomposition a past-bound corpus runs, exercised end-to-end
     // at sf0.01 AND sf0.1. Under the fixtures' pinned occupancy (the
     // DriftGuard margin) the per-job cap never fires differently from
@@ -2765,10 +2775,11 @@ object SparkEntry {
       Similarity.shardedEmbedPairs(Tables.table(spark, dir, "embeddings"),
           "vec_id", "embedding", minScore = EmbedMinScore,
           tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b),
-          shardRows = embedCountFor(spark, dir) / 3 + 1)
+          shardRows = embedCountFor(spark, dir) / 3 + 1,
+          workDir = shardWorkDir("graft_q223"))
         .orderBy("id_a", "id_b").limit(100)
     },
-    // round 17: the persisted sharded runner's INCREMENTAL twin in the
+    // round 17: the sharded runner's INCREMENTAL twin in the
     // gate — the daily-crawl shape where the EXISTING corpus is past the
     // per-job broadcast envelope: both sides' signatures materialized
     // once as shard-partitioned tables, then the Sₑ × Sᵢ cross jobs run
@@ -2782,12 +2793,12 @@ object SparkEntry {
       val b = embedBitsFor(spark, dir)
       val old = vecs.filter(col("vec_id") < IncrementalSplitId)
       val inc = vecs.filter(col("vec_id") >= IncrementalSplitId)
-      Similarity.shardedCrossEmbedPairsPersisted(old, inc,
+      Similarity.shardedCrossEmbedPairs(old, inc,
           "vec_id", "embedding", minScore = EmbedMinScore,
           tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b),
           shardRowsExisting = old.count() / 2 + 1,
           shardRowsIncoming = inc.count() / 2 + 1,
-          workDir = java.nio.file.Files.createTempDirectory("graft_q224").toString)
+          workDir = shardWorkDir("graft_q224"))
         .orderBy("id_a", "id_b").limit(100)
     },
     // SemDeDup (round 11; Abbas et al. 2023): CLUSTER-then-pairwise

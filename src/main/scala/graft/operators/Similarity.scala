@@ -806,20 +806,12 @@ object Similarity {
       .filter(col("score") >= minScore)
       .distinct()
 
-  /** `eagerJob` (r18, the r16-ADVICE deferred-map item): run this call as
-    * ONE bounded job — materialize the (tiny) verified pair output
-    * eagerly and destroy the call's verify-map broadcast + cut-key blocks
-    * before returning, so a sharded runner holding many such calls keeps
-    * exactly ONE job's map alive at a time instead of all of them (the
-    * persisted runner's per-job discipline without the parquet
-    * round-trip). Pair set identical (ShardedPairsSpec). */
   def portableEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          minScore: Long, tables: Int = 8, bits: Int = 6,
                          dim: Int = 64, seed: Long = 11L,
                          scale: Int = 10000,
                          maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                         probes: Int = 0, corpusRowsHint: Long = -1L,
-                         eagerJob: Boolean = false): DataFrame = {
+                         probes: Int = 0, corpusRowsHint: Long = -1L): DataFrame = {
     require(probes <= bits,
       s"probes ($probes) beyond the $bits-bit signature flip bits no bucket key carries")
     val planes = portableHyperplanes(dim, tables, bits, seed)
@@ -842,20 +834,8 @@ object Similarity {
         .select(col("id_a"), col("id_b"), intDot(col("__va"), col("__vb")).as("score"))
         .filter(col("score") >= minScore)
     }
-    // eagerJob: materialize the (survivor-sized) verified output now and
-    // release the call's transient state before returning — the sharded
-    // runner's one-map-alive-at-a-time discipline
-    def finishJob(out: DataFrame, release: () => Unit): DataFrame =
-      if (!eagerJob) out
-      else {
-        val cut = Checkpoints.cut(out, eager = true)
-        release()
-        cut
-      }
     if (probes <= 0)
-      finishJob(
-        verify(homeOnlyPairs(keys, idCol, maxBucketSize), useBroadcast = false),
-        () => ())
+      verify(homeOnlyPairs(keys, idCol, maxBucketSize), useBroadcast = false)
     else {
       if (corpusRowsHint >= 0 && corpusRowsHint <= broadcastVerifyMaxRows(dim)) {
         // broadcast regime (rebuilt round 15): verify the duplicates
@@ -885,16 +865,12 @@ object Similarity {
         // finished entries don't pin ~100 MB maps for the session.
         // the broadcast handle is baked into the expression instance
         // directly (IntDotLookup.column) — no session-global registry
-        // mutation, no analysis-ordering invariant (round-15 advice).
-        // eagerJob destroys it itself before returning (the output is
-        // materialized first), so it is deliberately NOT tracked there.
-        val bc = corpus.sparkSession.sparkContext.broadcast(packedVerifyMap(Seq(q)))
-        if (!eagerJob) Broadcasts.track(bc)
-        finishJob(
-          fusedVerify(
-            probedRawPairs(cutKeys, idCol, maxBucketSize, probes, broadcastHome = true),
-            bc, minScore),
-          () => { bc.destroy(); Checkpoints.free(cutKeys) })
+        // mutation, no analysis-ordering invariant (round-15 advice)
+        val bc = Broadcasts.track(
+          corpus.sparkSession.sparkContext.broadcast(packedVerifyMap(Seq(q))))
+        fusedVerify(
+          probedRawPairs(cutKeys, idCol, maxBucketSize, probes, broadcastHome = true),
+          bc, minScore)
       } else {
         // shuffle regime: the pre-verify distinct is load-bearing (it
         // minimizes the payload-carrying join intermediate) and its
@@ -910,11 +886,9 @@ object Similarity {
         val parts = dedupPartitionsFor(
           estimatedRawCandidates(cutKeys, probes, maxBucketSize),
           corpus.sparkSession.sessionState.conf.numShufflePartitions)
-        finishJob(
-          verify(probedRawPairs(cutKeys, idCol, maxBucketSize, probes)
-            .repartition(parts, col("id_a"), col("id_b")).distinct(),
-            useBroadcast = false),
-          () => Checkpoints.free(cutKeys))
+        verify(probedRawPairs(cutKeys, idCol, maxBucketSize, probes)
+          .repartition(parts, col("id_a"), col("id_b")).distinct(),
+          useBroadcast = false)
       }
     }
   }
@@ -928,22 +902,13 @@ object Similarity {
     * for surviving pairs only. Pair set equals `portableEmbedPairs` on
     * the concatenated corpus restricted to cross pairs (the q125 oracle).
     * Output: (id_a ∈ existing, id_b ∈ incoming, score BIGINT). */
-  /** `combinedRowsHint` ≥ 0 and ≤ `broadcastVerifyMaxRows(dim)` routes
-    * the verify through the fused broadcast lookup over ONE map of both
-    * sides (the q84 broadcast-regime shape, round 16): candidates stay
-    * raw (dedup commutes to the survivor set) and no payload-carrying
-    * join or global pre-verify distinct forms — the branch the sharded
-    * operator's cross jobs need to stay inside the per-job memory
-    * envelope. Pair set identical either way (CrossRegimeSpec pins it). */
   def portableCrossEmbedPairs(existing: DataFrame, incoming: DataFrame,
                               idCol: String, vecCol: String,
                               minScore: Long, tables: Int = 8, bits: Int = 6,
                               dim: Int = 64, seed: Long = 11L,
                               scale: Int = 10000,
                               maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                              probes: Int = 0,
-                              combinedRowsHint: Long = -1L,
-                              eagerJob: Boolean = false): DataFrame = {
+                              probes: Int = 0): DataFrame = {
     val planes = portableHyperplanes(dim, tables, bits, seed)
     val qOld = portableQuantized(existing, idCol, vecCol, scale)
     val qNew = portableQuantized(incoming, idCol, vecCol, scale)
@@ -954,45 +919,20 @@ object Similarity {
     // + probe stream), and every reference otherwise re-runs the
     // tables×-dot signature pass. Quantize stays un-cut — re-deriving
     // __qv on the verify side is the documented cheap floor-cast pass.
-    // (The persisted sharded runner bypasses this path on purpose: its
-    // jobs read keys from shard-partitioned parquet, already
-    // materialized once.)
     val bOld = Checkpoints.cut(portableBucketKeys(qOld, idCol, planes), eager = false)
     val bNew = Checkpoints.cut(portableBucketKeys(qNew, idCol, planes), eager = false)
-    val candsRaw = crossCandidatesRaw(bOld, bNew, idCol, maxBucketSize, probes)
-    // dedup commutes with exact verification (the q84 two-regime rule),
-    // so both branches return the identical pair SET: the default
-    // dedups candidates first (minimizes the payload-join intermediate);
-    // the hinted branch verifies raw candidates map-side through ONE
-    // combined broadcast map and dedups the (tiny) survivor set.
-    // eagerJob (r18): one-map-alive-at-a-time — see portableEmbedPairs
-    def finishJob(out: DataFrame, release: () => Unit): DataFrame =
-      if (!eagerJob) out
-      else {
-        val cut = Checkpoints.cut(out, eager = true)
-        release()
-        cut
-      }
-    if (combinedRowsHint >= 0 && combinedRowsHint <= broadcastVerifyMaxRows(dim)) {
-      val bc = existing.sparkSession.sparkContext.broadcast(
-        packedVerifyMap(Seq(qOld.select(col(idCol), col("__qv")),
-          qNew.select(col(idCol), col("__qv")))))
-      if (!eagerJob) Broadcasts.track(bc)
-      finishJob(fusedVerify(candsRaw, bc, minScore),
-        () => { bc.destroy(); Checkpoints.free(bOld); Checkpoints.free(bNew) })
-    } else
-      finishJob(
-        candsRaw.distinct()
-          .join(qOld.select(col(idCol).as("id_a"), col("__qv").as("__va")), Seq("id_a"))
-          .join(qNew.select(col(idCol).as("id_b"), col("__qv").as("__vb")), Seq("id_b"))
-          .select(col("id_a"), col("id_b"), intDot(col("__va"), col("__vb")).as("score"))
-          .filter(col("score") >= minScore),
-        () => { Checkpoints.free(bOld); Checkpoints.free(bNew) })
+    // dedup commutes with exact verification (the q84 two-regime rule);
+    // dedup candidates first — it minimizes the payload-join intermediate
+    crossCandidatesRaw(bOld, bNew, idCol, maxBucketSize, probes).distinct()
+      .join(qOld.select(col(idCol).as("id_a"), col("__qv").as("__va")), Seq("id_a"))
+      .join(qNew.select(col(idCol).as("id_b"), col("__qv").as("__vb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"), intDot(col("__va"), col("__vb")).as("score"))
+      .filter(col("score") >= minScore)
   }
 
   /** RAW cross-side candidate pairs of two bucketed key streams — the
     * (existing → id_a, incoming → id_b) generator shared by
-    * [[portableCrossEmbedPairs]] and the sharded runners' cross jobs.
+    * [[portableCrossEmbedPairs]] and [[shardedJobs]]' cross jobs.
     * Combined-occupancy cap + directional probing; keys-only. */
   private[graft] def crossCandidatesRaw(bOld: DataFrame, bNew: DataFrame,
       idCol: String, maxBucketSize: Int, probes: Int): DataFrame = {
@@ -1030,25 +970,18 @@ object Similarity {
       }
   }
 
-  /** SHARD-FIRST portable embedding near-dup (round 16, verdict #3 —
-    * the documented 100-TB policy as code): past
-    * `broadcastVerifyMaxRows` the monolithic shuffle regime's
+  /** SHARD-FIRST portable embedding near-dup — the past-bound path
+    * (round 16 verdict #3; persisted signature tables since round 17):
+    * past `broadcastVerifyMaxRows` the monolithic shuffle regime's
     * distinct-first plan pays one global exchange of the ~n^1.79 raw
     * candidate stream (measured: 1.85B raw rows at 200k vectors). This
     * operator decomposes the SAME pair set into bounded-memory
-    * broadcast-regime jobs: the corpus splits into S = ⌈n/shardRows⌉
-    * hash-shards (deterministic xxhash64 of the id), every shard runs
-    * the symmetric pipeline on itself and the cross pipeline against
-    * each later shard, and the union is returned — a pair (a, b) lands
-    * in EXACTLY the (shard(a), shard(b)) job, so coverage is exact and
-    * no global candidate exchange or global distinct ever forms.
-    *
-    * Cost shape: S(S+1)/2 independent jobs (embarrassingly parallel on
-    * a cluster), each bounded by two shards' broadcast envelope; each
-    * shard's signatures are re-derived ~S times — at the S where that
-    * dominates, a deployment persists the signature table once
-    * (PLANS.md) and the jobs re-read keys only. Candidate volume is the
-    * LSH law's, merely partitioned.
+    * broadcast-verify jobs over S = ⌈n/shardRows⌉ hash-shards
+    * (deterministic xxhash64 of the id): every shard pairs with itself
+    * and with each later shard, so a pair (a, b) lands in EXACTLY the
+    * (shard(a), shard(b)) job — coverage is exact and no global
+    * candidate exchange or global distinct ever forms. Job loop and cost
+    * shape: [[shardedJobs]].
     *
     * Cap semantics (the one delta vs the monolithic operator,
     * documented honestly): the bucket-size cap fires on PER-JOB
@@ -1057,195 +990,87 @@ object Similarity {
     * pairs the monolithic cap dropped. Recall is one-sided UP; on
     * corpora whose occupancy sits under the cap (DriftGuard pins the
     * gate fixtures there) the pair set is IDENTICAL — ShardedPairsSpec
-    * asserts exact set equality at a forced S=3.
+    * asserts exact set equality at the default S=1 and a forced S=3.
     *
-    * DRIVER ENVELOPE (r16 ADVICE item, closed in r18): jobs run
-    * SEQUENTIALLY at call time in `eagerJob` mode — each builds its
-    * verify map, materializes its survivor-sized output, and destroys
-    * the map before the next job starts, so the driver holds ONE job's
-    * map (≤ 2 shards) at a time — the persisted runner's discipline
-    * without the parquet round-trip. The returned union is over
-    * already-materialized pair slices (O(survivors) blocks, O(S²)
-    * only in plan-node count). S stays CAPPED at [[InlineShardCap]]
-    * (plan-tree sanity + the measured receipt range); past it use
-    * [[shardedEmbedPairsPersisted]], whose plan tree is O(1) in S. */
+    * `shardRows` defaults to half the broadcast bound, so a cross-shard
+    * job's map (two shards) fits the monolithic broadcast regime's
+    * envelope; a corpus under it runs ONE within-shard job. EAGER: jobs
+    * run at call time. Output: (id_a, id_b, score BIGINT), id_a < id_b. */
   def shardedEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
-                        minScore: Long, tables: Int = 8, bits: Int = 6,
-                        dim: Int = 64, seed: Long = 11L, scale: Int = 10000,
-                        maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                        probes: Int = 0,
-                        shardRows: Long = -1L): DataFrame = {
-    // shard at HALF the broadcast bound: a cross job's combined map
-    // (both shards) then fits the same per-job memory envelope as the
-    // monolithic broadcast regime's single map
-    val bound = if (shardRows > 0) shardRows else broadcastVerifyMaxRows(dim) / 2
-    val n = corpus.count()
-    if (n <= broadcastVerifyMaxRows(dim) && shardRows <= 0)
-      return portableEmbedPairs(corpus, idCol, vecCol, minScore, tables, bits,
-        dim, seed, scale, maxBucketSize, probes, corpusRowsHint = n)
-    val s = math.max(1, math.ceil(n.toDouble / bound).toInt)
-    if (s == 1)
-      return portableEmbedPairs(corpus, idCol, vecCol, minScore, tables, bits,
-        dim, seed, scale, maxBucketSize, probes, corpusRowsHint = n)
-    require(s <= InlineShardCap,
-      s"S=$s shards exceed the inline operator's O(S^2) driver envelope " +
-        s"(cap $InlineShardCap) — use shardedEmbedPairsPersisted, which runs " +
-        "jobs sequentially from a persisted signature table")
-    val shards = (0 until s).map(i =>
-      corpus.filter(pmod(xxhash64(col(idCol)), lit(s)) === i))
-    // eagerJob (r18, the r16-ADVICE deferred-map item): each of the
-    // S(S+1)/2 jobs materializes its survivor-sized output and destroys
-    // its verify-map broadcast + cut-key blocks before the next job
-    // builds — the driver now holds ONE job's map at a time (the
-    // persisted runner's discipline without the parquet round-trip)
-    // instead of all maps eagerly for the union plan's lifetime.
-    val within = shards.map(sh =>
-      portableEmbedPairs(sh, idCol, vecCol, minScore, tables, bits,
-        dim, seed, scale, maxBucketSize, probes, corpusRowsHint = bound,
-        eagerJob = true))
-    val cross = for (i <- 0 until s; j <- (i + 1) until s) yield
-      portableCrossEmbedPairs(shards(i), shards(j), idCol, vecCol, minScore,
-          tables, bits, dim, seed, scale, maxBucketSize, probes,
-          combinedRowsHint = 2 * bound, eagerJob = true)
-        // the cross form's (existing, incoming) orientation is shard
-        // order, not id order — normalize to the symmetric contract
-        .select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"), col("score"))
-    (within ++ cross).reduce(_ unionAll _)
-  }
-
-  /** Shard-count cap of the INLINE [[shardedEmbedPairs]] (its eager maps
-    * and union tree are O(S²) on the driver — the scaladoc's envelope);
-    * 8 covers every measured receipt with headroom. */
-  val InlineShardCap = 8
-
-  /** PERSISTED-SIGNATURE-TABLE sharded near-dup (round 17, verdict #4 —
-    * the PLANS.md promise as code): materializes the quantized vectors
-    * and bucket keys ONCE as shard-partitioned parquet under `workDir`,
-    * then runs the S(S+1)/2 jobs SEQUENTIALLY, each reading back exactly
-    * its shards (partition-pruned scans), building its packed verify map
-    * at JOB time and destroying the broadcast before the next job
-    * starts. Same pair set as [[shardedEmbedPairs]] (ShardedPairsSpec
-    * pins table-mode equality); what changes is the cost shape:
-    *   - signatures are computed ONCE (the materialize pass) instead of
-    *     ~S× per shard across jobs;
-    *   - the driver holds ONE job's map (≤ 2 shards) at a time instead
-    *     of all S(S+1)/2 eagerly (the r16 ADVICE's O(S²) envelope) —
-    *     per-job broadcasts are destroyed as soon as the job's output
-    *     lands;
-    *   - the plan tree is O(1) in S: each job is an independent small
-    *     plan writing `workDir/pairs/job=i_j`, and the returned frame is
-    *     a plain parquet scan of that directory.
-    * On a cluster the jobs are embarrassingly parallel from the same two
-    * tables; sequential here bounds ONE JVM's memory (the receipt shape).
-    * EAGER: jobs run at call time. Output: (id_a, id_b, score BIGINT),
-    * id_a < id_b. */
-  def shardedEmbedPairsPersisted(corpus: DataFrame, idCol: String, vecCol: String,
       minScore: Long, tables: Int = 8, bits: Int = 6, dim: Int = 64,
       seed: Long = 11L, scale: Int = 10000,
       maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-      probes: Int = 0, shardRows: Long = -1L, workDir: String): DataFrame = {
-    val spark = corpus.sparkSession
-    val bound = if (shardRows > 0) shardRows else broadcastVerifyMaxRows(dim) / 2
-    val n = corpus.count()
-    val s = math.max(1, math.ceil(n.toDouble / bound).toInt)
-    val planes = portableHyperplanes(dim, tables, bits, seed)
-    val quantPath = s"$workDir/quantized"
-    val keysPath = s"$workDir/keys"
-    val pairsPath = s"$workDir/pairs"
-    // materialize pass: ONE quantize+signature scan of the corpus; both
-    // tables partitioned by the deterministic id-hash shard so every
-    // job's read prunes to its own files
-    portableQuantized(corpus, idCol, vecCol, scale)
-      .withColumn("__shard", pmod(xxhash64(col(idCol)), lit(s.toLong)))
-      .write.mode("overwrite").partitionBy("__shard").parquet(quantPath)
-    val qt = spark.read.parquet(quantPath)
-    portableBucketKeys(qt, idCol, planes, carry = Seq("__shard"))
-      .write.mode("overwrite").partitionBy("__shard").parquet(keysPath)
-    val kt = spark.read.parquet(keysPath)
-    def qShard(i: Int) = qt.filter(col("__shard") === i).select(col(idCol), col("__qv"))
-    def kShard(i: Int) = kt.filter(col("__shard") === i)
-      .select(col(idCol), col("__t"), col("__bkt"))
-    for (i <- 0 until s; j <- i until s) {
-      val (cands, mapSides) =
-        if (i == j) {
-          val ki = kShard(i)
-          (if (probes <= 0) homeOnlyPairs(ki, idCol, maxBucketSize)
-           else probedRawPairs(ki, idCol, maxBucketSize, probes, broadcastHome = true),
-            Seq(qShard(i)))
-        } else
-          (crossCandidatesRaw(kShard(i), kShard(j), idCol, maxBucketSize, probes),
-            Seq(qShard(i), qShard(j)))
-      // UNTRACKED broadcast, destroyed per job — Broadcasts.track is for
-      // handles that must outlive the call (a harness frees them between
-      // entries); here the job's write is the last reference
-      val bc = spark.sparkContext.broadcast(packedVerifyMap(mapSides))
-      // cross jobs orient (id_a ∈ shard i, id_b ∈ shard j) — normalize
-      // to the symmetric id-order contract after verification
-      fusedVerify(cands, bc, minScore)
-        .select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"), col("score"))
-        .write.mode("overwrite").parquet(s"$pairsPath/job=${i}_$j")
-      bc.destroy()
-    }
-    // partition discovery adds the job column — drop it from the contract
-    spark.read.parquet(pairsPath).select("id_a", "id_b", "score")
-  }
+      probes: Int = 0, shardRows: Long = -1L, workDir: String): DataFrame =
+    shardedJobs(corpus, None, idCol, vecCol, minScore, tables, bits, dim,
+      seed, scale, maxBucketSize, probes, shardRows, -1L, workDir)
 
-  /** PERSISTED-SIGNATURE-TABLE sharded INCREMENTAL near-dup (round 17 —
-    * the daily-crawl twin of [[shardedEmbedPairsPersisted]], closing the
-    * past-bound story for the incremental pipeline): an incoming batch
-    * deduped against an existing corpus where EITHER side exceeds the
-    * per-job broadcast envelope. Both sides' quantized vectors and bucket
-    * keys are materialized ONCE as shard-partitioned parquet under
-    * `workDir` (Sₑ = ⌈nₑ/bound⌉ existing shards, Sᵢ = ⌈nᵢ/bound⌉
-    * incoming shards, deterministic id-hash sharding), then the Sₑ × Sᵢ
-    * CROSS jobs run SEQUENTIALLY — each reads back exactly its two
-    * shards (partition-pruned scans), builds its packed combined verify
-    * map at JOB time, fused-verifies its raw candidates, writes its
-    * pair slice, and destroys the broadcast before the next job starts.
-    * A cross pair (a ∈ existing, b ∈ incoming) lands in EXACTLY the
+  /** Sharded INCREMENTAL near-dup — the daily-crawl twin of
+    * [[shardedEmbedPairs]] (round 17): an incoming batch deduped against
+    * an existing corpus where EITHER side exceeds the per-job broadcast
+    * envelope. Sₑ = ⌈nₑ/shardRowsExisting⌉ existing shards × Sᵢ =
+    * ⌈nᵢ/shardRowsIncoming⌉ incoming shards, every (i, j) a CROSS job:
+    * a pair (a ∈ existing, b ∈ incoming) lands in EXACTLY the
     * (shard(a), shard(b)) job, so coverage is exact; no within-side
     * pairs are ever generated (the q125 contract), and no global
     * candidate exchange or global distinct forms.
     *
-    * Cap semantics (same one-sided delta as the symmetric sharded
-    * runners, documented honestly): the combined-occupancy cap fires on
-    * PER-JOB occupancy (one existing shard + one incoming shard), so a
-    * key over the monolithic combined cap can stay under it inside a
-    * job — the sharded form then emits EXTRA exact-verified true pairs.
-    * Recall is one-sided UP; on corpora whose occupancy sits under the
-    * cap (DriftGuard pins the gate fixtures' full-corpus occupancy
-    * there, which upper-bounds every job's) the pair set is IDENTICAL
-    * to [[portableCrossEmbedPairs]] — ShardedPairsSpec pins exact set
-    * equality at forced Sₑ = Sᵢ = 2.
+    * Cap semantics (same one-sided delta as [[shardedEmbedPairs]]): the
+    * combined-occupancy cap fires on PER-JOB occupancy (one existing
+    * shard + one incoming shard), so a key over the monolithic combined
+    * cap can stay under it inside a job — the sharded form then emits
+    * EXTRA exact-verified true pairs. On corpora whose occupancy sits
+    * under the cap (DriftGuard pins the gate fixtures' full-corpus
+    * occupancy there, which upper-bounds every job's) the pair set is
+    * IDENTICAL to [[portableCrossEmbedPairs]] — ShardedPairsSpec pins
+    * exact set equality at Sₑ = Sᵢ = 2 and Sₑ = 3 × Sᵢ = 1.
     *
-    * `shardRowsExisting` / `shardRowsIncoming` force per-side shard
-    * bounds (a deployment legitimately runs a huge-corpus × small-batch
-    * asymmetry — Sₑ large, Sᵢ = 1); both default to
-    * `broadcastVerifyMaxRows(dim) / 2` so any job's combined map fits
-    * the monolithic broadcast regime's envelope. EAGER: jobs run at
-    * call time; the driver holds ONE job's map at a time and the plan
-    * tree is O(1) in Sₑ·Sᵢ. Output: (id_a ∈ existing, id_b ∈ incoming,
-    * score BIGINT) — directional, like [[portableCrossEmbedPairs]]. */
-  def shardedCrossEmbedPairsPersisted(existing: DataFrame, incoming: DataFrame,
+    * The per-side bounds are separate because a deployment legitimately
+    * runs a huge-corpus × small-batch asymmetry (Sₑ large, Sᵢ = 1); both
+    * default to `broadcastVerifyMaxRows(dim) / 2` so any job's combined
+    * map fits the monolithic broadcast regime's envelope. EAGER: jobs run
+    * at call time. Output: (id_a ∈ existing, id_b ∈ incoming, score
+    * BIGINT) — directional, like [[portableCrossEmbedPairs]]. */
+  def shardedCrossEmbedPairs(existing: DataFrame, incoming: DataFrame,
       idCol: String, vecCol: String, minScore: Long,
       tables: Int = 8, bits: Int = 6, dim: Int = 64,
       seed: Long = 11L, scale: Int = 10000,
       maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
       probes: Int = 0, shardRowsExisting: Long = -1L,
-      shardRowsIncoming: Long = -1L, workDir: String): DataFrame = {
-    val spark = existing.sparkSession
-    val defaultBound = broadcastVerifyMaxRows(dim) / 2
-    val boundE = if (shardRowsExisting > 0) shardRowsExisting else defaultBound
-    val boundI = if (shardRowsIncoming > 0) shardRowsIncoming else defaultBound
-    val sE = math.max(1, math.ceil(existing.count().toDouble / boundE).toInt)
-    val sI = math.max(1, math.ceil(incoming.count().toDouble / boundI).toInt)
+      shardRowsIncoming: Long = -1L, workDir: String): DataFrame =
+    shardedJobs(existing, Some(incoming), idCol, vecCol, minScore, tables,
+      bits, dim, seed, scale, maxBucketSize, probes, shardRowsExisting,
+      shardRowsIncoming, workDir)
+
+  /** The one job loop of the sharded runners — symmetric over side `a`
+    * alone (`b` empty: jobs i ≤ j) or cross from `a` to `b` (every
+    * (i, j)). Each side's quantized vectors and bucket keys are
+    * materialized ONCE as shard-partitioned parquet under `workDir`
+    * (S = ⌈n/shardRows⌉ id-hash shards, default bound half the broadcast
+    * bound), then the jobs run SEQUENTIALLY: each reads back exactly its
+    * shards (partition-pruned scans), builds its packed verify map,
+    * fused-verifies its raw candidates, writes its pair slice to
+    * `workDir/pairs/job=i_j` and destroys its broadcast before the next
+    * job starts. The cost shape that buys:
+    *   - signatures are computed ONCE (the materialize pass), not per job;
+    *   - the driver holds ONE job's map (≤ 2 shards) at a time;
+    *   - the plan tree is O(1) in the job count: each job is an
+    *     independent small plan, and the returned frame is a plain
+    *     parquet scan of `workDir/pairs` — LAZY, so the directory must
+    *     outlive the frame.
+    * On a cluster the jobs are embarrassingly parallel from the same
+    * tables; sequential here bounds ONE JVM's memory. */
+  private def shardedJobs(a: DataFrame, b: Option[DataFrame],
+      idCol: String, vecCol: String, minScore: Long, tables: Int, bits: Int,
+      dim: Int, seed: Long, scale: Int, maxBucketSize: Int, probes: Int,
+      shardRowsA: Long, shardRowsB: Long, workDir: String): DataFrame = {
+    val spark = a.sparkSession
     val planes = portableHyperplanes(dim, tables, bits, seed)
-    val pairsPath = s"$workDir/pairs"
     // materialize pass: ONE quantize+signature scan per side, both
-    // tables partitioned by the side's deterministic id-hash shard
-    def materialize(side: DataFrame, s: Int, tag: String): (DataFrame, DataFrame) = {
+    // tables partitioned by the side's deterministic id-hash shard so
+    // every job's read prunes to its own files
+    def materialize(side: DataFrame, shardRows: Long, tag: String) = {
+      val bound = if (shardRows > 0) shardRows else broadcastVerifyMaxRows(dim) / 2
+      val s = math.max(1, math.ceil(side.count().toDouble / bound).toInt)
       val quantPath = s"$workDir/quantized_$tag"
       val keysPath = s"$workDir/keys_$tag"
       portableQuantized(side, idCol, vecCol, scale)
@@ -1254,26 +1079,37 @@ object Similarity {
       val qt = spark.read.parquet(quantPath)
       portableBucketKeys(qt, idCol, planes, carry = Seq("__shard"))
         .write.mode("overwrite").partitionBy("__shard").parquet(keysPath)
-      (qt, spark.read.parquet(keysPath))
+      val kt = spark.read.parquet(keysPath)
+      (s, (i: Int) => qt.filter(col("__shard") === i).select(col(idCol), col("__qv")),
+        (i: Int) => kt.filter(col("__shard") === i).select(col(idCol), col("__t"), col("__bkt")))
     }
-    val (qtE, ktE) = materialize(existing, sE, "existing")
-    val (qtI, ktI) = materialize(incoming, sI, "incoming")
-    def qShard(qt: DataFrame, i: Int) =
-      qt.filter(col("__shard") === i).select(col(idCol), col("__qv"))
-    def kShard(kt: DataFrame, i: Int) = kt.filter(col("__shard") === i)
-      .select(col(idCol), col("__t"), col("__bkt"))
-    for (i <- 0 until sE; j <- 0 until sI) {
-      val cands = crossCandidatesRaw(kShard(ktE, i), kShard(ktI, j), idCol,
-        maxBucketSize, probes)
-      // UNTRACKED broadcast, destroyed per job (the symmetric runner's
-      // discipline) — the job's write is the last reference
+    val symmetric = b.isEmpty
+    val (sA, qA, kA) = materialize(a, shardRowsA, "a")
+    val (sB, qB, kB) = b.fold((sA, qA, kA))(materialize(_, shardRowsB, "b"))
+    for (i <- 0 until sA; j <- (if (symmetric) i else 0) until sB) {
+      val within = symmetric && i == j
+      val cands =
+        if (!within) crossCandidatesRaw(kA(i), kB(j), idCol, maxBucketSize, probes)
+        else if (probes <= 0) homeOnlyPairs(kA(i), idCol, maxBucketSize)
+        else probedRawPairs(kA(i), idCol, maxBucketSize, probes, broadcastHome = true)
+      // UNTRACKED broadcast, destroyed per job — Broadcasts.track is for
+      // handles that must outlive the call (a harness frees them between
+      // entries); here the job's write is the last reference
       val bc = spark.sparkContext.broadcast(
-        packedVerifyMap(Seq(qShard(qtE, i), qShard(qtI, j))))
-      fusedVerify(cands, bc, minScore)
-        .write.mode("overwrite").parquet(s"$pairsPath/job=${i}_$j")
+        packedVerifyMap(if (within) Seq(qA(i)) else Seq(qA(i), qB(j))))
+      val verified = fusedVerify(cands, bc, minScore)
+      // a symmetric cross-shard job orients (id_a ∈ shard i, id_b ∈
+      // shard j) — put it into the symmetric id-order contract
+      val slice =
+        if (symmetric && !within)
+          verified.select(least(col("id_a"), col("id_b")).as("id_a"),
+            greatest(col("id_a"), col("id_b")).as("id_b"), col("score"))
+        else verified
+      slice.write.mode("overwrite").parquet(s"$workDir/pairs/job=${i}_$j")
       bc.destroy()
     }
-    spark.read.parquet(pairsPath).select("id_a", "id_b", "score")
+    // partition discovery adds the job column — drop it from the contract
+    spark.read.parquet(s"$workDir/pairs").select("id_a", "id_b", "score")
   }
 
   /** Embedding-cosine near-duplicate pairs: LSH candidates (full-signature
@@ -1284,8 +1120,8 @@ object Similarity {
     * the distinct-first shuffle shape — at corpus sizes where that plan's
     * candidate exchange exceeds the cluster's shuffle budget (measured as
     * a DISK cliff at 200k×dim-64, BASELINE.md round 16), deploy through
-    * [[shardedEmbedPairs]] on the quantized representation instead: the
-    * blocked decomposition is the shipped past-bound path, and quantized
+    * [[shardedEmbedPairs]] on the quantized representation instead: its
+    * persisted-table job loop is the shipped past-bound path, and quantized
     * verification at the 10⁴ scale is the production representation the
     * oracle family already proves (q84 ≡ q43's pair structure). */
   def embeddingNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,

@@ -1,19 +1,17 @@
 package graft.tools
 
-import graft.{Corpus, SparkEntry, Tables}
-import org.apache.spark.sql.SparkSession
+import graft.{Engine, SparkEntry, Tables}
 
 /** Dump formatted physical plans for the load-bearing queries — the
-  * "is this the plan you'd want at 100 TB" review loop. */
+  * "is this the plan you'd want at 100 TB" review loop. The session is
+  * `Engine.session`'s (GraftExtensions, UTC, AQE), so a dump shows the
+  * plan Engine, Verify and the benchmark run.
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default nproc). */
 object Plans {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Tables.register(spark, dir)
     val interesting = args.toSeq match {

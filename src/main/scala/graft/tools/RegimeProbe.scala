@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-16 receipts for the embedding-LSH verification regimes at the
@@ -20,13 +19,13 @@ import org.apache.spark.sql.functions._
   *     wall.
   *
   * Usage: runMain graft.tools.RegimeProbe [factor] [dir] [stages]
-  *   stages ⊆ {build, map, broadcast, shuffle, sharded, sharded-auto,
-  *   persisted, cc, cross, ann} (default {build, map, broadcast, shuffle}; the
-  *   sharded/persisted/cc stages back the past-bound receipts and run
-  *   only when named — they need a factor whose corpus crosses the
-  *   bound to be meaningful).
-  * Env: SPARK_GRAFT_SF_DIR (source, default sf0.1), SPARK_GRAFT_CPUS,
-  *      SPARK_DRIVER_MEM (the -Xmx bound under test, via build.sbt). */
+  *   stages ⊆ {build, map, broadcast, shuffle, persisted, cc, cross, ann}
+  *   (default {build, map, broadcast, shuffle}; the persisted/cc/cross
+  *   stages back the past-bound receipts and run only when named — they
+  *   need a factor whose corpus crosses the bound to be meaningful).
+  * Env: SPARK_GRAFT_SF_DIR (source, default sf0.1), SPARK_GRAFT_CPUS
+  *      (default nproc), SPARK_DRIVER_MEM (the -Xmx bound under test,
+  *      via build.sbt). */
 object RegimeProbe {
   def main(args: Array[String]): Unit = {
     val factor = if (args.length > 0) args(0).toInt else 100
@@ -34,12 +33,8 @@ object RegimeProbe {
     val stages = if (args.length > 2) args(2).split(',').toSet
                  else Set("build", "map", "broadcast", "shuffle")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = graft.Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     println(s"[regime] -Xmx=${Runtime.getRuntime.maxMemory() / (1 << 20)} MB " +
       s"cpus=$cpus factor=$factor dir=$dir")
@@ -121,21 +116,6 @@ object RegimeProbe {
       bc.destroy()
     }
     if (stages("broadcast")) run("broadcast regime (hint=n, heap-metered)", n)
-    def runSharded(label: String, rows: Long): Unit = {
-      System.gc(); resetPeaks()
-      val t0 = System.nanoTime()
-      val found = Similarity.shardedEmbedPairs(emb, "vec_id", "embedding",
-        minScore = graft.SparkEntry.EmbedMinScore,
-        tables = tables, bits = bits, probes = bits,
-        shardRows = rows).count()
-      val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[regime] $label: $sec%.1f s, $found pairs, heap-pool peak ${peakMb()} MB")
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      graft.operators.Broadcasts.destroyAll()
-    }
-    // the shard-first operator at the first past-bound point: forced
-    // S=2 at exactly the bound (what a corpus of 2×bound rows runs)
-    if (stages("sharded")) runSharded("sharded (forced S=2)", n / 2)
     // round-17 verdict #4 receipt: the persisted-signature-table runner
     // at S=8 — signatures computed once, jobs sequential, one map at a
     // time. Wall + heap-pool peak are THE published numbers.
@@ -143,7 +123,7 @@ object RegimeProbe {
       System.gc(); resetPeaks()
       val work = s"$dir/persisted_s8"
       val t0 = System.nanoTime()
-      val found = Similarity.shardedEmbedPairsPersisted(emb, "vec_id", "embedding",
+      val found = Similarity.shardedEmbedPairs(emb, "vec_id", "embedding",
         minScore = graft.SparkEntry.EmbedMinScore,
         tables = tables, bits = bits, probes = bits,
         shardRows = n / 8 + 1, workDir = work).count()
@@ -159,7 +139,7 @@ object RegimeProbe {
     if (stages("cc")) {
       val work = s"$dir/persisted_s4"
       val t0p = System.nanoTime()
-      val pairs = Similarity.shardedEmbedPairsPersisted(emb, "vec_id", "embedding",
+      val pairs = Similarity.shardedEmbedPairs(emb, "vec_id", "embedding",
         minScore = graft.SparkEntry.EmbedMinScore,
         tables = tables, bits = bits, probes = bits,
         shardRows = n / 4 + 1, workDir = work)
@@ -173,7 +153,7 @@ object RegimeProbe {
       // (first attempt: the 1.23B-row sym distinct through 32 partitions
       // = ~38M-row hash tables × 32 task threads in one 8 GB heap).
       spark.sparkContext.setCheckpointDir(s"$dir/ckpt")
-      val symParts = Similarity.dedupPartitionsFor(2L * nPairs, cpus.toInt)
+      val symParts = Similarity.dedupPartitionsFor(2L * nPairs, cpus)
       spark.conf.set("spark.sql.shuffle.partitions", symParts)
       println(s"[regime] cc sizing: symmetric-edge estimate ${2L * nPairs} -> $symParts partitions, reliable ckpt dir")
       System.gc(); resetPeaks()
@@ -213,25 +193,25 @@ object RegimeProbe {
         c
       }
       val total = timed("cross stage: symmetric all (persisted S=4)") {
-        Similarity.shardedEmbedPairsPersisted(emb, "vec_id", "embedding",
+        Similarity.shardedEmbedPairs(emb, "vec_id", "embedding",
           minScore = graft.SparkEntry.EmbedMinScore,
           tables = tables, bits = bits, probes = bits,
           shardRows = n / 4 + 1, workDir = s"$dir/cross_all").count()
       }
       val wOld = timed("cross stage: within existing (persisted S=2)") {
-        Similarity.shardedEmbedPairsPersisted(old, "vec_id", "embedding",
+        Similarity.shardedEmbedPairs(old, "vec_id", "embedding",
           minScore = graft.SparkEntry.EmbedMinScore,
           tables = tables, bits = bits, probes = bits,
           shardRows = nOld / 2 + 1, workDir = s"$dir/cross_old").count()
       }
       val wInc = timed("cross stage: within incoming (persisted S=2)") {
-        Similarity.shardedEmbedPairsPersisted(inc, "vec_id", "embedding",
+        Similarity.shardedEmbedPairs(inc, "vec_id", "embedding",
           minScore = graft.SparkEntry.EmbedMinScore,
           tables = tables, bits = bits, probes = bits,
           shardRows = nInc / 2 + 1, workDir = s"$dir/cross_inc").count()
       }
       val cross = timed("cross stage: cross (persisted Se=2 x Si=2)") {
-        Similarity.shardedCrossEmbedPairsPersisted(old, inc,
+        Similarity.shardedCrossEmbedPairs(old, inc,
           "vec_id", "embedding", minScore = graft.SparkEntry.EmbedMinScore,
           tables = tables, bits = bits, probes = bits,
           shardRowsExisting = nOld / 2 + 1, shardRowsIncoming = nInc / 2 + 1,
@@ -241,9 +221,6 @@ object RegimeProbe {
       println(s"[regime] cross identity: $wOld + $wInc + $cross = ${wOld + wInc + cross} " +
         s"vs symmetric $total -> ${if (ok) "EXACT" else "MISMATCH"}")
     }
-    // default sizing (bound/2 shards — what a past-bound caller runs)
-    if (stages("sharded-auto")) runSharded(
-      s"sharded (auto, S=${math.ceil(n / (Similarity.broadcastVerifyMaxRows(64) / 2.0)).toInt})", -1L)
     // round-17 ADVICE #4 probe: the ANN one-shot path derives its
     // bucket-key subtree twice (cap aggregate + join probe side) — time
     // the self-sized search at this fixture to decide whether a lineage
@@ -269,7 +246,7 @@ object RegimeProbe {
       val keys = Similarity.portableBucketKeys(q, "vec_id", planes)
       val est = Similarity.estimatedRawCandidates(keys, bits,
         graft.operators.TextDedup.DefaultMaxBucketSize)
-      val parts = Similarity.dedupPartitionsFor(est, cpus.toInt)
+      val parts = Similarity.dedupPartitionsFor(est, cpus)
       println(s"[regime] shuffle sizing: estRaw=$est -> $parts dedup partitions")
       run("shuffle regime (forced, no hint)", -1L)
     }
