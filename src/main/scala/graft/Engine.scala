@@ -58,11 +58,26 @@ object Engine {
     * the session with your master/conf, register sources, wrap). */
   def wrap(spark: SparkSession): Engine = new Engine(spark)
 
+  /** Capacity of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is an
+    * LRU, and an LRU smaller than a repeating working set misses on every
+    * access: with 100 entries every warm pass recompiled everything it
+    * ran (one pass over the 93 `Corpus.queries` texts generates about 790
+    * classes, a warm benchmark `ask` pass about 120). Sized from the
+    * declared corpus: one cold pass over all 221 `SparkEntry.queries` at
+    * sf0.01 compiles about 3,300 classes. The conf is static and
+    * `CodeGenerator` builds its cache once per JVM, from the conf of the
+    * session active when it first compiles, so the first SparkContext in
+    * a JVM fixes the size for the whole JVM; a later session's value is
+    * ignored. */
+  val CodegenCacheEntries: Int = 4096
+
   def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cores]")
       .appName("graft-engine")
       .withExtensions(new graft.plans.GraftExtensions)
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +10,9 @@ object Verify {
       case Array(s, o)       => (s, o, None)
       case Array(s, o, keep) => (s, o, Some(keep.split(',').toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    // the engine's own session: the gate checks what Engine users run
+    val spark = Engine.session(cpus)
     // same deployment knob as ClusterCheck: a configured dir upgrades
     // every Checkpoints.cut to reliable checkpointing
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").foreach(spark.sparkContext.setCheckpointDir)

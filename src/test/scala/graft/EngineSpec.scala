@@ -1,15 +1,19 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Engine facade: the user-facing switch path from the reference app. */
 class EngineSpec extends AnyFunSuite {
 
+  private val segmentsSql =
+    "SELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment ORDER BY n DESC, c_mktsegment"
+
   test("open → run → describe → export, end to end") {
     // wrap the shared test session rather than opening a second one
     Tables.register(TestSpark.spark, TestSpark.sf0001)
     val engine = Engine.wrap(TestSpark.spark)
-    val res = engine.run("SELECT c_mktsegment, COUNT(*) AS n FROM customer GROUP BY c_mktsegment ORDER BY n DESC, c_mktsegment")
+    val res = engine.run(segmentsSql)
     assert(res.isRight)
     val df = res.toOption.get
     assert(engine.describeResult(df) == "5 rows")
@@ -30,5 +34,29 @@ class EngineSpec extends AnyFunSuite {
   test("catalog reachable through the facade") {
     val engine = Engine.wrap(TestSpark.spark)
     assert(engine.catalog.listTables().contains("customer"))
+  }
+
+  test("a repeated query compiles nothing after 300+ other classes (codegen cache sized)") {
+    // The cache size is JVM-global and fixed by the first session, which
+    // here is TestSpark's or RangeJoinRewriteSpec's, both built with
+    // Engine.CodegenCacheEntries. This relies on sbt running suites one
+    // after another in the forked test JVM (testForkedParallel defaults
+    // to false and build.sbt leaves it), so no other suite compiles
+    // during the re-run.
+    Tables.register(TestSpark.spark, TestSpark.sf0001)
+    val engine = Engine.wrap(TestSpark.spark)
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    def run(sql: String): Unit = engine.runSql(sql).fold(e => fail(s"${e.message}: $sql"), _.collect())
+    run(segmentsSql)
+    // Spark's default holds 100 classes in 4 LRU segments of 25, so well
+    // over 100 compiles evict the first query's classes from every
+    // segment under the default size
+    val c0 = compiles
+    val texts = Corpus.queries.iterator.map(_.sparkSql).filter(_ != segmentsSql)
+    while (compiles - c0 <= 300 && texts.hasNext) run(texts.next())
+    assert(compiles - c0 > 300, "the corpus compiled too few classes to evict anything")
+    val c1 = compiles
+    run(segmentsSql)
+    assert(compiles - c1 == 0, "the re-run recompiled classes it compiled before")
   }
 }

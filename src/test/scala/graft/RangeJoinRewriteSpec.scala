@@ -20,6 +20,8 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-ext-test")
+      // production cache size, in case this suite builds the first session
+      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
