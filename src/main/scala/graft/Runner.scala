@@ -43,16 +43,10 @@ object Runner {
       Sanitizer.writeNode(spark, sql).map(node =>
         EngineError(s"rejected write/command statement ($node): ${sql.take(80)}"))
 
-  /** Execute raw (possibly LLM-produced) text against the registered views. */
-  def run(spark: SparkSession, raw: String): Either[EngineError, DataFrame] = {
-    val sql = Sanitizer.sanitize(raw)
-    readOnlyGate(spark, sql) match {
-      case Some(err) => Left(err)
-      case None =>
-        try Right(dedupColumns(spark.sql(sql)))
-        catch { case e: Exception => Left(EngineError(e.getMessage, Some(e))) }
-    }
-  }
+  /** Execute raw (possibly LLM-produced) text against the registered
+    * views: the sanitizer, then the trusted-SQL path. */
+  def run(spark: SparkSession, raw: String): Either[EngineError, DataFrame] =
+    runSql(spark, Sanitizer.sanitize(raw))
 
   /** Trusted-SQL path: read-only gate + execution + dup-rename, WITHOUT
     * the LLM-output sanitizer. The sanitizer's leading-SELECT slice is

@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1-style smoke entry: boots a session, runs the flagship query, and
   * exercises the Runner path with hostile inputs (LLM prose, non-SELECT).
   * Mirrors what the driver's smoke check does, runnable locally. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(8)
     spark.sparkContext.setLogLevel("ERROR")
 
     val flagship = SparkEntry.entry(spark)

@@ -610,10 +610,14 @@ object SparkEntry {
     s"$dir:${f.length}:${f.lastModified}"
   }
   private def trainSplitNbModel(spark: SparkSession, dir: String): NaiveBayes.NbModel =
-    NaiveBayes.modelFromData(spark, nbModelCache.computeIfAbsent(nbCacheKey(dir), _ =>
-      NaiveBayes.collectModel(NaiveBayes.model(
+    NaiveBayes.modelFromData(spark, nbModelCache.computeIfAbsent(nbCacheKey(dir), _ => {
+      val m = NaiveBayes.model(
         Tables.table(spark, dir, "documents").filter(col("doc_id") < IncrementalSplitId),
-        "text", "lang"))))
+        "text", "lang")
+      // the collected data is the model from here on; its training cuts are dead
+      try NaiveBayes.collectModel(m)
+      finally Seq(m.vocab, m.deltas, m.labelStats).foreach(Checkpoints.free)
+    }))
 
   /** Shared q188/q189 classifier pipeline: Naive Bayes trained on the
     * labeled train split, EVERY document scored, true label joined
@@ -692,7 +696,7 @@ object SparkEntry {
   }
 
   /** The ONE composition tail for batch (gateDecisions) and streaming
-    * (gateBatchDecisions): unscored docs FAIL their gate via left-join +
+    * (writeGateBatchDecisions): unscored docs FAIL their gate via left-join +
     * coalesce — the NaiveBayes.score drop contract, mirrored in the
     * replay. One spelling so batch and streaming can never desync. */
   private def composeGates(base: DataFrame, span: DataFrame,
@@ -724,11 +728,15 @@ object SparkEntry {
   }
 
   /** The per-micro-batch composed gate decision shared by q204/q206:
-    * score ONE batch against the static structures, emit
-    * (doc_id, lang, n_gates) — the batch-local form of gateDecisions,
-    * with the same left-join + coalesce unscored-fails-its-gate rule. */
-  private def gateBatchDecisions(b: DataFrame, spans: DataFrame, c2: DataFrame,
-                                 c1: DataFrame, m: NaiveBayes.NbModel): DataFrame = {
+    * score ONE batch against the static structures, hand
+    * (doc_id, lang, n_gates) to `write` — the batch-local form of
+    * gateDecisions, with the same left-join + coalesce
+    * unscored-fails-its-gate rule. The trigger's own lineage cuts are
+    * freed once `write` returns; the static cuts stay for later
+    * triggers. */
+  private def writeGateBatchDecisions(b: DataFrame, spans: DataFrame, c2: DataFrame,
+                                      c1: DataFrame, m: NaiveBayes.NbModel)
+                                     (write: DataFrame => Unit): Unit = {
     // the batch-local form of gateDecisions' shared token frame (r18):
     // inside foreachBatch `b` is a plain batch frame, so the cut is legal
     // — one tokenize of the micro-batch instead of three per trigger
@@ -743,7 +751,13 @@ object SparkEntry {
     val nb = NaiveBayes.scoreToks(bt, m, "doc_id", "__t")
       .join(bt.select("doc_id", "lang"), Seq("doc_id"))
       .select(col("doc_id"), (col("pred_label") === col("lang")).cast("long").as("g_nb"))
-    composeGates(bt.select("doc_id", "lang"), span, ppl, nb)
+    val decided = composeGates(bt.select("doc_id", "lang"), span, ppl, nb)
+    try write(decided)
+    finally {
+      // this trigger's cuts: the token frame and NaiveBayes' count frame
+      val statics = Seq(spans, c2, c1).flatMap(Checkpoints.cuts).toSet
+      Checkpoints.cuts(decided).filterNot(statics).foreach(_.unpersist(blocking = false))
+    }
   }
 
   /** q203/q206's pinned reload schema — the production ingest path reads
@@ -3456,12 +3470,13 @@ object SparkEntry {
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, d.schema)
         .filter(col("doc_id") >= IncrementalSplitId)
       val tmpPath = java.nio.file.Files.createTempDirectory("graft_q204")
+      val gates = s"$tmpPath/gates"
+      graft.streaming.StreamOps.runBatches(stream, s"$gates-ckpt") { (b, batchId) =>
+        writeGateBatchDecisions(b, spans, c2, c1, m)(
+          _.write.mode("overwrite").parquet(s"$gates/batch=$batchId"))
+      }
       val decided = Checkpoints.cut(
-        graft.streaming.StreamOps.runBatchesToParquet(
-            spark, stream, s"$tmpPath/gates") { b =>
-          gateBatchDecisions(b, spans, c2, c1, m)
-        }.select("doc_id", "lang", "n_gates"),
-        eager = true)
+        spark.read.parquet(gates).select("doc_id", "lang", "n_gates"), eager = true)
       rmTree(tmpPath.toFile)
       decided.orderBy("doc_id").limit(100)
     },
@@ -3486,12 +3501,13 @@ object SparkEntry {
       // the parquet-partials convention would add a dead write+read per
       // batch that nothing consumes
       graft.streaming.StreamOps.runBatches(stream, s"$tmpPath/ckpt") { (b, batchId) =>
-        graft.sources.Sinks.writeJsonlShards(
-          gateBatchDecisions(b, spans, c2, c1, m)
-            .filter(col("n_gates") === 3)
-            .join(b.select("doc_id", "text"), Seq("doc_id"))
-            .select("doc_id", "lang", "text"),
-          s"$shardRoot/batch=$batchId", maxRecordsPerShard = 64)
+        writeGateBatchDecisions(b, spans, c2, c1, m) { g =>
+          graft.sources.Sinks.writeJsonlShards(
+            g.filter(col("n_gates") === 3)
+              .join(b.select("doc_id", "text"), Seq("doc_id"))
+              .select("doc_id", "lang", "text"),
+            s"$shardRoot/batch=$batchId", maxRecordsPerShard = 64)
+        }
       }
       val manifest = Checkpoints.cut(
         bandManifest(

@@ -39,8 +39,11 @@ object Checkpoints {
     * a frame that was never cut is a no-op — safe to call
     * unconditionally. Blocking=false: eviction races nothing (the caller
     * guarantees the frame is dead). */
-  def free(df: DataFrame): Unit =
+  def free(df: DataFrame): Unit = cuts(df).foreach(_.unpersist(blocking = false))
+
+  /** The RDDs behind the lineage cuts `df` reads. */
+  def cuts(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
     df.queryExecution.analyzed.collect {
       case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-    }.foreach(_.unpersist(blocking = false))
+    }
 }

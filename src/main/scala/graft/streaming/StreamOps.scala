@@ -596,49 +596,43 @@ object StreamOps {
   def runUpdate(spark: SparkSession, df: DataFrame, name: String): DataFrame =
     runWithMode(spark, df, name, "update")
 
+  private val boundedRunLock = new Object
+
+  /** State partitions of a bounded run (see `runWithMode`). */
+  private val StateParts = 4
+
   /** Bounded-input runner. Two overheads dominate small closed inputs and
     * are turned off here (measured 6.5 s → 2.3 s on the sf0.1 attribution
-    * join, `graft.tools.StreamBench`; round 5: 4 partitions → 1.6 s — a
-    * stream-stream join commits FOUR state stores per partition per
-    * micro-batch, so addBatch scales with the partition count: 3.6 s at
-    * 32, 1.0 s at 8, 0.88 s at 4 on the same 200k-row closed input):
+    * join; round 5: 4 partitions → 1.6 s — a stream-stream join commits
+    * FOUR state stores per partition per micro-batch, so addBatch scales
+    * with the partition count: 3.6 s at 32, 1.0 s at 8, 0.88 s at 4 on
+    * the same 200k-row closed input):
     *
     *   - state partitions: a stateful op commits one state-store file per
     *     partition per micro-batch; 32 partitions of near-empty state is
-    *     pure fsync overhead. 4 fits any bench SF; a real deployment sizes
-    *     `spark.sql.shuffle.partitions` to its state volume instead.
+    *     pure fsync overhead. `StateParts` = 4 fits any bench SF; a real
+    *     deployment sizes `spark.sql.shuffle.partitions` to its state
+    *     volume instead.
     *   - no-data micro-batches: they only exist to advance the watermark
     *     after the last data batch — complete-mode aggregates and inner
-    *     joins have already emitted everything by then. Callers running
-    *     append-mode AGGREGATIONS (emission gated on the watermark) must
-    *     pass noDataBatches = true or the tail windows never emit.
+    *     joins have already emitted everything by then. An append-mode
+    *     windowed AGGREGATION (emission gated on the watermark) would lose
+    *     its tail windows here; run it complete-mode (`runToCompletion`).
     *
-    * Session confs are restored after the run (they are query-start-time
-    * bound, so the temporary change cannot leak into concurrent plans
-    * already started). */
-  /** The bounded runner mutates SESSION-GLOBAL conf (state partitions,
-    * no-data micro-batches) around the run and restores it after. Two
-    * concurrent bounded runs on the same session would race those settings
-    * (observed: parallel test suites left a stream on the wrong partition
-    * count) — serialize them. Real deployments run one streaming query
-    * per session and never hit the lock. */
-  private val boundedRunLock = new Object
-
-  /** Bench/local state-partition sizing knob (see runWithMode's scaladoc:
-    * a stateful op commits one state-store file per partition per
-    * micro-batch, so near-empty state wants FEW partitions; deployments
-    * size to state volume). Env-overridable for A/B measurement
-    * (graft.tools.StreamBench). */
-  private val DefaultStateParts =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS").map(_.toInt).getOrElse(4)
-
+    * The runner mutates SESSION-GLOBAL conf around the run and restores
+    * it after (both settings are bound at query start, so the temporary
+    * change cannot leak into concurrent plans already started). Two
+    * concurrent bounded runs on the same session would race those
+    * settings (observed: parallel test suites left a stream on the wrong
+    * partition count), so `boundedRunLock` serializes them. Real
+    * deployments run one streaming query per session and never hit the
+    * lock. */
   private def runWithMode(spark: SparkSession, df: DataFrame, name: String,
-                          mode: String, statePartitions: Int = DefaultStateParts,
-                          noDataBatches: Boolean = false): DataFrame = boundedRunLock.synchronized {
+                          mode: String): DataFrame = boundedRunLock.synchronized {
     val oldParts = spark.conf.get("spark.sql.shuffle.partitions")
     val oldNoData = spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", statePartitions)
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatches)
+    spark.conf.set("spark.sql.shuffle.partitions", StateParts)
+    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", false)
     try {
       val q = df.writeStream
         .format("memory")
@@ -646,13 +640,6 @@ object StreamOps {
         .outputMode(mode)
         .start()
       try q.processAllAvailable() finally q.stop()
-      // overhead triage aid (graft.tools.StreamParts): per-batch phase
-      // durations of the bounded run, printed only when asked
-      if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach { p =>
-          System.err.println(s"[stream-debug] $name batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durations=${p.durationMs}")
-        }
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", oldParts)
       oldNoData match {

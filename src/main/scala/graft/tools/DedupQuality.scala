@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Engine, Tables}
 import graft.operators.TextDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -502,9 +502,8 @@ object DedupQuality {
     val dirs = if (args.nonEmpty) args.toSeq
     else Seq("/root/testdata/sf0.01",
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")).distinct
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     dirs.foreach { d =>
       val docs = Tables.table(spark, d, "documents")

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Engine, Tables}
 import graft.operators.{Similarity, TextDedup}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-start dev tool: prints the occupancy numbers DriftGuardSpec
@@ -12,8 +11,8 @@ import org.apache.spark.sql.functions._
   * "measured" comments in the spec when margins need re-tuning. */
 object DriftProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions","8").config("spark.ui.enabled","false").getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val cap = TextDedup.DefaultMaxBucketSize
     for (d <- Seq("/root/testdata/sf0.01","/root/testdata/sf0.1")) {

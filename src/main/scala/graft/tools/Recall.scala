@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{Engine, Tables}
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** ANN quality/speed tradeoff: recall@k of lshTopK against bruteForceTopK
@@ -10,11 +9,8 @@ import org.apache.spark.sql.functions._
 object Recall {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     val emb = Tables.table(spark, dir, "embeddings")
     val nQ = 50

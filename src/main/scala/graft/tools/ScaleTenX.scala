@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{Engine, SparkEntry, Tables}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** One-order-of-magnitude local scale proof for the heavy band (dev tool,
@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *     structure; cross-replica similarities scramble to noise.
   *
   * Usage: runMain graft.tools.ScaleTenX [factor] [outDir] [query...]
-  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32). */
+  * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default nproc). */
 object ScaleTenX {
   private val HeavyBand = Seq(
     "q40_minhash_neardup", "q74_neardup_clusters", "q82_minhash_portable",
@@ -46,16 +46,8 @@ object ScaleTenX {
     val outDir = if (args.length > 1) args(1) else "/tmp/graft_scale10x"
     val queries = if (args.length > 2) args.drop(2).toSeq else HeavyBand
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = spark.read.parquet(s"$srcDir/documents.parquet")
@@ -118,7 +110,7 @@ object ScaleTenX {
     // (1.5M pairs) but a multi-GB driver collect at the 33×+ band, where
     // the verified pair set grows ~quadratically (2σ threshold); the 10×
     // run stays the quality receipt, larger factors are wall/stage
-    // receipts (ProfileQ84/ProfileQ97 take the scaled dir directly)
+    // receipts (OneQuery reads the scaled dir through SPARK_GRAFT_SF_DIR)
     if (factor <= 10 && queries.contains("q84_embedlsh_portable")) {
       val b0 = graft.operators.Similarity.recommendedBits(
         spark.read.parquet(s"$srcDir/embeddings.parquet").count(), 32)

@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.{Checkpoints, TextDedup}
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** The injectable lineage-cut policy (round-7 verdict item 4): without a
   * configured checkpoint dir every cut is a localCheckpoint (executor-
@@ -77,4 +78,36 @@ class CheckpointsSpec extends AnyFunSuite {
     assert(after - before <= 1,
       s"connectedComponents leaked ${after - before} persisted RDD generations")
   }
+
+  test("q204 leaves persisted exactly its static cuts and its result cut") {
+    // gateStatics cuts four frames every trigger reads (shared-span
+    // index, LM key stream, both LM marginals); each trigger's own cuts
+    // (its token frame, NaiveBayes' count frame) must be freed after its
+    // write, the classifier's training cuts once its model is collected,
+    // and the result is one eager cut. SparkContext holds persisted
+    // RDDs by weak reference, so a dropped cut can be collected before it
+    // is counted: a poller keeps every RDD persisted during the run
+    // reachable, and one whose storage level is still set was never
+    // unpersisted.
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.rdd.RDD[_]]()
+    def poll(): Unit = sc.getPersistentRDDs.foreach { case (id, r) => if (!before(id)) seen.putIfAbsent(id, r) }
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val poller = new Thread(() => while (running.get()) { poll(); Thread.sleep(2) })
+    poller.start()
+    val out =
+      try SparkEntry.queries("q204_stream_gate_ensemble")(spark, TestSpark.sf0001)
+      finally { running.set(false); poller.join() }
+    poll()
+    val left = seen.asScala.collect {
+      case (id, r) if r.getStorageLevel != org.apache.spark.storage.StorageLevel.NONE => id
+    }.toSet
+    val result = out.queryExecution.analyzed.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }
+    assert(result.size == 1 && left.contains(result.head), s"result cut $result not among $left")
+    assert(left.size == 4 + 1, s"q204 left ${left.size} persisted RDDs, expected 4 static + 1 result")
+  }
+
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Engine facade: the user-facing switch path from the reference app. */
 class EngineSpec extends AnyFunSuite {
@@ -58,5 +59,21 @@ class EngineSpec extends AnyFunSuite {
     val c1 = compiles
     run(segmentsSql)
     assert(compiles - c1 == 0, "the re-run recompiled classes it compiled before")
+  }
+
+  test("only Engine.session and ClusterCheck build a SparkSession in src/main") {
+    // every other main opens Engine.session, so its numbers measure the
+    // engine Engine, Verify and the benchmark run; ClusterCheck needs a
+    // local-cluster master and executor JVM options Engine.session does
+    // not take
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root)
+    val builders =
+      try files.iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder()"))
+        .map(p => root.relativize(p).toString).toSet
+      finally files.close()
+    assert(builders == Set("graft/Engine.scala", "graft/tools/ClusterCheck.scala"))
   }
 }
