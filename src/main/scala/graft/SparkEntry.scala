@@ -103,6 +103,41 @@ object SparkEntry {
   private def annSearchPointFor(spark: SparkSession, dir: String): (Int, Int, Int) =
     graft.operators.Similarity.recommendedSearchPoint(embedCountFor(spark, dir))
 
+  /** Embedding near-dup pairs (q84, and rows-only q43 under its own id):
+    * quantized vectors + ±1 integer hyperplanes make bucket signs AND
+    * verification scores exact integers, so the whole pipeline
+    * hash-checks. minScore 25M ≈ cosine 0.25 on unit-norm vectors (the
+    * synthetic embeddings top out near cosine 0.4; real corpora use
+    * ≈0.9 with the same operator). bits self-sizes from the corpus
+    * count — oracleSqlFor interpolates the same dir-derived width into
+    * the replay text — and the directional multi-probe point runs the
+    * broadcast verify regime under the row hint. */
+  private val embedLshPairs: (SparkSession, String) => DataFrame = { (spark, dir) =>
+    val b = embedBitsFor(spark, dir)
+    Similarity.portableEmbedPairs(Tables.table(spark, dir, "embeddings"),
+        "vec_id", "embedding", minScore = EmbedMinScore,
+        tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b),
+        corpusRowsHint = embedCountFor(spark, dir))
+      .orderBy("id_a", "id_b").limit(100)
+  }
+
+  /** LSH ANN top-k (q220, and rows-only q45 under its own id): quantized
+    * vectors, ±1 integer hyperplane buckets, query-side full-XOR
+    * multi-probe at the SELF-SIZED search point (annSearchPointFor — the
+    * entry and the DuckDB text interpolate the same triple), BIGINT dot
+    * ranking with ties to the lower vec_id. Tables are the CORPUS side's
+    * cost (n×L bucket keys) while the probe fan-out rides the
+    * broadcast-small query side. */
+  private val annLshTopK: (SparkSession, String) => DataFrame = { (spark, dir) =>
+    val emb = Tables.table(spark, dir, "embeddings")
+    val (t, b, p) = annSearchPointFor(spark, dir)
+    Similarity.lshTopKInt(emb, "vec_id", "embedding",
+        emb.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
+        "qid", "qvec", k = 5, numTables = t, bitsPerTable = b, probes = p)
+      .orderBy("query_id", "rank").limit(100)
+  }
+
   /** q186/q187's semantic-cluster count — self-sized like the LSH width:
     * k targets ~125 vectors per cluster (SemDeDup's k ≪ n regime; the
     * in-cluster pair term is then occupancy-bounded, not corpus-bounded),
@@ -1349,27 +1384,13 @@ object SparkEntry {
           size(array_union(col("ta"), col("tb"))).cast("long").as("n_union"))
         .orderBy("id_a").limit(100)
     },
-    // Embedding-cosine near-dup pairs via hyperplane LSH — rows-only.
-    // τ=0.25 because the synthetic embeddings top out near cosine 0.4;
-    // real corpora use τ≈0.9 with the same operator. Round 13: the
-    // production float path runs the same self-sized directional
-    // multi-probe operating point as its hash-checked portable twin
-    // (q84) — fewer tables for the same threshold recall, broadcast
-    // verify regime under the row hint.
-    "q43_embed_neardup" -> { (spark, dir) =>
-      val b = embedBitsFor(spark, dir)
-      Similarity.embeddingNearDupPairs(Tables.table(spark, dir, "embeddings"),
-          "vec_id", "embedding", threshold = 0.25,
-          numTables = embedTablesFor(b), bitsPerTable = b,
-          probes = embedProbesFor(b), corpusRowsHint = embedCountFor(spark, dir))
-        .orderBy("id_a", "id_b").limit(100)
-    },
-    // Brute-force top-k (exact ANN baseline) — ORACLE since round 5: the
-    // declared form ranks by the quantized integer dot product
-    // (floor(x·10^4) per component, BIGINT scores — bit-identical in any
-    // IEEE engine, so the driver hash-checks it; float cosine
-    // bruteForceTopK remains the production scorer, spec'd vs a scalar
-    // reference). Unit-norm embeddings ⇒ dot ranking ≈ cosine ranking.
+    // Embedding near-dup pairs — rows-only: the q84 builder (embedLshPairs)
+    // under the original id.
+    "q43_embed_neardup" -> embedLshPairs,
+    // Brute-force top-k (exact ANN baseline) — ORACLE since round 5: ranks
+    // by the quantized integer dot product (floor(x·10^4) per component,
+    // BIGINT scores — bit-identical in any IEEE engine, so the driver
+    // hash-checks it). Unit-norm embeddings ⇒ dot ranking ≈ cosine ranking.
     "q44_cosine_topk" -> { (spark, dir) =>
       val emb = Tables.table(spark, dir, "embeddings")
       Similarity.bruteForceTopKInt(emb, "vec_id", "embedding",
@@ -1377,26 +1398,13 @@ object SparkEntry {
           "qid", "qvec", k = 5)
         .orderBy("query_id", "rank").limit(100)
     },
-    // LSH-bucketed approximate top-k — rows-only. Round 13: query-side
-    // multi-probe (tables are the CORPUS side's cost — n×L bucket keys —
-    // while the probe fan-out rides the broadcast-small query side).
-    // Round 16: the operating point is SELF-SIZED from the corpus count
-    // (annSearchPointFor) instead of the hardcoded 4×4+4, which
-    // under-buckets at 100× corpus; the rule reproduces 4×4+4 exactly
-    // at n ≤ 128 and holds its collision probability as bits grow.
-    "q45_ann_lsh" -> { (spark, dir) =>
-      val emb = Tables.table(spark, dir, "embeddings")
-      val (t, b, p) = annSearchPointFor(spark, dir)
-      Similarity.lshTopK(emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 5).select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-          "qid", "qvec", k = 5, numTables = t, bitsPerTable = b, probes = p)
-        .orderBy("query_id", "rank").limit(100)
-    },
+    // LSH-bucketed approximate top-k — rows-only: the q220 builder
+    // (annLshTopK) under the original id.
+    "q45_ann_lsh" -> annLshTopK,
     // IVF coarse-quantizer ANN (the nprobe/nlist alternative to LSH) —
     // ORACLE since round 5: integer scoring end to end (assignment, probe,
     // rank), so DuckDB replicates the exact pipeline — centroid choice,
     // list assignment, nprobe probing and final ranking all hash-match.
-    // Float-cosine ivfTopK remains the production scorer (tools/Recall).
     "q53_ann_ivf" -> { (spark, dir) =>
       val emb = Tables.table(spark, dir, "embeddings")
       Similarity.ivfTopKInt(emb, "vec_id", "embedding",
@@ -2757,21 +2765,8 @@ object SparkEntry {
         .filter(col("n_inter") * 10 >= col("n_union") * 9)
         .orderBy("id_a", "id_b").limit(100)
     },
-    // Portable embedding-LSH near-dup pairs (round 5): quantized integer
-    // vectors + ±1 integer hyperplanes make bucket signs AND verification
-    // scores exact integers — the whole embedding near-dup pipeline
-    // hash-checks (float-cosine q43 stays the production path).
-    // minScore 25M ≈ cosine 0.25 on unit-norm vectors, matching q43's τ.
-    // bits self-sizes from the corpus count (round 11) — oracleSqlFor
-    // interpolates the same dir-derived width into the replay text.
-    "q84_embedlsh_portable" -> { (spark, dir) =>
-      val b = embedBitsFor(spark, dir)
-      Similarity.portableEmbedPairs(Tables.table(spark, dir, "embeddings"),
-          "vec_id", "embedding", minScore = EmbedMinScore,
-          tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b),
-          corpusRowsHint = embedCountFor(spark, dir))
-        .orderBy("id_a", "id_b").limit(100)
-    },
+    // Embedding-LSH near-dup pairs (round 5), hash-checked (embedLshPairs).
+    "q84_embedlsh_portable" -> embedLshPairs,
     // Sharded past-bound embedding near-dup (round 17, verdict #1): the
     // shipped 100-TB policy promoted into the oracle gate. shardRows is
     // FORCED to n/3+1 so the gate fixture runs S = 3 (3 within-shard +
@@ -2983,25 +2978,10 @@ object SparkEntry {
           chunks = phashChunksFor(spark, dir))
         .orderBy("query_id", "rank").limit(100)
     },
-    // Portable LSH ANN top-k (round 15): the hash-checkable twin of q45
-    // (the q44/q53 integer-twin pattern applied to the last rows-only
-    // ANN entry) — quantized vectors, ±1 integer hyperplane buckets,
-    // query-side full-XOR multi-probe at the SELF-SIZED search point
-    // (round 16: annSearchPointFor, the dir-derived rule — entry and
-    // DuckDB text interpolate the same triple), BIGINT dot ranking with
-    // ties to the lower vec_id. DuckDB replays the identical pipeline:
-    // bucketing, probe fan-out, candidate join and ranking all
-    // hash-match (float-cosine lshTopK stays the production scorer,
-    // recall-pinned in RecallSpec).
-    "q220_ann_lsh_portable" -> { (spark, dir) =>
-      val emb = Tables.table(spark, dir, "embeddings")
-      val (t, b, p) = annSearchPointFor(spark, dir)
-      Similarity.lshTopKInt(emb, "vec_id", "embedding",
-          emb.filter(col("vec_id") < 5)
-            .select(col("vec_id").as("qid"), col("embedding").as("qvec")),
-          "qid", "qvec", k = 5, numTables = t, bitsPerTable = b, probes = p)
-        .orderBy("query_id", "rank").limit(100)
-    },
+    // LSH ANN top-k (round 15), hash-checked (annLshTopK): DuckDB replays
+    // the identical pipeline — bucketing, probe fan-out, candidate join
+    // and ranking all hash-match; recall-pinned in RecallSpec.
+    "q220_ann_lsh_portable" -> annLshTopK,
     // Streaming ANN serving (round 15): query vectors arrive as a STREAM
     // and are answered per micro-batch against a STATIC prebuilt LSH
     // index (Similarity.lshAnnIndex, lineage-cut once — the persisted-
@@ -4744,7 +4724,7 @@ object SparkEntry {
           "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank FROM cand) " +
           "SELECT query_id, vec_id, score, rank FROM ranked WHERE rank <= 5 " +
           "ORDER BY query_id, rank LIMIT 100"),
-      // round 15: the q45 LSH ANN twin replayed literally — the SAME
+      // round 15: the q220 LSH ANN replayed literally — the SAME
       // ±1 hyperplanes as VALUES (one source of truth:
       // portableHyperplanes at the SELF-SIZED search point, seed 11 —
       // round 16: the triple is dir-derived, annSearchPointFor),

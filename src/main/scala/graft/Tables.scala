@@ -48,7 +48,7 @@ object Tables {
         // the quantized-embedding entries) — registering here makes every
         // gate/bench/judge path that reaches the data also able to
         // resolve them, whatever session it brings (operators also
-        // self-register on their own frames, the fastCosine pattern)
+        // self-register on their own frames)
         graft.functions.IntDot.register(spark)
         names.foreach { t =>
           val path = s"$dir/$t.parquet"

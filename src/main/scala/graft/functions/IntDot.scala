@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
 /** Exact integer dot product of two array<long> vectors as a native
   * Catalyst expression with whole-stage codegen — the hot-path upgrade
   * over the `aggregate(zip_with(...))` composition in
-  * [[graft.operators.Similarity.intDot]] (the CosineSim precedent: one
-  * fused primitive loop per row pair, no product-array allocation, no
-  * per-element lambda dispatch). The quantized-embedding family
+  * [[graft.operators.Similarity.intDot]]: one fused primitive loop per
+  * row pair, no product-array allocation, no per-element lambda
+  * dispatch. The quantized-embedding family
   * (q84/q97/q125 LSH signatures + verification, q186/q187 centroid
   * assignment, q202 modality audit) evaluates this millions of times
   * per action, so the interpreted HOF chain was the dominant per-row

@@ -17,8 +17,8 @@ import org.apache.spark.sql.types._
   * scale where it matters). This expression is the same computation as
   * one tight triple loop over a constant Long matrix: bytecode size is
   * independent of the operating point, so the signature pass stays
-  * inside whole-stage codegen at ANY rule-derived width (the CosineSim/
-  * IntDot native-expression precedent).
+  * inside whole-stage codegen at ANY rule-derived width (the IntDot
+  * native-expression precedent).
   *
   * Semantics replicate the composed form for every NON-NULL input,
   * including the mismatch edge: a non-`dim`-length vector contributed 0

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.expressions.Window
@@ -10,32 +9,29 @@ import org.apache.spark.sql.functions._
   * (`embeddings.embedding`: array<float>[64] — FIXTURES.md), the
   * similarity-search tier of the build brief.
   *
-  * Two paths:
-  *   - `bruteForceTopK` — exact cosine top-k per query. The join is a
+  * One scorer: vectors are quantized to BIGINT components
+  * (`quantize`, floor(x·10^4)) and scored by the integer dot product
+  * (`intDot`), so every score is exact and any IEEE engine replays it
+  * bit-for-bit. Search paths:
+  *   - `bruteForceTopKInt` — exact top-k per query. The join is a
   *     broadcast of the (small) query set against the corpus, so the corpus
   *     is scanned once with no shuffle of vectors; ranking shuffles only
-  *     (query_id, vec_id, sim). Correctness baseline + the right answer
+  *     (query_id, vec_id, score). Correctness baseline + the right answer
   *     whenever |queries| is small.
-  *   - `lshTopK` — sign-random-projection LSH (Charikar hyperplane LSH):
-  *     `numTables` independent tables of `bitsPerTable` seeded hyperplanes;
-  *     a vector's bucket in a table is the integer of its dot-product signs.
-  *     Candidates = bucket collisions in ANY table; exact cosine re-ranks.
-  *     At 100 TB the bucket join replaces the cartesian product — shuffle is
-  *     linear in corpus size × numTables.
+  *   - `lshTopKInt` — sign-random-projection LSH (Charikar hyperplane LSH)
+  *     over ±1 integer hyperplanes: `numTables` tables of `bitsPerTable`
+  *     seeded planes; a vector's bucket in a table is the integer of its
+  *     dot-product signs. Candidates = bucket collisions in ANY table
+  *     (plus query-side probes); the exact integer dot re-ranks. At 100 TB
+  *     the bucket join replaces the cartesian product — shuffle is linear
+  *     in corpus size × numTables.
+  *   - `ivfTopKInt` — inverted-file search over a lowest-id centroid set.
   *
-  * Hyperplanes are generated driver-side from a fixed seed and inlined as
-  * literal arrays, so signatures are pure codegen'd column math (zip_with /
-  * aggregate) — no UDF, no extra shuffle, deterministic across runs.
+  * Hyperplanes are generated driver-side from a fixed seed; signatures are
+  * one native expression (graft.functions.PortableBuckets) — no UDF, no
+  * extra shuffle, deterministic across runs and engines.
   */
 object Similarity {
-
-  /** Fused-loop native cosine (graft.functions.CosineSim) for the scoring
-    * hot paths; registered lazily on the frame's session. Semantics equal
-    * VectorFunctions.cosine (tested). */
-  private def fastCosine(df: DataFrame, a: Column, b: Column): Column = {
-    graft.functions.CosineSim.register(df.sparkSession)
-    call_function("cosine_sim", a, b)
-  }
 
   /** Sizing rule for hyperplane-LSH signature width: with n corpus
     * vectors and b bits per table, expected bucket occupancy is n/2^b, so
@@ -142,194 +138,6 @@ object Similarity {
     (tables, bits, bits)
   }
 
-  /** Deterministic unit-free hyperplanes: numTables × bitsPerTable × dim. */
-  def hyperplanes(dim: Int, numTables: Int, bitsPerTable: Int, seed: Long = 42L): Seq[Seq[Array[Double]]] = {
-    val rng = new scala.util.Random(seed)
-    Seq.fill(numTables)(Seq.fill(bitsPerTable)(Array.fill(dim)(rng.nextGaussian())))
-  }
-
-  /** Bucket id of `vec` in one table: Σ (dot(vec, plane_b) >= 0) << b —
-    * the composed REFERENCE form (HOF dot per plane); hot paths go
-    * through [[allBuckets]]'s native expression, whose sign decisions
-    * NativeExprPropSpec pins against this spelling. */
-  def bucketFor(vec: Column, planes: Seq[Array[Double]]): Column =
-    planes.zipWithIndex.map { case (p, b) =>
-      when(dot(vec, typedLit(p.toSeq)) >= 0.0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
-  /** (table, bucket) pairs for a vector across all tables, as array<long>
-    * indexed by table. Round 16: ONE native expression
-    * (graft.functions.GaussianBuckets) — the composed per-plane HOF form
-    * allocated two arrays per plane per row (measured 4.26 s vs 0.32 s
-    * against the portable twin at the self-sized q45 point) and
-    * outgrows the 64 KB codegen method limit at wide rule points. */
-  def allBuckets(vec: Column, planes: Seq[Seq[Array[Double]]]): Column =
-    graft.functions.GaussianBuckets.column(vec, planes)
-
-  /** Exact cosine top-k of `corpus` for each row of `queries`.
-    * Output: (query_id, vec_id, sim, rank), rank 1..k per query. */
-  def bruteForceTopK(corpus: DataFrame, idCol: String, vecCol: String,
-                     queries: DataFrame, queryIdCol: String, queryVecCol: String,
-                     k: Int): DataFrame = {
-    val joined = corpus.select(col(idCol), col(vecCol))
-      .crossJoin(broadcast(queries.select(col(queryIdCol), col(queryVecCol))))
-      .filter(col(queryIdCol) =!= col(idCol)) // a vector is trivially its own neighbor
-      .withColumn("sim", fastCosine(corpus, col(vecCol), col(queryVecCol)))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("sim").desc, col(idCol))
-    joined
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol).as("query_id"), col(idCol).as("vec_id"), col("sim"), col("rank"))
-  }
-
-  /** LSH-bucketed approximate top-k. Same output shape as bruteForceTopK;
-    * recall < 1 by construction, tunable via numTables/bitsPerTable.
-    *
-    * `probes` > 0 enables QUERY-SIDE multi-probe (Lv et al. 2007 — the
-    * search-shaped use): each query additionally probes the buckets at
-    * Hamming distance 1 in the first `probes` signature bits (full XOR
-    * flips, not the pair-gen path's directional ones — search has no
-    * second orientation: only the query probes), so a near neighbor is
-    * found when the signatures differ in ≤ 1 bit. The same recall then
-    * needs fewer TABLES, and tables are what the CORPUS side pays for —
-    * its bucket stream is n×L keys while the probe fan-out rides the
-    * broadcast-small query side. */
-  def lshTopK(corpus: DataFrame, idCol: String, vecCol: String,
-              queries: DataFrame, queryIdCol: String, queryVecCol: String,
-              k: Int, numTables: Int = 4, bitsPerTable: Int = 8,
-              dim: Int = 64, seed: Long = 42L, probes: Int = 0,
-              maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
-    require(probes <= bitsPerTable,
-      s"probes ($probes) beyond the $bitsPerTable-bit signature flip bits no bucket key carries")
-    val planes = hyperplanes(dim, numTables, bitsPerTable, seed)
-    // Keys-only candidate generation: the bucket join and the distinct
-    // carry (query_id, vec_id) ids, never the vectors (the narrow-band
-    // discipline of embeddingNearDupPairs). The query side is small by
-    // contract → broadcast at both the bucket join and the re-rank join,
-    // so the corpus never shuffles; only candidate ids do.
-    // Round 16: corpus-side posting lists are CAPPED per (table, bucket)
-    // — the phashTopK discipline: a degenerate bucket (near-identical
-    // vectors keying together) otherwise multiplies EVERY query probing
-    // it; its members remain reachable through their other tables.
-    def withBuckets(df: DataFrame, id: String, vec: String, aId: String) =
-      df.select(col(id).as(aId),
-          posexplode(allBuckets(col(vec), planes)).as(Seq("__table", "__bucket")))
-    // corpus keys referenced twice (cap aggregate + probe join) — the
-    // lineage cut was A/B'd and rejected on measurement, same negative
-    // receipt as lshAnnIndex (round-17 ADVICE #4, BASELINE.md)
-    val cAll = withBuckets(corpus, idCol, vecCol, "vec_id")
-    val eligible = cAll.groupBy("__table", "__bucket")
-      .agg(count(lit(1)).as("__n")).filter(col("__n") <= maxBucketSize)
-      .select("__table", "__bucket")
-    val c = cAll.join(eligible, Seq("__table", "__bucket"))
-    val qHome = withBuckets(queries, queryIdCol, queryVecCol, "query_id")
-    val q =
-      if (probes <= 0) qHome
-      else qHome.select(col("query_id"), col("__table"),
-        explode(array((col("__bucket") +: (0 until probes).map(j =>
-          col("__bucket").bitwiseXOR(lit(1L << j)))): _*)).as("__bucket"))
-    val candidates = c.join(broadcast(q), Seq("__table", "__bucket"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select("query_id", "vec_id")
-      .distinct()
-    val cv = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cvec"))
-    val qv = queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qvec"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    candidates
-      .join(cv, Seq("vec_id"))
-      .join(broadcast(qv), Seq("query_id"))
-      .withColumn("sim", fastCosine(corpus, col("__cvec"), col("__qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "sim", "rank")
-  }
-
-  /** IVF (inverted-file) approximate top-k — the coarse-quantizer
-    * alternative to hyperplane LSH. `nlist` centroids are chosen as a
-    * deterministic sample of the corpus (k-means would refine them; the
-    * sampled quantizer keeps the operator dependency-free and is the
-    * standard bootstrap), every vector is assigned to its nearest
-    * centroid, and a query probes only the `nprobe` nearest lists.
-    *
-    * The centroid set stays a DataFrame end to end: list assignment is a
-    * broadcast join + max_by aggregation whose partial (map-side) phase
-    * collapses each vector's nlist candidates before the shuffle — never a
-    * collect() into a plan literal, so nlist can grow with the corpus
-    * (256, 4096, …) with zero plan/codegen growth (round-3 verdict item
-    * 2). A list is named by its centroid's id; ties on cosine break to the
-    * lowest centroid id, matching the former stable-sort behavior.
-    * Shuffle is one pass of (vec_id, vector, list); the query side
-    * broadcasts. Recall/latency tune via nlist and nprobe. */
-  /** Distributed Lloyd (k-means) refinement for the IVF coarse quantizer.
-    * Seeds from the deterministic lowest-id sample, then `iters` rounds of
-    * assign (broadcast join + max_by — the same nlist-independent shape as
-    * ivfTopK's list assignment) and re-center (per-dimension mean via
-    * posexplode + avg, rebuilt with a sorted collect_list of `dim` floats
-    * per centroid — `dim` rows per list, metadata-sized). A centroid keeps
-    * its seed's id as a stable list label; a list that empties simply
-    * disappears (k shrinks, never crashes). Each round is two shuffles of
-    * (vec, list) / (list, dim, mean) — linear in corpus size. */
-  def kmeansCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int = 2): DataFrame = {
-    graft.functions.CosineSim.register(corpus.sparkSession)
-    var centroids = corpus.select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
-      .orderBy("__cid").limit(k)
-    for (_ <- 1 to iters) {
-      val assigned = corpus.select(col(idCol).as("__vid"), col(vecCol).as("__v"))
-        .crossJoin(broadcast(centroids))
-        .groupBy("__vid")
-        .agg(first(col("__v")).as("__v"),
-          max_by(col("__cid"),
-            struct(call_function("cosine_sim", col("__v"), col("__cvec")).as("s"),
-              (-col("__cid")).as("tb"))).as("__list"))
-      centroids = assigned
-        .select(col("__list"), posexplode(col("__v")).as(Seq("__dim", "__x")))
-        .groupBy("__list", "__dim").agg(avg("__x").as("__m"))
-        .groupBy("__list")
-        .agg(transform(array_sort(collect_list(struct(col("__dim"), col("__m")))),
-          x => x.getField("__m").cast("float")).as("__cvec"))
-        .select(col("__list").as("__cid"), col("__cvec"))
-    }
-    centroids
-  }
-
-  def ivfTopK(corpus: DataFrame, idCol: String, vecCol: String,
-              queries: DataFrame, queryIdCol: String, queryVecCol: String,
-              k: Int, nlist: Int = 16, nprobe: Int = 4,
-              refineIters: Int = 0): DataFrame = {
-    val spark = corpus.sparkSession
-    graft.functions.CosineSim.register(spark)
-    // refineIters = 0 keeps the deterministic id-sample quantizer (cheap,
-    // reproducible — the declared q53 form); > 0 runs Lloyd refinement for
-    // real clustered corpora, same downstream plan either way
-    val base =
-      if (refineIters > 0) kmeansCentroids(corpus, idCol, vecCol, nlist, refineIters)
-      else corpus.select(col(idCol).cast("long").as("__cid"), col(vecCol).as("__cvec"))
-        .orderBy("__cid").limit(nlist)
-    val centroids = broadcast(base)
-    val assigned = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("__cv"))
-      .crossJoin(centroids)
-      .groupBy("vec_id")
-      .agg(first(col("__cv")).as("__cv"),
-        max_by(col("__cid"),
-          struct(call_function("cosine_sim", col("__cv"), col("__cvec")).as("s"),
-            (-col("__cid")).as("tb"))).as("__list"))
-    val pw = Window.partitionBy("query_id").orderBy(col("__s").desc, col("__cid"))
-    val probed = queries.select(col(queryIdCol).as("query_id"), col(queryVecCol).as("__qv"))
-      .crossJoin(centroids)
-      .withColumn("__s", call_function("cosine_sim", col("__qv"), col("__cvec")))
-      .withColumn("__r", row_number().over(pw))
-      .filter(col("__r") <= nprobe)
-      .select(col("query_id"), col("__qv"), col("__cid").as("__list"))
-    val w = Window.partitionBy("query_id").orderBy(col("sim").desc, col("vec_id"))
-    assigned.join(broadcast(probed), Seq("__list"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", call_function("cosine_sim", col("__cv"), col("__qv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "vec_id", "sim", "rank")
-  }
-
   /** Fixed-point quantization: floor(x · 10^4) per component, BIGINT.
     * float→double widening is exact and floor is rounding-mode-free, so
     * Spark and any IEEE-double SQL engine derive the IDENTICAL integer
@@ -346,7 +154,7 @@ object Similarity {
     * Round 13: resolves to the NATIVE fused-loop expression
     * (graft.functions.IntDot) — the integer-family hot paths evaluate
     * this millions of times per action and the interpreted HOF chain was
-    * the dominant per-row cost at 10× (the CosineSim lesson applied).
+    * the dominant per-row cost at 10×.
     * Value-identical to [[intDotHof]] incl. null edges
     * (NativeExprPropSpec). Callers outside this object must register the
     * function on their session first (graft.functions.IntDot.register —
@@ -361,15 +169,13 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
   /** Lazy per-session registration of the native integer-dot expression
-    * — the fastCosine pattern; idempotent, called at every operator
-    * entry that has a frame in hand. */
+    * on the frame's session; idempotent, called at every operator entry
+    * that has a frame in hand. */
   private def registerIntDot(df: DataFrame): Unit =
     graft.functions.IntDot.register(df.sparkSession)
 
-  /** Exact top-k by quantized integer dot product — the hash-checkable
-    * twin of `bruteForceTopK` (float cosine stays the production scorer;
-    * this is the cross-engine-verifiable form, and the shape is identical:
-    * broadcast query set, one corpus scan, narrow rank shuffle).
+  /** Exact top-k by quantized integer dot product: broadcast query set,
+    * one corpus scan, narrow rank shuffle.
     * Output: (query_id, vec_id, score BIGINT, rank). */
   def bruteForceTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                         queries: DataFrame, queryIdCol: String, queryVecCol: String,
@@ -387,13 +193,12 @@ object Similarity {
   }
 
   /** LSH-bucketed approximate top-k with PORTABLE integer scoring end to
-    * end — the hash-checkable twin of `lshTopK` (the q44/q53 twin
-    * pattern applied to the last rows-only ANN entry): quantized
-    * vectors, ±1 integer hyperplane buckets (sign decisions exact
-    * cross-engine), query-side full-XOR multi-probe (search has no
-    * second orientation — only the broadcast-small query side fans
-    * out), BIGINT dot scoring, ties to the lower vec_id. Same keys-only
-    * candidate plan as `lshTopK`: the corpus never shuffles; only
+    * end: quantized vectors, ±1 integer hyperplane buckets (sign
+    * decisions exact cross-engine), query-side full-XOR multi-probe
+    * (search has no second orientation — only the broadcast-small query
+    * side fans out), BIGINT dot scoring, ties to the lower vec_id.
+    * Recall < 1 by construction, tunable via numTables/bitsPerTable/
+    * probes. Keys-only candidate plan: the corpus never shuffles; only
     * (query_id, vec_id) candidate ids do. */
   def lshTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, queryIdCol: String, queryVecCol: String,
@@ -480,11 +285,16 @@ object Similarity {
       .select("query_id", "vec_id", "score", "rank")
   }
 
-  /** IVF top-k with quantized integer scoring end to end (assignment,
-    * probe, and final rank all on BIGINT dot products) — the
-    * hash-checkable twin of `ivfTopK`, replicable exactly in any SQL
-    * engine. Same nlist-independent plan: centroids are a broadcast
-    * frame, assignment a broadcast join + max_by. */
+  /** IVF (inverted-file) approximate top-k — the coarse-quantizer
+    * alternative to hyperplane LSH, with quantized integer scoring end to
+    * end (assignment, probe, and final rank all on BIGINT dot products),
+    * replicable exactly in any SQL engine. The `nlist` centroids are the
+    * lowest-id vectors; every vector joins its nearest centroid's list,
+    * and a query probes only its `nprobe` nearest lists. The plan is
+    * nlist-independent: centroids are a broadcast frame, assignment a
+    * broadcast join + max_by (ties to the lowest centroid id), never a
+    * collect() into a plan literal. Recall/latency tune via nlist and
+    * nprobe. */
   def ivfTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, queryIdCol: String, queryVecCol: String,
                  k: Int, nlist: Int = 16, nprobe: Int = 4,
@@ -516,24 +326,17 @@ object Similarity {
       .select("query_id", "vec_id", "score", "rank")
   }
 
-  /** Deterministic ±1 hyperplanes for the PORTABLE embedding-LSH twin:
-    * with quantized integer vectors, sign(dot(qv, plane)) is exact
-    * integer arithmetic any engine reproduces — unlike the production
-    * Gaussian hyperplanes whose float dots can straddle zero differently
-    * at the last ulp. |dot| ≤ 64·10^4 ≪ Long.Max. */
+  /** Deterministic ±1 hyperplanes for the PORTABLE embedding LSH: with
+    * quantized integer vectors, sign(dot(qv, plane)) is exact integer
+    * arithmetic any engine reproduces — unlike Gaussian float hyperplanes,
+    * whose dots can straddle zero differently at the last ulp.
+    * |dot| ≤ 64·10^4 ≪ Long.Max. */
   def portableHyperplanes(dim: Int, tables: Int, bits: Int,
                           seed: Long = 11L): Seq[Seq[Array[Long]]] = {
     val rng = new scala.util.Random(seed)
     Seq.fill(tables)(Seq.fill(bits)(Array.fill(dim)(if (rng.nextBoolean()) 1L else -1L)))
   }
 
-  /** Portable embedding near-dup pairs: integer-quantized vectors, ±1
-    * integer hyperplane buckets, integer-dot verification — the
-    * hash-checkable twin of `embeddingNearDupPairs` (float cosine stays
-    * the production scorer). Same single-pass bucketing shape: one
-    * shuffle of (table, bucket, id, qv), in-bucket pairs by double
-    * explode. `minScore` is the quantized-dot threshold (≈ cosine·10^8
-    * for unit-norm inputs). Output: (id_a, id_b, score BIGINT). */
   /** Quantized-vector frame (id, __qv) — materialized in its own
     * projection: the bucket expressions reference __qv tables×bits times
     * (CollapseProject, cf. signatureFrame). */
@@ -731,8 +534,8 @@ object Similarity {
   }
 
   /** DISTINCT within-bucket id pairs of a (id, __t, __bkt) key stream —
-    * the home-only candidate generator (probes = 0), shared by the
-    * portable and float pair pipelines. */
+    * the home-only candidate generator (probes = 0), shared by
+    * [[portableEmbedPairs]] and [[shardedJobs]]. */
   private def homeOnlyPairs(keys: DataFrame, idCol: String,
                             maxBucketSize: Int): DataFrame =
     keys
@@ -748,7 +551,7 @@ object Similarity {
     * (id, __t, __bkt) key stream — directional probe keys joined to the
     * capped home buckets; the dedup regime (before vs after exact
     * verification — the found set commutes) is the caller's decision.
-    * Shared by the portable and float pair pipelines.
+    * Shared by [[portableEmbedPairs]] and [[shardedJobs]].
     *
     * MULTI-PROBE (round 13, Lv et al. 2007): a pair collides in a table
     * iff its signatures differ in ≤ 1 bit — each doc's probe keys (home
@@ -806,6 +609,14 @@ object Similarity {
       .filter(col("score") >= minScore)
       .distinct()
 
+  /** Embedding near-dup pairs: integer-quantized vectors, ±1 integer
+    * hyperplane buckets, integer-dot verification — exact integers end to
+    * end, so the pair set hash-checks cross-engine. Single-pass
+    * bucketing: one keys-only shuffle of (table, bucket, id), in-bucket
+    * pairs by double explode (home-only) or directional multi-probe with
+    * two-regime verification (`probes` > 0). `minScore` is the
+    * quantized-dot threshold (≈ cosine·10^8 for unit-norm inputs).
+    * Output: (id_a, id_b, score BIGINT), id_a < id_b. */
   def portableEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          minScore: Long, tables: Int = 8, bits: Int = 6,
                          dim: Int = 64, seed: Long = 11L,
@@ -1112,78 +923,14 @@ object Similarity {
     spark.read.parquet(s"$workDir/pairs").select("id_a", "id_b", "score")
   }
 
-  /** Embedding-cosine near-duplicate pairs: LSH candidates (full-signature
-    * collision in any table) verified by exact cosine ≥ threshold.
-    * Output: (id_a, id_b, sim), id_a < id_b.
-    *
-    * Scale contract: past `broadcastVerifyMaxRows` this float form keeps
-    * the distinct-first shuffle shape — at corpus sizes where that plan's
-    * candidate exchange exceeds the cluster's shuffle budget (measured as
-    * a DISK cliff at 200k×dim-64, BASELINE.md round 16), deploy through
-    * [[shardedEmbedPairs]] on the quantized representation instead: its
-    * persisted-table job loop is the shipped past-bound path, and quantized
-    * verification at the 10⁴ scale is the production representation the
-    * oracle family already proves (q84 ≡ q43's pair structure). */
-  def embeddingNearDupPairs(corpus: DataFrame, idCol: String, vecCol: String,
-                            threshold: Double, numTables: Int = 4,
-                            bitsPerTable: Int = 8, dim: Int = 64,
-                            seed: Long = 42L,
-                            maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                            probes: Int = 0, corpusRowsHint: Long = -1L): DataFrame = {
-    require(probes <= bitsPerTable,
-      s"probes ($probes) beyond the $bitsPerTable-bit signature flip bits no bucket key carries")
-    val planes = hyperplanes(dim, numTables, bitsPerTable, seed)
-    // Single-pass bucketing (cf. TextDedup.minhashCandidates) with a
-    // KEYS-ONLY exchange: (table, bucket, id) triples — vectors never
-    // ride the bucket shuffle; they are joined back for candidate pairs
-    // only. Round 13: the production float path shares the portable
-    // twin's candidate generators — home-only (probes = 0, the declared
-    // q43 form through round 12) or directional multi-probe + two-regime
-    // verification (the q84 machinery: fewer tables for the same
-    // threshold recall, duplicates verified map-side when the vector
-    // frame broadcasts).
-    val keys = corpus.select(col(idCol),
-      posexplode(allBuckets(col(vecCol), planes)).as(Seq("__t", "__bkt")))
-    val v = corpus.select(col(idCol), col(vecCol))
-    def verify(pairs: DataFrame, useBroadcast: Boolean): DataFrame = {
-      def side(df: DataFrame) = if (useBroadcast) broadcast(df) else df
-      pairs
-        .join(side(v.select(col(idCol).as("id_a"), col(vecCol).as("__va"))), Seq("id_a"))
-        .join(side(v.select(col(idCol).as("id_b"), col(vecCol).as("__vb"))), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          fastCosine(corpus, col("__va"), col("__vb")).as("sim"))
-        .filter(col("sim") >= threshold)
-    }
-    if (probes <= 0)
-      verify(homeOnlyPairs(keys, idCol, maxBucketSize), useBroadcast = false)
-    else {
-      if (corpusRowsHint >= 0 && corpusRowsHint <= broadcastVerifyMaxRows(dim))
-        verify(probedRawPairs(keys, idCol, maxBucketSize, probes),
-          useBroadcast = true).distinct()
-      else {
-        // shuffle regime: keys cut once (three references), dedup
-        // partitioning sized by code from the keys-only candidate
-        // estimate (see portableEmbedPairs)
-        val cutKeys = Checkpoints.cut(keys, eager = true)
-        val parts = dedupPartitionsFor(
-          estimatedRawCandidates(cutKeys, probes, maxBucketSize),
-          corpus.sparkSession.sessionState.conf.numShufflePartitions)
-        verify(probedRawPairs(cutKeys, idCol, maxBucketSize, probes)
-          .repartition(parts, col("id_a"), col("id_b")).distinct(),
-          useBroadcast = false)
-      }
-    }
-  }
-
   /** Deterministic semantic clustering for the SemDeDup family (q186/
     * q187): assign every vector to its nearest of `nlist` centroids,
     * where the centroids are the `nlist` LOWEST-ID vectors (the
     * `ivfTopKInt` convention) and "nearest" is the exact integer-dot
     * argmax over ×10⁴-quantized vectors — so any engine replays the
     * IDENTICAL partition of the corpus (a float k-means would be both
-    * seed- and ulp-divergent cross-engine; Lloyd refinement stays the
-    * production path via `kmeansCentroids`, this is the hash-checkable
-    * twin). Ties break to the lowest centroid id.
+    * seed- and ulp-divergent cross-engine). Ties break to the lowest
+    * centroid id.
     *
     * Scale shape: centroids are one broadcast (corpus-size-sublinear by
     * contract — SemDeDup runs with k ≪ n; at k beyond broadcast range

@@ -11,9 +11,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   *   - [[RangeJoinRewrite]] — naive time-range joins become bucketized
   *     equi-joins instead of nested-loop joins.
   *
-  * The native scalar functions (cosine_sim, …) are registered
-  * per-session by `graft.functions.CosineSim.register` — function
-  * registration is session-state, not an extension, so both paths work.
+  * The native scalar functions (int_dot, …) are registered
+  * per-session by their own `register` (e.g. `graft.functions.IntDot`)
+  * — function registration is session-state, not an extension, so both
+  * paths work.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -129,28 +129,6 @@ object DedupQuality {
     (found, truth, if (truth == 0) 1.0 else found.toDouble / truth)
   }
 
-  /** Pair recall of the SHIPPED q43 float-path operating point (round
-    * 13: self-sized bits, probed tables, directional probes — the
-    * production config) vs exact all-pairs float-cosine truth at the
-    * q43 threshold. Found ⊆ truth by exact verification, same logic as
-    * the portable receipt. */
-  def measureEmbedPairsFloat(spark: SparkSession, emb: DataFrame,
-                             threshold: Double = 0.25): (Long, Long, Double) = {
-    import graft.operators.Similarity
-    graft.functions.CosineSim.register(spark)
-    val v = emb.select(col("vec_id"), col("embedding"))
-    val truth = v.as("a").crossJoin(v.as("b"))
-      .filter(col("a.vec_id") < col("b.vec_id"))
-      .withColumn("sim", call_function("cosine_sim", col("a.embedding"), col("b.embedding")))
-      .filter(col("sim") >= threshold).count()
-    val n = emb.count()
-    val bits = Similarity.recommendedBits(n, 32)
-    val found = Similarity.embeddingNearDupPairs(emb, "vec_id", "embedding",
-      threshold = threshold, numTables = Similarity.recommendedTablesProbed(bits),
-      bitsPerTable = bits, probes = bits, corpusRowsHint = n).count()
-    (found, truth, if (truth == 0) 1.0 else found.toDouble / truth)
-  }
-
   /** Exact ≥-threshold near-dup pair truth over the quantized vectors —
     * shared by the cluster-visibility measurements below. */
   private def embedTruth(spark: SparkSession, emb: DataFrame): DataFrame = {
@@ -315,27 +293,6 @@ object DedupQuality {
       }
     }
     (lowest, farthest, randMax, cv)
-  }
-
-  /** Lloyd-REFINED SemDeDup cluster visibility (round-12 verdict #4):
-    * the 0.155–0.184 baseline was taken at lowest-id seed centroids
-    * only; this measures what `kmeansCentroids(iters)` refinement —
-    * the documented production path — buys on the same exact truth.
-    * Assignment mirrors the production scorer (float cosine argmax
-    * against the refined centroids, lowest-cid tie-break). */
-  def measureSemRefined(spark: SparkSession, emb: DataFrame, nlist: Int,
-                        iters: Int): (Long, Long, Double) = {
-    import graft.operators.Similarity
-    graft.functions.CosineSim.register(spark)
-    val cents = broadcast(
-      Similarity.kmeansCentroids(emb, "vec_id", "embedding", nlist, iters))
-    val asg = emb.select(col("vec_id"), col("embedding").as("__v"))
-      .crossJoin(cents)
-      .groupBy("vec_id")
-      .agg(max_by(col("__cid"),
-        struct(call_function("cosine_sim", col("__v"), col("__cvec")).as("s"),
-          (-col("__cid")).as("tb"))).as("cid"))
-    sameClusterFraction(embedTruth(spark, emb), asg)
   }
 
   /** Cross-method agreement: of the exact Jaccard-threshold truth pairs
@@ -513,15 +470,9 @@ object DedupQuality {
       val emb = Tables.table(spark, d, "embeddings")
       val (ef, et, er) = measureEmbedPairs(spark, emb)
       println(f"[dedupq] $d embed-LSH pair recall (shipped multi-probe point): $ef/$et = $er%.3f")
-      val (ff, ft, fr) = measureEmbedPairsFloat(spark, emb)
-      println(f"[dedupq] $d float embed pair recall (shipped q43 point): $ff/$ft = $fr%.3f")
       val k = math.max(16, math.min(4096, math.ceil(emb.count() / 125.0).toInt))
       val (sf, st, sr) = measureSem(spark, emb, k)
       println(f"[dedupq] $d semdedup cluster recall (nlist=$k%d): $sf/$st = $sr%.3f")
-      Seq(2, 5).foreach { it =>
-        val (rf, rt, rr) = measureSemRefined(spark, emb, k, it)
-        println(f"[dedupq] $d semdedup cluster recall (Lloyd-refined, nlist=$k%d, iters=$it): $rf/$rt = $rr%.3f")
-      }
       val (lo, fpv, rmx, hill) = measureSemSeedingBound(spark, emb, k)
       println(f"[dedupq] $d semdedup seeding bound (nlist=$k%d): lowest-id=$lo%.3f " +
         f"farthest-point=$fpv%.3f random-max(1000)=$rmx%.3f supervised-hill-climb=$hill%.3f")

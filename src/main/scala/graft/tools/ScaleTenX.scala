@@ -125,10 +125,10 @@ object ScaleTenX {
       //      intra-replica pairs because rotation preserves dot
       //      products; cross-replica FOUND pairs are exact-verified true
       //      extras, reported separately.
-      //  (2) recall@10 of lshTopK at the DECLARED q45 operating point
-      //      (16 tables × 4 bits — wide buckets by design: top-k wants
-      //      candidates, pair-gen wants tight buckets; the rule-derived
-      //      width is NOT lshTopK's sizing and measures ~0.16 there).
+      //  (2) recall@10 of lshTopKInt at the search family's own rule
+      //      point (recommendedSearchPoint — wide buckets by design:
+      //      top-k wants candidates, pair-gen wants tight buckets; the
+      //      pair rule's width is NOT the search sizing).
       import graft.operators.Similarity
       graft.functions.IntDot.register(spark)
       val embBase = spark.read.parquet(s"$srcDir/embeddings.parquet")
@@ -175,15 +175,15 @@ object ScaleTenX {
         .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
       def pairSet(df: DataFrame) = df.select("query_id", "vec_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val bf = pairSet(Similarity.bruteForceTopK(
+      val bf = pairSet(Similarity.bruteForceTopKInt(
         emb10, "vec_id", "embedding", qs, "qid", "qvec", k))
       // round 16: the search point self-sizes from the corpus count —
       // measure the scaled corpus at ITS rule point (what q45/q220 run)
       val (st, sb, sp) = Similarity.recommendedSearchPoint(emb10.count())
-      val got = pairSet(Similarity.lshTopK(
+      val got = pairSet(Similarity.lshTopKInt(
         emb10, "vec_id", "embedding", qs, "qid", "qvec", k,
         numTables = st, bitsPerTable = sb, probes = sp))
-      println(f"[scale10x] lshTopK recall@$k at ${factor}x (rule point L=$st, bits=$sb, probes=$sp): " +
+      println(f"[scale10x] lshTopKInt recall@$k at ${factor}x (rule point L=$st, bits=$sb, probes=$sp): " +
         f"${got.intersect(bf).size.toDouble / bf.size}%.3f")
     }
     spark.stop()

@@ -186,35 +186,15 @@ class BucketCapSpec extends AnyFunSuite {
     // boilerplate×boilerplate pair can surface. Probes from boilerplate
     // into small neighbor buckets stay linear (each bounded by the small
     // bucket's size) — the quadratic blowup is what the cap kills.
-    val pairs = Similarity.portableEmbedPairs(vecs, "vec_id", "embedding",
-        minScore = 1L, tables = 2, bits = 6, probes = 6)
-      .select("id_a", "id_b").as[(Long, Long)].collect()
-    assert(!pairs.exists { case (a, b) => a > 10000L && b > 10000L },
-      "no boilerplate-boilerplate pair may survive the home-bucket cap under probing")
-    assert(pairs.contains((1L, 2L)), "identical vector pair must survive")
-    assert(pairs.length <= 3 * 2000 + 10, s"probe fan-out exceeded the linear bound: ${pairs.length}")
-  }
-
-  test("embeddingNearDupPairs (production float path) completes bounded") {
-    val pairs = Similarity.embeddingNearDupPairs(vecs, "vec_id", "embedding", threshold = 0.2)
-      .select("id_a", "id_b").as[(Long, Long)].collect()
-    assert(pairs.length < 100, s"got ${pairs.length}")
-    assert(!pairs.exists { case (a, b) => a > 10000L && b > 10000L })
-    assert(pairs.contains((1L, 2L)))
-  }
-
-  test("embeddingNearDupPairs under MULTI-PROBE (the shipped q43 config) keeps the cap discipline") {
-    // the float path shares the portable twin's probed generators
-    // (homeOnlyPairs/probedRawPairs) — same boilerplate-cluster
-    // guarantees in both verification regimes
     Seq(-1L, 3000L).foreach { hint => // shuffle regime, broadcast regime
-      val pairs = Similarity.embeddingNearDupPairs(vecs, "vec_id", "embedding",
-          threshold = 0.2, numTables = 2, bitsPerTable = 6, probes = 6,
-          corpusRowsHint = hint)
+      val pairs = Similarity.portableEmbedPairs(vecs, "vec_id", "embedding",
+          minScore = 1L, tables = 2, bits = 6, probes = 6, corpusRowsHint = hint)
         .select("id_a", "id_b").as[(Long, Long)].collect()
       assert(!pairs.exists { case (a, b) => a > 10000L && b > 10000L },
-        s"hint=$hint: boilerplate pair survived the probed cap")
-      assert(pairs.contains((1L, 2L)), s"hint=$hint: genuine pair lost")
+        s"hint=$hint: no boilerplate-boilerplate pair may survive the home-bucket cap under probing")
+      assert(pairs.contains((1L, 2L)), s"hint=$hint: identical vector pair must survive")
+      assert(pairs.length <= 3 * 2000 + 10,
+        s"hint=$hint: probe fan-out exceeded the linear bound: ${pairs.length}")
     }
   }
 }

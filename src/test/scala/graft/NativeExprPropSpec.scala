@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{CosineSim, ShingleHash, SimHash64, VectorFunctions}
+import graft.functions.{ShingleHash, SimHash64}
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAll
@@ -92,31 +92,6 @@ class NativeExprPropSpec extends AnyFunSuite {
     }, "portable_buckets")
   }
 
-  test("gaussian_buckets agrees with the composed HOF bucketFor (float and double, incl. edges)") {
-    import graft.operators.Similarity
-    val pointGen = for {
-      tables <- Gen.choose(1, 4); bits <- Gen.choose(1, 6)
-      seed <- Gen.choose(1L, 99L)
-    } yield (tables, bits, seed)
-    val vecGen = Gen.oneOf(Gen.const(8), Gen.const(7), Gen.const(0))
-      .flatMap(n => Gen.listOfN(n, Gen.choose(-5.0, 5.0)))
-    check(forAll(pointGen, vecGen, Gen.oneOf(true, false)) {
-      case ((tables, bits, seed), v, asFloat) =>
-        val dim = 8
-        val planes = Similarity.hyperplanes(dim, tables, bits, seed)
-        val df =
-          if (asFloat) Seq(Tuple1(v.map(_.toFloat))).toDF("__v")
-          else Seq(Tuple1(v)).toDF("__v")
-        val composed = df.select(array(planes.map(
-            Similarity.bucketFor(col("__v"), _)): _*).as("k"))
-          .as[Seq[Long]].head()
-        val native = df.select(
-          graft.functions.GaussianBuckets.column(col("__v"), planes).as("k"))
-          .as[Seq[Long]].head()
-        composed == native
-    }, "gaussian_buckets")
-  }
-
   test("argmax_int_dot agrees with the composed array_max assignment (incl. mismatch edge)") {
     import graft.operators.Similarity
     graft.functions.IntDot.register(spark)
@@ -198,29 +173,12 @@ class NativeExprPropSpec extends AnyFunSuite {
     // (a null vector can never pass exact verification), and now pinned
     // instead of undocumented. Scaladocs state the same delta.
     import graft.operators.Similarity
-    val dPlanes = Similarity.hyperplanes(4, 2, 3, 7L)
     val qPlanes = Similarity.portableHyperplanes(4, 2, 3, 7L)
-    val gRow = Seq(Tuple1(null: Seq[Double])).toDF("__v")
-      .select(graft.functions.GaussianBuckets.column(col("__v"), dPlanes).as("k")).head()
-    assert(gRow.isNullAt(0), "gaussian_buckets(NULL) must be NULL")
     val pRow = Seq(Tuple1(null: Seq[Long])).toDF("__qv")
       .select(graft.functions.PortableBuckets.column(col("__qv"), qPlanes).as("k")).head()
     assert(pRow.isNullAt(0), "portable_buckets(NULL) must be NULL")
     val aRow = Seq(Tuple1(null: Seq[Long])).toDF("__v")
       .select(Similarity.semAssignExpr(col("__v"), Seq((1L, Seq(1L, 2L, 3L, 4L)))).as("a")).head()
     assert(aRow.isNullAt(0), "argmax_int_dot(NULL) must be NULL")
-  }
-
-  test("cosine_sim agrees with scalar reference on arbitrary float vectors") {
-    CosineSim.register(spark)
-    val vecGen = Gen.choose(1, 16).flatMap(n =>
-      Gen.listOfN(2 * n, Gen.choose(-5.0f, 5.0f)).map(l => (l.take(n), l.drop(n))))
-    check(forAll(vecGen) { case (a, b) =>
-      val got = Seq((a, b)).toDF("a", "b")
-        .select(call_function("cosine_sim", col("a"), col("b")).as("s"))
-        .as[Double].head()
-      val expected = VectorFunctions.cosineRef(a, b)
-      math.abs(got - expected) < 1e-9
-    }, "cosine_sim")
   }
 }

@@ -38,7 +38,7 @@ class PlanGuardSpec extends AnyFunSuite {
   // accident. Each entry's SIZE CONTRACT (what keeps the broadcast side
   // small at any corpus scale) is what earns its place here:
   //  - q44_cosine_topk: the broadcast side is the QUERY set
-  //    (bruteForceTopK's contract: |queries| is user-bounded and tiny —
+  //    (bruteForceTopKInt's contract: |queries| is user-bounded and tiny —
   //    5 fixture rows; cost = one corpus scan × |queries|).
   //  - q53_ann_ivf: the broadcast sides are the CENTROID set (nlist ≤
   //    ~4096 by IVF design) and the probed query set — both

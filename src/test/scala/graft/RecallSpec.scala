@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** ANN recall regression guard (round-11 verdict #8): the q45/q53
+/** ANN recall regression guard (round-11 verdict #8): the q220/q53
   * operating points were confirmed MANUALLY against each regenerated
   * vector fixture (tools/Recall, commit 90e0f5a) — a regenerated
   * embeddings table whose distribution craters recall would previously
@@ -20,11 +20,14 @@ class RecallSpec extends AnyFunSuite {
   private def pairs(df: DataFrame): Set[(Long, Long)] =
     df.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
+  /** Embeddings, the first `nQ` vectors as queries, and their exact
+    * top-k from the SAME integer scorer the ANN paths rank with, so a
+    * recall floor isolates candidate loss from quantization noise. */
   private def fixtures(k: Int, nQ: Int) = {
     val emb = Tables.table(spark, TestSpark.sf01, "embeddings")
     val queries = emb.filter(col("vec_id") < nQ)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val truth = pairs(Similarity.bruteForceTopK(emb, "vec_id", "embedding",
+    val truth = pairs(Similarity.bruteForceTopKInt(emb, "vec_id", "embedding",
       queries, "qid", "qvec", k))
     (emb, queries, truth)
   }
@@ -34,37 +37,12 @@ class RecallSpec extends AnyFunSuite {
   private def searchPoint(emb: DataFrame): (Int, Int, Int) =
     Similarity.recommendedSearchPoint(emb.count())
 
-  test("lshTopK at the SELF-SIZED q45 operating point holds recall@10") {
-    val (emb, queries, truth) = fixtures(k = 10, nQ = 50)
-    // round 13 measured 0.940 at the then-declared 4×4+4 point; round 16
-    // self-sizes (tables, bits, probes) from the corpus count
-    // (recommendedSearchPoint — holds the 4×4+4 collision probability by
-    // construction, so the floor carries over)
-    val (t, b, p) = searchPoint(emb)
-    val got = pairs(Similarity.lshTopK(emb, "vec_id", "embedding",
-      queries, "qid", "qvec", k = 10, numTables = t, bitsPerTable = b, probes = p))
-    val recall = got.intersect(truth).size.toDouble / truth.size
-    assert(recall >= 0.70,
-      f"lshTopK(${t}x$b+${p}probes) recall@10 = $recall%.3f < 0.70 — regenerated embeddings distribution " +
-        "no longer suits the self-sized q45 point (re-tune via graft.tools.Recall)")
-    // the probed point must not UNDERPERFORM the former home-only point:
-    // probing trades table count for probe fan-out, never recall
-    val home = pairs(Similarity.lshTopK(emb, "vec_id", "embedding",
-      queries, "qid", "qvec", k = 10, numTables = 16, bitsPerTable = 4))
-    val homeRecall = home.intersect(truth).size.toDouble / truth.size
-    assert(recall >= homeRecall - 0.10,
-      f"probed recall $recall%.3f fell >0.10 under the 16x4 home-only point's $homeRecall%.3f")
-  }
-
   test("lshTopKInt (the q220 oracle twin) holds recall@10 vs the integer brute force") {
-    // same SELF-SIZED operating point as the declared q220 entry
-    // (portable ±1 planes); ground truth from the SAME integer scorer so
-    // the floor isolates BANDING loss, not quantization drift
-    val emb = Tables.table(spark, TestSpark.sf01, "embeddings")
-    val queries = emb.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val truth = pairs(Similarity.bruteForceTopKInt(emb, "vec_id", "embedding",
-      queries, "qid", "qvec", k = 10))
+    // same SELF-SIZED operating point as the declared q220 (and q45)
+    // entry (portable ±1 planes); round 13 measured 0.940 at the
+    // then-declared 4×4+4 point, and recommendedSearchPoint holds that
+    // point's collision probability by construction
+    val (emb, queries, truth) = fixtures(k = 10, nQ = 50)
     val (t, b, p) = searchPoint(emb)
     val got = pairs(Similarity.lshTopKInt(emb, "vec_id", "embedding",
       queries, "qid", "qvec", k = 10, numTables = t, bitsPerTable = b, probes = p))
@@ -72,6 +50,13 @@ class RecallSpec extends AnyFunSuite {
     assert(recall >= 0.70,
       f"lshTopKInt(${t}x$b+${p}probes) recall@10 = $recall%.3f < 0.70 — the portable-plane " +
         "self-sized point no longer suits the regenerated embeddings (re-tune via graft.tools.Recall)")
+    // the probed point must not UNDERPERFORM the former home-only point:
+    // probing trades table count for probe fan-out, never recall
+    val home = pairs(Similarity.lshTopKInt(emb, "vec_id", "embedding",
+      queries, "qid", "qvec", k = 10, numTables = 16, bitsPerTable = 4, probes = 0))
+    val homeRecall = home.intersect(truth).size.toDouble / truth.size
+    assert(recall >= homeRecall - 0.10,
+      f"probed recall $recall%.3f fell >0.10 under the 16x4 home-only point's $homeRecall%.3f")
   }
 
   test("recommendedSearchPoint: landmarks, base-point reproduction, collision invariant (round 16)") {
@@ -276,19 +261,6 @@ class RecallSpec extends AnyFunSuite {
         "re-measure via DedupQuality and re-derive (bits, tables, probes)")
   }
 
-  test("float embed pair recall at the SHIPPED q43 point holds the floor (round 13)") {
-    // the production float path's twin of the portable receipt — r13
-    // measured 0.711 at sf0.01 / 0.396 at sf0.1, essentially identical
-    // to the portable twin's 0.712/0.402 (different hyperplane family,
-    // same collision theory). Same 0.25 floor as the portable pin.
-    val (found, truth, recall) = graft.tools.DedupQuality.measureEmbedPairsFloat(
-      spark, Tables.table(spark, TestSpark.sf01, "embeddings"))
-    assert(truth > 0, "no exact float near-dup pairs at the oracle SF — the embedding fixture degenerated")
-    assert(recall >= 0.25,
-      f"float embed pair recall $found/$truth = $recall%.3f < 0.25 at the shipped q43 point — " +
-        "re-measure via DedupQuality and re-derive (bits, tables, probes)")
-  }
-
   test("minhash banding recall vs exact all-pairs Jaccard truth holds the floor (q82 family)") {
     // the text twin of the q84 pair-recall receipt (round 12): found ⊆
     // truth because verification is exact on the same shingle sets, so
@@ -323,13 +295,7 @@ class RecallSpec extends AnyFunSuite {
   }
 
   test("ivfTopKInt at the declared q53 operating point (nlist=16, nprobe=4) holds recall@10") {
-    // ground truth from the SAME integer scorer (bruteForceTopKInt), so
-    // the statistic isolates the IVF probe loss from quantization noise
-    val emb = Tables.table(spark, TestSpark.sf01, "embeddings")
-    val queries = emb.filter(col("vec_id") < 50)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val truth = pairs(Similarity.bruteForceTopKInt(emb, "vec_id", "embedding",
-      queries, "qid", "qvec", k = 10))
+    val (emb, queries, truth) = fixtures(k = 10, nQ = 50)
     val got = pairs(Similarity.ivfTopKInt(emb, "vec_id", "embedding",
       queries, "qid", "qvec", k = 10, nlist = 16, nprobe = 4))
     val recall = got.intersect(truth).size.toDouble / truth.size

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{SimHash64, VectorFunctions}
+import graft.functions.SimHash64
 import graft.operators.{Multimodal, Similarity, TextAnalysis, TextDedup}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -12,56 +12,6 @@ import org.scalatest.funsuite.AnyFunSuite
 class TierESpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  // ---------- vector functions ----------
-
-  test("cosine matches scalar reference on real embeddings") {
-    val rows = Tables.table(spark, TestSpark.sf0001, "embeddings")
-      .filter(col("vec_id") < 10)
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1))
-    val df = Tables.table(spark, TestSpark.sf0001, "embeddings").filter(col("vec_id") < 10)
-    val got = df.crossJoin(df.select(col("vec_id").as("id2"), col("embedding").as("e2")))
-      .select(col("vec_id"), col("id2"),
-        VectorFunctions.cosine(col("embedding"), col("e2")).as("sim"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    val byId = rows.toMap
-    for ((a, va) <- rows; (b, vb) <- rows) {
-      val expected = VectorFunctions.cosineRef(va, vb)
-      assert(math.abs(got((a, b)) - expected) < 1e-9, s"cosine($a,$b)")
-    }
-    // self-similarity is 1
-    rows.foreach { case (a, _) => assert(math.abs(got((a, a)) - 1.0) < 1e-9) }
-  }
-
-  test("native CosineSim expression equals the built-in composition bit-for-bit") {
-    graft.functions.CosineSim.register(spark)
-    val emb = Tables.table(spark, TestSpark.sf0001, "embeddings").limit(50)
-    val paired = emb.crossJoin(emb.select(col("vec_id").as("id2"), col("embedding").as("e2")))
-    val diff = paired.select(
-      (call_function("cosine_sim", col("embedding"), col("e2")) -
-        VectorFunctions.cosine(col("embedding"), col("e2"))).as("d"))
-      .agg(max(abs(col("d")))).head().getDouble(0)
-    assert(diff == 0.0, s"max divergence $diff")
-    // zero vector → 0.0, null → null
-    val z = spark.sql("SELECT cosine_sim(array(0.0F, 0.0F), array(1.0F, 2.0F)) AS a, " +
-      "cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(1.0F)) AS b").head()
-    assert(z.getDouble(0) == 0.0 && z.isNullAt(1))
-  }
-
-  test("cosine properties: symmetry, range, zero-vector") {
-    val df = Seq(
-      (1L, Seq(1.0f, 2.0f, 3.0f)), (2L, Seq(-1.0f, 0.5f, 0.0f)), (3L, Seq(0.0f, 0.0f, 0.0f))
-    ).toDF("id", "v")
-    val sims = df.crossJoin(df.select(col("id").as("id2"), col("v").as("v2")))
-      .select(col("id"), col("id2"), VectorFunctions.cosine(col("v"), col("v2")).as("s"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
-    sims.foreach { case ((a, b), s) =>
-      assert(s >= -1.0 - 1e-12 && s <= 1.0 + 1e-12)
-      assert(math.abs(s - sims((b, a))) < 1e-12, "symmetry")
-    }
-    assert(sims((3L, 1L)) == 0.0, "zero vector → 0")
-  }
 
   // ---------- dedup ----------
 
@@ -300,53 +250,6 @@ class TierESpec extends AnyFunSuite {
 
   // ---------- similarity search ----------
 
-  test("LSH top-k results are a subset-consistent approximation of brute force") {
-    val emb = Tables.table(spark, TestSpark.sf0001, "embeddings")
-    val queries = emb.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", 5)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    val lsh = Similarity.lshTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", 5,
-      numTables = 8, bitsPerTable = 4)
-      .select("query_id", "vec_id", "sim").collect()
-    assert(bf.size == 25)
-    // every LSH hit's similarity must equal the exact cosine (no approximation
-    // in the scoring, only in candidate generation)
-    val vecs = emb.select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    lsh.foreach { r =>
-      val expected = VectorFunctions.cosineRef(vecs(r.getLong(0)), vecs(r.getLong(1)))
-      assert(math.abs(r.getDouble(2) - expected) < 1e-9)
-    }
-  }
-
-  test("IVF top-k: exact scores, recall grows with nprobe") {
-    val emb = Tables.table(spark, TestSpark.sf0001, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val bf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", 5)
-      .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-    def recallAt(nprobe: Int): Double = {
-      val got = Similarity.ivfTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", 5,
-        nlist = 16, nprobe = nprobe)
-        .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
-      got.intersect(bf).size.toDouble / bf.size
-    }
-    val r2 = recallAt(2)
-    val rAll = recallAt(16)
-    assert(rAll >= r2, s"recall must not shrink with more probes ($r2 -> $rAll)")
-    // probing every list = exhaustive search = recall 1
-    assert(rAll == 1.0, s"full probe recall $rAll")
-    // scores are exact cosines
-    val vecs = emb.select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    Similarity.ivfTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", 5, 16, 4)
-      .collect().foreach { r =>
-        val expected = VectorFunctions.cosineRef(vecs(r.getLong(0)), vecs(r.getLong(1)))
-        assert(math.abs(r.getDouble(2) - expected) < 1e-9)
-      }
-  }
-
   test("integer-quantized top-k twins match an exact scalar reference (q44/q53 oracle path)") {
     val emb = Tables.table(spark, TestSpark.sf0001, "embeddings")
     val queries = emb.filter(col("vec_id") < 5)
@@ -385,23 +288,18 @@ class TierESpec extends AnyFunSuite {
         nlist = 16, nprobe = 4)
       .as[(Long, Long, Long, Int)].collect().toSet
     assert(gotIvf == expectIvf)
-  }
-
-  test("brute-force top-k ranks by exact cosine desc") {
-    val emb = Tables.table(spark, TestSpark.sf0001, "embeddings")
-    val queries = emb.filter(col("vec_id") === 0)
-      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val got = Similarity.bruteForceTopK(emb, "vec_id", "embedding", queries, "qid", "qvec", 10)
-      .orderBy("rank").select("vec_id", "sim").collect()
-    val sims = got.map(_.getDouble(1))
-    assert(sims.toSeq == sims.sorted.reverse.toSeq, "descending")
-    // cross-check the top-1 against a driver-side scan
-    val vecs = emb.select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
-    val expectedTop = vecs.filter(_._1 != 0L)
-      .map { case (id, v) => id -> VectorFunctions.cosineRef(vecs(0L), v) }
-      .maxBy { case (id, s) => (s, -id) }
-    assert(got.head.getLong(0) == expectedTop._1)
+    // IVF recall against the brute-force twin does not shrink as nprobe
+    // grows, and probing all 16 lists is exhaustive search (recall 1)
+    val bfPairs = gotBf.map { case (q, id, _, _) => (q, id) }
+    def recallAt(nprobe: Int): Double = {
+      val got = Similarity.ivfTopKInt(emb, "vec_id", "embedding", queries, "qid", "qvec", 5,
+          nlist = 16, nprobe = nprobe)
+        .select("query_id", "vec_id").as[(Long, Long)].collect().toSet
+      got.intersect(bfPairs).size.toDouble / bfPairs.size
+    }
+    val recalls = Seq(2, 4, 16).map(recallAt)
+    assert(recalls == recalls.sorted, s"recall must not shrink with more probes: $recalls")
+    assert(recalls.last == 1.0, s"full probe recall ${recalls.last}")
   }
 
   // ---------- text analysis ----------
@@ -652,7 +550,7 @@ class TierESpec extends AnyFunSuite {
     assert(Similarity.recommendedBits(2000, 32) == 6,
       "portableEmbedPairs' bits=6 default = rule at sf0.1's 2,000 vectors")
     assert(Similarity.recommendedBits(2000, 8) == 8,
-      "lshTopK's bits=8 default = rule at search occupancy 8")
+      "rule at search occupancy 8 (recommendedSearchPoint's bits at sf0.1)")
     // 1000x the corpus needs ~log2(1000) = 10 more bits, same occupancy
     assert(Similarity.recommendedBits(2L * 1000 * 1000, 32) == 16)
     // clamped at both ends
@@ -842,37 +740,6 @@ class TierESpec extends AnyFunSuite {
     val scores = TextDedup.contaminationScores(corpus, bench, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(scores == Map(1L -> 3L, 2L -> 0L, 3L -> 2L))
-  }
-
-  test("kmeansCentroids recovers planted cluster directions; refined IVF stays exact") {
-    import spark.implicits._
-    // three well-separated direction clusters in 4-D; ids 0,1,2 seed one
-    // centroid per cluster, so Lloyd refinement must converge to purity 1
-    val rng = new scala.util.Random(7)
-    def jitter(base: Array[Float]): Array[Float] =
-      base.map(x => x + rng.nextFloat() * 0.05f)
-    val a = Array(1f, 0f, 0f, 0f); val b = Array(0f, 1f, 0f, 0f); val c = Array(0f, 0f, 1f, 1f)
-    val vecs = (0 until 30).map { i =>
-      val base = i % 3 match { case 0 => a; case 1 => b; case _ => c }
-      (i.toLong, jitter(base).toSeq)
-    }
-    val df = vecs.toDF("vec_id", "embedding")
-    val centroids = graft.operators.Similarity.kmeansCentroids(df, "vec_id", "embedding", k = 3, iters = 2)
-      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
-    assert(centroids.length == 3)
-    // each refined centroid points along exactly one planted direction
-    def argmax(v: Array[Float]) = v.zipWithIndex.maxBy { case (x, i) => (x, -i) }._2
-    val dirs = centroids.map { case (_, v) => argmax(v.take(3)) }.toSet
-    assert(dirs == Set(0, 1, 2), s"each planted direction recovered: ${dirs}")
-    // refined IVF returns exact cosine scores, full recall at nprobe = nlist
-    val queries = df.filter(col("vec_id") < 3).select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    val refined = graft.operators.Similarity.ivfTopK(df, "vec_id", "embedding",
-      queries, "qid", "qvec", k = 5, nlist = 3, nprobe = 3, refineIters = 2)
-    val brute = graft.operators.Similarity.bruteForceTopK(df, "vec_id", "embedding",
-      queries, "qid", "qvec", k = 5)
-    def pairs(x: org.apache.spark.sql.DataFrame) =
-      x.select("query_id", "vec_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs(refined) == pairs(brute), "full-probe refined IVF equals brute force")
   }
 
   test("connectedComponents matches a scalar union-find on a planted graph") {
