@@ -1,15 +1,23 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType}
 
 /** Registers the driver testdata parquet files as temp views, mirroring the
   * reference's schema-introspection step (db_utils.py:116-156) collapsed to
   * local metadata reads (SURVEY.md §3.1).
   *
-  * Registration is idempotent and cheap (parquet footer read only — the
-  * scan itself stays lazy), but we still memoize per (session, dir) so the
+  * Registration reads one parquet footer per table on the driver and
+  * starts no Spark job: each view is declared with that footer's schema,
+  * so Spark's own schema inference (one job per table) never runs, and
+  * the scan itself stays lazy. It is still memoized per session so the
   * bench loop doesn't redo catalog work per query.
   */
 object Tables {
@@ -50,10 +58,11 @@ object Tables {
         // resolve them, whatever session it brings (operators also
         // self-register on their own frames)
         graft.functions.IntDot.register(spark)
+        val hadoopConf = spark.sessionState.newHadoopConf()
         names.foreach { t =>
           val path = s"$dir/$t.parquet"
           if (new java.io.File(path).exists()) {
-            val raw = spark.read.parquet(path)
+            val raw = spark.read.schema(footerSchema(spark, path, hadoopConf)).parquet(path)
             val df =
               if (t == "events" && raw.schema("ts").dataType == LongType)
                 raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -66,6 +75,32 @@ object Tables {
         registered.put(key, dir)
       }
     }
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, read on the driver
+    * from one footer instead of by Spark's inference job. For a directory
+    * this is the footer inference reads with `mergeSchema` off:
+    * `_common_metadata`, else `_metadata`, else the first data file in path
+    * order, skipping the names Spark's file listing hides (`_SUCCESS`,
+    * `.crc` files). The converter reads the session conf as the job does,
+    * so `spark.sql.legacy.parquet.nanosAsLong` must be set before the call. */
+  private[graft] def footerSchema(spark: SparkSession, path: String, conf: Configuration): StructType = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String): Boolean =
+      ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") || name.endsWith("._COPYING_")) &&
+        !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    val files = leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val footerFile = summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(s"no parquet file under $path"))
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(footerFile, conf), SKIP_ROW_GROUPS)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(footerFile.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
   }
 
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -346,8 +346,6 @@ object Similarity {
     df.select(col(idCol), quantize(col(vecCol), scale).as("__qv"))
   }
 
-  /** One integer bucket id per table from the ±1 hyperplane sign bits of
-    * a quantized frame's __qv column. */
   /** (table, bucket) key stream of the portable embedding-LSH bucketing —
     * the EXACT keys `portableEmbedPairs` pairs on, factored out so the
     * occupancy audit below and the pair generator can never drift.
@@ -923,21 +921,6 @@ object Similarity {
     spark.read.parquet(s"$workDir/pairs").select("id_a", "id_b", "score")
   }
 
-  /** Deterministic semantic clustering for the SemDeDup family (q186/
-    * q187): assign every vector to its nearest of `nlist` centroids,
-    * where the centroids are the `nlist` LOWEST-ID vectors (the
-    * `ivfTopKInt` convention) and "nearest" is the exact integer-dot
-    * argmax over ×10⁴-quantized vectors — so any engine replays the
-    * IDENTICAL partition of the corpus (a float k-means would be both
-    * seed- and ulp-divergent cross-engine). Ties break to the lowest
-    * centroid id.
-    *
-    * Scale shape: centroids are one broadcast (corpus-size-sublinear by
-    * contract — SemDeDup runs with k ≪ n; at k beyond broadcast range
-    * assignment goes through the IVF probe machinery instead), the
-    * corpus scans ONCE, and the argmax is a map-side max_by — no shuffle
-    * wider than (vec_id, cid, s). Output: (vec_id, cid, s BIGINT).
-    */
   /** (vec_id, __v) quantized frame — the shared entry point of the
     * semantic-cluster family. Cheap cast pass; re-derive per reference
     * rather than cutting (CLAUDE.md). */
@@ -1011,6 +994,21 @@ object Similarity {
         struct(col("s"), (-col("__cid")).as("tb"))).as("__a"))
       .select(col("vec_id"), col("__a.__cid").as("cid"), col("__a.s").as("s"))
 
+  /** Deterministic semantic clustering for the SemDeDup family (q186/
+    * q187): assign every vector to its nearest of `nlist` centroids,
+    * where the centroids are the `nlist` LOWEST-ID vectors (the
+    * `ivfTopKInt` convention) and "nearest" is the exact integer-dot
+    * argmax over ×10⁴-quantized vectors — so any engine replays the
+    * IDENTICAL partition of the corpus (a float k-means would be both
+    * seed- and ulp-divergent cross-engine). Ties break to the lowest
+    * centroid id.
+    *
+    * Scale shape: centroids are one broadcast (corpus-size-sublinear by
+    * contract — SemDeDup runs with k ≪ n; at k beyond broadcast range
+    * assignment goes through the IVF probe machinery instead), the
+    * corpus scans ONCE, and the argmax is a map-side max_by — no shuffle
+    * wider than (vec_id, cid, s). Output: (vec_id, cid, s BIGINT).
+    */
   def semAssign(corpus: DataFrame, idCol: String, vecCol: String,
                 nlist: Int, scale: Int = 10000): DataFrame =
     semAssignTo(semQuantized(corpus, idCol, vecCol, scale),

@@ -46,11 +46,12 @@ object StreamOps {
 
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // Sniff the footer through the batch reader (cheap, lazy scan): a
-    // NANOS file surfaces ts as LongType under the legacy conf, a MICROS
-    // file as TimestampType natively. Declare the stream schema to match
-    // what the reader will actually produce and convert only ns longs.
-    val tsType = spark.read.parquet(s"$dir/events.parquet").schema("ts").dataType
+    // Read the footer on the driver (no Spark job): under the legacy conf
+    // a NANOS file surfaces ts as LongType, a MICROS file as a timestamp
+    // type natively. Declare the stream schema to match what the reader
+    // will actually produce and convert only ns longs.
+    val tsType = graft.Tables.footerSchema(spark, s"$dir/events.parquet",
+      spark.sessionState.newHadoopConf())("ts").dataType
     val schema = StructType(rawEventsSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
     // the file source requires a directory; scope it to the events file

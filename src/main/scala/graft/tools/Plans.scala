@@ -5,9 +5,22 @@ import graft.{Engine, SparkEntry, Tables}
 /** Dump formatted physical plans for the load-bearing queries — the
   * "is this the plan you'd want at 100 TB" review loop. The session is
   * `Engine.session`'s (GraftExtensions, UTC, AQE), so a dump shows the
-  * plan Engine, Verify and the benchmark run.
+  * plan Engine, Verify and the benchmark run. Every dump goes through
+  * `normalize`, so dumps from two sessions or two builds diff cleanly.
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default nproc). */
 object Plans {
+  /** Rewrites what differs between two sessions' dumps of one plan: the
+    * data directory (`$SF_DIR`) and the per-session counters — expression
+    * ids `#<n>`, lambda variables `x_<n>`, `plan_id=<n>`, `RDD[<n>]`,
+    * `Broadcast(<n>)` and the `[J@<hash>` identity of a baked long matrix.
+    * These shift whenever an earlier entry in the session changes. */
+  def normalize(plan: String, dir: String): String =
+    Seq("""#\d+""" -> "#N", """\bx_\d+""" -> "x_N", """plan_id=\d+""" -> "plan_id=N",
+      """RDD\[\d+\]""" -> "RDD[N]", """Broadcast\(\d+\)""" -> "Broadcast(N)", """\[J@\p{XDigit}+""" -> "[J@N")
+      .foldLeft(plan.replace(dir, "$SF_DIR")) { case (s, (re, to)) =>
+        s.replaceAll(re, java.util.regex.Matcher.quoteReplacement(to))
+      }
+
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
@@ -22,7 +35,7 @@ object Plans {
     interesting.foreach { id =>
       println(s"\n========== $id ==========")
       val df = SparkEntry.queries(id)(spark, dir)
-      println(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+      println(normalize(df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode), dir))
     }
     spark.stop()
   }
