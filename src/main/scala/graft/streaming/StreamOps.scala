@@ -35,7 +35,7 @@ object StreamOps {
     * type instead of assuming this schema — round 8's driver run silently
     * double-divided a µs file by 1000 and collapsed every timestamp into
     * 1970, which only the streaming path hit because the batch path
-    * (`Tables.register`) already guards on the inferred type. */
+    * (`Tables.register`) already guards on the file's type. */
   val rawEventsSchema: StructType = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType),
