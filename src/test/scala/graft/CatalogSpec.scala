@@ -203,8 +203,8 @@ class CatalogSpec extends AnyFunSuite {
         |}""".stripMargin)
     val conf = new Configuration()
     val nanos = Seq(1704067200000000123L, 1704070800000999999L, 1704074400123456789L)
-    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
-      new org.apache.hadoop.fs.Path(dir.resolve("events.parquet").toString), conf))
+    val path = dir.resolve("events.parquet").toString
+    val writer = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf))
       .withType(schema).withConf(conf).build()
     val groups = new SimpleGroupFactory(schema)
     try nanos.zipWithIndex.foreach { case (ns, i) =>
@@ -212,7 +212,6 @@ class CatalogSpec extends AnyFunSuite {
         .append("user_id", 10L + i).append("event_type", Seq("click", "purchase", "error")(i))
         .append("value", i + 0.5).append("props", "{}"))
     } finally writer.close()
-    val path = dir.resolve("events.parquet").toString
     val (footer, inferred) = footerVsInferred(path)
     assert(footer == inferred)
     assert(footer("ts").dataType == LongType)
