@@ -110,14 +110,13 @@ object SparkEntry {
     * synthetic embeddings top out near cosine 0.4; real corpora use
     * ≈0.9 with the same operator). bits self-sizes from the corpus
     * count — oracleSqlFor interpolates the same dir-derived width into
-    * the replay text — and the directional multi-probe point runs the
-    * broadcast verify regime under the row hint. */
+    * the replay text — and the directional multi-probe point verifies
+    * through one bounded broadcast map. */
   private val embedLshPairs: (SparkSession, String) => DataFrame = { (spark, dir) =>
     val b = embedBitsFor(spark, dir)
     Similarity.portableEmbedPairs(Tables.table(spark, dir, "embeddings"),
         "vec_id", "embedding", minScore = EmbedMinScore,
-        tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b),
-        corpusRowsHint = embedCountFor(spark, dir))
+        tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b))
       .orderBy("id_a", "id_b").limit(100)
   }
 
@@ -3572,8 +3571,7 @@ object SparkEntry {
       val b = embedBitsFor(spark, dir)
       val pairs = Similarity.portableEmbedPairs(Tables.table(spark, dir, "embeddings"),
           "vec_id", "embedding", minScore = EmbedMinScore,
-          tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b),
-          corpusRowsHint = embedCountFor(spark, dir))
+          tables = embedTablesFor(b), bits = b, probes = embedProbesFor(b))
         .select(col("id_a"), col("id_b"))
       TextDedup.nearDupClusters(pairs)
         .select(col("doc_id").as("vec_id"), col("cluster"))

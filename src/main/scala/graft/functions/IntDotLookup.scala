@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 
 /** Integer dot product of two BROADCAST-RESIDENT quantized vectors looked
-  * up by id — the fused verify primitive of the embedding-LSH broadcast
-  * regime (round 15).
+  * up by id — the fused verify primitive of every embedding-LSH pair
+  * runner (round 15).
   *
   * The former shape verified candidates through TWO BroadcastHashJoins
   * (each shipping the full quantized frame) followed by [[IntDot]]; this
@@ -21,10 +21,10 @@ import org.apache.spark.sql.types._
   * the LSH law's candidate volume (candidates ~ n^(1+ρ) is the part no
   * constant can fix — BASELINE.md round 15).
   *
-  * Scale contract: the broadcast is built ONLY in the regime that
-  * already bounds the frame (`Similarity.broadcastVerifyMaxRows` — the
-  * same rows×dim budget the former double-broadcast paid twice), so
-  * driver/executor memory exposure strictly DECREASES. Executors read
+  * Scale contract: every caller bounds the map it builds — the monolithic
+  * runners throw past `Similarity.broadcastVerifyMaxRows` (the same
+  * rows×dim budget the former double-broadcast paid twice) and the
+  * sharded runners size each job's map at about that bound. Executors read
   * the map through `Broadcast.value` (torrent-fetched once per executor,
   * never shipped per task). NULL when either id is absent from the
   * frame (cannot happen for candidates generated from the same frame —

@@ -3,15 +3,15 @@ package graft.operators
 import org.apache.spark.broadcast.Broadcast
 
 /** Lifetime registry for the library's explicit data broadcasts (today:
-  * the embedding-LSH broadcast-regime lookup map, Similarity.scala).
+  * the monolithic embedding-LSH runners' verify map, Similarity.scala).
   *
   * A `SparkContext.broadcast` the library creates inside a lazy frame
   * must OUTLIVE the frame's last action — there is no safe point inside
   * the operator to destroy it. But serial harnesses (Bench, Verify)
   * build a fresh frame per entry/rep, so broadcasts from finished
   * entries accumulate in the driver and the block manager for the
-  * session's remaining lifetime (round-15 advice: at the 200k-row
-  * regime bound each is ~100 MB). Operators [[track]] every broadcast
+  * session's remaining lifetime (round-15 advice: at the verify-map
+  * bound each is ~100 MB). Operators [[track]] every broadcast
   * they create; the harness calls [[destroyAll]] at its inter-entry
   * cleanup point (the same place persisted RDDs are released), after
   * which any frame still referencing a destroyed broadcast would fail —

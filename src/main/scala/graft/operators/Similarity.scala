@@ -364,40 +364,6 @@ object Similarity {
       posexplode(graft.functions.PortableBuckets.column(col("__qv"), planes))
         .as(Seq("__t", "__bkt")): _*)
 
-  /** Occupancy-ADAPTIVE sizing — the clustered-corpus guard the
-    * size-only rule lacks (round-11 verdict: `recommendedBits` keys on
-    * corpus COUNT, but a heavily clustered corpus can overload buckets
-    * at any average occupancy, and the cap then silently drops them —
-    * recall collapse with no signal). Starts at the count-derived width
-    * and widens one bit at a time until the MAX bucket occupancy fits
-    * `maxOccupancy`, or the width cap (24) is reached — in which case
-    * the residual oversize buckets are sign-identical vector clusters
-    * no hyperplane count separates (genuine boilerplate;
-    * `DefaultMaxBucketSize`'s job, auditable via
-    * `portableEmbedBucketSizes`). Each probe is ONE aggregate over the
-    * keys-only bucket stream (no vectors move) — a bounded setup cost a
-    * production pipeline pays once per corpus snapshot. The DECLARED
-    * q84/q97 entries keep the pure count rule because their DuckDB
-    * replays interpolate a static width; production callers wanting the
-    * clustered-corpus guarantee size with this — and must pair the
-    * returned width with `recommendedTables(bits)` when generating
-    * pairs, or the extra bits silently trade recall for the occupancy
-    * they bought (the measured round-12 failure mode). */
-  def adaptiveBits(corpus: DataFrame, idCol: String, vecCol: String,
-                   targetOccupancy: Long = 32,
-                   maxOccupancy: Long = TextDedup.DefaultMaxBucketSize / 2,
-                   tables: Int = 8, dim: Int = 64, seed: Long = 11L,
-                   scale: Int = 10000): Int = {
-    val start = recommendedBits(corpus.count(), targetOccupancy)
-    var bits = start
-    while (bits < 24 && {
-      val mx = portableEmbedBucketSizes(corpus, idCol, vecCol,
-        tables, bits, dim, seed, scale).agg(max("n")).head().getLong(0)
-      mx > maxOccupancy
-    }) bits += 1
-    bits
-  }
-
   /** Occupancy audit for the portable embedding-LSH buckets: (t, bkt, n)
     * per bucket — what DriftGuardSpec asserts margins on after the driver
     * regenerates the testdata (a clustered or bigger corpus shows up here
@@ -438,118 +404,37 @@ object Similarity {
         .as("__bkt"))
   }
 
-  /** Row-count bound under which the verification join-back broadcasts
-    * the quantized vector frame (≈53 MB of array<long> payload at the
-    * bound) and verifies candidate DUPLICATES map-side, deduplicating
-    * only the ham-≤1 survivors: the 10× profile (ProfileQ84) measured
-    * the pre-verification DISTINCT over the 21M-candidate key stream as
-    * the dominant cost (29.5 s → 11.6 s end-to-end without it), while
-    * duplicate verification through a broadcast join is pure codegen.
-    * Past the bound the operator keeps the distinct-first shuffle shape
-    * — there the distinct is load-bearing: it is what keeps the
-    * payload-carrying join intermediate (candidates × vector bytes)
-    * minimal when the vector side no longer broadcasts. The found SET
-    * is identical in both regimes (dedup before or after exact
-    * verification commutes), so oracles and recall receipts are
-    * regime-independent. */
   // Round 15: the fused IntDotLookup verify broadcasts the frame ONCE
   // where the former two-join shape shipped it TWICE, so the SAME
   // measured r13 memory envelope (2 × 100k rows × 64 dims × 8 B ≈
-  // 106 MB peak) now admits 200k rows — the regime bound doubles with
-  // zero new memory exposure (receipt: ProfileQ84 at 100×, BASELINE.md).
+  // 106 MB peak) now admits 200k rows — the bound doubles with zero new
+  // memory exposure (receipt: ProfileQ84 at 100×, BASELINE.md).
   // The budget is BYTES of packed vector payload, representation-
   // independent; the per-row cost is what the representation sets.
   val BroadcastVerifyBudgetBytes = 200000L * 64 * 8
 
-  /** The row bound DERIVED from the vector dimension (round-14 verdict
-    * #5: the former flat 100000L silently encoded dim=64 — at dim=512
-    * the same row count is 8× the broadcast payload). rows ≈ budget /
-    * (dim × 4 bytes per PACKED component): round 17 (verdict #5) stores
-    * the verify maps as Array[Int] — ±10⁴-scaled components are
-    * lossless in 4 B (`IntDotLookup.pack` guards it) — so the SAME
-    * measured byte envelope admits 2× the rows of the r15 Array[Long]
+  /** Row bound of the monolithic runners' broadcast verify map, DERIVED
+    * from the vector dimension (round-14 verdict #5: the former flat
+    * 100000L silently encoded dim=64 — at dim=512 the same row count is
+    * 8× the broadcast payload). rows ≈ budget / (dim × 4 bytes per
+    * PACKED component): round 17 (verdict #5) stores the verify maps as
+    * Array[Int] — ±10⁴-scaled components are lossless in 4 B
+    * (`IntDotLookup.pack` guards it) — so the SAME measured byte
+    * envelope admits 2× the rows of the r15 Array[Long]
     * representation: 400k at dim 64 (RegimeProbe re-measured, see
-    * BASELINE.md round 17). */
+    * BASELINE.md round 17). Past it [[portableEmbedPairs]] and
+    * [[portableCrossEmbedPairs]] throw; the sharded runners take any
+    * size. */
   def broadcastVerifyMaxRows(dim: Int): Long = {
     require(dim > 0, s"dim must be positive, got $dim")
     BroadcastVerifyBudgetBytes / (dim * 4L)
   }
 
-  /** The dim=64 point of [[broadcastVerifyMaxRows]] (the corpus'
-    * embedding contract — DriftGuard pins it); kept as the named
-    * constant docs and specs reference. */
-  val BroadcastVerifyMaxRows: Long = broadcastVerifyMaxRows(64)
-
-  /** Raw-candidate rows per dedup shuffle partition in the shuffle
-    * verification regime — the operating point of the round-13
-    * measurement (ProfileQ84: a 44.9M-row raw stream deduped at 128
-    * partitions ≈ 350k rows each cost 12.8–13.6 s where the session
-    * default's 32 partitions cost ~24 s: the partial HashAggregate over
-    * a nearly-unique 2-long key stream thrashes when partitions carry
-    * millions of mostly-distinct keys). */
-  val DedupTargetRowsPerPartition = 350000L
-
-  /** EXACT keys-only size of the raw (pre-dedup) candidate stream the
-    * probed generator will emit: Σ over capped home buckets (t, k) of
-    * probesInto(t, k) × homeSize(t, k), where probesInto counts the home
-    * keys of k itself plus the directional donors — buckets at one
-    * CLEARED bit among the first `probes` bits of k (a key at k′ probes
-    * k iff k = k′ OR (1<<j) for an unset j < probes of k′). This is the
-    * join-size inner product `Sketches.countMinJoinSize` (q152)
-    * estimates from two CMS sketches — exact here, and cheaper than the
-    * sketches, because the per-bucket count frame (≤ tables·min(2^bits,
-    * n) rows) is already grouped: ONE keys-only aggregation pass, then
-    * arithmetic on the tiny bucket frame. (Self-matches the generator's
-    * `pid ≠ hid` filter drops are included — the figure is a ≤1%-slack
-    * upper bound for partition sizing, not an emitted-row count.) */
-  private[graft] def estimatedRawCandidates(keys: DataFrame, probes: Int,
-                                            maxBucketSize: Int): Long = {
-    val bc = keys.groupBy("__t", "__bkt").agg(count(lit(1)).as("__n"))
-    val home = bc.filter(col("__n") <= maxBucketSize)
-      .select(col("__t"), col("__bkt"), col("__n").as("__h"))
-    val donors = home.select(col("__t"), col("__h"),
-      explode(filter(
-        array((col("__bkt") +: (0 until probes).map(j =>
-          when(col("__bkt").bitwiseAND(lit(1L << j)) =!= 0L,
-            col("__bkt").bitwiseXOR(lit(1L << j))))): _*),
-        x => x.isNotNull)).as("__bkt"))
-    val est = donors.join(bc, Seq("__t", "__bkt"))
-      .agg(sum(col("__h") * col("__n")).as("__est")).head()
-    if (est.isNullAt(0)) 0L else est.getLong(0)
-  }
-
-  /** Dedup shuffle-partition count for the shuffle regime's pre-verify
-    * distinct, chosen BY CODE from the estimated raw candidate-stream
-    * size (round-14: the r13 BASELINE measured the session-default
-    * partitioning ~1.8× worse on the 10× stream and left the knob as
-    * documentation — this wires it). Floor at the session default
-    * (small streams keep the session's sizing), cap 2048 (past that a
-    * 100-TB deployment tunes the cluster-wide shuffle sizing, not one
-    * operator's repartition). */
-  def dedupPartitionsFor(estRows: Long, sessionDefault: Int): Int = {
-    val byRows = math.ceil(estRows.toDouble / DedupTargetRowsPerPartition).toInt
-    math.min(2048, math.max(sessionDefault, byRows))
-  }
-
-  /** DISTINCT within-bucket id pairs of a (id, __t, __bkt) key stream —
-    * the home-only candidate generator (probes = 0), shared by
-    * [[portableEmbedPairs]] and [[shardedJobs]]. */
-  private def homeOnlyPairs(keys: DataFrame, idCol: String,
-                            maxBucketSize: Int): DataFrame =
-    keys
-      .groupBy("__t", "__bkt")
-      .agg(collect_list(col(idCol)).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxBucketSize))
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-      .distinct()
-
   /** RAW (with multiplicity) multi-probe candidate pairs of a
     * (id, __t, __bkt) key stream — directional probe keys joined to the
-    * capped home buckets; the dedup regime (before vs after exact
-    * verification — the found set commutes) is the caller's decision.
-    * Shared by [[portableEmbedPairs]] and [[shardedJobs]].
+    * capped home buckets; `fusedVerify`'s survivor distinct removes the
+    * duplicates (dedup commutes with exact verification). Shared by
+    * [[portableEmbedPairs]] and [[shardedJobs]].
     *
     * MULTI-PROBE (round 13, Lv et al. 2007): a pair collides in a table
     * iff its signatures differ in ≤ 1 bit — each doc's probe keys (home
@@ -558,22 +443,23 @@ object Similarity {
     * fewer tables (recommendedTablesProbed) while each ham-1 pair costs
     * the verifier exactly ONE candidate row (probed by its 0-bit member
     * alone). Home lists of size 1 stay eligible: a singleton bucket can
-    * still receive probes from neighbors. */
+    * still receive probes from neighbors. At probes = 0 the probe keys
+    * are the home keys, so every within-bucket pair arrives twice (once
+    * from each member). */
   private[graft] def probedRawPairs(keys: DataFrame, idCol: String,
-                             maxBucketSize: Int, probes: Int,
-                             broadcastHome: Boolean = false): DataFrame = {
+                             maxBucketSize: Int, probes: Int): DataFrame = {
     val home = keys
       .groupBy("__t", "__bkt")
       .agg(collect_list(col(idCol)).as("__ids"))
       .filter(size(col("__ids")) <= maxBucketSize)
-    // broadcastHome: in the bounded regime the capped home lists carry
-    // ≤ n×L ids total (metadata-sized by the regime bound) — forcing the
-    // broadcast keeps the candidate join map-side at data sizes where
-    // AQE's post-aggregate size estimate would fall back to a shuffle
-    // join (measured at 10×: the probe stream then flows through ONE
-    // codegen stage from probe-key explode to verified score)
+    // the capped home lists carry ≤ n×L ids total (metadata-sized by the
+    // verify bound) — forcing the broadcast keeps the candidate join
+    // map-side at data sizes where AQE's post-aggregate size estimate
+    // would fall back to a shuffle join (measured at 10×: the probe
+    // stream then flows through ONE codegen stage from probe-key explode
+    // to verified score)
     probedBucketKeys(keys, idCol, probes)
-      .join(if (broadcastHome) broadcast(home) else home, Seq("__t", "__bkt"))
+      .join(broadcast(home), Seq("__t", "__bkt"))
       .select(col(idCol).as("__pid"), explode(col("__ids")).as("__hid"))
       .filter(col("__pid") =!= col("__hid"))
       .select(least(col("__pid"), col("__hid")).as("id_a"),
@@ -583,13 +469,21 @@ object Similarity {
   /** Driver-side packed verify map over one or more (id, __qv) frames —
     * toLocalIterator build (the driver holds the HashMap plus ONE
     * partition of rows at a time, never a collect()'d Array[Row] copy)
-    * into the Array[Int] representation (`IntDotLookup.pack`). Callers
-    * bound total rows by the broadcast regime's contract
-    * (`broadcastVerifyMaxRows`). */
-  private[graft] def packedVerifyMap(frames: Seq[DataFrame]): java.util.HashMap[java.lang.Long, Array[Int]] = {
+    * into the Array[Int] representation (`IntDotLookup.pack`). Past
+    * `maxRows` rows it throws, naming `sharded` as the runner to use;
+    * rows are counted as the map fills, so the bound costs no Spark
+    * job. An id seen twice throws: one map holds every side's vectors,
+    * so a repeat would silently score against the wrong vector. */
+  private[graft] def packedVerifyMap(frames: Seq[DataFrame], maxRows: Long = Long.MaxValue,
+      sharded: String = ""): java.util.HashMap[java.lang.Long, Array[Int]] = {
     val m = new java.util.HashMap[java.lang.Long, Array[Int]]()
+    var rows = 0L
     frames.foreach(_.toLocalIterator().forEachRemaining { r =>
-      m.put(r.getLong(0), graft.functions.IntDotLookup.pack(r.getSeq[Long](1)))
+      rows += 1
+      require(rows <= maxRows, s"more than $maxRows vector rows: past " +
+        s"broadcastVerifyMaxRows the verify map outgrows its broadcast budget — use $sharded")
+      require(m.put(r.getLong(0), graft.functions.IntDotLookup.pack(r.getSeq[Long](1))) == null,
+        s"id ${r.getLong(0)} appears twice in the verify map's frames")
     })
     m
   }
@@ -597,7 +491,7 @@ object Similarity {
   /** Fused broadcast-lookup verification of a raw (id_a, id_b) candidate
     * stream: two hash lookups + the integer dot per candidate inside
     * whole-stage codegen, threshold filter, survivor-set distinct (dedup
-    * commutes with exact verification — the q84 two-regime rule). */
+    * commutes with exact verification). */
   private[graft] def fusedVerify(cands: DataFrame,
       bc: org.apache.spark.broadcast.Broadcast[java.util.HashMap[java.lang.Long, Array[Int]]],
       minScore: Long): DataFrame =
@@ -607,109 +501,71 @@ object Similarity {
       .filter(col("score") >= minScore)
       .distinct()
 
+  /** The monolithic runners' verify: ONE tracked broadcast of the packed
+    * map over `frames`, bounded by `broadcastVerifyMaxRows(dim)` (past
+    * it the caller is pointed at `sharded`), then [[fusedVerify]] of
+    * `cands` — taken by name and built AFTER the map, so an oversize
+    * input fails before any candidate work. The driver holds the
+    * HashMap plus ONE partition of rows at a time (round-16 heap receipt
+    * in BASELINE.md); the broadcast's serialized copy is the one
+    * unavoidable transient double. TRACKED: serial harnesses destroy it
+    * between entries (Broadcasts.destroyAll), so finished entries don't
+    * pin ~100 MB maps for the session. The handle is baked into the
+    * expression instance (IntDotLookup.column) — no session-global
+    * registry. */
+  private def broadcastVerify(frames: Seq[DataFrame], dim: Int, sharded: String,
+                              minScore: Long)(cands: => DataFrame): DataFrame = {
+    val m = packedVerifyMap(frames, broadcastVerifyMaxRows(dim), sharded)
+    val bc = Broadcasts.track(frames.head.sparkSession.sparkContext.broadcast(m))
+    fusedVerify(cands, bc, minScore)
+  }
+
   /** Embedding near-dup pairs: integer-quantized vectors, ±1 integer
     * hyperplane buckets, integer-dot verification — exact integers end to
-    * end, so the pair set hash-checks cross-engine. Single-pass
-    * bucketing: one keys-only shuffle of (table, bucket, id), in-bucket
-    * pairs by double explode (home-only) or directional multi-probe with
-    * two-regime verification (`probes` > 0). `minScore` is the
-    * quantized-dot threshold (≈ cosine·10^8 for unit-norm inputs).
+    * end, so the pair set hash-checks cross-engine. One keys-only
+    * exchange (the home-bucket groupBy), the directional multi-probe
+    * stream (home keys alone at `probes` = 0) joined map-side to the
+    * capped home lists, and [[broadcastVerify]]. Up to
+    * `broadcastVerifyMaxRows(dim)` vectors; past it this throws — run
+    * [[shardedEmbedPairs]]. `minScore` is the quantized-dot threshold
+    * (≈ cosine·10^8 for unit-norm inputs).
     * Output: (id_a, id_b, score BIGINT), id_a < id_b. */
   def portableEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          minScore: Long, tables: Int = 8, bits: Int = 6,
                          dim: Int = 64, seed: Long = 11L,
                          scale: Int = 10000,
                          maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                         probes: Int = 0, corpusRowsHint: Long = -1L): DataFrame = {
+                         probes: Int = 0): DataFrame = {
     require(probes <= bits,
       s"probes ($probes) beyond the $bits-bit signature flip bits no bucket key carries")
     val planes = portableHyperplanes(dim, tables, bits, seed)
     val q = portableQuantized(corpus, idCol, vecCol, scale)
-    // Bucketing fans out KEYS ONLY — compact (t, bkt, id) triples, never
-    // the vectors: carrying __qv here duplicates every vector tables×
-    // through the corpus-wide bucket exchange and leaves collected buckets
-    // holding m full vectors (the shape class portablePairStats was cured
-    // of in round 6). Vectors are joined back for surviving candidate
-    // pairs only (candidates ≪ corpus × tables); re-deriving __qv on the
-    // join sides is one cheap floor-cast pass over a pruned scan.
-    // Bucket-size cap: degenerate-bucket guard (cf.
-    // TextDedup.DefaultMaxBucketSize), mirrored into the q84/q97 DuckDB text
-    val keys = portableBucketKeys(q, idCol, planes)
-    def verify(pairs: DataFrame, useBroadcast: Boolean): DataFrame = {
-      def side(df: DataFrame) = if (useBroadcast) broadcast(df) else df
-      pairs
-        .join(side(q.select(col(idCol).as("id_a"), col("__qv").as("__va"))), Seq("id_a"))
-        .join(side(q.select(col(idCol).as("id_b"), col("__qv").as("__vb"))), Seq("id_b"))
-        .select(col("id_a"), col("id_b"), intDot(col("__va"), col("__vb")).as("score"))
-        .filter(col("score") >= minScore)
-    }
-    if (probes <= 0)
-      verify(homeOnlyPairs(keys, idCol, maxBucketSize), useBroadcast = false)
-    else {
-      if (corpusRowsHint >= 0 && corpusRowsHint <= broadcastVerifyMaxRows(dim)) {
-        // broadcast regime (rebuilt round 15): verify the duplicates
-        // map-side through the FUSED broadcast-lookup expression
-        // (graft.functions.IntDotLookup) and dedup the (tiny) survivor
-        // set. The former two-BroadcastHashJoin verify shipped the
-        // quantized frame TWICE and materialized two 64-long arrays
-        // into every candidate row; now ONE broadcast of the regime-
-        // bounded frame (collected exactly the way a BroadcastHashJoin
-        // build side is) feeds two hash lookups + a fused dot per
-        // candidate inside whole-stage codegen. The signature subtree
-        // is cut once (it feeds both the home buckets and the probe
-        // stream — the q82 lineage rule, formerly shuffle-regime-only),
-        // and the capped home lists are force-broadcast, so the whole
-        // candidate path is: one keys-only exchange (the home groupBy),
-        // one map-side probe join, verify in the same stage, and one
-        // survivor-sized distinct. ProfileQ84 receipts in BASELINE.md.
-        val cutKeys = Checkpoints.cut(keys, eager = true)
-        // Driver-heap budget at the regime bound (round-16 receipt in
-        // BASELINE.md): the map is built from toLocalIterator — the
-        // driver holds the HashMap plus ONE partition of rows at a time,
-        // never a full collect()'d Array[Row] copy of the frame — and
-        // the broadcast's serialized copy is the one unavoidable
-        // transient double (TorrentBroadcast writes blocks then drops
-        // the reference). The broadcast is TRACKED: serial harnesses
-        // destroy it between entries (Broadcasts.destroyAll), so
-        // finished entries don't pin ~100 MB maps for the session.
-        // the broadcast handle is baked into the expression instance
-        // directly (IntDotLookup.column) — no session-global registry
-        // mutation, no analysis-ordering invariant (round-15 advice)
-        val bc = Broadcasts.track(
-          corpus.sparkSession.sparkContext.broadcast(packedVerifyMap(Seq(q))))
-        fusedVerify(
-          probedRawPairs(cutKeys, idCol, maxBucketSize, probes, broadcastHome = true),
-          bc, minScore)
-      } else {
-        // shuffle regime: the pre-verify distinct is load-bearing (it
-        // minimizes the payload-carrying join intermediate) and its
-        // partition count is chosen by code from a keys-only size
-        // estimate — see estimatedRawCandidates/dedupPartitionsFor.
-        // The keys subtree (the signature passes) is referenced three
-        // times here (estimate, home buckets, probe stream) — cut its
-        // lineage once (the q82 rule: dominant subtree, N references;
-        // measured 18.1 → 14.5 s at 10× — BASELINE.md round 14). At
-        // production scale signatures are a persisted table (PLANS.md),
-        // which plays the same role.
-        val cutKeys = Checkpoints.cut(keys, eager = true)
-        val parts = dedupPartitionsFor(
-          estimatedRawCandidates(cutKeys, probes, maxBucketSize),
-          corpus.sparkSession.sessionState.conf.numShufflePartitions)
-        verify(probedRawPairs(cutKeys, idCol, maxBucketSize, probes)
-          .repartition(parts, col("id_a"), col("id_b")).distinct(),
-          useBroadcast = false)
-      }
+    broadcastVerify(Seq(q), dim, "shardedEmbedPairs", minScore) {
+      // Bucketing fans out KEYS ONLY — compact (t, bkt, id) triples,
+      // never the vectors: carrying __qv here duplicates every vector
+      // tables× through the corpus-wide bucket exchange (the shape class
+      // portablePairStats was cured of in round 6). Bucket-size cap:
+      // degenerate-bucket guard (cf. TextDedup.DefaultMaxBucketSize),
+      // mirrored into the q84/q97 DuckDB text. The signature subtree
+      // feeds both the home buckets and the probe stream — cut once
+      // (the q82 lineage rule; measured 18.1 → 14.5 s at 10× —
+      // BASELINE.md round 14).
+      val keys = Checkpoints.cut(portableBucketKeys(q, idCol, planes), eager = true)
+      probedRawPairs(keys, idCol, maxBucketSize, probes)
     }
   }
 
   /** Incremental embedding near-dup: candidate pairs between an EXISTING
     * vector corpus and an INCOMING batch — the embedding analogue of
-    * `TextDedup.portableCrossPairStats` (same daily-crawl shape, same
-    * guarantees): both sides bucketed with the SAME hyperplanes, combined
-    * per-key occupancy capped, keys-only joins with the small incoming
-    * side AQE-broadcast so the corpus never shuffles, vectors joined back
-    * for surviving pairs only. Pair set equals `portableEmbedPairs` on
-    * the concatenated corpus restricted to cross pairs (the q125 oracle).
+    * `TextDedup.portableCrossPairStats` (same daily-crawl shape): both
+    * sides bucketed with the SAME hyperplanes, combined per-key
+    * occupancy capped, keys-only candidate joins, and ONE bounded
+    * broadcast of both sides' vectors verifying the raw candidates
+    * ([[broadcastVerify]]). Up to `broadcastVerifyMaxRows(dim)` vectors
+    * on both sides together; past it this throws — run
+    * [[shardedCrossEmbedPairs]]. An id on both sides throws.
+    * Pair set equals `portableEmbedPairs` on the concatenated corpus
+    * restricted to cross pairs (the q125 oracle).
     * Output: (id_a ∈ existing, id_b ∈ incoming, score BIGINT). */
   def portableCrossEmbedPairs(existing: DataFrame, incoming: DataFrame,
                               idCol: String, vecCol: String,
@@ -721,69 +577,52 @@ object Similarity {
     val planes = portableHyperplanes(dim, tables, bits, seed)
     val qOld = portableQuantized(existing, idCol, vecCol, scale)
     val qNew = portableQuantized(incoming, idCol, vecCol, scale)
-    // Cut each side's bucket-key stream once (r17 optimization round —
-    // the q82 N-references rule at the same level portableEmbedPairs
-    // cuts its probed `keys`): crossCandidatesRaw references each side
-    // 2× (home-only: occupancy + join) or 3× (probed: occupancy + home
-    // + probe stream), and every reference otherwise re-runs the
-    // tables×-dot signature pass. Quantize stays un-cut — re-deriving
-    // __qv on the verify side is the documented cheap floor-cast pass.
-    val bOld = Checkpoints.cut(portableBucketKeys(qOld, idCol, planes), eager = false)
-    val bNew = Checkpoints.cut(portableBucketKeys(qNew, idCol, planes), eager = false)
-    // dedup commutes with exact verification (the q84 two-regime rule);
-    // dedup candidates first — it minimizes the payload-join intermediate
-    crossCandidatesRaw(bOld, bNew, idCol, maxBucketSize, probes).distinct()
-      .join(qOld.select(col(idCol).as("id_a"), col("__qv").as("__va")), Seq("id_a"))
-      .join(qNew.select(col(idCol).as("id_b"), col("__qv").as("__vb")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), intDot(col("__va"), col("__vb")).as("score"))
-      .filter(col("score") >= minScore)
+    broadcastVerify(Seq(qOld, qNew), dim, "shardedCrossEmbedPairs", minScore) {
+      // Cut each side's bucket-key stream once (r17 optimization round —
+      // the q82 N-references rule): crossCandidatesRaw references each
+      // side 3× (occupancy + home + probe stream), and every reference
+      // otherwise re-runs the tables×-dot signature pass.
+      val bOld = Checkpoints.cut(portableBucketKeys(qOld, idCol, planes), eager = false)
+      val bNew = Checkpoints.cut(portableBucketKeys(qNew, idCol, planes), eager = false)
+      crossCandidatesRaw(bOld, bNew, idCol, maxBucketSize, probes)
+    }
   }
 
   /** RAW cross-side candidate pairs of two bucketed key streams — the
     * (existing → id_a, incoming → id_b) generator shared by
     * [[portableCrossEmbedPairs]] and [[shardedJobs]]' cross jobs.
-    * Combined-occupancy cap + directional probing; keys-only. */
+    * Keys-only. Pair-set-equal BY CONSTRUCTION to the probed symmetric
+    * pipeline on the concatenated corpus restricted to cross pairs (the
+    * q125 oracle identity): the cap is the COMBINED home-bucket
+    * occupancy (= the symmetric pipeline's home-bucket size), and with
+    * DIRECTIONAL probing a ham-1 cross pair is found by exactly one
+    * orientation (its 0-bit member probing the 1-side's home) — the two
+    * probe-into-home joins are unioned so both orientations are
+    * available, whichever side holds the 0 bit. At `probes` = 0 both
+    * joins emit every same-bucket pair, so each arrives twice. */
   private[graft] def crossCandidatesRaw(bOld: DataFrame, bNew: DataFrame,
       idCol: String, maxBucketSize: Int, probes: Int): DataFrame = {
-      if (probes <= 0) {
-        val eligible = bOld.groupBy("__t", "__bkt").agg(count(lit(1)).as("__no"))
-          .join(bNew.groupBy("__t", "__bkt").agg(count(lit(1)).as("__nn")), Seq("__t", "__bkt"))
-          .filter(col("__no") + col("__nn") <= maxBucketSize)
-          .select("__t", "__bkt")
-        bOld.join(eligible, Seq("__t", "__bkt"))
-          .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
-          .join(bNew.select(col("__t"), col("__bkt"), col(idCol).as("id_b")), Seq("__t", "__bkt"))
-          .select("id_a", "id_b")
-      } else {
-        // Multi-probe cross form — pair-set-equal BY CONSTRUCTION to the
-        // probed symmetric pipeline on the concatenated corpus restricted
-        // to cross pairs (the q125 oracle identity): the cap is the
-        // COMBINED home-bucket occupancy (= the symmetric pipeline's
-        // home-bucket size), and with DIRECTIONAL probing a ham-1 cross
-        // pair is found by exactly one orientation (its 0-bit member
-        // probing the 1-side's home) — the two probe-into-home joins
-        // are unioned so both orientations are available, whichever
-        // side holds the 0 bit. Keys-only throughout.
-        val occ = bOld.select("__t", "__bkt").unionAll(bNew.select("__t", "__bkt"))
-          .groupBy("__t", "__bkt").agg(count(lit(1)).as("__n"))
-        val okOld = bOld.join(occ.filter(col("__n") <= maxBucketSize), Seq("__t", "__bkt"))
-          .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
-        val okNew = bNew.join(occ.filter(col("__n") <= maxBucketSize), Seq("__t", "__bkt"))
-          .select(col("__t"), col("__bkt"), col(idCol).as("id_b"))
-        val prOld = probedBucketKeys(bOld, idCol, probes)
-          .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
-        val prNew = probedBucketKeys(bNew, idCol, probes)
-          .select(col("__t"), col("__bkt"), col(idCol).as("id_b"))
-        prNew.join(okOld, Seq("__t", "__bkt")).select("id_a", "id_b")
-          .unionAll(prOld.join(okNew, Seq("__t", "__bkt")).select("id_a", "id_b"))
-      }
+    val occ = bOld.select("__t", "__bkt").unionAll(bNew.select("__t", "__bkt"))
+      .groupBy("__t", "__bkt").agg(count(lit(1)).as("__n"))
+    val okOld = bOld.join(occ.filter(col("__n") <= maxBucketSize), Seq("__t", "__bkt"))
+      .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
+    val okNew = bNew.join(occ.filter(col("__n") <= maxBucketSize), Seq("__t", "__bkt"))
+      .select(col("__t"), col("__bkt"), col(idCol).as("id_b"))
+    val prOld = probedBucketKeys(bOld, idCol, probes)
+      .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
+    val prNew = probedBucketKeys(bNew, idCol, probes)
+      .select(col("__t"), col("__bkt"), col(idCol).as("id_b"))
+    prNew.join(okOld, Seq("__t", "__bkt")).select("id_a", "id_b")
+      .unionAll(prOld.join(okNew, Seq("__t", "__bkt")).select("id_a", "id_b"))
   }
 
   /** SHARD-FIRST portable embedding near-dup — the past-bound path
     * (round 16 verdict #3; persisted signature tables since round 17):
-    * past `broadcastVerifyMaxRows` the monolithic shuffle regime's
-    * distinct-first plan pays one global exchange of the ~n^1.79 raw
-    * candidate stream (measured: 1.85B raw rows at 200k vectors). This
+    * past `broadcastVerifyMaxRows` [[portableEmbedPairs]] throws — its
+    * one verify map would outgrow the broadcast budget, and the
+    * distinct-first shuffle plan that once ran there paid one global
+    * exchange of the ~n^1.79 raw candidate stream (1.85B raw rows at
+    * 200k vectors, where it failed — BASELINE.md round 16). This
     * operator decomposes the SAME pair set into bounded-memory
     * broadcast-verify jobs over S = ⌈n/shardRows⌉ hash-shards
     * (deterministic xxhash64 of the id): every shard pairs with itself
@@ -802,8 +641,8 @@ object Similarity {
     * asserts exact set equality at the default S=1 and a forced S=3.
     *
     * `shardRows` defaults to half the broadcast bound, so a cross-shard
-    * job's map (two shards) fits the monolithic broadcast regime's
-    * envelope; a corpus under it runs ONE within-shard job. EAGER: jobs
+    * job's map (two shards) fits the monolithic runner's broadcast
+    * budget; a corpus under it runs ONE within-shard job. EAGER: jobs
     * run at call time. Output: (id_a, id_b, score BIGINT), id_a < id_b. */
   def shardedEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
       minScore: Long, tables: Int = 8, bits: Int = 6, dim: Int = 64,
@@ -836,7 +675,7 @@ object Similarity {
     * The per-side bounds are separate because a deployment legitimately
     * runs a huge-corpus × small-batch asymmetry (Sₑ large, Sᵢ = 1); both
     * default to `broadcastVerifyMaxRows(dim) / 2` so any job's combined
-    * map fits the monolithic broadcast regime's envelope. EAGER: jobs run
+    * map fits the monolithic runners' broadcast budget. EAGER: jobs run
     * at call time. Output: (id_a ∈ existing, id_b ∈ incoming, score
     * BIGINT) — directional, like [[portableCrossEmbedPairs]]. */
   def shardedCrossEmbedPairs(existing: DataFrame, incoming: DataFrame,
@@ -898,12 +737,13 @@ object Similarity {
     for (i <- 0 until sA; j <- (if (symmetric) i else 0) until sB) {
       val within = symmetric && i == j
       val cands =
-        if (!within) crossCandidatesRaw(kA(i), kB(j), idCol, maxBucketSize, probes)
-        else if (probes <= 0) homeOnlyPairs(kA(i), idCol, maxBucketSize)
-        else probedRawPairs(kA(i), idCol, maxBucketSize, probes, broadcastHome = true)
+        if (within) probedRawPairs(kA(i), idCol, maxBucketSize, probes)
+        else crossCandidatesRaw(kA(i), kB(j), idCol, maxBucketSize, probes)
       // UNTRACKED broadcast, destroyed per job — Broadcasts.track is for
       // handles that must outlive the call (a harness frees them between
-      // entries); here the job's write is the last reference
+      // entries); here the job's write is the last reference. UNBOUNDED:
+      // shards are sized at half the bound, and id-hash skew can push a
+      // two-shard map slightly past it
       val bc = spark.sparkContext.broadcast(
         packedVerifyMap(if (within) Seq(qA(i)) else Seq(qA(i), qB(j))))
       val verified = fusedVerify(cands, bc, minScore)

@@ -125,7 +125,7 @@ object DedupQuality {
     val found = Similarity.portableEmbedPairs(emb, "vec_id", "embedding",
       minScore = graft.SparkEntry.EmbedMinScore,
       tables = Similarity.recommendedTablesProbed(bits), bits = bits,
-      probes = bits, corpusRowsHint = n).count()
+      probes = bits).count()
     (found, truth, if (truth == 0) 1.0 else found.toDouble / truth)
   }
 

@@ -3,26 +3,25 @@ package graft.tools
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
-/** Round-16 receipts for the embedding-LSH verification regimes at the
-  * 100× corpus (200k vectors — exactly `BroadcastVerifyMaxRows` at
-  * dim 64), dev tool backing BASELINE.md:
+/** Receipts for the embedding-LSH pair runners at a replicated corpus
+  * (factor 100 = 200k vectors, half of `broadcastVerifyMaxRows(64)`),
+  * dev tool backing BASELINE.md:
   *
-  *  1. DRIVER-HEAP envelope of the broadcast regime at the doubled
-  *     bound (round-15 verdict #2): the whole q84 entry runs under a
-  *     BOUNDED -Xmx (set SPARK_DRIVER_MEM before launching) and the
-  *     probe reports the JVM heap-pool PEAKS across the run — the map
-  *     build (toLocalIterator, round 16) + broadcast transient included.
-  *  2. SHUFFLE regime at 100× (round-15 verdict #3 — the one unmeasured
-  *     scale cell): the same corpus forced past the bound (no row hint)
-  *     with the r14-wired `dedupPartitionsFor` sizing; prints the
-  *     keys-only estimate and the chosen partition count alongside the
-  *     wall.
+  *  - map: the DRIVER-HEAP cost of building and broadcasting the packed
+  *    verify map alone (toLocalIterator → HashMap → broadcast).
+  *  - broadcast: the whole monolithic q84 runner (`portableEmbedPairs`)
+  *    under a BOUNDED -Xmx (set SPARK_DRIVER_MEM before launching),
+  *    reporting the JVM heap-pool PEAKS across the run — the map build
+  *    and broadcast transient included. Past the bound it throws.
+  *  - persisted/cc/cross/ann: the sharded runners, connected components
+  *    over their pairs, the incremental count identity and the ANN
+  *    search point.
   *
   * Usage: runMain graft.tools.RegimeProbe [factor] [dir] [stages]
-  *   stages ⊆ {build, map, broadcast, shuffle, persisted, cc, cross, ann}
-  *   (default {build, map, broadcast, shuffle}; the persisted/cc/cross
-  *   stages back the past-bound receipts and run only when named — they
-  *   need a factor whose corpus crosses the bound to be meaningful).
+  *   stages ⊆ {build, map, broadcast, persisted, cc, cross, ann}
+  *   (default {build, map, broadcast}; the persisted/cc/cross stages
+  *   back the past-bound receipts and run only when named — they need a
+  *   factor whose corpus crosses the bound to be meaningful).
   * Env: SPARK_GRAFT_SF_DIR (source, default sf0.1), SPARK_GRAFT_CPUS
   *      (default nproc), SPARK_DRIVER_MEM (the -Xmx bound under test,
   *      via build.sbt). */
@@ -31,7 +30,7 @@ object RegimeProbe {
     val factor = if (args.length > 0) args(0).toInt else 100
     val dir = if (args.length > 1) args(1) else s"/tmp/graft_scale${factor}x"
     val stages = if (args.length > 2) args(2).split(',').toSet
-                 else Set("build", "map", "broadcast", "shuffle")
+                 else Set("build", "map", "broadcast")
     val srcDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
     val spark = graft.Engine.session(cpus)
@@ -75,21 +74,20 @@ object RegimeProbe {
       val m = java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
       m.getUsed / (1 << 20)
     }
-    def run(label: String, hint: Long): Unit = {
+    def run(label: String): Unit = {
       System.gc()
       resetPeaks()
       val t0 = System.nanoTime()
       val found = Similarity.portableEmbedPairs(emb, "vec_id", "embedding",
         minScore = graft.SparkEntry.EmbedMinScore,
-        tables = tables, bits = bits, probes = bits,
-        corpusRowsHint = hint).count()
+        tables = tables, bits = bits, probes = bits).count()
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"[regime] $label: $sec%.1f s, $found pairs, heap-pool peak ${peakMb()} MB")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       graft.operators.Broadcasts.destroyAll()
     }
     if (stages("map")) {
-      // ISOLATED driver-side envelope of the broadcast-regime lookup
+      // ISOLATED driver-side envelope of the broadcast verify-map
       // build (the round-15 advice's transient-double-copy question):
       // quantized frame → toLocalIterator → HashMap → broadcast, heap
       // deltas reported at each step. In local mode the full-entry run
@@ -99,10 +97,7 @@ object RegimeProbe {
       val before = heapUsedMb()
       val q = Similarity.portableQuantized(emb, "vec_id", "embedding", 10000)
         .select(col("vec_id"), col("__qv"))
-      val m = new java.util.HashMap[java.lang.Long, Array[Int]]()
-      q.toLocalIterator().forEachRemaining { r =>
-        m.put(r.getLong(0), graft.functions.IntDotLookup.pack(r.getSeq[Long](1)))
-      }
+      val m = Similarity.packedVerifyMap(Seq(q))
       System.gc()
       val afterMap = heapUsedMb()
       val bc = spark.sparkContext.broadcast(m)
@@ -115,7 +110,7 @@ object RegimeProbe {
         s"broadcast block ≈ ${afterBc - afterMap} MB)")
       bc.destroy()
     }
-    if (stages("broadcast")) run("broadcast regime (hint=n, heap-metered)", n)
+    if (stages("broadcast")) run("monolithic runner (heap-metered)")
     // round-17 verdict #4 receipt: the persisted-signature-table runner
     // at S=8 — signatures computed once, jobs sequential, one map at a
     // time. Wall + heap-pool peak are THE published numbers.
@@ -148,12 +143,13 @@ object RegimeProbe {
       // Deployment knobs for an iterative pass this size, both already
       // shipped: a RELIABLE checkpoint dir (the SPARK_GRAFT_CHECKPOINT_DIR
       // mode — per-round lineage cuts live as files, not block-manager
-      // memory) and shuffle partitions sized by dedupPartitionsFor on
-      // the symmetric edge count. The session defaults OOM at this size
-      // (first attempt: the 1.23B-row sym distinct through 32 partitions
-      // = ~38M-row hash tables × 32 task threads in one 8 GB heap).
+      // memory) and shuffle partitions at ~350k symmetric edges each
+      // (floor the core count, cap 2048). The session defaults OOM at
+      // this size (first attempt: the 1.23B-row sym distinct through 32
+      // partitions = ~38M-row hash tables × 32 task threads in one 8 GB
+      // heap).
       spark.sparkContext.setCheckpointDir(s"$dir/ckpt")
-      val symParts = Similarity.dedupPartitionsFor(2L * nPairs, cpus)
+      val symParts = math.min(2048, math.max(cpus, math.ceil(2.0 * nPairs / 350000L).toInt))
       spark.conf.set("spark.sql.shuffle.partitions", symParts)
       println(s"[regime] cc sizing: symmetric-edge estimate ${2L * nPairs} -> $symParts partitions, reliable ckpt dir")
       System.gc(); resetPeaks()
@@ -238,17 +234,6 @@ object RegimeProbe {
         sec
       }
       println(f"[regime] ann min of 3: ${walls.min}%.2f s")
-    }
-    if (stages("shuffle")) {
-      // print the sizing decision the shuffle path will make (same code)
-      val planes = Similarity.portableHyperplanes(64, tables, bits)
-      val q = Similarity.portableQuantized(emb, "vec_id", "embedding", 10000)
-      val keys = Similarity.portableBucketKeys(q, "vec_id", planes)
-      val est = Similarity.estimatedRawCandidates(keys, bits,
-        graft.operators.TextDedup.DefaultMaxBucketSize)
-      val parts = Similarity.dedupPartitionsFor(est, cpus)
-      println(s"[regime] shuffle sizing: estRaw=$est -> $parts dedup partitions")
-      run("shuffle regime (forced, no hint)", -1L)
     }
     spark.stop()
   }

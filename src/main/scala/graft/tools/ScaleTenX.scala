@@ -146,7 +146,7 @@ object ScaleTenX {
           emb, "vec_id", "embedding",
           minScore = graft.SparkEntry.EmbedMinScore,
           tables = Similarity.recommendedTablesProbed(bits), bits = bits,
-          probes = bits, corpusRowsHint = emb.count())
+          probes = bits)
         .select("id_a", "id_b").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       val foundBase = found(embBase, b0)

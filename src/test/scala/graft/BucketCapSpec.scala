@@ -186,15 +186,13 @@ class BucketCapSpec extends AnyFunSuite {
     // boilerplate×boilerplate pair can surface. Probes from boilerplate
     // into small neighbor buckets stay linear (each bounded by the small
     // bucket's size) — the quadratic blowup is what the cap kills.
-    Seq(-1L, 3000L).foreach { hint => // shuffle regime, broadcast regime
-      val pairs = Similarity.portableEmbedPairs(vecs, "vec_id", "embedding",
-          minScore = 1L, tables = 2, bits = 6, probes = 6, corpusRowsHint = hint)
-        .select("id_a", "id_b").as[(Long, Long)].collect()
-      assert(!pairs.exists { case (a, b) => a > 10000L && b > 10000L },
-        s"hint=$hint: no boilerplate-boilerplate pair may survive the home-bucket cap under probing")
-      assert(pairs.contains((1L, 2L)), s"hint=$hint: identical vector pair must survive")
-      assert(pairs.length <= 3 * 2000 + 10,
-        s"hint=$hint: probe fan-out exceeded the linear bound: ${pairs.length}")
-    }
+    val pairs = Similarity.portableEmbedPairs(vecs, "vec_id", "embedding",
+        minScore = 1L, tables = 2, bits = 6, probes = 6)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(!pairs.exists { case (a, b) => a > 10000L && b > 10000L },
+      "no boilerplate-boilerplate pair may survive the home-bucket cap under probing")
+    assert(pairs.contains((1L, 2L)), "identical vector pair must survive")
+    assert(pairs.length <= 3 * 2000 + 10,
+      s"probe fan-out exceeded the linear bound: ${pairs.length}")
   }
 }

@@ -83,39 +83,6 @@ class RecallSpec extends AnyFunSuite {
     }
   }
 
-  test("adaptiveBits widens past the count rule on a clustered corpus, fits the occupancy bound") {
-    import spark.implicits._
-    // 4 tight clusters × 200 members: the count rule sees n=800 →
-    // recommendedBits(800, 32) = 5, but members share most hyperplane
-    // signs, so real occupancy is cluster-sized — the exact blind spot
-    // the round-11 verdict called out. Jittered (not identical) vectors
-    // split once enough planes are in play.
-    val rng = new scala.util.Random(3L)
-    val centers = Array.fill(4)(Array.fill(64)(rng.nextDouble() * 2 - 1))
-    val vecs = (0 until 800).map { i =>
-      val c = centers(i % 4)
-      (i.toLong, c.map(x => (x + (rng.nextDouble() - 0.5) * 0.6).toFloat).toSeq)
-    }.toDF("vec_id", "embedding")
-    val countRule = Similarity.recommendedBits(800, 32)
-    val sized = Similarity.adaptiveBits(vecs, "vec_id", "embedding", maxOccupancy = 50)
-    assert(sized > countRule,
-      s"clustered corpus should force widening past the count rule ($countRule)")
-    val mx = Similarity.portableEmbedBucketSizes(vecs, "vec_id", "embedding", bits = sized)
-      .agg(max("n")).head().getLong(0)
-    assert(mx <= 50, s"adaptive width $sized still has max occupancy $mx > 50")
-  }
-
-  test("adaptiveBits gives up at the width cap on sign-identical clusters (boilerplate is the cap's job)") {
-    import spark.implicits._
-    // 64 IDENTICAL vectors: no hyperplane count separates them — the
-    // residual oversize bucket is genuine boilerplate for
-    // DefaultMaxBucketSize, and the sizing loop must terminate at 24
-    // rather than spin.
-    val v = Array.fill(64)(0.5f).toSeq
-    val vecs = (0 until 64).map(i => (i.toLong, v)).toDF("vec_id", "embedding")
-    assert(Similarity.adaptiveBits(vecs, "vec_id", "embedding", maxOccupancy = 8) == 24)
-  }
-
   test("recommendedTables holds the threshold collision probability as bits widen (round 12)") {
     // The rule's whole point: 1−(1−pBit^bits)^L(bits) stays ≥ the base
     // operating point's value, so occupancy-driven widening can never
@@ -181,28 +148,10 @@ class RecallSpec extends AnyFunSuite {
       "probing added no ham-1 pairs at bits=6 on the real fixture — probe keys are not reaching neighbor buckets")
   }
 
-  test("probed pair set is verification-regime-invariant (broadcast vs shuffle)") {
-    // the two-regime claim (BroadcastVerifyMaxRows): dedup before or
-    // after exact verification commutes, so the found (id_a, id_b,
-    // score) SET cannot depend on which regime ran — pinned here so a
-    // future regime change can't silently alter oracle output
-    val emb = Tables.table(spark, TestSpark.sf01, "embeddings")
-    def found(hint: Long) = Similarity.portableEmbedPairs(
-        emb, "vec_id", "embedding", minScore = graft.SparkEntry.EmbedMinScore,
-        tables = 2, bits = 6, probes = 6, corpusRowsHint = hint)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val broadcastRegime = found(emb.count()) // under the bound
-    val shuffleRegime = found(-1L)           // no hint → distinct-first
-    assert(broadcastRegime == shuffleRegime,
-      s"regimes diverged: only-broadcast=${(broadcastRegime -- shuffleRegime).take(3)}, " +
-        s"only-shuffle=${(shuffleRegime -- broadcastRegime).take(3)}")
-    assert(broadcastRegime.nonEmpty, "regime fixture degenerated: no pairs")
-  }
-
   test("broadcast-verify row bound derives from the vector dimension (round 14)") {
     // the former flat 100000L silently encoded dim=64 (53 MB of
     // array<long> payload); the bound now scales as budget/(dim*4) so a
-    // dim change moves the regime switch proportionally. Round 15: the
+    // dim change moves the bound proportionally. Round 15: the
     // fused single-broadcast verify admits 2x the rows of the r13
     // two-broadcast point at the SAME measured peak memory. Round 17:
     // the packed Array[Int] map representation (IntDotLookup.pack,
@@ -210,40 +159,42 @@ class RecallSpec extends AnyFunSuite {
     // again — 400k rows at dim 64 inside the same byte budget.
     assert(Similarity.broadcastVerifyMaxRows(64) == 400000L,
       "dim=64 must reproduce the measured byte envelope at the packed-Int representation")
-    assert(Similarity.BroadcastVerifyMaxRows == 400000L)
     assert(Similarity.broadcastVerifyMaxRows(512) == 50000L,
       "8x the dimension must shrink the broadcastable row bound 8x")
     assertThrows[IllegalArgumentException](Similarity.broadcastVerifyMaxRows(0))
   }
 
-  test("shuffle-regime dedup partitioning is sized by the keys-only candidate estimate (round 14)") {
-    // Estimator exactness on the real fixture: est = raw probed stream +
-    // home self-matches. Each key row whose home bucket survives the cap
-    // probes ITSELF exactly once (through its home key — the pid != hid
-    // filter drops it from the raw stream); directional flipped probes
-    // land on a DIFFERENT bucket of the same table, where the doc's home
-    // key cannot be, so they never self-match. Pinning the closed form
-    // (not an inequality) means any drift between the estimator and the
-    // generator — cap semantics, probe direction, fan-out — fails loudly.
-    val emb = Tables.table(spark, TestSpark.sf01, "embeddings")
-    val planes = Similarity.portableHyperplanes(64, 2, 6)
-    val q = Similarity.portableQuantized(emb, "vec_id", "embedding", scale = 10000)
-    val keys = Similarity.portableBucketKeys(q, "vec_id", planes)
-    val cap = graft.operators.TextDedup.DefaultMaxBucketSize
-    val raw = Similarity.probedRawPairs(keys, "vec_id", cap, probes = 6).count()
-    val selfMatches = keys.groupBy("__t", "__bkt").agg(count(lit(1)).as("n"))
-      .filter(col("n") <= cap).agg(sum(col("n"))).head().getLong(0)
-    val est = Similarity.estimatedRawCandidates(keys, probes = 6, maxBucketSize = cap)
-    assert(raw > 0, "fixture degenerated: no raw candidates")
-    assert(est == raw + selfMatches,
-      s"estimator drifted from the generator: est=$est raw=$raw self=$selfMatches")
-    // The chooser: floor at the session default, ceil(est / target) above
-    // it, hard cap 2048 (a 100-TB deployment tunes cluster-wide shuffle
-    // sizing, not one operator's repartition).
-    assert(Similarity.dedupPartitionsFor(0L, 32) == 32, "small streams keep the session sizing")
-    assert(Similarity.dedupPartitionsFor(44900000L, 32) == 129,
-      "the r13-measured 44.9M-row point must land at ~350k rows/partition")
-    assert(Similarity.dedupPartitionsFor(Long.MaxValue / 4, 32) == 2048, "hard cap")
+  test("the monolithic runners throw one row past broadcastVerifyMaxRows(dim), naming the sharded runner") {
+    import spark.implicits._
+    // a wide dim shrinks the row bound to a few hundred; the 4-wide
+    // vectors keep the frame tiny (they mismatch the planes, so every
+    // vector keys bucket 0 — irrelevant: the bound fires while the
+    // verify map is built, before any candidate work)
+    val dim = 51200
+    val bound = Similarity.broadcastVerifyMaxRows(dim)
+    assert(bound == 500L)
+    def vecs(from: Long, n: Long) =
+      (from until from + n).map(i => (i, Seq(0.1f, 0.2f, 0.3f, 0.4f))).toDF("vec_id", "embedding")
+    def sym(n: Long) = Similarity.portableEmbedPairs(vecs(0L, n), "vec_id", "embedding",
+      minScore = 1L, tables = 1, bits = 1, dim = dim, probes = 1)
+    sym(bound) // at the bound: builds
+    val e = intercept[IllegalArgumentException](sym(bound + 1).count())
+    assert(e.getMessage.contains("shardedEmbedPairs"), e.getMessage)
+    // the cross bound counts BOTH sides: each alone is under it
+    def cross(nOld: Long, nNew: Long) = Similarity.portableCrossEmbedPairs(
+      vecs(0L, nOld), vecs(100000L, nNew), "vec_id", "embedding",
+      minScore = 1L, tables = 1, bits = 1, dim = dim, probes = 1)
+    cross(300L, bound - 300L)
+    val c = intercept[IllegalArgumentException](cross(300L, bound - 299L).count())
+    assert(c.getMessage.contains("shardedCrossEmbedPairs"), c.getMessage)
+  }
+
+  test("portableCrossEmbedPairs rejects an id present on both sides (one verify map holds both)") {
+    import spark.implicits._
+    def vecs(ids: Seq[Long], x: Float) = ids.map(i => (i, Seq.fill(64)(x))).toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](Similarity.portableCrossEmbedPairs(
+      vecs(Seq(1L, 2L), 0.1f), vecs(Seq(2L, 3L), -0.1f), "vec_id", "embedding", minScore = 1L))
+    assert(e.getMessage.contains("id 2"), e.getMessage)
   }
 
   test("embed-LSH pair recall at the SHIPPED multi-probe point holds the floor (q84 family, round 13)") {

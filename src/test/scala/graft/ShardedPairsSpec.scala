@@ -36,8 +36,7 @@ class ShardedPairsSpec extends AnyFunSuite {
     val rows = emb.count() / 3 + 1
     withWorkDirs("graft_sharded_tbl") { tmp =>
       val monoProbed = found(Similarity.portableEmbedPairs(emb, "vec_id", "embedding",
-        minScore = SparkEntry.EmbedMinScore, tables = 2, bits = 6, probes = 6,
-        corpusRowsHint = emb.count()))
+        minScore = SparkEntry.EmbedMinScore, tables = 2, bits = 6, probes = 6))
       val tblProbed = found(Similarity.shardedEmbedPairs(emb, "vec_id", "embedding",
         minScore = SparkEntry.EmbedMinScore, tables = 2, bits = 6, probes = 6,
         shardRows = rows, workDir = tmp()))
