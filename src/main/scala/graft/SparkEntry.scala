@@ -2480,9 +2480,10 @@ object SparkEntry {
         .orderBy("id_a", "id_b").limit(100)
     },
     // Streaming edit-distance ingest run to completion on the closed
-    // input (round 9): the incoming half STREAMED and fuzzy-matched per
-    // micro-batch against the static corpus — stateless (one substring
-    // block key per row, stream-static join, no watermark/state store;
+    // input (round 9): the incoming half STREAMED through q141's own
+    // operator and fuzzy-matched per micro-batch against the static
+    // corpus — stateless (one substring block key per row, stream-static
+    // joins, corpus-side block cap, no watermark/state store;
     // single-block membership makes the output a set, no distinct).
     // Hash-checked against the SAME oracle as q141: streaming output =
     // batch answer on closed input (the q126 contract, now for the
@@ -2493,7 +2494,7 @@ object SparkEntry {
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
         .filter(col("doc_id") >= IncrementalSplitId)
       graft.streaming.StreamOps.runAppend(spark,
-          graft.streaming.StreamOps.editDistanceAgainstCorpus(stream, corpus, "doc_id", "text"),
+          TextDedup.editDistanceCrossPairs(corpus, stream, "doc_id", "text"),
           s"q142_mem_${math.abs(dir.hashCode)}")
         .orderBy("id_a", "id_b").limit(100)
     },
@@ -3052,22 +3053,17 @@ object SparkEntry {
     },
     // Streaming SimHash ingest check (round 14): incoming documents
     // simhashed per micro-batch against the STATIC corpus combo-key
-    // index — entirely stateless (the q126/q142 contract: the bucket
-    // cap sees corpus-side occupancy only, which the oracle text
-    // mirrors exactly; min-combo keeps the stream a true set with no
-    // state-store dedup).
+    // index through q215's own operator — entirely stateless (the
+    // q126/q142 contract: with a streaming side the bucket cap sees
+    // corpus-side occupancy only, which the oracle text mirrors exactly;
+    // min-combo keeps the stream a true set with no state-store dedup).
     "q216_stream_simhash" -> { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      val staticChunks = TextDedup.portableSimhashChunkKeys(
-        docs.filter(col("doc_id") < IncrementalSplitId), "doc_id", "text",
-        cutSigs = true) // static side is referenced twice per trigger
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
         .filter(col("doc_id") >= IncrementalSplitId)
-      val streamChunks = TextDedup.portableSimhashChunkKeys(stream, "doc_id", "text")
       graft.streaming.StreamOps.runAppend(spark,
-          TextDedup.simhashCrossEmitPairs(staticChunks, streamChunks,
-            32 / TextDedup.SimhashChunks, maxHamming = 3,
-            maxBucketSize = TextDedup.DefaultMaxBucketSize, combinedCap = false),
+          TextDedup.portableSimhashCrossPairs(
+            docs.filter(col("doc_id") < IncrementalSplitId), stream, "doc_id", "text"),
           s"q216_mem_${math.abs(dir.hashCode)}")
         .orderBy("id_a", "id_b").limit(100)
     },
@@ -3107,7 +3103,7 @@ object SparkEntry {
       graft.streaming.StreamOps.runAppend(spark,
           Multimodal.phashCrossPairs(
             Multimodal.phashFeatures(imgs),
-            Multimodal.phashFeatures(streamVariants), combinedCap = false),
+            Multimodal.phashFeatures(streamVariants)),
           s"q218_mem_${math.abs(dir.hashCode)}")
         .orderBy("id_a", "id_b").limit(100)
     },

@@ -792,38 +792,32 @@ object Multimodal {
     * corpus). Works over any of the three modality hashes (dHash64 /
     * aHash64 / vHash64 — pass the hash column). Pair set equals
     * `phashPairs` on the concatenated frame restricted to cross pairs
-    * under the callers' id-offset convention (the q217 oracle);
-    * `combinedCap = false` gives the stateless streaming contract
-    * (existing-side cap only — see `simhashCrossEmitPairs`). */
+    * under the callers' id-offset convention (the q217 oracle); a
+    * streaming incoming side (q218) caps corpus-side occupancy only —
+    * the rule `TextDedup.crossBucketPairs` derives from its input. */
   def phashCrossPairs(existing: DataFrame, incoming: DataFrame,
                       idCol: String = "media_id", hashCol: String = "phash",
                       maxHamming: Int = 3,
                       maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                      combinedCap: Boolean = true,
                       intact: Int = TextDedup.SimhashIntact): DataFrame = {
     require(maxHamming <= TextDedup.SimhashChunks - intact,
       s"${TextDedup.SimhashChunks} chunks with $intact intact only guarantee " +
         s"hamming <= ${TextDedup.SimhashChunks - intact}")
     val chunkBits = 64 / TextDedup.SimhashChunks
-    // cut the (id, sig) frame before the combo explode when the side is
-    // referenced twice downstream (occupancy aggregate + probe side of
-    // simhashCrossEmitPairs): the upstream here is the full perceptual
+    // cut the (id, sig) frame before the combo explode: each side is
+    // referenced twice downstream (occupancy aggregate + join side of
+    // simhashCrossEmitPairs) and the upstream here is the full perceptual
     // pipeline (decode -> resize -> dHash), the family's dominant cost —
     // the q82 N-references rule at the same sig-level placement as
     // portableSimhashChunkKeys(cutSigs). Streaming sides (q218's
-    // per-trigger batch) cannot be checkpointed and are referenced once
-    // under combinedCap = false anyway.
-    def keys(df: DataFrame, twiceReferenced: Boolean) = {
+    // per-trigger batch) cannot be checkpointed and are referenced once.
+    def keys(df: DataFrame) = {
       val sigs0 = df.select(col(idCol), col(hashCol).cast("long").as("__sim"))
-      val sigs =
-        if (twiceReferenced && !df.isStreaming) Checkpoints.cut(sigs0, eager = false)
-        else sigs0
+      val sigs = if (df.isStreaming) sigs0 else Checkpoints.cut(sigs0, eager = false)
       TextDedup.simhashComboKeys(sigs, chunkBits, intact)
     }
-    TextDedup.simhashCrossEmitPairs(
-      keys(existing, twiceReferenced = true),
-      keys(incoming, twiceReferenced = combinedCap),
-      chunkBits, maxHamming, maxBucketSize, combinedCap, intact)
+    TextDedup.simhashCrossEmitPairs(keys(existing), keys(incoming),
+      chunkBits, maxHamming, maxBucketSize, intact)
   }
 
   /** Hamming TOP-K similarity search over a 64-bit perceptual-hash

@@ -339,7 +339,7 @@ object Similarity {
 
   /** Quantized-vector frame (id, __qv) — materialized in its own
     * projection: the bucket expressions reference __qv tables×bits times
-    * (CollapseProject, cf. signatureFrame). */
+    * (CollapseProject, cf. TextDedup.minhashSignature). */
   private[graft] def portableQuantized(df: DataFrame, idCol: String, vecCol: String,
                                 scale: Int): DataFrame = {
     registerIntDot(df)

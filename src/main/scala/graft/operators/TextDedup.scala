@@ -20,6 +20,12 @@ import org.apache.spark.sql.functions._
   *     clusters) are handled by AQE skew-join splitting; `maxBucketSize`
   *     additionally drops degenerate buckets (e.g. the empty-document
   *     bucket) before the self-join goes quadratic.
+  *   - Every keyed pair family has one shape: keys → capped buckets →
+  *     self or cross pairs → verify. Self pairs come from `bucketPairs`
+  *     (the simhash families' sorted-list emitter is its upper-triangle
+  *     form); cross pairs — incremental batches and streams alike — come
+  *     from `crossBucketPairs`, which derives the cap rule from its input:
+  *     combined occupancy for a batch, corpus-side occupancy for a stream.
   */
 object TextDedup {
 
@@ -48,7 +54,11 @@ object TextDedup {
     * min over base hashes h of xxhash64(h, i). Hashing the fixed-width longs
     * per permutation is cheap; the expensive string traversal happens once
     * in `shingleHashes`. Empty shingle sets get Long.MaxValue (never
-    * collides into a band). */
+    * collides into a band). Callers materialize `baseHashes` in its own
+    * projection first: the signature references it `numHashes` times, and
+    * CollapseProject will not inline a non-cheap alias with multiple
+    * references — without that split the shingle construction ran once
+    * per permutation (measured 64× slower at sf0.1). */
   def minhashSignature(baseHashes: Column, numHashes: Int): Column = {
     val hashes = (0 until numHashes).map { i =>
       when(size(baseHashes) === 0, lit(Long.MaxValue))
@@ -64,16 +74,6 @@ object TextDedup {
     graft.functions.ShingleHash.register(df.sparkSession)
     call_function("shingle_hash", tokens(text), lit(n))
   }
-
-  /** (id, __sig) signature frame. The base-hash array is materialized in
-    * its own projection: the signature expression references it `numHashes`
-    * times, and CollapseProject will not inline a non-cheap alias with
-    * multiple references — without this split the shingle construction ran
-    * once per permutation (measured 64× slower at sf0.1). */
-  def signatureFrame(df: DataFrame, idCol: String, textCol: String,
-                     shingleN: Int, numHashes: Int): DataFrame =
-    df.select(col(idCol), shingleHashes(df, col(textCol), shingleN).as("__base"))
-      .select(col(idCol), minhashSignature(col("__base"), numHashes).as("__sig"))
 
   /** LSH band keys: signature split into `bands` bands of `rowsPerBand`,
     * each hashed to one bucket key. Returns array<long> of length `bands`. */
@@ -94,40 +94,54 @@ object TextDedup {
   def exactDupGroups(df: DataFrame, textCol: String): DataFrame =
     df.groupBy(textCol).agg(count(lit(1)).as("n")).filter(col("n") > 1)
 
-  /** Candidate near-duplicate pairs from MinHash LSH banding.
-    * Output: (id_a, id_b) with id_a < id_b, distinct.
-    *
-    * @param maxBucketSize drop buckets larger than this before the
-    *        self-join — a degenerate bucket of m docs contributes m² pairs;
-    *        legitimate near-dup clusters are far smaller than boilerplate/
-    *        empty-text pathologies. */
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3, numHashes: Int = 64,
-                        bands: Int = 16,
-                        maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
-    candidatesFromSig(signatureFrame(df, idCol, textCol, shingleN, numHashes),
-      idCol, numHashes, bands, maxBucketSize)
-
-  /** The post-signature half of [[minhashCandidates]] (factored in the
-    * r17 optimization round so [[nearDupPairs]] can feed it a signature
-    * derived from its already-cut verification frame): band keys, ONE
-    * shuffle of compact (band, key, id) triples, bucket members collected
-    * per key, degenerate buckets (> maxBucketSize) dropped before pair
-    * generation, pairs by double explode. (A self-join formulation
-    * recomputes the whole signature subtree per join side — measured 2×
-    * slower at sf0.1 — and a Window-count cap adds a sort; this shape
-    * does neither.) */
-  private def candidatesFromSig(sig: DataFrame, idCol: String, numHashes: Int,
-                                bands: Int, maxBucketSize: Int): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    sig
-      .select(col(idCol), posexplode(bandKeys(col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__key")))
-      .groupBy("__band", "__key").agg(collect_list(col(idCol)).as("__ids"))
+  /** In-bucket self pairs — the one capped pair builder behind every
+    * symmetric keyed generator (minhash `nearDupPairs`, portable minhash
+    * `portablePairStats`, edit-distance blocking): ONE shuffle of compact
+    * (keys, id) rows, bucket members collected per key, degenerate
+    * buckets (> maxBucketSize, see `DefaultMaxBucketSize`) dropped before
+    * pair generation, pairs by double explode. (A self-join formulation
+    * recomputes the whole key subtree per join side — measured 2× slower
+    * at sf0.1 — and a Window-count cap adds a sort; this shape does
+    * neither.) Output: (id_a, id_b), id_a < id_b, one row per shared
+    * bucket — callers that need a set add their own `distinct`. */
+  private def bucketPairs(keyed: DataFrame, keyCols: Seq[String], idCol: String,
+                          maxBucketSize: Int): DataFrame =
+    keyed.groupBy(keyCols.head, keyCols.tail: _*)
+      .agg(collect_list(col(idCol)).as("__ids"))
       .filter(size(col("__ids")).between(2, maxBucketSize))
       .select(explode(col("__ids")).as("id_a"), col("__ids"))
       .select(col("id_a"), explode(col("__ids")).as("id_b"))
       .filter(col("id_a") < col("id_b"))
-      .distinct()
+
+  /** In-bucket cross pairs between an EXISTING and an INCOMING keyed
+    * frame — the one capped builder behind every cross/incremental/
+    * streaming generator (`portableCrossPairStats`,
+    * `editDistanceCrossPairs`, `simhashCrossEmitPairs`,
+    * `StreamOps.dedupAgainstCorpus`). Both frames carry `keyCols` plus
+    * their own (distinctly named) id and payload columns.
+    *
+    * The degenerate-bucket cap counts COMBINED existing + incoming
+    * occupancy per key — exactly the symmetric generators' bucket size,
+    * so a batch cross pair set equals the symmetric generator on the
+    * concatenated corpus restricted to cross pairs. A STREAMING incoming
+    * side's occupancy is unknowable without state, so there the cap
+    * counts existing-side occupancy only (bounded per micro-batch by its
+    * size; at tested SFs no bucket nears the cap, so stream and batch
+    * agree on closed input). The counts are keys-only aggregates; the
+    * result is existing ⋈ eligible keys ⋈ incoming, one row per shared
+    * bucket. */
+  private[graft] def crossBucketPairs(existing: DataFrame, incoming: DataFrame,
+                                      keyCols: Seq[String],
+                                      maxBucketSize: Int): DataFrame = {
+    val keys = keyCols.map(col)
+    val occupancy =
+      if (incoming.isStreaming) existing.select(keys: _*)
+      else existing.select(keys: _*).unionAll(incoming.select(keys: _*))
+    val eligible = occupancy.groupBy(keys: _*)
+      .agg(count(lit(1)).as("__n"))
+      .filter(col("__n") <= maxBucketSize)
+      .select(keys: _*)
+    existing.join(eligible, keyCols).join(incoming, keyCols)
   }
 
   /** Parameters shared by `editDistancePairs` and the q136 DuckDB oracle
@@ -152,17 +166,6 @@ object TextDedup {
   private[graft] def suffixKey(text: Column, prefixLen: Int): Column =
     text.substr(greatest(length(text) - (prefixLen - 1), lit(1)), lit(prefixLen))
 
-  /** One blocking pass: capped same-key candidate pairs, ids only. */
-  private def blockPairs(df: DataFrame, idCol: String, key: Column,
-                         maxBucketSize: Int): DataFrame =
-    df.select(key.as("__k"), col(idCol))
-      .groupBy("__k")
-      .agg(collect_list(col(idCol)).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxBucketSize))
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
-
   /** Fuzzy-duplicate pairs by EDIT DISTANCE with prefix blocking — the
     * character-level complement to set-similarity dedup (minhash catches
     * reordered/shuffled token overlap; edit distance catches small
@@ -180,9 +183,9 @@ object TextDedup {
     * when edits hit BOTH ends — the residual recall bound, documented
     * rather than hidden. Pass 2 keeps ONLY pairs whose prefix keys
     * DIFFER, so the union is disjoint BY CONSTRUCTION — no distinct()
-    * exchange, and (critically) the same rule is stateless in the
-    * streaming form (`StreamOps.editDistanceAgainstCorpus`), where a
-    * post-union dedup would need a state store.
+    * exchange, and (critically) the same rule is stateless when
+    * `editDistanceCrossPairs` runs on a stream, where a post-union dedup
+    * would need a state store.
     *
     * Scale shape (the repo's standard pair-generator discipline):
     *   - each blocking exchange carries (key, id) ONLY — document text
@@ -205,8 +208,10 @@ object TextDedup {
                         prefixLen: Int = EditPrefixLen,
                         maxDist: Int = EditMaxDist,
                         maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val p1 = blockPairs(df, idCol, prefixKey(col(textCol), prefixLen), maxBucketSize)
-    val p2 = blockPairs(df, idCol, suffixKey(col(textCol), prefixLen), maxBucketSize)
+    def blocked(key: Column): DataFrame =
+      bucketPairs(df.select(key.as("__k"), col(idCol)), Seq("__k"), idCol, maxBucketSize)
+    val p1 = blocked(prefixKey(col(textCol), prefixLen))
+    val p2 = blocked(suffixKey(col(textCol), prefixLen))
     def withText(pairs: DataFrame): DataFrame = pairs
       .join(df.select(col(idCol).as("id_a"), col(textCol).as("__ta")), Seq("id_a"))
       .join(df.select(col(idCol).as("id_b"), col(textCol).as("__tb")), Seq("id_b"))
@@ -219,41 +224,38 @@ object TextDedup {
   }
 
   /** Incremental edit-distance dedup: fuzzy pairs between an EXISTING
-    * corpus and an INCOMING batch — `editDistancePairs`' daily-crawl
-    * form, completing the incremental family (minhash
+    * corpus and an INCOMING batch or stream — `editDistancePairs`'
+    * daily-crawl form, completing the incremental family (minhash
     * `portableCrossPairStats`, embedding `crossEmbedPairs`). Both sides
     * run the SAME two blocking passes as the symmetric operator (prefix
-    * + suffix keys, pass 2 keeping only prefix-differing pairs); within
-    * each pass the cap bounds COMBINED (existing + incoming) block
-    * occupancy, and since every document lands in exactly one block per
-    * pass on exactly one side, combined occupancy EQUALS the symmetric
-    * operator's block size for that key — so the pair set is exactly
+    * + suffix keys, pass 2 keeping only prefix-differing pairs) through
+    * `crossBucketPairs`, whose cap bounds COMBINED block occupancy for a
+    * batch: every document lands in exactly one block per pass on
+    * exactly one side, so combined occupancy EQUALS the symmetric
+    * operator's block size for that key and the pair set is exactly
     * `editDistancePairs` on the concatenated corpus restricted to cross
-    * pairs (what the q141 oracle replays; the prefix-differs rule is the
-    * same predicate on both sides of that equivalence). The existing
-    * side never self-pairs (intra-corpus work is not redone), keys + ids
-    * only cross the blocking exchanges, and the incoming side is
-    * typically small enough that AQE broadcasts it.
+    * pairs (what the q141 oracle replays). For a streaming incoming side
+    * (q142) the cap sees corpus-side occupancy only, and the passes stay
+    * disjoint statelessly, so the output is a true set with no state
+    * store. The existing side never self-pairs, blocks keys + ids only
+    * and joins its text back by id for the surviving pairs; the incoming
+    * side carries its text through the block join (a stream cannot be
+    * joined back to itself by id, and it is batch-sized).
     * Output: (id_a ∈ existing, id_b ∈ incoming, dist ≤ maxDist). */
   def editDistanceCrossPairs(existing: DataFrame, incoming: DataFrame,
                              idCol: String, textCol: String,
                              prefixLen: Int = EditPrefixLen,
                              maxDist: Int = EditMaxDist,
                              maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    def crossPass(keyOf: Column => Column): DataFrame = {
-      val be = existing.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_a"))
-      val bi = incoming.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_b"))
-      val eligible = be.groupBy("__k").agg(count(lit(1)).as("__ne"))
-        .join(bi.groupBy("__k").agg(count(lit(1)).as("__ni")), Seq("__k"))
-        .filter(col("__ne") + col("__ni") <= maxBucketSize)
-        .select("__k")
-      be.join(eligible, Seq("__k")).join(bi, Seq("__k")).select("id_a", "id_b")
-    }
-    def withText(pairs: DataFrame): DataFrame = pairs
-      .join(existing.select(col(idCol).as("id_a"), col(textCol).as("__ta")), Seq("id_a"))
-      .join(incoming.select(col(idCol).as("id_b"), col(textCol).as("__tb")), Seq("id_b"))
-    withText(crossPass(t => prefixKey(t, prefixLen)))
-      .unionByName(withText(crossPass(t => suffixKey(t, prefixLen))).filter(
+    def crossPass(keyOf: Column => Column): DataFrame =
+      crossBucketPairs(
+          existing.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_a")),
+          incoming.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_b"),
+            col(textCol).as("__tb")),
+          Seq("__k"), maxBucketSize)
+        .join(existing.select(col(idCol).as("id_a"), col(textCol).as("__ta")), Seq("id_a"))
+    crossPass(t => prefixKey(t, prefixLen))
+      .unionByName(crossPass(t => suffixKey(t, prefixLen)).filter(
         prefixKey(col("__ta"), prefixLen) =!= prefixKey(col("__tb"), prefixLen)))
       .select(col("id_a"), col("id_b"),
         levenshtein(col("__ta"), col("__tb"), maxDist).as("dist"))
@@ -529,8 +531,8 @@ object TextDedup {
     * given the coefficients, so two engines computing the same integers
     * produce the IDENTICAL pair set — which is what lets the q82 oracle
     * hash-check banding itself, not just the verification step. Same
-    * scale shape as `minhashCandidates`: one shuffle of (band, key, id)
-    * triples, pairs by double explode, no self-join.
+    * scale shape as `nearDupPairs`: one shuffle of (band, key, id)
+    * triples, pairs by double explode (`bucketPairs`), no self-join.
     * Output: (id_a, id_b, n_inter, n_union) — threshold on
     * n_inter/n_union is the caller's (integer cross-multiply). */
   def portablePairStats(df: DataFrame, idCol: String, textCol: String,
@@ -539,36 +541,11 @@ object TextDedup {
                         bands: Int = PortableBands,
                         seed: Long = 7L,
                         maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val rowsPerBand = numHashes / bands
-    val coeffs = affineCoeffs(numHashes, seed)
-    // __hs materialized in its own projection: affineSignature references
-    // it numHashes times (see signatureFrame's CollapseProject note).
-    // Empty shingle sets are dropped BEFORE banding: every such document
-    // shares the all-Long.MaxValue signature, so they land in one
-    // degenerate bucket and pair with each other as n_inter=0/n_union=0
-    // "90% near-dups" (0·10 ≥ 0·9). The filter is this path's analogue
-    // of minhashCandidates' maxBucketSize guard, mirrored in the q82
-    // DuckDB text.
-    // (id, __hs) is referenced THREE times downstream (signature
-    // derivation + both verification join sides) and the md5 string
-    // round-trip per shingle is the measured dominant cost of the whole
-    // pipeline — the lineage cut materializes it once instead of
-    // recomputing the hash pass per reference (cf. connectedComponents).
-    // Checkpoints.cut picks reliable checkpointing when the caller has
-    // configured a checkpoint dir (deployment), localCheckpoint otherwise.
     val (base, banded) = portableBanded(df, idCol, textCol, shingleN, numHashes, bands, seed)
-    // between(2, maxBucketSize): same degenerate-bucket guard as
-    // minhashCandidates, mirrored into the q82 DuckDB text (a legit
-    // m-doc boilerplate cluster otherwise materializes m² pair rows in
-    // one collected bucket; see DefaultMaxBucketSize)
-    val pairs = banded.groupBy("__band", "__bkey")
-      .agg(collect_list(col(idCol)).as("__ids"))
-      .filter(size(col("__ids")).between(2, maxBucketSize))
-      .select(explode(col("__ids")).as("id_a"), col("__ids"))
-      .select(col("id_a"), explode(col("__ids")).as("id_b"))
-      .filter(col("id_a") < col("id_b"))
+    // the degenerate-bucket guard of bucketPairs is mirrored into the q82
+    // DuckDB text (see DefaultMaxBucketSize)
+    bucketPairs(banded, Seq("__band", "__bkey"), idCol, maxBucketSize)
       .distinct()
-    pairs
       .join(base.select(col(idCol).as("id_a"), col("__hs").as("__ha")), Seq("id_a"))
       .join(base.select(col(idCol).as("id_b"), col("__hs").as("__hb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -586,13 +563,12 @@ object TextDedup {
     val rowsPerBand = numHashes / bands
     val coeffs = affineCoeffs(numHashes, seed)
     // __hs materialized in its own projection: affineSignature references
-    // it numHashes times (see signatureFrame's CollapseProject note).
+    // it numHashes times (see minhashSignature's CollapseProject note).
     // Empty shingle sets are dropped BEFORE banding: every such document
     // shares the all-Long.MaxValue signature, so they land in one
     // degenerate bucket and pair with each other as n_inter=0/n_union=0
     // "90% near-dups" (0·10 ≥ 0·9). The filter is this path's analogue
-    // of minhashCandidates' maxBucketSize guard, mirrored in the q82
-    // DuckDB text.
+    // of the maxBucketSize guard, mirrored in the q82 DuckDB text.
     // (id, __hs) is referenced THREE times downstream (signature
     // derivation + both verification join sides) and the md5 string
     // round-trip per shingle is the measured dominant cost of the whole
@@ -610,13 +586,13 @@ object TextDedup {
     // document's hash set bands× through the corpus-wide shuffle and was
     // the most expensive plan in the round-5 corpus (9.9 s driver-side).
     // The hash sets are joined back for surviving candidate pairs only,
-    // exactly as nearDupPairs verifies minhashCandidates.
+    // exactly as nearDupPairs verifies its candidates.
     // cutSig (r17 optimization round): the CROSS/streaming consumers
-    // reference `banded` twice (occupancy aggregate + probe side), and
-    // each reference otherwise re-runs the 64-permutation affine
-    // signature from the cut base. Cut at the (id, __sig) level — n rows,
-    // before the bands× explode — so re-runs per reference are only the
-    // cheap slice/join arithmetic. Single-reference consumers
+    // reference `banded` twice (crossBucketPairs' occupancy aggregate +
+    // its join side), and each reference otherwise re-runs the
+    // 64-permutation affine signature from the cut base. Cut at the (id,
+    // __sig) level — n rows, before the bands× explode — so re-runs per
+    // reference are only the cheap slice/join arithmetic. Single-reference consumers
     // (portablePairStats' one groupBy pass) keep the default and pay no
     // extra materialization. Streaming frames cannot be checkpointed.
     val sig0 = base.select(col(idCol),
@@ -625,11 +601,18 @@ object TextDedup {
       if (cutSig && !df.isStreaming) Checkpoints.cut(sig0, eager = false)
       else sig0
     val banded = sig.select(col(idCol),
-      posexplode(array((0 until bands).map(b =>
-        array_join(slice(col("__sig"), b * rowsPerBand + 1, rowsPerBand), "-")): _*))
-        .as(Seq("__band", "__bkey")))
+      posexplode(portableBandKeys(col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__bkey")))
     (base, banded)
   }
+
+  /** Portable LSH band keys: the signature's `bands` slices of
+    * `rowsPerBand`, each dash-joined into one exact string key (no
+    * engine-specific band hash — the q82 DuckDB text spells the same
+    * join). The one layout both the batch banding above and the
+    * streaming side of `StreamOps.dedupAgainstCorpus` explode. */
+  private[graft] def portableBandKeys(sig: Column, bands: Int, rowsPerBand: Int): Column =
+    array((0 until bands).map(b =>
+      array_join(slice(sig, b * rowsPerBand + 1, rowsPerBand), "-")): _*)
 
   /** Audit of what the `maxBucketSize` guard drops: every band bucket
     * whose occupancy EXCEEDS the cap, as (band, bucket_key, bucket_size).
@@ -677,12 +660,12 @@ object TextDedup {
     * PERSISTS the existing side's signature table between batches;
     * banding is per-document, so stored signatures stay valid.)
     *
-    * The degenerate-bucket guard caps COMBINED (existing + incoming)
-    * occupancy per key — exactly the symmetric pipelines' total-bucket
-    * cap, so the pair set equals `portablePairStats` on the concatenated
-    * corpus restricted to cross pairs (which is what the q124 oracle
-    * replays). Output: (id_a ∈ existing, id_b ∈ incoming, n_inter,
-    * n_union). */
+    * The degenerate-bucket guard is `crossBucketPairs`': COMBINED
+    * (existing + incoming) occupancy per key — exactly the symmetric
+    * pipelines' total-bucket cap, so the pair set equals
+    * `portablePairStats` on the concatenated corpus restricted to cross
+    * pairs (which is what the q124 oracle replays). Output: (id_a ∈
+    * existing, id_b ∈ incoming, n_inter, n_union). */
   def portableCrossPairStats(existing: DataFrame, incoming: DataFrame,
                              idCol: String, textCol: String,
                              shingleN: Int = PortableShingleN,
@@ -694,21 +677,12 @@ object TextDedup {
     // (combined-occupancy aggregate + its join side)
     val (baseOld, bandedOld) = portableBanded(existing, idCol, textCol, shingleN, numHashes, bands, seed, cutSig = true)
     val (baseNew, bandedNew) = portableBanded(incoming, idCol, textCol, shingleN, numHashes, bands, seed, cutSig = true)
-    // keys eligible for cross pairs: present on BOTH sides, combined
-    // occupancy within the cap (counts are metadata-sized aggregates —
-    // the guard never touches ids or payloads)
-    val eligible = bandedOld.groupBy("__band", "__bkey").agg(count(lit(1)).as("__no"))
-      .join(bandedNew.groupBy("__band", "__bkey").agg(count(lit(1)).as("__nn")),
-        Seq("__band", "__bkey"))
-      .filter(col("__no") + col("__nn") <= maxBucketSize)
-      .select("__band", "__bkey")
-    val cands = bandedOld.join(eligible, Seq("__band", "__bkey"))
-      .select(col("__band"), col("__bkey"), col(idCol).as("id_a"))
-      .join(bandedNew.select(col("__band"), col("__bkey"), col(idCol).as("id_b")),
-        Seq("__band", "__bkey"))
+    crossBucketPairs(
+        bandedOld.select(col("__band"), col("__bkey"), col(idCol).as("id_a")),
+        bandedNew.select(col("__band"), col("__bkey"), col(idCol).as("id_b")),
+        Seq("__band", "__bkey"), maxBucketSize)
       .select("id_a", "id_b")
       .distinct()
-    cands
       .join(baseOld.select(col(idCol).as("id_a"), col("__hs").as("__ha")), Seq("id_a"))
       .join(baseNew.select(col(idCol).as("id_b"), col("__hs").as("__hb")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -740,8 +714,9 @@ object TextDedup {
       .agg(max(size(array_intersect(col("__ct"), col("__bt")))).cast("long").as("max_overlap"))
   }
 
-  /** LSH candidates verified by exact shingle-set Jaccard ≥ threshold.
-    * Output: (id_a, id_b, jaccard). */
+  /** MinHash LSH candidates (band keys → `bucketPairs`, buckets over
+    * `DefaultMaxBucketSize` dropped) verified by exact shingle-set
+    * Jaccard ≥ threshold. Output: (id_a, id_b, jaccard). */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
                    threshold: Double, shingleN: Int = 3,
                    numHashes: Int = 64, bands: Int = 16): DataFrame = {
@@ -756,7 +731,10 @@ object TextDedup {
         array_distinct(shingleHashes(df, col(textCol), shingleN)).as("__sh")),
       eager = false)
     val sig = sh.select(col(idCol), minhashSignature(col("__sh"), numHashes).as("__sig"))
-    val cands = candidatesFromSig(sig, idCol, numHashes, bands, DefaultMaxBucketSize)
+    val keyed = sig.select(col(idCol),
+      posexplode(bandKeys(col("__sig"), bands, numHashes / bands)).as(Seq("__band", "__key")))
+    val cands = bucketPairs(keyed, Seq("__band", "__key"), idCol, DefaultMaxBucketSize)
+      .distinct()
     // verification joins the distinct shingle-HASH sets: set arithmetic on
     // longs, same Jaccard modulo negligible 64-bit collision probability
     cands
@@ -1157,11 +1135,11 @@ object TextDedup {
       s"$SimhashChunks chunks with $SimhashIntact intact only guarantee hamming <= ${SimhashChunks - SimhashIntact}")
     // token hashes materialized first: the 32 bit-folds of
     // portableSimhash32 each reference the array (CollapseProject note on
-    // signatureFrame)
+    // minhashSignature)
     // round 9: per-token md5 via the fused PortableShingleHash (n=1 ⇒
     // the tokens themselves; bit-identical to the conv(substring(md5))
     // spelling the q83 DuckDB text keeps)
-    // single-pass bucketing (cf. minhashCandidates): ONE shuffle of
+    // single-pass bucketing (cf. bucketPairs): ONE shuffle of
     // (combo, key, id, sim) and in-bucket pairs by double explode — the
     // two-sided join shape recomputes the md5+signature subtree per side
     // (measured ~2× at sf0.1)
@@ -1179,7 +1157,7 @@ object TextDedup {
                                        cutSigs: Boolean = false): DataFrame = {
     // token hashes materialized first: the 32 bit-folds of
     // portableSimhash32 each reference the array (CollapseProject note on
-    // signatureFrame); per-token md5 via the fused PortableShingleHash
+    // minhashSignature); per-token md5 via the fused PortableShingleHash
     val th = df.select(col(idCol),
       array_distinct(portableShingleHashes(col(textCol), 1)).as("__th"))
     val sigs0 = th.select(col(idCol), portableSimhash32(col("__th")).as("__sim"))
@@ -1234,20 +1212,14 @@ object TextDedup {
       .groupBy(col("__combo").as("combo"), col("__ckey").as("ckey"))
       .agg(count(lit(1)).as("n"))
 
-  /** Shared tail of both simhash pair generators: bucket, cap, double
-    * explode, min-combo single emission (simhashMinComboByMask — the pair
-    * stream is unique by construction, no distinct), exact-hamming
-    * verification. `chunks` = (__combo, __ckey, id-col, __sim). */
+  /** Symmetric simhash pair generator: bucket, cap, upper-triangle
+    * emission, then `simhashVerify`. `chunks` = (__combo, __ckey,
+    * id-col, __sim). */
   private[graft] def simhashEmitPairs(chunks: DataFrame, chunkBits: Int,
                                           maxHamming: Int, maxBucketSize: Int,
                                           intact: Int = SimhashIntact): DataFrame = {
     val idCol = chunks.columns.filterNot(c => c.startsWith("__")).head
-    val mask = (1L << chunkBits) - 1
-    val intactMask = (0 until SimhashChunks).map { c =>
-      when(shiftrightunsigned(col("__xor"), chunkBits * c).bitwiseAND(lit(mask)) === 0,
-        lit(1 << c)).otherwise(lit(0))
-    }.reduce(_ + _)
-    chunks
+    val pairs = chunks
       .groupBy("__combo", "__ckey")
       .agg(sort_array(collect_list(
         struct(col(idCol).as("id"), col("__sim").as("sim")))).as("__m"))
@@ -1261,94 +1233,87 @@ object TextDedup {
       .select(col("__combo"), col("__m"), posexplode(col("__m")).as(Seq("__i", "a")))
       .select(col("__combo"), col("a"),
         explode(slice(col("__m"), col("__i") + lit(2), size(col("__m")))).as("b"))
-      .withColumn("__xor", col("a.sim").bitwiseXOR(col("b.sim")))
-      .filter(col("__combo") ===
-        element_at(typedLit(simhashMinComboByMaskOf(intact)), intactMask + 1))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        expr("bit_count(__xor)").cast("long").as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+    simhashVerify(pairs, col("a.id"), col("b.id"), col("a.sim"), col("b.sim"),
+      chunkBits, maxHamming, intact)
   }
 
-  /** Cross-corpus tail of the simhash machinery (round 14): in-bucket
-    * pairs between an EXISTING combo-key stream and an INCOMING one —
-    * the daily-crawl shape (cf. `portableCrossPairStats` /
-    * `Similarity.portableCrossEmbedPairs`), shared by the text simhash
-    * and perceptual-hash incremental/streaming twins.
-    *
-    * With `combinedCap = true` (the incremental contract) the bucket cap
-    * is the COMBINED existing+incoming occupancy — the pair set then
-    * equals the symmetric generator on the concatenated corpus
-    * restricted to cross pairs, PROVIDED every incoming id exceeds every
-    * existing id (the callers' split/offset convention; the `id_a <
-    * id_b` guard makes the restriction literal). With `combinedCap =
-    * false` (the stateless streaming contract — cf.
-    * `StreamOps.editDistanceAgainstCorpus`) the cap sees EXISTING-side
-    * occupancy only: per-batch incoming occupancy is unknowable
-    * statelessly; the streaming oracle mirrors exactly this semantic.
-    * Min-combo single emission is evaluated per pair, so the stream is
-    * unique by construction in both modes — no distinct. Keys-only
-    * exchange throughout. */
-  private[graft] def simhashCrossEmitPairs(chunksOld: DataFrame, chunksNew: DataFrame,
-                                           chunkBits: Int, maxHamming: Int,
-                                           maxBucketSize: Int,
-                                           combinedCap: Boolean = true,
-                                           intact: Int = SimhashIntact): DataFrame = {
-    val idOld = chunksOld.columns.filterNot(_.startsWith("__")).head
-    val idNew = chunksNew.columns.filterNot(_.startsWith("__")).head
+  /** Shared tail of both simhash pair generators: min-combo single
+    * emission (simhashMinComboByMask — each colliding pair survives in
+    * exactly one combo bucket, so the pair stream is unique by
+    * construction, no distinct) and exact-hamming verification.
+    * `pairs` carries `__combo`; the id and signature columns are named by
+    * the caller. Output: (id_a, id_b, hamming ≤ maxHamming). */
+  private def simhashVerify(pairs: DataFrame, idA: Column, idB: Column,
+                            simA: Column, simB: Column, chunkBits: Int,
+                            maxHamming: Int, intact: Int): DataFrame = {
     val mask = (1L << chunkBits) - 1
-    // Each side is referenced TWICE below (the occupancy aggregate and
-    // its probe/build role) — callers whose signature upstream is
-    // expensive (per-token md5 + bit-folds for text, decode + resize +
-    // dHash for media) cut the (id, __sim) frame BEFORE the combo
-    // explode (r17 optimization round; the cut carries n rows, not 56n
-    // exploded key rows, and the re-run per reference is then only the
-    // cheap combo arithmetic — the q82 rule's materialize-the-md5-pass /
-    // re-derive-the-casts split).
-    val occSrc =
-      if (combinedCap) chunksOld.select("__combo", "__ckey")
-        .unionAll(chunksNew.select("__combo", "__ckey"))
-      else chunksOld.select("__combo", "__ckey")
-    val eligible = occSrc.groupBy("__combo", "__ckey")
-      .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBucketSize)
-      .select("__combo", "__ckey")
-    val a = chunksOld.join(eligible, Seq("__combo", "__ckey"))
-      .select(col("__combo"), col("__ckey"),
-        col(idOld).as("id_a"), col("__sim").as("__sa"))
-    val b = chunksNew.select(col("__combo"), col("__ckey"),
-      col(idNew).as("id_b"), col("__sim").as("__sb"))
     val intactMask = (0 until SimhashChunks).map { c =>
       when(shiftrightunsigned(col("__xor"), chunkBits * c).bitwiseAND(lit(mask)) === 0,
         lit(1 << c)).otherwise(lit(0))
     }.reduce(_ + _)
-    a.join(b, Seq("__combo", "__ckey"))
-      .filter(col("id_a") < col("id_b"))
-      .withColumn("__xor", col("__sa").bitwiseXOR(col("__sb")))
+    pairs
+      .withColumn("__xor", simA.bitwiseXOR(simB))
       .filter(col("__combo") ===
         element_at(typedLit(simhashMinComboByMaskOf(intact)), intactMask + 1))
-      .select(col("id_a"), col("id_b"),
+      .select(idA.as("id_a"), idB.as("id_b"),
         expr("bit_count(__xor)").cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** Cross-corpus form of the simhash machinery (round 14): in-bucket
+    * pairs between an EXISTING combo-key stream and an INCOMING one —
+    * the daily-crawl shape (cf. `portableCrossPairStats` /
+    * `Similarity.portableCrossEmbedPairs`), shared by the text simhash
+    * and perceptual-hash incremental and streaming entries. Buckets and
+    * the cap come from `crossBucketPairs` (combined occupancy for a
+    * batch, corpus-side for a stream); a batch pair set then equals the
+    * symmetric generator on the concatenated corpus restricted to cross
+    * pairs, PROVIDED every incoming id exceeds every existing id (the
+    * callers' split/offset convention; the `id_a < id_b` guard makes the
+    * restriction literal). Keys-only exchange throughout.
+    *
+    * Each side is referenced TWICE inside `crossBucketPairs` (occupancy
+    * aggregate + join side) — callers whose signature upstream is
+    * expensive (per-token md5 + bit-folds for text, decode + resize +
+    * dHash for media) cut the (id, __sim) frame BEFORE the combo explode
+    * (r17 optimization round; the cut carries n rows, not 56n exploded
+    * key rows). */
+  private[graft] def simhashCrossEmitPairs(chunksOld: DataFrame, chunksNew: DataFrame,
+                                           chunkBits: Int, maxHamming: Int,
+                                           maxBucketSize: Int,
+                                           intact: Int = SimhashIntact): DataFrame = {
+    val idOld = chunksOld.columns.filterNot(_.startsWith("__")).head
+    val idNew = chunksNew.columns.filterNot(_.startsWith("__")).head
+    val pairs = crossBucketPairs(
+        chunksOld.select(col("__combo"), col("__ckey"),
+          col(idOld).as("id_a"), col("__sim").as("__sa")),
+        chunksNew.select(col("__combo"), col("__ckey"),
+          col(idNew).as("id_b"), col("__sim").as("__sb")),
+        Seq("__combo", "__ckey"), maxBucketSize)
+      .filter(col("id_a") < col("id_b"))
+    simhashVerify(pairs, col("id_a"), col("id_b"), col("__sa"), col("__sb"),
+      chunkBits, maxHamming, intact)
+  }
+
   /** Incremental portable SimHash near-dup: candidate pairs between an
-    * EXISTING document corpus and an INCOMING batch — completes the
-    * simhash family's {batch q83, incremental, streaming} matrix row
-    * (cf. q124/q125 for the minhash/embedding families). Pair set equals
-    * `portableSimhashPairs` on the concatenated corpus restricted to
-    * cross pairs (the q215 oracle). Output: (id_a ∈ existing, id_b ∈
-    * incoming, hamming). */
+    * EXISTING document corpus and an INCOMING batch or stream — the
+    * simhash family's incremental (q215) and streaming (q216) entries
+    * (cf. q124/q125 for the minhash/embedding families). A batch pair
+    * set equals `portableSimhashPairs` on the concatenated corpus
+    * restricted to cross pairs (the q215 oracle); a stream caps
+    * corpus-side occupancy only (`crossBucketPairs`), which the q216
+    * oracle mirrors. Output: (id_a ∈ existing, id_b ∈ incoming,
+    * hamming). */
   def portableSimhashCrossPairs(existing: DataFrame, incoming: DataFrame,
                                 idCol: String, textCol: String,
                                 maxHamming: Int = 3,
-                                maxBucketSize: Int = DefaultMaxBucketSize,
-                                combinedCap: Boolean = true): DataFrame = {
+                                maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     require(maxHamming <= SimhashChunks - SimhashIntact,
       s"$SimhashChunks chunks with $SimhashIntact intact only guarantee hamming <= ${SimhashChunks - SimhashIntact}")
     simhashCrossEmitPairs(
       portableSimhashChunkKeys(existing, idCol, textCol, cutSigs = true),
-      portableSimhashChunkKeys(incoming, idCol, textCol, cutSigs = combinedCap),
-      32 / SimhashChunks, maxHamming, maxBucketSize, combinedCap)
+      portableSimhashChunkKeys(incoming, idCol, textCol, cutSigs = true),
+      32 / SimhashChunks, maxHamming, maxBucketSize)
   }
 
   /** SimHash near-dup: 64-bit signatures combination-banded over 8×8-bit
@@ -1370,7 +1335,7 @@ object TextDedup {
     // shared simhashComboKeys builder (round 14; integer keys shuffle
     // cheaper than strings — the SQL mirror spells it with a range lambda)
     val chunks = simhashComboKeys(sigs, chunkBits)
-    // single-pass bucketing (cf. minhashCandidates / portableSimhashPairs):
+    // single-pass bucketing (cf. bucketPairs / portableSimhashPairs):
     // ONE shuffle of (combo, key, id, sim) and in-bucket pairs by double
     // explode — the previous two-sided join recomputed the tokenize +
     // SimHash64 subtree once per side (the twin measured that shape ~2×

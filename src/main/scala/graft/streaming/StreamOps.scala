@@ -173,7 +173,8 @@ object StreamOps {
   /** Streaming ingest dedup: every micro-batch of incoming documents is
     * near-dup-checked AGAINST a static corpus index — the streaming form
     * of `TextDedup.portableCrossPairStats` (same coefficients, same band
-    * keys), and the shape a 24/7 crawl pipeline actually runs.
+    * keys via `TextDedup.portableBandKeys`, same `crossBucketPairs`
+    * eligibility), and the shape a 24/7 crawl pipeline actually runs.
     *
     * Entirely STATELESS: banding is per-row expression work (shingle
     * hashes → affine signature → band keys, one `posexplode`), and both
@@ -185,14 +186,18 @@ object StreamOps {
     * shuffles to — no broadcast hint here on purpose.
     *
     * Two documented deltas vs the batch operator: the degenerate-bucket
-    * cap can only see CORPUS-side occupancy (per-batch stream occupancy
-    * is unknowable pre-aggregation and bounded by batch size anyway),
-    * and the output is a MULTISET — a pair matching in k bands emits k
-    * identical rows, because per-pair dedup would be a stateful
-    * aggregate; distinct() it batch-side or in foreachBatch (one narrow
-    * shuffle over matches only). The stream side carries its shingle-hash
-    * set through the band join — batch-sized payload against a
-    * keys-only static side, the right side of the keys-only trade.
+    * cap sees CORPUS-side occupancy only (`crossBucketPairs`' rule for a
+    * streaming side — per-batch stream occupancy is unknowable without
+    * state and bounded by batch size anyway), and the output is a
+    * MULTISET — a pair matching in k bands emits k identical rows,
+    * because per-pair dedup would be a stateful aggregate; distinct() it
+    * batch-side or in foreachBatch (one narrow shuffle over matches
+    * only). That multiset is why this stays a separate entry point
+    * instead of a streaming call of `portableCrossPairStats`, whose
+    * candidate `distinct` would need state. The stream side carries its
+    * shingle-hash set through the band join — batch-sized payload
+    * against a keys-only static side, the right side of the keys-only
+    * trade.
     *
     * Output: (id_a ∈ corpus, id_b ∈ stream, n_inter, n_union); threshold
     * on n_inter/n_union is the caller's (integer cross-multiply). */
@@ -205,7 +210,6 @@ object StreamOps {
                          seed: Long = 7L,
                          maxBucketSize: Int = graft.operators.TextDedup.DefaultMaxBucketSize): DataFrame = {
     import graft.operators.TextDedup
-    val rpb = numHashes / bands
     val coeffs = TextDedup.affineCoeffs(numHashes, seed)
     val streamBanded = docStream
       .select(col(idCol).as("id_b"),
@@ -213,70 +217,15 @@ object StreamOps {
       .filter(size(col("__hb")) > 0)
       .withColumn("__sig", TextDedup.affineSignature(col("__hb"), coeffs))
       .select(col("id_b"), col("__hb"),
-        posexplode(array((0 until bands).map(b =>
-          array_join(slice(col("__sig"), b * rpb + 1, rpb), "-")): _*))
+        posexplode(TextDedup.portableBandKeys(col("__sig"), bands, numHashes / bands))
           .as(Seq("__band", "__bkey")))
-    val eligible = corpusBanded
-      .join(corpusBanded.groupBy("__band", "__bkey").agg(count(lit(1)).as("__n"))
-        .filter(col("__n") <= maxBucketSize), Seq("__band", "__bkey"))
-      .select(col("__band"), col("__bkey"), col(idCol).as("id_a"))
-    streamBanded
-      .join(eligible, Seq("__band", "__bkey"))
+    TextDedup.crossBucketPairs(
+        corpusBanded.select(col("__band"), col("__bkey"), col(idCol).as("id_a")),
+        streamBanded, Seq("__band", "__bkey"), maxBucketSize)
       .join(corpusBase.select(col(idCol).as("id_a"), col("__hs").as("__ha")), Seq("id_a"))
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("__ha"), col("__hb"))).cast("long").as("n_inter"),
         size(array_union(col("__ha"), col("__hb"))).cast("long").as("n_union"))
-  }
-
-  /** Streaming edit-distance ingest check: every micro-batch of incoming
-    * documents is fuzzy-matched AGAINST a static corpus by banded
-    * Levenshtein — the streaming form of
-    * `TextDedup.editDistanceCrossPairs` (same prefix blocking, same
-    * threshold), completing the streaming-dedup pair with
-    * `dedupAgainstCorpus` (minhash). Entirely STATELESS: the block keys
-    * are per-row `substring`s, the joins are stream-static, no
-    * watermark, no state store. Unlike multi-band LSH the two blocking
-    * passes are DISJOINT by the prefix-differs rule, so a pair meets in
-    * at most one pass — the output is a true SET, no batch-side distinct
-    * needed. Same documented delta as `dedupAgainstCorpus`: the
-    * degenerate-block cap sees CORPUS-side occupancy only (per-batch
-    * stream occupancy is unknowable statelessly and bounded by batch
-    * size); at tested SFs no block approaches the cap, so the closed-
-    * input result equals the batch operator's combined-cap answer —
-    * the q126 contract. The stream side carries its text through the
-    * block join (batch-sized payload against a capped static side).
-    * Output: (id_a ∈ corpus, id_b ∈ stream, dist ≤ maxDist). */
-  def editDistanceAgainstCorpus(docStream: DataFrame, corpus: DataFrame,
-                                idCol: String, textCol: String,
-                                prefixLen: Int = graft.operators.TextDedup.EditPrefixLen,
-                                maxDist: Int = graft.operators.TextDedup.EditMaxDist,
-                                maxBucketSize: Int = graft.operators.TextDedup.DefaultMaxBucketSize): DataFrame = {
-    import graft.operators.TextDedup.{prefixKey, suffixKey}
-    // Corpus side blocks as (__k, id_a) ONLY — its text joins back by id
-    // AFTER the candidate pairs form (round 10, mirroring
-    // editDistanceCrossPairs): at the 100 TB design point the static
-    // side's text must not ride the per-microbatch block join.
-    // Round 10 adds the SUFFIX blocking pass (the batch operators' recall
-    // fix); pass 2 keeps only prefix-DIFFERING pairs, so the union stays
-    // a true set STATELESSLY — each pair appears in at most one pass, no
-    // state-store dedup.
-    def pass(keyOf: Column => Column): DataFrame = {
-      val be = corpus.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_a"))
-      val eligible = be.join(
-        be.groupBy("__k").agg(count(lit(1)).as("__n")).filter(col("__n") <= maxBucketSize),
-        Seq("__k"))
-      docStream.select(keyOf(col(textCol)).as("__k"),
-          col(idCol).as("id_b"), col(textCol).as("__tb"))
-        .join(eligible, Seq("__k"))
-        .join(corpus.select(col(idCol).as("id_a"), col(textCol).as("__ta")), Seq("id_a"))
-        .select("id_a", "id_b", "__ta", "__tb")
-    }
-    pass(t => prefixKey(t, prefixLen))
-      .unionByName(pass(t => suffixKey(t, prefixLen)).filter(
-        prefixKey(col("__ta"), prefixLen) =!= prefixKey(col("__tb"), prefixLen)))
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("__ta"), col("__tb"), maxDist).as("dist"))
-      .filter(col("dist") >= 0)
   }
 
   /** Streaming cardinality: hourly distinct-user HLL registers built AS
@@ -521,8 +470,8 @@ object StreamOps {
     * documents is probed against a Bloom filter of blocklist shingle keys
     * (`Sketches.bloomBuild`) — the streaming form of q145's screen, and
     * the third member of the stateless ingest family (minhash
-    * `dedupAgainstCorpus`, edit `editDistanceAgainstCorpus`, now
-    * membership). The filter is materialized ONCE into a driver-side
+    * `dedupAgainstCorpus`, edit `TextDedup.editDistanceCrossPairs` on a
+    * stream, now membership). The filter is materialized ONCE into a driver-side
     * word array (fixed ≤ bits/32 longs — ~256 KiB at 2^20 bits, the same
     * small-metadata collect class as the IVF centroids) and shipped as a
     * literal through the task closure, so the stream side is PURE per-row

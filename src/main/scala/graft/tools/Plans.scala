@@ -10,16 +10,20 @@ import graft.{Engine, SparkEntry, Tables}
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default nproc). */
 object Plans {
   /** Rewrites what differs between two sessions' dumps of one plan: the
-    * data directory (`$SF_DIR`) and the per-session counters — expression
+    * data directory (`$SF_DIR`), the per-session counters — expression
     * ids `#<n>`, lambda variables `x_<n>`, `plan_id=<n>`, `RDD[<n>]`,
-    * `Broadcast(<n>)` and the `[J@<hash>` identity of a baked long matrix.
-    * These shift whenever an earlier entry in the session changes. */
-  def normalize(plan: String, dir: String): String =
+    * `Broadcast(<n>)` and the `[J@<hash>` identity of a baked long matrix,
+    * which shift whenever an earlier entry in the session changes — and
+    * the random suffix of an entry's temp work dir
+    * (`<java.io.tmpdir>/graft_q223<digits>` → `$TMPDIR/graft_q223<n>`). */
+  def normalize(plan: String, dir: String): String = {
+    val tmp = java.util.regex.Pattern.quote(
+      System.getProperty("java.io.tmpdir").stripSuffix("/"))
     Seq("""#\d+""" -> "#N", """\bx_\d+""" -> "x_N", """plan_id=\d+""" -> "plan_id=N",
-      """RDD\[\d+\]""" -> "RDD[N]", """Broadcast\(\d+\)""" -> "Broadcast(N)", """\[J@\p{XDigit}+""" -> "[J@N")
-      .foldLeft(plan.replace(dir, "$SF_DIR")) { case (s, (re, to)) =>
-        s.replaceAll(re, java.util.regex.Matcher.quoteReplacement(to))
-      }
+      """RDD\[\d+\]""" -> "RDD[N]", """Broadcast\(\d+\)""" -> "Broadcast(N)", """\[J@\p{XDigit}+""" -> "[J@N",
+      s"""$tmp/graft_(q\\d{3})\\d+""" -> """\$TMPDIR/graft_$1<n>""")
+      .foldLeft(plan.replace(dir, "$SF_DIR")) { case (s, (re, to)) => s.replaceAll(re, to) }
+  }
 
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -49,9 +49,11 @@ class BucketCapSpec extends AnyFunSuite {
     assert(dropped.forall(_._2 == 2000L), s"dropped=${dropped.toSeq}")
   }
 
-  test("minhashCandidates (production path) drops the boilerplate bucket") {
-    val pairs = TextDedup.minhashCandidates(docs, "doc_id", "text")
-      .as[(Long, Long)].collect()
+  test("nearDupPairs (production path) drops the boilerplate bucket") {
+    // threshold 0 keeps every candidate: the assertions see the capped
+    // candidate set itself
+    val pairs = TextDedup.nearDupPairs(docs, "doc_id", "text", threshold = 0.0)
+      .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(pairs.length < 100)
     assert(!pairs.exists { case (a, b) => a > 10000L || b > 10000L })
     assert(pairs.contains((1L, 2L)))
@@ -126,7 +128,7 @@ class BucketCapSpec extends AnyFunSuite {
       s"only the genuine cross pair survives the combined cap, got ${pairs.length}")
   }
 
-  test("streaming editDistanceAgainstCorpus drops corpus-side oversize blocks") {
+  test("streaming editDistanceCrossPairs drops corpus-side oversize blocks") {
     // corpus-side block over the cap → ineligible; the genuine fuzzy
     // match still surfaces (corpus-side-only cap — the documented
     // q126-class delta vs the batch combined cap).
@@ -137,13 +139,41 @@ class BucketCapSpec extends AnyFunSuite {
     incoming.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(incoming.schema).parquet(dir)
     val matches = graft.streaming.StreamOps.runAppend(spark,
-        graft.streaming.StreamOps.editDistanceAgainstCorpus(stream, corpus, "doc_id", "text"),
+        TextDedup.editDistanceCrossPairs(corpus, stream, "doc_id", "text"),
         "edit_cap_probe")
       .select("id_a", "id_b").as[(Long, Long)].collect()
     assert(matches.contains((1L, 2L)), s"genuine match must survive, got ${matches.take(5).toSeq}")
     assert(!matches.exists { case (a, b) => a > 10000L && b == 20001L },
       "the oversize corpus block must be ineligible for stream matches")
     spark.catalog.dropTempView("edit_cap_probe")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("streaming portableSimhashCrossPairs caps corpus-side occupancy only") {
+    // A stream's own bucket occupancy is unknowable without state, so the
+    // batch cross operator run on a stream caps corpus-side occupancy:
+    // the 1,100-copy corpus bucket is ineligible, while a 999-copy corpus
+    // bucket stays eligible even though the two streamed copies push its
+    // combined occupancy past the cap (a batch incoming side would drop it).
+    val other = "breaking news weather sports traffic update local events " +
+      "community calendar classifieds obituaries letters to the editor opinion"
+    val corpus = ((1 to 1100).map(i => (10000L + i, boilerplate)) ++
+      (1 to 999).map(i => (30000L + i, other)) :+ (1L -> docA)).toDF("doc_id", "text")
+    val incoming = Seq((2L, docA), (20001L, boilerplate), (40001L, other), (40002L, other))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_simhashcap").toString
+    incoming.write.mode("overwrite").parquet(dir)
+    val stream = spark.readStream.schema(incoming.schema).parquet(dir)
+    val matches = graft.streaming.StreamOps.runAppend(spark,
+        TextDedup.portableSimhashCrossPairs(corpus, stream, "doc_id", "text"),
+        "simhash_cap_probe")
+      .select("id_a", "id_b").as[(Long, Long)].collect()
+    assert(matches.contains((1L, 2L)), s"genuine match must survive, got ${matches.take(5).toSeq}")
+    assert(!matches.exists { case (a, b) => a > 10000L && a <= 11100L && b == 20001L },
+      "the oversize corpus bucket must be ineligible for stream matches")
+    assert(matches.count { case (a, b) => a > 30000L && b > 40000L } == 999 * 2,
+      "stream-side copies must not count toward the cap")
+    spark.catalog.dropTempView("simhash_cap_probe")
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 

@@ -197,7 +197,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .option("pathGlobFilter", "documents.parquet").parquet(TestSpark.sf0001)
       .filter(col("doc_id") >= split)
     val streamed = StreamOps.runAppend(spark,
-        StreamOps.editDistanceAgainstCorpus(stream, corpus, "doc_id", "text"),
+        TextDedup.editDistanceCrossPairs(corpus, stream, "doc_id", "text"),
         "stream_edit")
       .select("id_a", "id_b", "dist").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
@@ -214,21 +214,18 @@ class StreamOpsSpec extends AnyFunSuite {
     val docs = Tables.table(spark, TestSpark.sf0001, "documents")
     val split = 400L
     val corpus = docs.filter(col("doc_id") < split)
-    val staticChunks = TextDedup.portableSimhashChunkKeys(corpus, "doc_id", "text")
     val stream = spark.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(TestSpark.sf0001)
       .filter(col("doc_id") >= split)
-    val streamChunks = TextDedup.portableSimhashChunkKeys(stream, "doc_id", "text")
     val streamed = StreamOps.runAppend(spark,
-        TextDedup.simhashCrossEmitPairs(staticChunks, streamChunks,
-          32 / TextDedup.SimhashChunks, maxHamming = 3,
-          maxBucketSize = TextDedup.DefaultMaxBucketSize, combinedCap = false),
+        TextDedup.portableSimhashCrossPairs(corpus, stream, "doc_id", "text"),
         "stream_simhash")
       .select("id_a", "id_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // equality holds while no combo bucket approaches the cap (true at
+    // sf0.001): the streaming side's cap sees corpus-side occupancy only
     val batch = TextDedup.portableSimhashCrossPairs(
-        corpus, docs.filter(col("doc_id") >= split), "doc_id", "text",
-        combinedCap = false)
+        corpus, docs.filter(col("doc_id") >= split), "doc_id", "text")
       .select("id_a", "id_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
@@ -253,12 +250,14 @@ class StreamOpsSpec extends AnyFunSuite {
       .as(org.apache.spark.sql.Encoders.product[Multimodal.MediaRow]))
     val streamed = StreamOps.runAppend(spark,
         Multimodal.phashCrossPairs(Multimodal.phashFeatures(imgs),
-          Multimodal.phashFeatures(streamVariants), combinedCap = false),
+          Multimodal.phashFeatures(streamVariants)),
         "stream_phash")
       .select("id_a", "id_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // equality holds while no combo bucket approaches the cap (true at
+    // sf0.001): the streaming side's cap sees corpus-side occupancy only
     val batch = Multimodal.phashCrossPairs(Multimodal.phashFeatures(imgs),
-        Multimodal.phashFeatures(variants(imgs)), combinedCap = false)
+        Multimodal.phashFeatures(variants(imgs)))
       .select("id_a", "id_b", "hamming").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(streamed == batch, s"stream=${streamed.size} batch=${batch.size}")
@@ -282,7 +281,7 @@ class StreamOpsSpec extends AnyFunSuite {
     assert(worst * 2 <= TextDedup.DefaultMaxBucketSize,
       s"largest prefix-${TextDedup.EditPrefixLen} block ($worst docs) is within 2× of " +
         s"DefaultMaxBucketSize (${TextDedup.DefaultMaxBucketSize}) — q142's corpus-only " +
-        "cap may diverge from the q141 combined-cap oracle; see StreamOps.editDistanceAgainstCorpus")
+        "cap may diverge from the q141 combined-cap oracle; see TextDedup.editDistanceCrossPairs")
   }
 
   test("streaming ingest dedup equals the batch incremental operator on closed input") {
