@@ -6,10 +6,10 @@ import org.apache.spark.sql.functions._
 /** Document deduplication operators over the `documents` table shape
   * (doc_id, text, …) — the LLM-training-pipeline tier (SURVEY.md §2.4).
   *
-  * All column math is composed from codegen'd built-ins (split / transform /
-  * sequence / slice / xxhash64 / array_min / explode) — no UDFs — so plans
-  * stay inside whole-stage codegen and every step is a plain shuffle-
-  * analyzable Spark plan.
+  * All column math is composed from codegen'd built-ins (split / slice /
+  * xxhash64 / explode …) and graft's native expressions (graft.functions:
+  * shingle hashes, minhash signatures) — no UDFs — so every step is a
+  * plain shuffle-analyzable Spark plan.
   *
   * Scale notes (100 TB, 1000 executors):
   *   - `dedupExactByHash` shuffles an 8-byte hash + id instead of full
@@ -51,21 +51,17 @@ object TextDedup {
       i => array_join(slice(toks, i + 1, lit(n)), " "))
 
   /** MinHash signature from PRE-HASHED shingles (array<long>): element i =
-    * min over base hashes h of xxhash64(h, i). Hashing the fixed-width longs
-    * per permutation is cheap; the expensive string traversal happens once
-    * in `shingleHashes`. Empty shingle sets get Long.MaxValue (never
-    * collides into a band). Callers materialize `baseHashes` in its own
-    * projection first: the signature references it `numHashes` times, and
-    * CollapseProject will not inline a non-cheap alias with multiple
-    * references — without that split the shingle construction ran once
-    * per permutation (measured 64× slower at sf0.1). */
-  def minhashSignature(baseHashes: Column, numHashes: Int): Column = {
-    val hashes = (0 until numHashes).map { i =>
-      when(size(baseHashes) === 0, lit(Long.MaxValue))
-        .otherwise(array_min(transform(baseHashes, h => xxhash64(h, lit(i)))))
-    }
-    array(hashes: _*)
-  }
+    * min over base hashes h of xxhash64(h, i), all 64 minima in one native
+    * loop (graft.functions.MinHash). Hashing the fixed-width longs per
+    * permutation is cheap; the expensive string traversal happens once in
+    * `shingleHashes`. Empty shingle sets get Long.MaxValue (never collides
+    * into a band). CollapseProject will not inline a non-cheap alias with
+    * multiple references, so an input that an expression references many
+    * times is materialized in its own projection first — the composed
+    * 64-column signature this replaced ran the shingle construction once
+    * per permutation without that split (measured 64× slower at sf0.1). */
+  def minhashSignature(baseHashes: Column, numHashes: Int): Column =
+    graft.functions.MinHash.xxhash(baseHashes, numHashes)
 
   /** N-gram hashes straight from token bytes (graft.functions.ShingleHash):
     * no n-gram string materialization — the measured dominant cost of the
@@ -281,8 +277,6 @@ object TextDedup {
   def portableShingleHashesComposed(text: Column, n: Int): Column =
     transform(shingles(tokens(text), n),
       s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
-
-  private val MersennePrime61 = (1L << 61) - 1
 
   /** Span length (in tokens) for exact-substring dedup (q173/q174) —
     * interpolated into both DuckDB texts, cf. PortableShingleN. 8 tokens
@@ -516,13 +510,12 @@ object TextDedup {
 
   /** MinHash signature via affine permutations of PORTABLE hashes —
     * unlike `minhashSignature` (xxhash64-seeded), every sig element is
-    * plain integer arithmetic both engines reproduce bit-exactly. Empty
-    * shingle sets get Long.MaxValue (never collides into a band). */
+    * plain integer arithmetic, (h·a + b) mod (2^61 − 1), that both engines
+    * reproduce bit-exactly; computed by the native graft.functions.MinHash
+    * loop. Empty shingle sets get Long.MaxValue (never collides into a
+    * band). */
   def affineSignature(baseHashes: Column, coeffs: Seq[(Long, Long)]): Column =
-    array(coeffs.map { case (a, b) =>
-      when(size(baseHashes) === 0, lit(Long.MaxValue))
-        .otherwise(array_min(transform(baseHashes, h => (h * a + b) % MersennePrime61)))
-    }: _*)
+    graft.functions.MinHash.affine(baseHashes, coeffs)
 
   /** The full MinHash+LSH near-dup pipeline on portable hashes:
     * signatures → band keys (exact string keys, no engine-specific band
@@ -559,11 +552,9 @@ object TextDedup {
     * audits the EXACT buckets `portablePairStats` pairs on. */
   private def portableBanded(df: DataFrame, idCol: String, textCol: String,
                              shingleN: Int, numHashes: Int, bands: Int,
-                             seed: Long, cutSig: Boolean = false): (DataFrame, DataFrame) = {
+                             seed: Long): (DataFrame, DataFrame) = {
     val rowsPerBand = numHashes / bands
     val coeffs = affineCoeffs(numHashes, seed)
-    // __hs materialized in its own projection: affineSignature references
-    // it numHashes times (see minhashSignature's CollapseProject note).
     // Empty shingle sets are dropped BEFORE banding: every such document
     // shares the all-Long.MaxValue signature, so they land in one
     // degenerate bucket and pair with each other as n_inter=0/n_union=0
@@ -587,19 +578,8 @@ object TextDedup {
     // the most expensive plan in the round-5 corpus (9.9 s driver-side).
     // The hash sets are joined back for surviving candidate pairs only,
     // exactly as nearDupPairs verifies its candidates.
-    // cutSig (r17 optimization round): the CROSS/streaming consumers
-    // reference `banded` twice (crossBucketPairs' occupancy aggregate +
-    // its join side), and each reference otherwise re-runs the
-    // 64-permutation affine signature from the cut base. Cut at the (id,
-    // __sig) level — n rows, before the bands× explode — so re-runs per
-    // reference are only the cheap slice/join arithmetic. Single-reference consumers
-    // (portablePairStats' one groupBy pass) keep the default and pay no
-    // extra materialization. Streaming frames cannot be checkpointed.
-    val sig0 = base.select(col(idCol),
+    val sig = base.select(col(idCol),
       affineSignature(col("__hs"), coeffs).as("__sig"))
-    val sig =
-      if (cutSig && !df.isStreaming) Checkpoints.cut(sig0, eager = false)
-      else sig0
     val banded = sig.select(col(idCol),
       posexplode(portableBandKeys(col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__bkey")))
     (base, banded)
@@ -644,10 +624,7 @@ object TextDedup {
                           numHashes: Int = PortableNumHashes,
                           bands: Int = PortableBands,
                           seed: Long = 7L): (DataFrame, DataFrame) =
-    // cutSig: the streaming consumers (StreamOps.dedupAgainstCorpus —
-    // q126/q198) reference the banded index twice per micro-batch
-    portableBanded(df, idCol, textCol, shingleN, numHashes, bands, seed,
-      cutSig = true)
+    portableBanded(df, idCol, textCol, shingleN, numHashes, bands, seed)
 
   /** Incremental near-dup: candidate pairs between an EXISTING corpus and
     * an INCOMING batch — the daily-crawl shape, where recomputing all
@@ -673,10 +650,8 @@ object TextDedup {
                              bands: Int = PortableBands,
                              seed: Long = 7L,
                              maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    // cutSig: each side's banded stream is referenced twice below
-    // (combined-occupancy aggregate + its join side)
-    val (baseOld, bandedOld) = portableBanded(existing, idCol, textCol, shingleN, numHashes, bands, seed, cutSig = true)
-    val (baseNew, bandedNew) = portableBanded(incoming, idCol, textCol, shingleN, numHashes, bands, seed, cutSig = true)
+    val (baseOld, bandedOld) = portableBanded(existing, idCol, textCol, shingleN, numHashes, bands, seed)
+    val (baseNew, bandedNew) = portableBanded(incoming, idCol, textCol, shingleN, numHashes, bands, seed)
     crossBucketPairs(
         bandedOld.select(col("__band"), col("__bkey"), col(idCol).as("id_a")),
         bandedNew.select(col("__band"), col("__bkey"), col(idCol).as("id_b")),

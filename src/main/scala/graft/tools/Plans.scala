@@ -12,8 +12,12 @@ object Plans {
   /** Rewrites what differs between two sessions' dumps of one plan: the
     * data directory (`$SF_DIR`), the per-session counters — expression
     * ids `#<n>`, lambda variables `x_<n>`, `plan_id=<n>`, `RDD[<n>]`,
-    * `Broadcast(<n>)` and the `[J@<hash>` identity of a baked long matrix,
-    * which shift whenever an earlier entry in the session changes — and
+    * `Broadcast(<n>)`, the `[J@<hash>` identity of a baked long matrix and
+    * the `Lambda$<n>/0x<addr>@<hash>` identity of a Scala closure in
+    * `MapPartitions`/`MapElements` arguments, which shift whenever an
+    * earlier entry in the session changes or the JVM restarts — the
+    * source line in an RDD's call-site name (`TextDedup.scala:<n>`), which
+    * shifts with any edit above it, and
     * the random suffix of an entry's temp work dir
     * (`<java.io.tmpdir>/graft_q223<digits>` → `$TMPDIR/graft_q223<n>`). */
   def normalize(plan: String, dir: String): String = {
@@ -21,6 +25,7 @@ object Plans {
       System.getProperty("java.io.tmpdir").stripSuffix("/"))
     Seq("""#\d+""" -> "#N", """\bx_\d+""" -> "x_N", """plan_id=\d+""" -> "plan_id=N",
       """RDD\[\d+\]""" -> "RDD[N]", """Broadcast\(\d+\)""" -> "Broadcast(N)", """\[J@\p{XDigit}+""" -> "[J@N",
+      """Lambda\$\d+/0x\p{XDigit}+@\p{XDigit}+""" -> "Lambda\\$N", """\.scala:\d+""" -> ".scala:N",
       s"""$tmp/graft_(q\\d{3})\\d+""" -> """\$TMPDIR/graft_$1<n>""")
       .foldLeft(plan.replace(dir, "$SF_DIR")) { case (s, (re, to)) => s.replaceAll(re, to) }
   }

@@ -1,7 +1,13 @@
 package graft
 
-import graft.functions.{ShingleHash, SimHash64}
+import graft.functions.{MinHash, ShingleHash, SimHash64}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalacheck.Prop.forAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -180,5 +186,82 @@ class NativeExprPropSpec extends AnyFunSuite {
     val aRow = Seq(Tuple1(null: Seq[Long])).toDF("__v")
       .select(Similarity.semAssignExpr(col("__v"), Seq((1L, Seq(1L, 2L, 3L, 4L)))).as("a")).head()
     assert(aRow.isNullAt(0), "argmax_int_dot(NULL) must be NULL")
+  }
+
+  // The composed minhash spellings the native MinHash replaced in
+  // TextDedup.minhashSignature / affineSignature — kept here as the
+  // references: one `array_min(transform(...))` column per permutation.
+  private def xxhashSignatureComposed(h: Column, k: Int): Column =
+    array((0 until k).map { i =>
+      when(size(h) === 0, lit(Long.MaxValue))
+        .otherwise(array_min(transform(h, x => xxhash64(x, lit(i)))))
+    }: _*)
+
+  private def affineSignatureComposed(h: Column, coeffs: Seq[(Long, Long)]): Column =
+    array(coeffs.map { case (a, b) =>
+      when(size(h) === 0, lit(Long.MaxValue))
+        .otherwise(array_min(transform(h, x => (x * a + b) % ((1L << 61) - 1))))
+    }: _*)
+
+  private type HashSet = Option[List[Option[Long]]] // None = NULL array
+
+  // every edge of the contract, checked on each family before the random sets
+  private val edgeSets: Seq[HashSet] = Seq(None, Some(Nil), Some(List(None)),
+    Some(List(None, None, None)), Some(List(Some(7L))), Some(List(None, Some(7L), None)),
+    Some(List(Some(3L), Some(3L), Some(0L))))
+
+  private def setGen(elem: Gen[Long]): Gen[HashSet] = Gen.frequency(
+    1 -> Gen.oneOf(edgeSets),
+    6 -> Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, Gen.frequency(
+      9 -> elem.map(Option(_)), 1 -> Gen.const(Option.empty[Long])))).map(Option(_)))
+
+  private def read(a: ArrayData): Seq[Option[Long]] =
+    (0 until a.numElements()).map(i => if (a.isNullAt(i)) None else Some(a.getLong(i)))
+
+  /** The native signature through `eval`, through generated code and
+    * through a DataFrame (the production Column), all equal to the
+    * composed reference. */
+  private def agrees(hs: HashSet, k: Int, coeffs: Seq[(Long, Long)],
+                     composed: Column => Column, column: Column => Column): Boolean = {
+    val row = InternalRow(hs.map(l => new GenericArrayData(l.map(_.fold(null: Any)(identity)).toArray)).orNull)
+    val expr = MinHash(BoundReference(0, ArrayType(LongType), nullable = true), k, coeffs)
+    val evaluated = read(expr.eval(row).asInstanceOf[ArrayData])
+    val generated = read(GenerateUnsafeProjection.generate(Seq(expr)).apply(row).getArray(0))
+    val r = Seq(Tuple1(hs.orNull)).toDF("h")
+      .select(composed(col("h")).as("c"), column(col("h")).as("n")).head()
+    def seqOf(i: Int) = r.getSeq[java.lang.Long](i).map(Option(_).map(_.longValue))
+    val want = seqOf(0)
+    want == seqOf(1) && want == evaluated && want == generated
+  }
+
+  test("minhash (xxhash family) agrees with the composed array_min(transform) spelling, eval and codegen") {
+    val kGen = Gen.choose(1, 64)
+    edgeSets.foreach { hs =>
+      assert(agrees(hs, 5, Nil, xxhashSignatureComposed(_, 5), MinHash.xxhash(_, 5)), s"edge $hs")
+    }
+    check(forAll(setGen(Gen.long), kGen) { (hs, k) =>
+      agrees(hs, k, Nil, xxhashSignatureComposed(_, k), MinHash.xxhash(_, k))
+    }, "minhash xxhash")
+  }
+
+  test("minhash (affine family) agrees with the composed array_min(transform) spelling, eval and codegen") {
+    import graft.operators.TextDedup.affineCoeffs
+    // portable hashes are unsigned 32-bit values: the range where the
+    // composed ANSI arithmetic cannot overflow
+    edgeSets.foreach { hs =>
+      val coeffs = affineCoeffs(4)
+      assert(agrees(hs, 4, coeffs, affineSignatureComposed(_, coeffs), MinHash.affine(_, coeffs)),
+        s"edge $hs")
+    }
+    check(forAll(setGen(Gen.choose(0L, 0xFFFFFFFFL)), Gen.choose(1, 16), Gen.choose(1L, 99L)) {
+      (hs, k, seed) =>
+        val coeffs = affineCoeffs(k, seed)
+        agrees(hs, k, coeffs, affineSignatureComposed(_, coeffs), MinHash.affine(_, coeffs))
+    }, "minhash affine")
+    // the documented divergence outside that range: the composed form
+    // throws under ANSI, the native loop wraps
+    val big = Seq(Tuple1(Seq(Long.MaxValue / 2))).toDF("h")
+    assert(big.select(MinHash.affine(col("h"), Seq((3L, 1L))).as("n")).head().getSeq[Long](0).size == 1)
+    assertThrows[Exception](big.select(affineSignatureComposed(col("h"), Seq((3L, 1L)))).head())
   }
 }

@@ -142,4 +142,24 @@ class PlanGuardSpec extends AnyFunSuite {
     val q18 = SparkEntry.queries("q18_ntile")(spark, dir).queryExecution.executedPlan.toString
     assert(offendingGlobal(q18), "guard self-check: q18's global NTILE should match")
   }
+
+  test("the minhash signature projections of q40 and q82 run no lambda function") {
+    // the signature is one native loop (graft.functions.MinHash), not k
+    // interpreted array_min(transform(...)) columns: ArrayTransform is a
+    // CodegenFallback, so a lambda there runs every shingle hash through
+    // k interpreted calls
+    import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+    import org.apache.spark.sql.execution.ProjectExec
+    val dir = TestSpark.sf0001
+    Seq("q40_minhash_neardup", "q82_minhash_portable").foreach { id =>
+      val sigs = SparkEntry.queries(id)(spark, dir).queryExecution.sparkPlan.collect {
+        case p: ProjectExec if p.projectList.exists(_.name == "__sig") => p
+      }
+      assert(sigs.nonEmpty, s"$id: no projection of __sig found")
+      sigs.foreach { p =>
+        assert(!p.projectList.exists(_.exists(_.isInstanceOf[LambdaFunction])),
+          s"$id: lambda function in the signature projection: ${p.projectList.mkString(", ")}")
+      }
+    }
+  }
 }

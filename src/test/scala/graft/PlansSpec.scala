@@ -17,6 +17,8 @@ class PlansSpec extends AnyFunSuite {
       "Scan ExistingRDD[1234] LogicalRDD",
       "BroadcastExchange Broadcast(31)",
       "int_dot_lookup([J@1a2b3cF0, __qv#9)",
+      "Arguments: graft.operators.Multimodal$$$Lambda$5096/0x00007f832d461368@5e4168dd, obj#12: X",
+      "MapPartitionsRDD[7] at createDataFrame at TextDedup.scala:890, ExistingRDD",
       s"Location: InMemoryFileIndex [file:$tmp/graft_q2231234567890123/pairs]",
       s"Location: InMemoryFileIndex [file:$tmp/graft_q224987/pairs]",
       "max_1 between 2 and 1000").mkString("\n")
@@ -28,6 +30,8 @@ class PlansSpec extends AnyFunSuite {
       "Scan ExistingRDD[N] LogicalRDD",
       "BroadcastExchange Broadcast(N)",
       "int_dot_lookup([J@N, __qv#N)",
+      "Arguments: graft.operators.Multimodal$$$Lambda$N, obj#N: X",
+      "MapPartitionsRDD[N] at createDataFrame at TextDedup.scala:N, ExistingRDD",
       "Location: InMemoryFileIndex [file:$TMPDIR/graft_q223<n>/pairs]",
       "Location: InMemoryFileIndex [file:$TMPDIR/graft_q224<n>/pairs]",
       "max_1 between 2 and 1000").mkString("\n")
