@@ -37,4 +37,18 @@ class PlansSpec extends AnyFunSuite {
       "max_1 between 2 and 1000").mkString("\n")
     assert(Plans.normalize(raw, "/data/sf0.01") == want)
   }
+
+  test("normalize rewrites every lambda variable's counter, and leaves numbered columns alone") {
+    // q47's `aggregate` binds `y_<n>` beside `x_<n>`; q24's output columns
+    // `k_1`/`k_2` are names, not counters
+    val raw = Seq(
+      "aggregate(split(text#3,  , -1), 0, lambdafunction((lambda x_52#9 + length(lambda y_53#10)), " +
+        "lambda x_52#9, lambda y_53#10, false), lambdafunction(lambda x_54#11, lambda x_54#11, false))",
+      "Arguments: 100, [c_custkey#1L ASC NULLS FIRST], [k#4 AS k_1#5, k#6 AS k_2#7]").mkString("\n")
+    val want = Seq(
+      "aggregate(split(text#N,  , -1), 0, lambdafunction((lambda x_N#N + length(lambda y_N#N)), " +
+        "lambda x_N#N, lambda y_N#N, false), lambdafunction(lambda x_N#N, lambda x_N#N, false))",
+      "Arguments: 100, [c_custkey#NL ASC NULLS FIRST], [k#N AS k_1#N, k#N AS k_2#N]").mkString("\n")
+    assert(Plans.normalize(raw, "/data/sf0.01") == want)
+  }
 }
