@@ -1,0 +1,426 @@
+package graft
+package entries
+
+import graft.SparkEntry._
+import graft.operators.{Checkpoints, Multimodal, TextDedup}
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** Media entries: multimodal plumbing and the perceptual-hash
+  * families (image, audio, video) as features, pairs, incremental,
+  * streaming and top-k search. */
+private[graft] object MediaEntries {
+
+  /** q209/q210's shared oracle CTE: the image-typed ASCII documents with
+    * the synthetic generator's dimensions (w = 4 + id%13, h = 3 + id%7 —
+    * `Multimodal.syntheticMedia`'s one spelling) and the byte length the
+    * pixel replay indexes modulo. DuckDB spells byte-length `strlen`
+    * where Spark spells it `octet_length` (dual-text allowlisted). */
+  private val phashImgCte: String =
+    "img AS (SELECT doc_id, text, strlen(text) AS len, " +
+      "4 + doc_id % 13 AS w, 3 + doc_id % 7 AS h " +
+      "FROM documents WHERE doc_id % 3 = 0 AND length(text) = strlen(text))"
+
+  /** The dHash64 replay over `img`: bit b (gx = b%8, gy = b DIV 8) set
+    * iff pixel(sample(gx+1), sample(gy)) > pixel(sample(gx), sample(gy)),
+    * where pixel(x, y) = ascii byte at (x + y·7) mod len and the sample
+    * lattice is the 9×8 floor grid — integer arithmetic both engines
+    * evaluate identically (prototyped value-equal against a scalar
+    * reference before wiring). Bit 63 must be the min-long literal:
+    * DuckDB's (1::BIGINT << 63) raises Out of Range. */
+  private val phashExprSql: String =
+    "CAST(list_sum(list_transform(range(0, 64), b -> " +
+      "CASE WHEN ascii(substr(text, CAST((((b % 8 + 1) * w // 9) + ((b // 8) * h // 8) * 7) % len AS INT) + 1, 1)) " +
+      "> ascii(substr(text, CAST((((b % 8) * w // 9) + ((b // 8) * h // 8) * 7) % len AS INT) + 1, 1)) " +
+      "THEN (CASE WHEN b = 63 THEN (-9223372036854775807::BIGINT - 1) ELSE (1::BIGINT << b) END) " +
+      "ELSE 0::BIGINT END)) AS BIGINT)"
+
+  /** The q209/q210 image fixture: image-typed rows of the synthetic
+    * media table whose source document is pure ASCII (byte length =
+    * char length — the precondition for the oracle's ascii(substr(...))
+    * pixel replay; the current corpus is entirely ASCII, so this is a
+    * regen guard, not a filter). The ASCII semi-join runs BEFORE any
+    * decode so non-replayable rows never cost codec work. */
+  /** Materialize a synthesized media frame once (r17 optimization round):
+    * the perceptual pair/search entries derive BOTH a direct branch and a
+    * resize/transcode-variant branch from the same synthesized rows, and
+    * without a cut each branch re-runs the codec ENCODE pipeline (the
+    * before-plans show the documents scan + encode subtree twice under
+    * the union). localCheckpoint keeps the blobs executor-local — no
+    * payload crosses an exchange, the same discipline as the q82 md5
+    * cut; the Bench inter-entry unpersist releases the blocks. */
+  private def cutMedia(ds: Dataset[Multimodal.MediaRow]): Dataset[Multimodal.MediaRow] =
+    Checkpoints.cut(ds.toDF(), eager = false)
+      .as(org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
+
+  private def phashAsciiImages(spark: SparkSession,
+                               dir: String): Dataset[Multimodal.MediaRow] = {
+    val media = Multimodal.syntheticMedia(spark, dir) // registers documents
+    val ascii = spark.table("documents")
+      .filter(length(col("text")) === octet_length(col("text")))
+      .select(col("doc_id").as("media_id"))
+    media.filter(col("media_type") === "image")
+      .join(broadcast(ascii), Seq("media_id"), "left_semi")
+      .as(org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
+  }
+
+  /** q211/q213's audio fixture: audio-typed rows of the synthetic media
+    * table whose source document is pure ASCII and ≥ 65 bytes — the
+    * aHash lattice precondition (shorter streams have empty floor
+    * windows, which the oracle's list_sum reads as NULL); both
+    * preconditions mirrored in the `aud` CTE. */
+  private def ahashAsciiAudio(spark: SparkSession,
+                              dir: String): Dataset[Multimodal.MediaRow] = {
+    val media = Multimodal.syntheticMedia(spark, dir) // registers documents
+    val ok = spark.table("documents")
+      .filter(length(col("text")) === octet_length(col("text")) &&
+        octet_length(col("text")) >= 65)
+      .select(col("doc_id").as("media_id"))
+    media.filter(col("media_type") === "audio")
+      .join(broadcast(ok), Seq("media_id"), "left_semi")
+      .as(org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
+  }
+
+  /** q212/q214's video fixture — ASCII precondition only (the pixel
+    * replay indexes bytes; every frame count the generator emits is
+    * ≥ 2, no length bound needed beyond non-empty). */
+  private def vhashAsciiVideo(spark: SparkSession,
+                              dir: String): Dataset[Multimodal.MediaRow] = {
+    val media = Multimodal.syntheticMedia(spark, dir)
+    val ok = spark.table("documents")
+      .filter(length(col("text")) === octet_length(col("text")) &&
+        octet_length(col("text")) >= 1)
+      .select(col("doc_id").as("media_id"))
+    media.filter(col("media_type") === "video")
+      .join(broadcast(ok), Seq("media_id"), "left_semi")
+      .as(org.apache.spark.sql.Encoders.product[Multimodal.MediaRow])
+  }
+
+  /** q211/q213's shared oracle CTE: the audio-typed ASCII documents with
+    * the aHash length precondition. */
+  private val ahashAudCte: String =
+    "aud AS (SELECT doc_id, text, strlen(text) AS len FROM documents " +
+      "WHERE doc_id % 3 = 1 AND length(text) = strlen(text) AND strlen(text) >= 65)"
+
+  /** The aHash64 replay over `aud`: the synthetic audio's PCM samples
+    * ARE the document bytes (`Multimodal.syntheticMedia` →
+    * `encodeWav(8000, text)`), so window k's sum is a byte-range
+    * list_sum on the floor lattice and bit b compares windows b+1 and b
+    * (1-based list indices b+2 / b+1). len ≥ 65 (the CTE guard) keeps
+    * every window non-empty. Bit 63 spelled as min-long (cf.
+    * phashExprSql). */
+  private val ahashSumsCte: String =
+    "aws AS (SELECT doc_id, list_transform(range(0, 65), k -> " +
+      "list_sum(list_transform(range(k * len // 65, (k + 1) * len // 65), " +
+      "i -> CAST(ascii(substr(text, CAST(i AS INT) + 1, 1)) AS BIGINT)))) AS s FROM aud)"
+
+  private val ahashExprSql: String =
+    "CAST(list_sum(list_transform(range(0, 64), b -> " +
+      "CASE WHEN s[CAST(b AS INT) + 2] > s[CAST(b AS INT) + 1] " +
+      "THEN (CASE WHEN b = 63 THEN (-9223372036854775807::BIGINT - 1) ELSE (1::BIGINT << b) END) " +
+      "ELSE 0::BIGINT END)) AS BIGINT)"
+
+  /** q212/q214's shared oracle CTE: the video-typed ASCII documents with
+    * the synthetic generator's dimensions (w = 4 + id%9, h = 3 + id%5,
+    * nf = 2 + id%4 — `Multimodal.syntheticMedia`'s one spelling). */
+  private val vhashVidCte: String =
+    "vid AS (SELECT doc_id, text, strlen(text) AS len, " +
+      "4 + doc_id % 9 AS w, 3 + doc_id % 5 AS h, 2 + doc_id % 4 AS nf " +
+      "FROM documents WHERE doc_id % 3 = 2 AND length(text) = strlen(text) AND strlen(text) >= 1)"
+
+  /** The vHash64 replay over `vid`: frame f's pixel(x, y) is
+    * text[((x + f) + y·7) mod len] (the generator's px(x + f, y)), the
+    * 9×8 sample lattice is the dHash floor grid, samples are SUMMED over
+    * frames with a nested lambda, and bit b compares the summed right
+    * and left samples. */
+  private val vhashExprSql: String =
+    "CAST(list_sum(list_transform(range(0, 64), b -> " +
+      "CASE WHEN " +
+      "list_sum(list_transform(range(0, nf), f -> CAST(ascii(substr(text, " +
+      "CAST((((b % 8 + 1) * w // 9 + f) + ((b // 8) * h // 8) * 7) % len AS INT) + 1, 1)) AS BIGINT))) " +
+      "> list_sum(list_transform(range(0, nf), f -> CAST(ascii(substr(text, " +
+      "CAST((((b % 8) * w // 9 + f) + ((b // 8) * h // 8) * 7) % len AS INT) + 1, 1)) AS BIGINT))) " +
+      "THEN (CASE WHEN b = 63 THEN (-9223372036854775807::BIGINT - 1) ELSE (1::BIGINT << b) END) " +
+      "ELSE 0::BIGINT END)) AS BIGINT)"
+
+  /** The combination-banding replay over a `ph(media_id, phash)` CTE —
+    * q210's tail (packed combo keys → bucket cap → min-combo single
+    * emission → exact hamming), factored so the image/audio/video
+    * planted-pair replays share one spelling. `extraWhere` restricts the
+    * final pair set (the q217/q218 cross forms); `bszExpr` is the
+    * bucket-occupancy window (combined COUNT(*) by default;
+    * existing-side-only CASE-sum for q218's stateless streaming
+    * contract — cf. simhash32ReplaySql). */
+  private def phashBandingReplaySql: String = phashBandingReplaySql("")
+
+  private def phashBandingReplaySql(extraWhere: String): String =
+    phashBandingReplaySql("COUNT(*) OVER (PARTITION BY j, ckey)", extraWhere)
+
+  private def phashBandingReplaySql(bszExpr: String, extraWhere: String): String =
+    phashBandingReplaySql(bszExpr, extraWhere,
+      graft.operators.TextDedup.SimhashIntact, maxHamming = 3)
+
+  private def phashBandingReplaySql(bszExpr: String, extraWhere: String,
+                                    intact: Int, maxHamming: Int): String = {
+    val chunkBits = 64 / graft.operators.TextDedup.SimhashChunks
+    val nChunks = graft.operators.TextDedup.SimhashChunks
+    val mask = (1L << chunkBits) - 1
+    val comboVals = graft.operators.TextDedup.simhashCombosOf(intact).zipWithIndex
+      .map { case (cs, j) => s"($j, ${cs.mkString("[", ", ", "]")})" }.mkString(", ")
+    val minCombo = graft.operators.TextDedup.simhashMinComboByMaskOf(intact)
+      .mkString("[", ", ", "]")
+    s"combos AS (SELECT * FROM (VALUES $comboVals) AS x(j, cs)), " +
+      "chunks0 AS (SELECT media_id, phash, j, " +
+      s"CAST(list_sum(list_transform(range(0, $intact), " +
+      s"i -> ((phash >> ($chunkBits * cs[i+1])) & $mask) * (1::BIGINT << ($chunkBits * i)))) AS BIGINT) AS ckey " +
+      "FROM ph, combos), " +
+      s"chunks AS (SELECT *, $bszExpr AS bsz FROM chunks0), " +
+      "pairs AS (SELECT a.media_id AS id_a, b.media_id AS id_b, a.phash AS sa, b.phash AS sb " +
+      "FROM chunks a JOIN chunks b ON a.j = b.j AND a.ckey = b.ckey AND a.media_id < b.media_id " +
+      s"WHERE a.bsz <= ${graft.operators.TextDedup.DefaultMaxBucketSize} " +
+      s"AND a.j = ($minCombo)[CAST(list_sum(list_transform(range(0, $nChunks), " +
+      s"c -> CASE WHEN ((xor(a.phash, b.phash) >> ($chunkBits * c)) & $mask) = 0 THEN (1 << c) ELSE 0 END)) AS INT) + 1]) " +
+      "SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming " +
+      s"FROM pairs WHERE bit_count(xor(sa, sb)) <= $maxHamming$extraWhere " +
+      "ORDER BY id_a, id_b LIMIT 100"
+  }
+
+  def entries: Seq[Entry] = Seq(
+    // Multimodal decode/feature pipeline (stubbed codec, real plumbing) — rows-only
+    Entry("q50_multimodal", { (spark, dir) =>
+      Multimodal.decodeFeatures(Multimodal.syntheticMedia(spark, dir))
+        .toDF()
+        .select("media_id", "media_type", "width", "height", "n_frames")
+        .orderBy("media_id").limit(100)
+    }, None),
+    // Perceptual image hash (round 14 — the brief's multimodal modality
+    // gets a similarity signature, not just byte-exact dedup): every
+    // image row of the synthetic media table is ENCODED as a real
+    // BMP/PNG container, decoded back through the real codecs, and
+    // dHash64'd over the reconstructed pixel grid. The oracle recomputes
+    // the hash straight from the document text bytes (the pixel source),
+    // so a hash match proves the ENTIRE container round-trip — zlib
+    // INFLATE, filter reversal, row order, channel averaging — is
+    // pixel-exact, the q83 discipline applied to binary media. ASCII
+    // filter: the oracle reads pixel bytes via ascii(substr(...)), valid
+    // only where byte length = char length (currently the whole corpus;
+    // the filter is the regen guard).
+    // round 14, q209: the dHash recomputed straight from the document
+    // text bytes — the synthetic image's pixel(x, y) is
+    // text[(x + y·7) mod len], the 9×8 sample lattice is floor
+    // arithmetic, and bit b compares the two adjacent samples. A match
+    // proves the Spark side's BMP/PNG encode → real-codec decode →
+    // pixel-grid dHash round-trip is pixel-exact. ascii(substr) reads
+    // BYTES only on ASCII text — the img CTE's strlen guard (mirrored
+    // by the Spark side's octet_length semi-join). Bit 63 is spelled
+    // as min-long (DuckDB's 1<<63 throws); summing disjoint bit values
+    // through HUGEINT then casting back is exact two's-complement.
+    Entry("q209_phash", { (spark, dir) =>
+      Multimodal.phashFeatures(phashAsciiImages(spark, dir))
+        .orderBy("media_id").limit(100)
+    }, Some(_ =>
+      (s"WITH $phashImgCte " +
+        s"SELECT doc_id AS media_id, $phashExprSql AS phash FROM img " +
+        "ORDER BY media_id LIMIT 100"))),
+    // Perceptual near-dup pairs (round 14): originals ∪ planted
+    // integer-lattice resizes (18×16 = 2× the 9×8 dHash sample lattice ⇒
+    // dHash-invariant by the floor arithmetic — the variant is a
+    // different container byte stream with the SAME perceptual hash),
+    // banded with the text-SimHash combination machinery. The DuckDB
+    // text replays dHash from text bytes, duplicates it at the variant
+    // offset, and mirrors banding + cap + min-combo — hash-checking
+    // decode → resize → re-encode → decode → dHash → banding end to end.
+    // round 14, q210: q209's hash duplicated at the variant offset
+    // (the 18×16 integer-lattice resize is dHash-invariant — the
+    // planted-pair identity the Spark pipeline must reproduce through
+    // decode → resample → re-encode → decode), then the q83
+    // combination-banding replay verbatim at 8-bit chunks: packed
+    // combo keys, bucket cap, min-combo single emission, exact
+    // hamming.
+    Entry("q210_phash_pairs", { (spark, dir) =>
+      val imgs = cutMedia(phashAsciiImages(spark, dir))
+      val variants = offsetVariantIds(Multimodal.resizeMedia(imgs, 18, 16))
+      Multimodal.phashPairs(Multimodal.phashFeatures(imgs.unionAll(variants)))
+        .orderBy("id_a", "id_b").limit(100)
+    }, Some(_ =>
+      (s"WITH $phashImgCte, " +
+        s"ph0 AS (SELECT doc_id AS media_id, $phashExprSql AS phash FROM img), " +
+        s"ph AS (SELECT media_id, phash FROM ph0 UNION ALL SELECT media_id + $PhashVariantOffset, phash FROM ph0), " +
+        phashBandingReplaySql))),
+    // Audio perceptual hash (round 14, completing the brief's modality
+    // set): 64-bit envelope-sum gradient over the REAL-decoded PCM
+    // stream (aHash64 — 65 floor-lattice windows, bit = right sum >
+    // left sum). The DuckDB text recomputes the hash straight from the
+    // document bytes (the synthetic WAV's samples ARE the text bytes) —
+    // a match proves WAV encode → chunk-walk decode → envelope hash is
+    // sample-exact.
+    // round 14, q211: the aHash recomputed straight from the document
+    // bytes — the synthetic WAV's PCM samples ARE the text bytes, so
+    // the 65 floor-lattice window sums and the gradient bits replay as
+    // pure integer arithmetic. A match proves WAV encode → chunk-walk
+    // decode → envelope hash is sample-exact.
+    Entry("q211_ahash", { (spark, dir) =>
+      Multimodal.ahashFeatures(ahashAsciiAudio(spark, dir))
+        .orderBy("media_id").limit(100)
+    }, Some(_ =>
+      (s"WITH $ahashAudCte, $ahashSumsCte " +
+        s"SELECT doc_id AS media_id, $ahashExprSql AS ahash FROM aws " +
+        "ORDER BY media_id LIMIT 100"))),
+    // Video perceptual hash (round 14): 64-bit cross-frame lattice-sum
+    // gradient over the REAL-decoded AVI frames (vHash64 — the image
+    // dHash's 9×8 lattice per frame, sums across frames). DuckDB
+    // replays pixel(x, y, f) from the text bytes with a nested lambda.
+    // round 14, q212: the vHash replayed from the text bytes — frame
+    // f's pixel(x, y) is text[((x + f) + y·7) mod len], sampled on the
+    // dHash lattice and summed over frames with a nested lambda.
+    Entry("q212_vhash", { (spark, dir) =>
+      Multimodal.vhashFeatures(vhashAsciiVideo(spark, dir))
+        .orderBy("media_id").limit(100)
+    }, Some(_ =>
+      (s"WITH $vhashVidCte " +
+        s"SELECT doc_id AS media_id, $vhashExprSql AS vhash FROM vid " +
+        "ORDER BY media_id LIMIT 100"))),
+    // Audio perceptual near-dup pairs (round 14): originals ∪ planted
+    // 8→16-bit PCM transcodes (every container byte differs, the
+    // normalized sample stream is identical ⇒ aHash-invariant), banded
+    // with the shared SimHash combination machinery. The q210 recipe on
+    // the audio modality.
+    // round 14, q213: q211's hash duplicated at the variant offset
+    // (the 8→16-bit PCM transcode is aHash-invariant — the planted-
+    // pair identity the Spark pipeline must reproduce through decode →
+    // re-encode → decode), then the shared banding replay.
+    Entry("q213_ahash_pairs", { (spark, dir) =>
+      val aud = cutMedia(ahashAsciiAudio(spark, dir))
+      val variants = offsetVariantIds(Multimodal.transcodeWav16(aud))
+      Multimodal.phashPairs(
+          Multimodal.ahashFeatures(aud.unionAll(variants)), hashCol = "ahash")
+        .orderBy("id_a", "id_b").limit(100)
+    }, Some(_ =>
+      (s"WITH $ahashAudCte, $ahashSumsCte, " +
+        s"ph0 AS (SELECT doc_id AS media_id, $ahashExprSql AS phash FROM aws), " +
+        s"ph AS (SELECT media_id, phash FROM ph0 UNION ALL SELECT media_id + $PhashVariantOffset, phash FROM ph0), " +
+        phashBandingReplaySql))),
+    // Video perceptual near-dup pairs (round 14): originals ∪ planted
+    // per-frame 18×16 integer-lattice resizes (the dHash floor identity
+    // applied frame-wise ⇒ vHash-invariant). Round 16: banded at the
+    // VIDEO point — 3-of-8 combos (same 56-combo fan-out), hamming ≤ 5
+    // with exact pigeonhole completeness — the ham-≤3 radius measured
+    // 0.72 noise-pair recall (Multimodal.VhashIntact scaladoc).
+    // round 14, q214: q212's hash duplicated at the variant offset
+    // (the per-frame 18×16 integer-lattice resize is vHash-invariant),
+    // then the shared banding replay AT THE VIDEO POINT (round 16:
+    // 3-of-8 combos, hamming ≤ 5 — Multimodal.VhashIntact, moved in
+    // lockstep with the entry).
+    Entry("q214_vhash_pairs", { (spark, dir) =>
+      val vid = cutMedia(vhashAsciiVideo(spark, dir))
+      val variants = offsetVariantIds(Multimodal.resizeVideo(vid, 18, 16))
+      Multimodal.phashPairs(
+          Multimodal.vhashFeatures(vid.unionAll(variants)), hashCol = "vhash",
+          maxHamming = Multimodal.VhashMaxHamming, intact = Multimodal.VhashIntact)
+        .orderBy("id_a", "id_b").limit(100)
+    }, Some(_ =>
+      (s"WITH $vhashVidCte, " +
+        s"ph0 AS (SELECT doc_id AS media_id, $vhashExprSql AS phash FROM vid), " +
+        s"ph AS (SELECT media_id, phash FROM ph0 UNION ALL SELECT media_id + $PhashVariantOffset, phash FROM ph0), " +
+        phashBandingReplaySql("COUNT(*) OVER (PARTITION BY j, ckey)", "",
+          graft.operators.Multimodal.VhashIntact,
+          graft.operators.Multimodal.VhashMaxHamming)))),
+    // Perceptual similarity SEARCH (round 14): hamming top-k over the
+    // image corpus via multi-index hashing (Norouzi et al. 2012) —
+    // disjoint 8-bit chunk indexes, pigeonhole-exact for neighbors at
+    // hamming ≤ 7, capped posting lists, keys-only exchange, exact
+    // (hamming, id) ranking. Queries = the resize variants; each one's
+    // top-1 is its original at hamming 0. Extends the similarity-search
+    // tier (q44/q45/q53) to the media modalities.
+    // round 14, q219: the multi-index hamming top-k replayed literally
+    // — chunk indexes from the same shift-and-mask arithmetic (DuckDB's
+    // masked shift agrees with Spark's unsigned shift on every chunk,
+    // incl. bit 63), capped posting lists, DISTINCT candidates, exact
+    // (hamming, media_id) row_number ranking.
+    Entry("q219_phash_topk", { (spark, dir) =>
+      val imgs = cutMedia(phashAsciiImages(spark, dir))
+      val corpus = Multimodal.phashFeatures(imgs)
+      val queries = Multimodal.phashFeatures(
+          offsetVariantIds(Multimodal.resizeMedia(imgs, 18, 16)))
+        .select(col("media_id").as("query_id"), col("phash"))
+      Multimodal.phashTopK(corpus, queries, k = 3,
+          chunks = phashChunksFor(spark, dir))
+        .orderBy("query_id", "rank").limit(100)
+    }, Some { p =>
+      val cap = graft.operators.TextDedup.DefaultMaxBucketSize
+      val cb = 64 / p.phashChunks                 // substring width
+      val cm = (BigInt(1) << cb) - 1            // substring mask (fits BIGINT: cb <= 32)
+      (s"WITH $phashImgCte, " +
+        s"ph0 AS (SELECT doc_id AS media_id, $phashExprSql AS phash FROM img), " +
+        s"q AS (SELECT media_id + $PhashVariantOffset AS query_id, phash FROM ph0), " +
+        s"ck AS (SELECT media_id, phash, t.c AS c, (phash >> ($cb * t.c)) & $cm AS v FROM ph0, range(0, ${p.phashChunks}) t(c)), " +
+        "bsz AS (SELECT c, v, COUNT(*) AS n FROM ck GROUP BY c, v), " +
+        s"qk AS (SELECT query_id, phash, t.c AS c, (phash >> ($cb * t.c)) & $cm AS v FROM q, range(0, ${p.phashChunks}) t(c)), " +
+        "cand AS (SELECT DISTINCT qk.query_id, ck.media_id FROM qk " +
+        "JOIN ck ON qk.c = ck.c AND qk.v = ck.v " +
+        s"JOIN bsz ON bsz.c = ck.c AND bsz.v = ck.v WHERE bsz.n <= $cap), " +
+        "scored AS (SELECT cand.query_id, cand.media_id, " +
+        "CAST(bit_count(xor(q.phash, p.phash)) AS BIGINT) AS hamming " +
+        "FROM cand JOIN q ON q.query_id = cand.query_id JOIN ph0 p ON p.media_id = cand.media_id), " +
+        s"r AS (SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY hamming, media_id) AS rnk " +
+        s"FROM scored WHERE hamming <= ${p.phashChunks - 1}) " +
+        "SELECT query_id, media_id, hamming, CAST(rnk AS BIGINT) AS rank " +
+        "FROM r WHERE rnk <= 3 ORDER BY query_id, rank LIMIT 100")
+    }),
+    // Incremental perceptual dedup (round 14): arriving re-encoded
+    // copies (the 18×16 resizes) checked against the stored image
+    // corpus WITHOUT re-banding it — the media family's daily-crawl
+    // twin, sharing the text machinery's cross generator. Oracle = the
+    // q210 replay restricted to cross pairs.
+    // round 14, q217: the q210 replay restricted to cross pairs — the
+    // incremental media twin's oracle (combined cap = the symmetric
+    // bsz; originals sit below the variant offset, so a<b restricted
+    // to cross IS (existing, incoming)).
+    Entry("q217_incremental_phash", { (spark, dir) =>
+      val imgs = cutMedia(phashAsciiImages(spark, dir))
+      val variants = offsetVariantIds(Multimodal.resizeMedia(imgs, 18, 16))
+      Multimodal.phashCrossPairs(
+          Multimodal.phashFeatures(imgs), Multimodal.phashFeatures(variants))
+        .orderBy("id_a", "id_b").limit(100)
+    }, Some(_ =>
+      (s"WITH $phashImgCte, " +
+        s"ph0 AS (SELECT doc_id AS media_id, $phashExprSql AS phash FROM img), " +
+        s"ph AS (SELECT media_id, phash FROM ph0 UNION ALL SELECT media_id + $PhashVariantOffset, phash FROM ph0), " +
+        phashBandingReplaySql(
+          s" AND id_a < $PhashVariantOffset AND id_b >= $PhashVariantOffset")))),
+    // Streaming perceptual ingest (round 14): arriving image files
+    // hashed PER MICRO-BATCH (encode → resize → decode → dHash inside
+    // the batch's own partition pass — blobs never leave it) and
+    // checked against the static corpus combo-key index. Stateless (the
+    // q216 contract: corpus-side cap, min-combo uniqueness — no state
+    // store), completing the media family's {batch, incremental,
+    // streaming} row.
+    // round 14, q218: the streaming contract replayed exactly — the
+    // stateless per-batch check caps on CORPUS-side occupancy only
+    // (the q216 rule), so bsz counts originals (below the variant
+    // offset) alone.
+    Entry("q218_stream_phash", { (spark, dir) =>
+      val imgs = phashAsciiImages(spark, dir) // registers documents
+      val docs = Tables.table(spark, dir, "documents")
+      val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
+        .filter(col("doc_id") % 3 === 0 &&
+          length(col("text")) === octet_length(col("text")))
+      val streamVariants = offsetVariantIds(Multimodal.resizeMedia(
+          Multimodal.syntheticMediaRows(stream)
+            .filter(col("media_type") === "image")
+            .as(org.apache.spark.sql.Encoders.product[Multimodal.MediaRow]), 18, 16))
+      graft.streaming.StreamOps.runAppend(spark,
+          Multimodal.phashCrossPairs(
+            Multimodal.phashFeatures(imgs),
+            Multimodal.phashFeatures(streamVariants)),
+          s"q218_mem_${math.abs(dir.hashCode)}")
+        .orderBy("id_a", "id_b").limit(100)
+    }, Some(_ =>
+      (s"WITH $phashImgCte, " +
+        s"ph0 AS (SELECT doc_id AS media_id, $phashExprSql AS phash FROM img), " +
+        s"ph AS (SELECT media_id, phash FROM ph0 UNION ALL SELECT media_id + $PhashVariantOffset, phash FROM ph0), " +
+        phashBandingReplaySql(
+          s"SUM(CASE WHEN media_id < $PhashVariantOffset THEN 1 ELSE 0 END) OVER (PARTITION BY j, ckey)",
+          s" AND id_a < $PhashVariantOffset AND id_b >= $PhashVariantOffset")))),
+  )
+}

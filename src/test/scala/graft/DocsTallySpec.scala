@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * declares. Adding a query without bumping the docs fails this spec —
   * the tally discipline is enforced by the build, not a checklist.
   *
-  * Pure-text spec: `SparkEntry.queries`/`oracleSql` are lazy maps that
-  * never touch a SparkSession until invoked, so no Spark boot here.
+  * Pure-text spec: the tallies count `SparkEntry.entries`, whose builds
+  * and oracle texts never touch a SparkSession until invoked, so no Spark
+  * boot here.
   */
 class DocsTallySpec extends AnyFunSuite {
 
@@ -30,30 +31,25 @@ class DocsTallySpec extends AnyFunSuite {
     ms.head.group(1).toInt
   }
 
-  private val declaredOracle = SparkEntry.oracleSql.size
-  private val declaredRowsOnly = SparkEntry.queries.size - declaredOracle
-
-  test("oracleSql keys all declare a runnable query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql entries without a queries entry: $orphans")
-  }
+  private val declaredOracle = SparkEntry.entries.count(_.oracle.isDefined)
+  private val declaredRowsOnly = SparkEntry.entries.count(_.oracle.isEmpty)
 
   test("CLAUDE.md's expected gate tally matches SparkEntry.oracleSql") {
     assert(firstInt("CLAUDE.md", """(\d+) pass, 0 fail""".r) === declaredOracle,
-      "CLAUDE.md 'expect \"N pass, 0 fail\"' drifted from SparkEntry.oracleSql.size")
+      "CLAUDE.md 'expect \"N pass, 0 fail\"' drifted from the oracle-checked entry count")
   }
 
   test("verify SKILL.md's expected tallies match SparkEntry") {
     val skill = ".claude/skills/verify/SKILL.md"
     assert(firstInt(skill, """(\d+) pass, 0 fail""".r) === declaredOracle,
-      s"$skill pass tally drifted from SparkEntry.oracleSql.size")
+      s"$skill pass tally drifted from the oracle-checked entry count")
     assert(firstInt(skill, """(\d+) `ROWS-ONLY`""".r) === declaredRowsOnly,
       s"$skill rows-only tally drifted from the declared rows-only count")
   }
 
   test("COVERAGE.md's oracle tally paragraph matches SparkEntry") {
     assert(firstInt("COVERAGE.md", """\*\*Oracle tally:\*\* (\d+) hash-checked""".r) === declaredOracle,
-      "COVERAGE.md oracle tally drifted from SparkEntry.oracleSql.size")
+      "COVERAGE.md oracle tally drifted from the oracle-checked entry count")
     assert(firstInt("COVERAGE.md", """(\d+) rows-only entries""".r) === declaredRowsOnly,
       "COVERAGE.md rows-only tally drifted from the declared rows-only count")
   }
