@@ -62,18 +62,21 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("only Engine.session and ClusterCheck build a SparkSession in src/main") {
-    // every other main opens Engine.session, so its numbers measure the
-    // engine Engine, Verify and the benchmark run; ClusterCheck needs a
+    // every other main, and every spec (through TestSpark), opens
+    // Engine.session, so its numbers and assertions are about the engine
+    // Engine, Verify and the benchmark run; ClusterCheck needs a
     // local-cluster master and executor JVM options Engine.session does
-    // not take
-    val root = java.nio.file.Paths.get("src/main/scala")
+    // not take. src/test is scanned too; the needle is split so this
+    // file does not match itself.
+    val needle = "SparkSession" + ".builder()"
+    val root = java.nio.file.Paths.get("src")
     val files = java.nio.file.Files.walk(root)
     val builders =
       try files.iterator().asScala
         .filter(_.toString.endsWith(".scala"))
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder()"))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(needle))
         .map(p => root.relativize(p).toString).toSet
       finally files.close()
-    assert(builders == Set("graft/Engine.scala", "graft/tools/ClusterCheck.scala"))
+    assert(builders == Set("main/scala/graft/Engine.scala", "main/scala/graft/tools/ClusterCheck.scala"))
   }
 }

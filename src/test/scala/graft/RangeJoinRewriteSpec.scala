@@ -1,37 +1,15 @@
 package graft
 
-import graft.plans.GraftExtensions
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The optimizer rule must turn the naive non-equi time-range join into a
   * bucketized equi-join (no nested-loop/cartesian operator) without
-  * changing a single row. Uses its own session: extensions bind at
-  * session build time. */
+  * changing a single row. The shared test session is `Engine.session`'s,
+  * so the rule is bound as in production. */
 class RangeJoinRewriteSpec extends AnyFunSuite {
 
-  lazy val spark: SparkSession = {
-    // getOrCreate would silently return another suite's session (without
-    // the extensions) if one is already active — force a fresh session,
-    // then put the previous default back for whoever runs next.
-    val prevDefault = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-ext-test")
-      // production cache size, in case this suite builds the first session
-      .config("spark.sql.codegen.cache.maxEntries", Engine.CodegenCacheEntries.toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    prevDefault.foreach(SparkSession.setDefaultSession)
-    SparkSession.setActiveSession(prevDefault.getOrElse(s))
-    s
-  }
+  lazy val spark: SparkSession = TestSpark.spark
 
   val naiveSql: String =
     "SELECT a.event_id AS l_id, b.event_id AS r_id FROM events a JOIN events b " +
