@@ -22,8 +22,8 @@ import org.apache.spark.sql.types._
   * (matching DuckDB's list_sum(NULL-on-empty) → CASE ELSE 0 rendering —
   * the all-bits-set trap the composed form also guards against).
   *
-  * The composed spelling stays in `TextDedup.portableSimhash32Composed`
-  * as the bit-equality test reference (TierESpec). */
+  * The composed spelling lives in TierESpec as the bit-equality test
+  * reference. */
 case class PortableSimhash32(child: Expression) extends UnaryExpression {
 
   // containsNull arrays are ACCEPTED (the composed conv/cast spelling

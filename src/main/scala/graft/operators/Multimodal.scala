@@ -41,12 +41,6 @@ object Multimodal {
   case class MediaFeatures(media_id: Long, media_type: String, width: Int,
                            height: Int, n_frames: Int, mean_intensity: Double)
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("media_type", StringType, nullable = false),
-    StructField("content", BinaryType, nullable = false),
-    StructField("source", StringType, nullable = false)))
-
   /** Deterministic fake codec — STUB standing in for a real decoder.
     * Derives "decoded" properties purely from the bytes so every stage
     * downstream is testable and reproducible. */
@@ -64,10 +58,6 @@ object Multimodal {
       val mean = if (bytes.isEmpty) 0.0 else bytes.map(_ & 0xff).sum.toDouble / bytes.length
       MediaFeatures(row.media_id, row.media_type, width, height, frames, mean)
     }
-
-    /** Fake resize: recompute deterministic features at a target size. */
-    def resize(f: MediaFeatures, w: Int, h: Int): MediaFeatures =
-      f.copy(width = w, height = h)
   }
 
   /** REAL pure-JVM container codecs (round 10): byte-exact encoders and
@@ -1137,14 +1127,6 @@ object Multimodal {
     }
   }
 
-  /** Frame-sample stage: every `stride`-th frame index per video/audio item,
-    * as (media_id, frame_idx) — a generator (posexplode) over the decoded
-    * frame count, no blob movement. */
-  def sampleFrames(features: Dataset[MediaFeatures], stride: Int): DataFrame =
-    features.toDF()
-      .select(col("media_id"),
-        explode(sequence(lit(0), col("n_frames") - 1, lit(stride))).as("frame_idx"))
-
   /** Content-level resize stage (round 10, REAL): every image container
     * is decoded, nearest-neighbor resampled and re-encoded in its own
     * family per partition; non-image rows pass through. Derived frames
@@ -1152,13 +1134,5 @@ object Multimodal {
   def resizeMedia(media: Dataset[MediaRow], w: Int, h: Int): Dataset[MediaRow] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.map(RealCodec.resizeImage(_, w, h)))
-  }
-
-  /** Feature-level resize (geometry-only metadata rewrite — kept for
-    * pipelines that carry features without content; the content-level
-    * stage above is the real one). */
-  def resizeAll(features: Dataset[MediaFeatures], w: Int, h: Int): Dataset[MediaFeatures] = {
-    import features.sparkSession.implicits._
-    features.mapPartitions(_.map(FakeCodec.resize(_, w, h)))
   }
 }

@@ -34,38 +34,6 @@ object Scale {
     saltedBig.join(replicated, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
-  /** Two-phase (partial → final) aggregation for skewed group keys:
-    * count/sum-style aggregates first per (key, salt), then per key.
-    * Catalyst's own partial aggregation usually suffices; this shape is
-    * for UDAF-like aggregations with expensive per-group state. */
-  def saltedCountSum(df: DataFrame, key: String, valueCol: String,
-                     saltBuckets: Int): DataFrame =
-    df.withColumn("__salt", rowSalt(df.columns.map(df(_)).toSeq, saltBuckets))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__n"), sum(col(valueCol)).as("__s"))
-      .groupBy(col(key))
-      .agg(sum("__n").as("n"), sum("__s").as("total"))
-
-  /** Write a table bucketed + sorted on the join key: downstream equi-joins
-    * and aggregations on `keys` skip the shuffle entirely (bucket pruning +
-    * sort-merge without exchange). The standard prep for fact tables that
-    * join on the same key every day. */
-  def writeBucketed(df: DataFrame, tableName: String, keys: Seq[String],
-                    numBuckets: Int): Unit = {
-    df.write
-      .mode("overwrite")
-      .bucketBy(numBuckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .format("parquet")
-      .saveAsTable(tableName)
-    ()
-  }
-
-  /** Co-partition two frames on the join key ahead of repeated joins —
-    * the in-session analogue of bucketing. */
-  def coPartition(a: DataFrame, b: DataFrame, key: String, partitions: Int): (DataFrame, DataFrame) =
-    (a.repartition(partitions, col(key)), b.repartition(partitions, col(key)))
-
   /** Scale-safe NTILE: `NTILE(n) OVER (ORDER BY x)` forces every row into
     * ONE partition (Spark warns exactly this). For billions of rows the
     * distributed equivalent is: compute the n-1 quantile boundaries once

@@ -1035,19 +1035,8 @@ object Similarity {
     // passes a few hundred centroids (the portableBucketCols failure
     // class); value-identical for non-null vectors incl. the
     // length-mismatch edge (NativeExprPropSpec pins it vs the composed
-    // reference below)
+    // reference it keeps)
     graft.functions.ArgmaxIntDot.column(vec, cents)
-
-  /** The composed array_max spelling — kept as the cross-check
-    * reference for [[semAssignExpr]]'s native expression. */
-  private[graft] def semAssignExprComposed(vec: Column, cents: Seq[(Long, Seq[Long])]): Column = {
-    require(cents.nonEmpty, "semAssignExpr needs at least one centroid")
-    val entries = cents.map { case (cid, cv) =>
-      struct(intDot(vec, typedlit(cv)).as("s"), lit(-cid).as("negcid"))
-    }
-    val best = array_max(array(entries: _*))
-    struct((-best.getField("negcid")).as("cid"), best.getField("s").as("s"))
-  }
 
   /** Collect a centroid frame to driver literals for `semAssignExpr` —
     * bounded by the nlist clamp (a manifest-sized collect, the allowed

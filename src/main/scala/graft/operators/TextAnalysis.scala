@@ -81,15 +81,6 @@ object TextAnalysis {
           .otherwise(floor((aggregate(t, lit(0), (acc, w) => acc + length(w)) * 10) / size(t))))
   }
 
-  /** Composite 0-100 quality score from the integer metrics. */
-  def qualityScore(df: DataFrame, textCol: String): DataFrame =
-    qualityMetrics(df, textCol)
-      .withColumn("quality",
-        greatest(lit(0), least(lit(100),
-          col("diversity_pct")
-            - when(col("n_tokens") < 10, lit(40)).otherwise(lit(0))
-            - when(col("n_tokens") > 10000, lit(20)).otherwise(lit(0)))))
-
   /** Document fingerprint: min-k sketch of shingle hashes (winnowing-style).
     * Sort the distinct shingle xxhash64 values, keep the k smallest, hash
     * the sketch to one 64-bit fingerprint. Deterministic; near-identical

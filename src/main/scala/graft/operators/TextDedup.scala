@@ -263,20 +263,13 @@ object TextDedup {
     * (whose fused xxhash64 stays the production path). Round 9: computed
     * by the fused native `PortableShingleHash` expression (digest bytes →
     * long, no n-gram string / hex-render / base-16 parse per shingle —
-    * the composed form below is kept as the test reference and is what
-    * the DuckDB oracles still spell). */
+    * the composed form, which the DuckDB oracles still spell, is the
+    * test reference in TierESpec). */
   def portableShingleHashes(text: Column, n: Int): Column = {
     graft.functions.PortableShingleHash.register(
       org.apache.spark.sql.SparkSession.active)
     call_function("portable_shingle_hash", tokens(text), lit(n))
   }
-
-  /** The composed spelling of `portableShingleHashes` — the exact form
-    * the DuckDB oracle texts replay; kept as the bit-equality reference
-    * for the fused expression (TierESpec). */
-  def portableShingleHashesComposed(text: Column, n: Int): Column =
-    transform(shingles(tokens(text), n),
-      s => conv(substring(md5(s), 1, 8), 16, 10).cast("long"))
 
   /** Span length (in tokens) for exact-substring dedup (q173/q174) —
     * interpolated into both DuckDB texts, cf. PortableShingleN. 8 tokens
@@ -1009,37 +1002,13 @@ object TextDedup {
     * computed by the fused native `PortableSimhash32` expression (one
     * tight loop per row — no 32-wide HOF accumulator array per token;
     * the r9 PortableShingleHash playbook applied to the sign-fold, which
-    * the q83 profile showed dominating). The composed HOF form below is
-    * kept as the bit-equality test reference and is what the q83 DuckDB
-    * text still replays. */
+    * the q83 profile showed dominating). The composed HOF form, which
+    * the q83 DuckDB text still replays, is the bit-equality test
+    * reference in TierESpec. */
   def portableSimhash32(tokenHashes: Column): Column = {
     graft.functions.PortableSimhash32.register(
       org.apache.spark.sql.SparkSession.active)
     call_function("portable_simhash32", tokenHashes)
-  }
-
-  /** The composed HOF spelling of `portableSimhash32` — the exact form
-    * the q83 DuckDB text replays; kept as the bit-equality reference for
-    * the fused expression (TierESpec). */
-  def portableSimhash32Composed(tokenHashes: Column): Column = {
-    // ONE fold over the token hashes with a 32-wide array accumulator
-    // (the per-bit formulation runs 32 separate aggregate folds per row —
-    // measured 3.5× slower at sf0.1); bit b's ±1 weight comes from
-    // h & 2^b, the sign vector collapses against the same powers array
-    val powers = array((0 until 32).map(b => lit(1L << b)): _*)
-    val zeros = array((0 until 32).map(_ => lit(0L)): _*)
-    val sums = aggregate(tokenHashes, zeros,
-      (acc, h) => zip_with(acc, powers,
-        (s, p) => s + when(h.bitwiseAND(p) === p, lit(1L)).otherwise(lit(-1L))))
-    // explicit empty-set sentinel 0, matching the q83 DuckDB text (where
-    // list_sum of an empty list is NULL → each bit's CASE falls to ELSE
-    // 0); without the guard Spark's all-zero sums read as "all bits ≥ 0"
-    // → 0xFFFFFFFF, a silent cross-engine divergence (cf. the explicit
-    // Long.MaxValue case in affineSignature)
-    when(size(tokenHashes) === 0, lit(0L)).otherwise(
-      aggregate(zip_with(sums, powers,
-        (s, p) => when(s >= 0, p).otherwise(lit(0L))),
-        lit(0L), (acc, x) => acc + x))
   }
 
   /** Combination-banding layout shared by BOTH simhash pair generators and

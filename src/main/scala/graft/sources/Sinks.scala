@@ -21,22 +21,6 @@ object Sinks {
     ()
   }
 
-  /** Size-managed parquet: repartition to a target file count first so the
-    * output is neither thousands of tiny files (NN pressure, slow listing)
-    * nor a handful of giant ones (no read parallelism). At scale pick
-    * targetFiles ≈ bytes / 512 MB. */
-  def writeSizedParquet(df: DataFrame, path: String, targetFiles: Int): Unit = {
-    df.repartition(targetFiles).write.mode("overwrite").parquet(path)
-    ()
-  }
-
-  /** Distributed CSV export for results too large to collect (the scale
-    * escape hatch from the reference's driver-side CSV). */
-  def writeCsvDistributed(df: DataFrame, path: String): Unit = {
-    df.write.mode("overwrite").option("header", "true").csv(path)
-    ()
-  }
-
   /** Sharded JSONL export — the training-data interchange format (one
     * JSON object per line; what tokenizer/loader stacks consume).
     * `maxRecordsPerShard` bounds every file via Spark's per-task file

@@ -115,7 +115,7 @@ class NativeExprPropSpec extends AnyFunSuite {
         (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
       }
       read(Similarity.semAssignExpr(col("__v"), cents)) ==
-        read(Similarity.semAssignExprComposed(col("__v"), cents))
+        read(semAssignExprComposed(col("__v"), cents))
     }, "argmax_int_dot")
   }
 
@@ -186,6 +186,16 @@ class NativeExprPropSpec extends AnyFunSuite {
     val aRow = Seq(Tuple1(null: Seq[Long])).toDF("__v")
       .select(Similarity.semAssignExpr(col("__v"), Seq((1L, Seq(1L, 2L, 3L, 4L)))).as("a")).head()
     assert(aRow.isNullAt(0), "argmax_int_dot(NULL) must be NULL")
+  }
+
+  /** The composed array_max spelling of `Similarity.semAssignExpr` — the
+    * cross-check reference for its native expression. */
+  private def semAssignExprComposed(vec: Column, cents: Seq[(Long, Seq[Long])]): Column = {
+    val entries = cents.map { case (cid, cv) =>
+      struct(graft.operators.Similarity.intDot(vec, typedlit(cv)).as("s"), lit(-cid).as("negcid"))
+    }
+    val best = array_max(array(entries: _*))
+    struct((-best.getField("negcid")).as("cid"), best.getField("s").as("s"))
   }
 
   // The composed minhash spellings the native MinHash replaced in

@@ -31,23 +31,6 @@ class ScaleSpec extends AnyFunSuite {
     assert(got == Set(Seq(1L, "a", "x"), Seq(2L, "b", "y"), Seq(99L, "miss", null)))
   }
 
-  test("saltedCountSum equals plain groupBy aggregate") {
-    Tables.register(spark, TestSpark.sf0001)
-    val orders = spark.table("orders")
-    val plain = orders.groupBy("o_custkey")
-      .agg(count(lit(1)).as("n"), sum("o_totalprice").as("total"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100))).toSet
-    val salted = Scale.saltedCountSum(orders, "o_custkey", "o_totalprice", 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), math.round(r.getDouble(2) * 100))).toSet
-    assert(salted == plain)
-  }
-
-  test("coPartition makes both sides hash-partitioned on the key") {
-    val (a, b) = Scale.coPartition(
-      Seq((1L, "a")).toDF("k", "v"), Seq((1L, "b")).toDF("k", "w"), "k", 4)
-    assert(a.rdd.getNumPartitions == 4 && b.rdd.getNumPartitions == 4)
-  }
-
   test("ntileByQuantiles approximates exact NTILE within boundary tolerance") {
     Tables.register(spark, TestSpark.sf0001)
     val monetary = spark.sql(

@@ -24,44 +24,6 @@ class SinksSpec extends AnyFunSuite {
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
-  test("sized parquet writes the requested file count") {
-    val docs = Tables.table(spark, TestSpark.sf0001, "documents")
-    val dir = java.nio.file.Files.createTempDirectory("graft_sized").toString
-    Sinks.writeSizedParquet(docs, dir, targetFiles = 3)
-    val files = new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
-    assert(files == 3)
-    assert(Sources.parquet(spark, dir).count() == docs.count())
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("distributed csv export round-trips row count") {
-    val dim = Tables.table(spark, TestSpark.sf0001, "nation")
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toString
-    Sinks.writeCsvDistributed(dim, dir)
-    assert(Sources.csv(spark, dir).count() == 25)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("csv round-trip is content-exact under hostile strings (commas, quotes, newlines)") {
-    import spark.implicits._
-    val rows = Seq(
-      (1L, "plain"),
-      (2L, "comma, separated, values"),
-      (3L, "a \"quoted\" phrase"),
-      (4L, "line\nbreak and \"q, uote\""),
-      (5L, ""))
-    val df = rows.toDF("id", "s")
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv_hostile").toString
-    Sinks.writeCsvDistributed(df, dir)
-    // read back with the multiLine option hostile newlines require, and an
-    // explicit schema (inferSchema on an empty-string cell would flip types)
-    val back = spark.read.option("header", "true").option("multiLine", "true")
-      .schema(df.schema).csv(dir)
-      .collect().map(r => (r.getLong(0), Option(r.getString(1)).getOrElse(""))).toSet
-    assert(back === rows.toSet, "csv quoting/escaping must round-trip content exactly")
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
   test("json source round-trips content exactly") {
     import spark.implicits._
     val rows = Seq((1L, "plain"), (2L, "uniçode \"quoted\""), (3L, "tab\tand\nnewline"))
