@@ -983,9 +983,11 @@ private[graft] object CurationEntries {
             s"$shardRoot/batch=$batchId", maxRecordsPerShard = 64)
         }
       }
+      // reload the shard root itself: partition discovery adds a `batch`
+      // column, which bandManifest does not select
       val manifest = Checkpoints.cut(
         bandManifest(
-            graft.sources.Sources.jsonl(spark, s"$shardRoot/batch=*", releaseReloadSchema)
+            graft.sources.Sources.jsonl(spark, shardRoot, releaseReloadSchema)
               .withColumn("n_gates", lit(3L)))
           .select("lang", "n_docs", "n_toks", "xor_sig"),
         eager = true)
