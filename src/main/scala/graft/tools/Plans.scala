@@ -40,17 +40,15 @@ object Plans {
       .foldLeft(plan.replace(dir, "$SF_DIR")) { case (s, (re, to)) => s.replaceAll(re, to) }
   }
 
-  private def header(id: String): String = s"\n========== $id =========="
-
   /** Each entry's header line and normalized plan; a build that throws
     * dumps its exception instead, so the check names it like any diff. */
-  private def dump(spark: org.apache.spark.sql.SparkSession, dir: String, ids: Seq[String]): Seq[(String, String)] =
+  private def dump(spark: org.apache.spark.sql.SparkSession, dir: String, ids: Seq[String]): Seq[String] =
     ids.map { id =>
       val plan =
         try SparkEntry.queries(id)(spark, dir).queryExecution
           .explainString(org.apache.spark.sql.execution.FormattedMode)
         catch { case e: Exception => s"FAILED: ${e.getClass.getName}: ${e.getMessage}" }
-      id -> s"${header(id)}\n${normalize(plan, dir)}"
+      s"\n========== $id ==========\n${normalize(plan, dir)}"
     }
 
   /** Sections of a snapshot file, keyed by entry id, in file order. */
@@ -78,14 +76,15 @@ object Plans {
     }
     val fresh = dump(spark, dir, ids)
     spark.stop()
-    if (!check) fresh.foreach { case (_, s) => println(s) }
+    if (!check) fresh.foreach(println)
     else {
       val out = Paths.get("target/plans_snapshot.txt")
+      val text = fresh.mkString("", "\n", "\n")
       Files.createDirectories(out.getParent)
-      Files.writeString(out, fresh.map(_._2).mkString("", "\n", "\n"))
+      Files.writeString(out, text)
       val committed = Paths.get("plans/snapshot.txt")
       val want = if (Files.exists(committed)) sections(Files.readString(committed)) else Nil
-      val got = sections(Files.readString(out))
+      val got = sections(text)
       val firstDiff = want.map(Some(_)).zipAll(got.map(Some(_)), None, None)
         .collectFirst { case (w, g) if w != g => g.orElse(w).get._1 }
       firstDiff match {
