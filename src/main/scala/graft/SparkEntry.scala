@@ -83,7 +83,7 @@ object SparkEntry {
     * the only text-generation path — no mutable interpolation state
     * (the r11 verdict's `lastEmbedBits` trap is deleted: two dirs in
     * one JVM each get their own texts). */
-  private[graft] val embedCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  private val embedCountCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
   private[graft] def embedCountFor(spark: SparkSession, dir: String): Long =
     embedCountCache.computeIfAbsent(dir, d =>
@@ -124,7 +124,7 @@ object SparkEntry {
     * corpus-size-sublinear (the q53 IVF contract). Both Spark entries
     * and both DuckDB texts interpolate the SAME dir-derived value —
     * the embedBitsFor pattern exactly. */
-  private[graft] val semNlistCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val semNlistCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   private[graft] def semNlistFor(spark: SparkSession, dir: String): Int =
     semNlistCache.computeIfAbsent(dir, d =>
@@ -136,7 +136,7 @@ object SparkEntry {
     * replay all read the SAME list. The trainer is deterministic
     * (tie-broken argmax), so the cache is a cost saver, not a semantic
     * dependence; the dir-keyed shape is the embedBitsFor pattern. */
-  private[graft] val bpeMergesCache =
+  private val bpeMergesCache =
     new java.util.concurrent.ConcurrentHashMap[String, Seq[Bpe.Merge]]()
 
   private[graft] def bpeMergesFor(spark: SparkSession, dir: String): Seq[Bpe.Merge] =
@@ -257,7 +257,7 @@ object SparkEntry {
     * posting lists O(1) as n grows (fixed m measured 18.5× wall at 10×);
     * the exactness radius chunks − 1 narrows with scale accordingly.
     * Entry and DuckDB text interpolate the SAME dir-derived value. */
-  private[graft] val phashChunksCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val phashChunksCache = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
 
   private[graft] def phashChunksFor(spark: SparkSession, dir: String): Int =
     phashChunksCache.computeIfAbsent(dir, d => {
@@ -293,7 +293,7 @@ object SparkEntry {
     * unpersist and rebuilds into LocalRelation frames per use. The
     * trainer is deterministic: cache is a cost saver, not a semantic
     * dependence (the bpeMergesFor pattern). */
-  private[graft] val nbModelCache =
+  private val nbModelCache =
     new java.util.concurrent.ConcurrentHashMap[String, NaiveBayes.NbModelData]()
 
   /** Cache key carries a cheap DATA fingerprint (documents.parquet
@@ -301,12 +301,12 @@ object SparkEntry {
     * is regenerated between rounds and tests reuse tmp paths, so a
     * path-only key within one JVM session could silently serve a stale
     * model to q188/q189/q201/q203/q204/q206. */
-  private[graft] def nbCacheKey(dir: String): String = {
+  private def nbCacheKey(dir: String): String = {
     val f = new java.io.File(s"$dir/documents.parquet")
     s"$dir:${f.length}:${f.lastModified}"
   }
 
-  private[graft] def trainSplitNbModel(spark: SparkSession, dir: String): NaiveBayes.NbModel =
+  private def trainSplitNbModel(spark: SparkSession, dir: String): NaiveBayes.NbModel =
     NaiveBayes.modelFromData(spark, nbModelCache.computeIfAbsent(nbCacheKey(dir), _ => {
       val m = NaiveBayes.model(
         Tables.table(spark, dir, "documents").filter(col("doc_id") < IncrementalSplitId),

@@ -11,11 +11,11 @@ import java.nio.file.{Files, Paths}
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default nproc).
   *
   * `Plans --check` is the full-corpus snapshot gate: it dumps every entry,
-  * sorted by id, in one session at sf0.01 on local[4] (whatever the env
-  * says), writes the dump to `target/plans_snapshot.txt` and diffs it
-  * against the committed `plans/snapshot.txt`. It exits non-zero naming
-  * the first entry whose plan differs; copy the fresh dump over the
-  * committed one when a plan change is intended. */
+  * sorted by id, in one session at sf0.01 on local[4], writes the dump to
+  * `target/plans_snapshot.txt` and diffs it against the committed
+  * `plans/snapshot.txt`. It exits non-zero naming the first entry whose
+  * plan differs; copy the fresh dump over the committed one when a plan
+  * change is intended. */
 object Plans {
   /** Rewrites what differs between two sessions' dumps of one plan: the
     * data directory (`$SF_DIR`), the per-session counters — expression
@@ -59,41 +59,47 @@ object Plans {
     }
   }
 
+  /** The snapshot gate; returns the exit code. The data is sf0.01 under
+    * `~/testdata` (where perfbench reads it) and the cores are 4, whatever
+    * the environment says. */
+  private def check(): Int = {
+    val dir = System.getProperty("user.home") + "/testdata/sf0.01"
+    val spark = Engine.session(4)
+    spark.sparkContext.setLogLevel("ERROR")
+    Tables.register(spark, dir)
+    val text = dump(spark, dir, SparkEntry.queries.keys.toSeq.sorted).mkString("", "\n", "\n")
+    spark.stop()
+    val out = Paths.get("target/plans_snapshot.txt")
+    Files.createDirectories(out.getParent)
+    Files.writeString(out, text)
+    val committed = Paths.get("plans/snapshot.txt")
+    val want = if (Files.exists(committed)) sections(Files.readString(committed)) else Nil
+    val got = sections(text)
+    want.map(Some(_)).zipAll(got.map(Some(_)), None, None)
+      .collectFirst { case (w, g) if w != g => g.orElse(w).get._1 } match {
+      case None =>
+        println(s"[plans] ${got.size} entries match $committed")
+        0
+      case Some(id) =>
+        System.err.println(s"[plans] $id differs from $committed (fresh dump: $out; " +
+          s"diff the two, and copy the fresh dump over the snapshot if the change is intended)")
+        1
+    }
+  }
+
   def main(args: Array[String]): Unit = {
-    val check = args.sameElements(Seq("--check"))
-    val dir = if (check) "/root/testdata/sf0.01"
-      else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = if (check) 4
-      else sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
+    if (args.sameElements(Seq("--check"))) sys.exit(check())
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(Runtime.getRuntime.availableProcessors())(_.toInt)
     val spark = Engine.session(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     Tables.register(spark, dir)
-    val ids = args.toSeq match {
-      case _ if check => SparkEntry.queries.keys.toSeq.sorted
+    val interesting = args.toSeq match {
       case Nil => Seq("q02_filter", "q04_agg_rank", "q11_join4_chain", "q16_topn_window",
         "q28_in_subquery", "q40_minhash_neardup", "q44_cosine_topk")
       case xs => xs
     }
-    val fresh = dump(spark, dir, ids)
+    dump(spark, dir, interesting).foreach(println)
     spark.stop()
-    if (!check) fresh.foreach(println)
-    else {
-      val out = Paths.get("target/plans_snapshot.txt")
-      val text = fresh.mkString("", "\n", "\n")
-      Files.createDirectories(out.getParent)
-      Files.writeString(out, text)
-      val committed = Paths.get("plans/snapshot.txt")
-      val want = if (Files.exists(committed)) sections(Files.readString(committed)) else Nil
-      val got = sections(text)
-      val firstDiff = want.map(Some(_)).zipAll(got.map(Some(_)), None, None)
-        .collectFirst { case (w, g) if w != g => g.orElse(w).get._1 }
-      firstDiff match {
-        case None => println(s"[plans] ${got.size} entries match $committed")
-        case Some(id) =>
-          System.err.println(s"[plans] $id differs from $committed (fresh dump: $out; " +
-            s"diff the two, and copy the fresh dump over the snapshot if the change is intended)")
-          sys.exit(1)
-      }
-    }
   }
 }
