@@ -70,7 +70,7 @@ private[graft] object EmbeddingEntries {
     * signatures via sign-bit sums, candidate pairs, integer-dot
     * verification. Ends with CTE `v(id_a, id_b, score)`. */
   private def embedLshReplayCtes(embedBits: Int): String = {
-    // embedBits: the caller (oracleTexts) derives it from the SAME dir
+    // embedBits: oracleSqlFor (OracleParams) derives it from the SAME dir
     // the Spark entries size against; the table count derives from the
     // bits via the SAME recall-preserving multi-probe rule
     // (embedTablesFor), and the probe width (= bits, embedProbesFor)

@@ -18,8 +18,7 @@ class CorpusSpec extends AnyFunSuite {
   }
 
   test("entry ids are unique stable identifiers (no Spark session)") {
-    // a Map literal kept the last of two equal keys silently; the table
-    // of entries is a Seq, so a repeated id shows here
+    // the table is a Seq, which keeps both copies of a repeated id
     val ids = SparkEntry.entries.map(_.id)
     assert(ids.diff(ids.distinct).isEmpty, s"duplicate entry ids: ${ids.diff(ids.distinct)}")
     ids.foreach(id => assert(id.matches("q\\d+[a-z0-9_]*"), s"$id is not a stable identifier"))
