@@ -55,7 +55,9 @@ object Engine {
   }
 
   /** Open over an already-configured session (cluster deployments: build
-    * the session with your master/conf, register sources, wrap). */
+    * the session with your master/conf, register sources, wrap). The
+    * session needs no function setup: every native expression reaches a
+    * plan as a Column, not through the session's function registry. */
   def wrap(spark: SparkSession): Engine = new Engine(spark)
 
   /** Capacity of Spark's generated-class cache

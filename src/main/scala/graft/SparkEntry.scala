@@ -2,7 +2,7 @@ package graft
 
 import graft.entries.{CurationEntries, DedupEntries, EmbeddingEntries, MediaEntries, RelationalEntries,
   SketchEntries, StreamEntries, TextEntries}
-import graft.operators.{Bpe, Checkpoints, Multimodal, NaiveBayes, Similarity, TextDedup}
+import graft.operators.{Bpe, Checkpoints, Multimodal, NaiveBayes, Similarity, TextAnalysis, TextDedup}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -337,7 +337,6 @@ object SparkEntry {
     * round-trip check. */
   private[graft] def gateDecisions(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.table(spark, dir, "documents")
-    graft.functions.PortableShingleHash.register(spark)
     // ONE tokenize pass feeds all three gates (r18): span occurrences,
     // the LM bigram keys and the NB token stream each derived split(text)
     // independently before — three full scan+split passes for one entry.
@@ -348,7 +347,7 @@ object SparkEntry {
         TextDedup.tokens(col("text")).as("__t")), eager = false)
     val span = TextDedup.spanRemovalStatsToks(toks, "doc_id", "__t")
       .select(col("doc_id"), (col("kept_bp") >= SpanKeepBp).cast("long").as("g_span"))
-    val st = Checkpoints.cut(lmKeyStreamToks(toks, "__t"), eager = false)
+    val st = Checkpoints.cut(TextAnalysis.lmKeyStreamToks(toks, "__t"), eager = false)
     val c2 = st.groupBy("k").agg(count(lit(1)).as("c2"))
     val c1 = st.groupBy("k1").agg(count(lit(1)).as("c1"))
     val ppl = pplAgg(st.join(c2, Seq("k")).join(c1, Seq("k1")))
@@ -382,10 +381,9 @@ object SparkEntry {
   private[graft] def gateStatics(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, NaiveBayes.NbModel) = {
     val d = Tables.table(spark, dir, "documents")
-    graft.functions.PortableShingleHash.register(spark)
     val spans = Checkpoints.cut(
       TextDedup.spanIndex(d, "doc_id", "text").filter(col("__n") >= 2), eager = false)
-    val st = Checkpoints.cut(lmKeyStream(d), eager = false)
+    val st = Checkpoints.cut(TextAnalysis.lmKeyStream(d), eager = false)
     val c2 = Checkpoints.cut(st.groupBy("k").agg(count(lit(1)).as("c2")), eager = false)
     val c1 = Checkpoints.cut(st.groupBy("k1").agg(count(lit(1)).as("c1")), eager = false)
     val m = trainSplitNbModel(spark, dir)
@@ -445,29 +443,6 @@ object SparkEntry {
       s"FROM ${px}st JOIN ${px}c2 ON ${px}st.k = ${px}c2.k JOIN ${px}c1 ON ${px}st.k1 = ${px}c1.k1 " +
       scoreFilter +
       s" GROUP BY ${px}st.doc_id)"
-
-  /** The bigram-LM family's (doc_id, k, k1) key stream: k = fused 32-bit
-    * hash of the bigram, k1 = fused hash of its prefix token. Both hash
-    * arrays are computed ONCE per document row and zipped BEFORE the
-    * explode, so each output row carries two longs — the first spelling
-    * carried the whole width-1 array through the explode (≈ array-length
-    * copies per document, ~84M longs at sf0.1) and that payload
-    * duplication was 2–3× the family's entire runtime (round-10
-    * profile, ProfileQ162). slice keeps the n−1 prefix positions, which
-    * is exactly the width-2 array's length. */
-  private[graft] def lmKeyStream(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    lmKeyStreamToks(d.select(col("doc_id"), split(col("text"), " ").as("t")), "t")
-
-  /** [[lmKeyStream]] over a PRE-TOKENIZED frame (doc_id, tokCol array) —
-    * the gate-ensemble form (r18: one tokenize pass for span/ppl/NB). */
-  private[graft] def lmKeyStreamToks(d: org.apache.spark.sql.DataFrame,
-                              tokCol: String): org.apache.spark.sql.DataFrame =
-    d.select(col("doc_id"), col(tokCol).as("t")).filter(size(col("t")) >= 2)
-      .select(col("doc_id"),
-        call_function("portable_shingle_hash", col("t"), lit(2)).as("h2"),
-        expr("slice(portable_shingle_hash(t, 1), 1, size(t) - 1)").as("h1p"))
-      .select(col("doc_id"), explode(arrays_zip(col("h2"), col("h1p"))).as("z"))
-      .select(col("doc_id"), col("z.h2").as("k"), col("z.h1p").as("k1"))
 
   /** q173/q174's packed-occurrence constant — TextDedup.SpanPosPack
     * interpolated (the pack is part of the canonical-occurrence
@@ -535,8 +510,7 @@ object SparkEntry {
     * corpus. */
   private[graft] def pplScoresAll(spark: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val d = Tables.table(spark, dir, "documents")
-    graft.functions.PortableShingleHash.register(spark)
-    val st = Checkpoints.cut(lmKeyStream(d), eager = false)
+    val st = Checkpoints.cut(TextAnalysis.lmKeyStream(d), eager = false)
     val c2 = st.groupBy("k").agg(count(lit(1)).as("c2"))
     val c1 = st.groupBy("k1").agg(count(lit(1)).as("c1"))
     pplAgg(st.join(c2, Seq("k")).join(c1, Seq("k1")))

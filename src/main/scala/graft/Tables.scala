@@ -39,7 +39,10 @@ object Tables {
   // resolves the view at creation time.
   private val registered = scala.collection.concurrent.TrieMap.empty[Int, String]
 
-  /** Register every table under `dir` as a temp view named after the file. */
+  /** Register every table under `dir` as a temp view named after the
+    * file. Views are all the session needs: the native expressions
+    * (graft.functions) are Columns, not registered functions, so a
+    * foreign session needs no function setup. */
   def register(spark: SparkSession, dir: String): Unit = {
     val key = System.identityHashCode(spark)
     if (!registered.get(key).contains(dir)) synchronized {
@@ -52,12 +55,6 @@ object Tables {
         // cast is value-identity, and every oracle text/plan rule was
         // written against TimestampType ts (FIXTURES.md).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // native scalar functions used by the query corpus (int_dot in
-        // the quantized-embedding entries) — registering here makes every
-        // gate/bench/judge path that reaches the data also able to
-        // resolve them, whatever session it brings (operators also
-        // self-register on their own frames)
-        graft.functions.IntDot.register(spark)
         val hadoopConf = spark.sessionState.newHadoopConf()
         names.foreach { t =>
           val path = s"$dir/$t.parquet"

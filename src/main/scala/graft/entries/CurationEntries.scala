@@ -2,7 +2,7 @@ package graft
 package entries
 
 import graft.SparkEntry._
-import graft.operators.{Checkpoints, Dsir, NaiveBayes, Similarity, TextDedup}
+import graft.operators.{Checkpoints, Dsir, NaiveBayes, Similarity, TextAnalysis, TextDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -99,7 +99,7 @@ private[graft] object CurationEntries {
         TextDedup.tokens(col("text")).as("__t")), eager = false)
     val span = TextDedup.spanRemovalStatsAgainstIndexToks(bt, spans, "doc_id", "__t")
       .select(col("doc_id"), (col("kept_bp") >= SpanKeepBp).cast("long").as("g_span"))
-    val ppl = pplAgg(lmKeyStreamToks(bt, "__t").join(c2, Seq("k")).join(c1, Seq("k1")))
+    val ppl = pplAgg(TextAnalysis.lmKeyStreamToks(bt, "__t").join(c2, Seq("k")).join(c1, Seq("k1")))
       .withColumn("ppl_bp", expr("(bits_total * 10000) DIV n_bigrams"))
       .select(col("doc_id"), (col("ppl_bp") <= PplGateBp).cast("long").as("g_ppl"))
     val nb = NaiveBayes.scoreToks(bt, m, "doc_id", "__t")
@@ -832,7 +832,7 @@ private[graft] object CurationEntries {
         .filter(col("n_inter") * 10 >= col("n_union") * 9)
         .join(emb.select(col("vec_id").as("id_a"), col("qv").as("qa")), Seq("id_a"))
         .join(emb.select(col("vec_id").as("id_b"), col("qv").as("qb")), Seq("id_b"))
-        .withColumn("dot", Similarity.intDot(col("qa"), col("qb")))
+        .withColumn("dot", graft.functions.IntDot.column(col("qa"), col("qb")))
         .select(col("id_a"), col("id_b"), col("n_inter"), col("n_union"),
           col("dot"),
           (col("dot") < EmbedMinScore).cast("long").as("divergent"))

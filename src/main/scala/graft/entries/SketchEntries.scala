@@ -2,6 +2,7 @@ package graft
 package entries
 
 import graft.SparkEntry._
+import graft.functions.PortableShingleHash
 import graft.operators.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -99,9 +100,8 @@ private[graft] object SketchEntries {
     // sharing a sketch member), identical estimator arithmetic.
     Entry("q144_kmv_overlap", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val sh = d.select(col("source"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 3)
-        .select(col("source"), explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+        .select(col("source"), explode(PortableShingleHash.column(col("t"), 3)).as("h"))
         .distinct()
       graft.operators.Sketches.kmvJaccard(sh, "source", "h", graft.operators.Sketches.DefaultKmvK)
         .orderBy(col("est_bp").desc, col("src_a"), col("src_b")).limit(100)
@@ -142,13 +142,12 @@ private[graft] object SketchEntries {
     // ≡ `= mask` for single-bit masks.
     Entry("q145_bloom_contamination", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       // the distinct (doc_id, key) stream feeds BOTH the filter build and
       // the probe — computed once, lineage-cut (CLAUDE.md discipline)
       val sh = Checkpoints.cut(
         d.select(col("doc_id"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 3)
           .select(col("doc_id"),
-            explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+            explode(PortableShingleHash.column(col("t"), 3)).as("h"))
           .distinct(), eager = false)
       val filt = graft.operators.Sketches.bloomBuild(sh.filter(col("doc_id") % 97 === 0), "h")
       graft.operators.Sketches
@@ -194,7 +193,6 @@ private[graft] object SketchEntries {
     // equal by construction.
     Entry("q146_cms_heavy_hitters", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       // ONE tokenization pass (the q131 lesson): aggregate by token first
       // — map-side combine keeps the exchange vocabulary-sized (the q37
       // shape) — then hash once per DISTINCT token, not per occurrence.
@@ -204,7 +202,7 @@ private[graft] object SketchEntries {
         d.select(explode(split(col("text"), " ")).as("token"))
           .groupBy("token").agg(count(lit(1)).as("c"))
           .select(element_at(
-              call_function("portable_shingle_hash", array(col("token")), lit(1)), 1).as("h"),
+              PortableShingleHash.column(array(col("token")), 1), 1).as("h"),
             col("token"), col("c")), eager = false)
       // 32-bit key collisions merge here — shared with the DuckDB twin,
       // and exactly what a counter sketch does at cell level anyway
@@ -238,11 +236,10 @@ private[graft] object SketchEntries {
     // Sketches.HllNumerator — bit-identical cross-engine.
     Entry("q148_hll_cardinality", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val sh = d.select(col("source"), split(col("text"), " ").as("t"))
         .filter(size(col("t")) >= 3)
         .select(col("source"),
-          explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+          explode(PortableShingleHash.column(col("t"), 3)).as("h"))
       val regs = graft.operators.Sketches.hllBuild(sh, Seq("source"), "h")
       graft.operators.Sketches.hllEstimate(regs, Seq("source"))
         .drop("est_corrected")
@@ -263,12 +260,11 @@ private[graft] object SketchEntries {
     // on closed input (the mergeability identity, hash-proven).
     Entry("q154_incremental_hll", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       def keys(docs: org.apache.spark.sql.DataFrame) =
         docs.select(col("source"), split(col("text"), " ").as("t"))
           .filter(size(col("t")) >= 3)
           .select(col("source"),
-            explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+            explode(PortableShingleHash.column(col("t"), 3)).as("h"))
       val existing = graft.operators.Sketches.hllBuild(
         keys(d.filter(col("doc_id") < IncrementalSplitId)), Seq("source"), "h")
       val incoming = graft.operators.Sketches.hllBuild(
@@ -297,11 +293,10 @@ private[graft] object SketchEntries {
     // BIGINT arithmetic (CAST-wrapped: DuckDB SUM(BIGINT) is HUGEINT).
     Entry("q152_join_size_estimate", { (spark, dir) =>
       val e = Tables.table(spark, dir, "events")
-      graft.functions.PortableShingleHash.register(spark)
       val hc = Checkpoints.cut(
         e.groupBy("user_id").agg(count(lit(1)).as("__c"))
-          .select(element_at(call_function("portable_shingle_hash",
-              array(coalesce(col("user_id").cast("string"), lit(""))), lit(1)), 1).as("h"),
+          .select(element_at(PortableShingleHash.column(
+              array(coalesce(col("user_id").cast("string"), lit(""))), 1), 1).as("h"),
             col("__c"))
           .groupBy("h").agg(sum(col("__c")).as("c")), eager = false)
       val exact = hc.agg(sum(expr("c * c")).as("x")).head.getLong(0)
@@ -386,10 +381,9 @@ private[graft] object SketchEntries {
     // integer — equal by construction.
     Entry("q150_sample_quantiles", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val keyed = d.select(col("lang"), col("doc_id"), col("n_chars"),
-        element_at(call_function("portable_shingle_hash",
-          array(coalesce(col("doc_id").cast("string"), lit(""))), lit(1)), 1).as("h"))
+        element_at(PortableShingleHash.column(
+          array(coalesce(col("doc_id").cast("string"), lit(""))), 1), 1).as("h"))
       val samp = graft.operators.Sketches.hashSample(keyed, Seq("lang"), "doc_id", "h")
       graft.operators.Sketches.sampleQuantiles(samp, Seq("lang"), "n_chars",
           "doc_id", "h", Seq(2500, 5000, 7500, 9000, 9900))
@@ -410,11 +404,10 @@ private[graft] object SketchEntries {
     // hash-equality proves streaming output = batch answer.
     Entry("q147_stream_bloom", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val bench = docs.filter(col("doc_id") % 97 === 0)
         .select(col("doc_id"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 3)
         .select(col("doc_id"),
-          explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+          explode(PortableShingleHash.column(col("t"), 3)).as("h"))
         .distinct()
       val filt = graft.operators.Sketches.bloomBuild(bench, "h")
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
@@ -457,7 +450,6 @@ private[graft] object SketchEntries {
     // proves streaming = batch for the sketch-build side.
     Entry("q153_stream_cms", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
       val cms = graft.streaming.StreamOps.runToCompletion(spark,
         graft.streaming.StreamOps.cmsBuildStream(stream, "text"),
@@ -467,7 +459,7 @@ private[graft] object SketchEntries {
         docs.select(explode(split(col("text"), " ")).as("token"))
           .groupBy("token").agg(count(lit(1)).as("c"))
           .select(element_at(
-              call_function("portable_shingle_hash", array(col("token")), lit(1)), 1).as("h"),
+              PortableShingleHash.column(array(col("token")), 1), 1).as("h"),
             col("token"), col("c")), eager = false)
       val hc = tv.groupBy("h").agg(sum(col("c")).as("c"))
       val top = graft.operators.Sketches.countMinEstimate(hc, cms, "h")
@@ -529,13 +521,12 @@ private[graft] object SketchEntries {
     // expression kmvDistinct spells, so the two texts cannot drift.
     Entry("q155_stream_kmv", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
       val rows = stream
         .select(col("source").as("g"), split(col("text"), " ").as("t"))
         .filter(size(col("t")) >= 3)
         .select(col("g"), explode(array_distinct(
-          call_function("portable_shingle_hash", col("t"), lit(3)))).as("h"))
+          PortableShingleHash.column(col("t"), 3))).as("h"))
         .withColumn("id", lit(0L)).withColumn("v", lit(0L))
       val raw = graft.streaming.StreamOps.runUpdate(spark,
         graft.streaming.StreamOps.kSmallestStream(rows, graft.operators.Sketches.DefaultKmvK),
@@ -574,11 +565,10 @@ private[graft] object SketchEntries {
     // distribution sketch.
     Entry("q156_stream_sample", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
       val rows = stream.select(col("lang").as("g"),
-        element_at(call_function("portable_shingle_hash",
-          array(coalesce(col("doc_id").cast("string"), lit(""))), lit(1)), 1).as("h"),
+        element_at(PortableShingleHash.column(
+          array(coalesce(col("doc_id").cast("string"), lit(""))), 1), 1).as("h"),
         col("doc_id").as("id"), col("n_chars").cast("long").as("v"))
       val raw = graft.streaming.StreamOps.runUpdate(spark,
         graft.streaming.StreamOps.kSmallestStream(rows, graft.operators.Sketches.DefaultSampleK),

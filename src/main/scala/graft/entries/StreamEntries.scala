@@ -2,7 +2,8 @@ package graft
 package entries
 
 import graft.SparkEntry._
-import org.apache.spark.sql.DataFrame
+import graft.functions.PortableShingleHash
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Streaming entries: windowed aggregates, sessions, stream-static and
@@ -126,13 +127,9 @@ private[graft] object StreamEntries {
     // input (same (prio, doc_id) order, same k).
     Entry("q165_stream_weighted", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
       val rows = stream.select(col("lang").as("g"),
-        // coalesce proves non-null to the hash's type check (doc_id is
-        // never null in documents — the q156 spelling)
-        expr("element_at(portable_shingle_hash(array(coalesce(CAST(doc_id AS STRING), '')), 1), 1) " +
-          "DIV (n_chars DIV 100 + 1)").as("h"),
+        weightedPrio.as("h"),
         col("doc_id").as("id"), col("n_chars").cast("long").as("v"))
       val raw = graft.streaming.StreamOps.runUpdate(spark,
         graft.streaming.StreamOps.kSmallestStream(rows, 10),
@@ -160,11 +157,9 @@ private[graft] object StreamEntries {
     // (k-smallest and additive-count merge identities).
     Entry("q167_incremental_weighted", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       def top10(docs: org.apache.spark.sql.DataFrame) = docs
         .select(col("lang"), col("doc_id"), col("n_chars"),
-          expr("element_at(portable_shingle_hash(array(coalesce(CAST(doc_id AS STRING), '')), 1), 1) " +
-            "DIV (n_chars DIV 100 + 1)").as("prio"))
+          weightedPrio.as("prio"))
         .withColumn("rn", row_number().over(
           org.apache.spark.sql.expressions.Window.partitionBy("lang").orderBy("prio", "doc_id")))
         .filter(col("rn") <= 10).drop("rn")
@@ -243,4 +238,14 @@ private[graft] object StreamEntries {
       out
     }, Some(_ => Corpus.byId("q164_rate_anomaly").duckSql)),
   )
+
+  /** q160's weighted priority, `h DIV (n_chars DIV 100 + 1)` over the
+    * portable 32-bit hash of doc_id. coalesce proves non-null to the
+    * hash's type check (doc_id is never null in documents — the q156
+    * spelling). */
+  private def weightedPrio: Column =
+    call_function("div",
+      element_at(PortableShingleHash.column(
+        array(coalesce(col("doc_id").cast("string"), lit(""))), 1), 1),
+      call_function("div", col("n_chars"), lit(100)) + 1)
 }

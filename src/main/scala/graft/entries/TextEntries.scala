@@ -2,6 +2,7 @@ package graft
 package entries
 
 import graft.SparkEntry._
+import graft.functions.PortableShingleHash
 import graft.operators.{Bpe, Checkpoints, TextAnalysis, TextDedup}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -247,10 +248,9 @@ private[graft] object TextEntries {
     // agree by construction, not by injectivity.
     Entry("q132_source_overlap", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val sh = Checkpoints.cut(
         d.select(col("source"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 3)
-          .select(col("source"), explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+          .select(col("source"), explode(PortableShingleHash.column(col("t"), 3)).as("h"))
           .distinct(), eager = false)
       val sz = sh.groupBy("source").agg(count(lit(1)).as("n"))
       // in-bucket pair generation, not a self-join (round 10 follow-up):
@@ -294,9 +294,8 @@ private[graft] object TextEntries {
     // q138 (round 10): same shared-32-bit-key posture as q132.
     Entry("q138_novelty", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val bi = d.select(col("doc_id"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 2)
-        .select(col("doc_id"), explode(call_function("portable_shingle_hash", col("t"), lit(2))).as("k"))
+        .select(col("doc_id"), explode(PortableShingleHash.column(col("t"), 2)).as("k"))
         .distinct()
       // first-seen via a window MIN over the same k-partitioning the
       // distinct already established — ONE exchange, no aggregate + join
@@ -349,8 +348,7 @@ private[graft] object TextEntries {
     // against the identical text.
     Entry("q157_bigram_lm", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
-      val st = Checkpoints.cut(lmKeyStream(d), eager = false)
+      val st = Checkpoints.cut(TextAnalysis.lmKeyStream(d), eager = false)
       val c2 = st.groupBy("k").agg(count(lit(1)).as("c2"))
       val c1 = st.groupBy("k1").agg(count(lit(1)).as("c1"))
       st.join(c2, Seq("k")).join(c1, Seq("k1"))
@@ -381,13 +379,12 @@ private[graft] object TextEntries {
     // the incremental-correctness proof.
     Entry("q161_incremental_lm", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       // in deployment the corpus model is read back from a sink; built
       // here from the corpus split (cut: two count aggregates read it)
       val corpus = Checkpoints.cut(
-        lmKeyStream(d.filter(col("doc_id") < IncrementalSplitId)), eager = false)
+        TextAnalysis.lmKeyStream(d.filter(col("doc_id") < IncrementalSplitId)), eager = false)
       val batch = Checkpoints.cut(
-        lmKeyStream(d.filter(col("doc_id") >= IncrementalSplitId)), eager = false)
+        TextAnalysis.lmKeyStream(d.filter(col("doc_id") >= IncrementalSplitId)), eager = false)
       val c2 = corpus.groupBy("k").agg(count(lit(1)).as("c2"))
         .unionByName(batch.groupBy("k").agg(count(lit(1)).as("c2")))
         .groupBy("k").agg(sum("c2").as("c2"))
@@ -422,7 +419,6 @@ private[graft] object TextEntries {
     // batch, the q126/q149/q153 contract.
     Entry("q162_stream_lm", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val stream = graft.streaming.StreamOps.docsSource(spark, dir, docs.schema)
       val tmpPath = java.nio.file.Files.createTempDirectory("graft_q162")
       // the merged model is vocabulary-sized — cut its lineage eagerly so
@@ -437,7 +433,7 @@ private[graft] object TextEntries {
       rmTree(tmpPath.toFile)
       val c2 = model.groupBy("k").agg(sum("m").as("c2"))
       val c1 = model.groupBy("k1").agg(sum("m").as("c1"))
-      val st = lmKeyStream(docs)
+      val st = TextAnalysis.lmKeyStream(docs)
       st.join(c2, Seq("k")).join(c1, Seq("k1"))
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_bigrams"),
@@ -472,11 +468,10 @@ private[graft] object TextEntries {
     // to batch doc ids. Corpus text is never re-read or re-scored.
     Entry("q171_ppl_incremental", { (spark, dir) =>
       val d = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val corpus = Checkpoints.cut(
-        lmKeyStream(d.filter(col("doc_id") < IncrementalSplitId)), eager = false)
+        TextAnalysis.lmKeyStream(d.filter(col("doc_id") < IncrementalSplitId)), eager = false)
       val batch = Checkpoints.cut(
-        lmKeyStream(d.filter(col("doc_id") >= IncrementalSplitId)), eager = false)
+        TextAnalysis.lmKeyStream(d.filter(col("doc_id") >= IncrementalSplitId)), eager = false)
       val c2 = corpus.groupBy("k").agg(count(lit(1)).as("c2"))
         .unionByName(batch.groupBy("k").agg(count(lit(1)).as("c2")))
         .groupBy("k").agg(sum("c2").as("c2"))
@@ -496,8 +491,7 @@ private[graft] object TextEntries {
     // replay (streaming = batch, the q126/q162 contract).
     Entry("q172_ppl_stream", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
-      val st = Checkpoints.cut(lmKeyStream(docs), eager = false)
+      val st = Checkpoints.cut(TextAnalysis.lmKeyStream(docs), eager = false)
       val c2 = Checkpoints.cut(
         st.groupBy("k").agg(count(lit(1)).as("c2")), eager = false)
       val c1 = Checkpoints.cut(
@@ -507,7 +501,7 @@ private[graft] object TextEntries {
       val tmpPath = java.nio.file.Files.createTempDirectory("graft_q172")
       val scored = graft.operators.Checkpoints.cut(
         graft.streaming.StreamOps.runBatchesToParquet(spark, stream, s"$tmpPath/scores") { b =>
-          pplAgg(lmKeyStream(b).join(c2, Seq("k")).join(c1, Seq("k1")))
+          pplAgg(TextAnalysis.lmKeyStream(b).join(c2, Seq("k")).join(c1, Seq("k1")))
         }.select("doc_id", "n_bigrams", "bits_total"),
         eager = true)
       rmTree(tmpPath.toFile)
@@ -606,7 +600,6 @@ private[graft] object TextEntries {
     // discipline).
     Entry("q177_curation_capstone", { (spark, dir) =>
       val docs = Tables.table(spark, dir, "documents")
-      graft.functions.PortableShingleHash.register(spark)
       val span = TextDedup.spanRemovalStats(docs, "doc_id", "text")
         .filter(col("kept_bp") >= SpanKeepBp)
       val ppl = pplScoresAll(spark, dir)

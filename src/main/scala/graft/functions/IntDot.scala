@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 
 /** Exact integer dot product of two array<long> vectors as a native
   * Catalyst expression with whole-stage codegen — the hot-path upgrade
-  * over the `aggregate(zip_with(...))` composition in
-  * [[graft.operators.Similarity.intDot]]: one fused primitive loop per
+  * over the `aggregate(zip_with(...))` composition (kept as the
+  * reference in NativeExprPropSpec): one fused primitive loop per
   * row pair, no product-array allocation, no per-element lambda
   * dispatch. The quantized-embedding family
   * (q84/q97/q125 LSH signatures + verification, q186/q187 centroid
@@ -87,7 +87,7 @@ object IntDot {
     java.lang.Long.valueOf(dot)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot", exprs => IntDot(exprs(0), exprs(1)), "built-in")
+  /** `a · b` as a Column (expression wrapped directly, GraftColumnBridge). */
+  def column(a: Column, b: Column): Column =
+    GraftColumnBridge.column(IntDot(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))
 }

@@ -76,29 +76,15 @@ case class IntDotLookup(left: Expression, right: Expression,
 
 object IntDotLookup {
 
-  /** Column wrapping `IntDotLookup(a, b, vectors)` DIRECTLY — no
-    * session-global registry mutation (round-15 advice: the register
-    * idiom relied on every consumer frame being analyzed eagerly before
-    * the next register(); a plan re-resolved from SQL text after a later
-    * call would silently bind the wrong broadcast). The broadcast handle
-    * is baked into this expression instance at construction. */
+  /** Column wrapping `IntDotLookup(a, b, vectors)` directly. The
+    * broadcast handle is baked into this expression instance at
+    * construction, so no session state can bind the wrong broadcast. */
   def column(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column,
              vectors: Broadcast[java.util.HashMap[java.lang.Long, Array[Int]]]): org.apache.spark.sql.Column = {
     import org.apache.spark.sql.GraftColumnBridge
     GraftColumnBridge.column(
       IntDotLookup(GraftColumnBridge.expression(a), GraftColumnBridge.expression(b), vectors))
   }
-
-  /** Bind `int_dot_lookup(id_a, id_b)` to THIS broadcast for frames built
-    * after the call (analysis is eager at frame creation, so earlier
-    * frames keep the instance they resolved — the closure-parameterized
-    * variant of the IntDot register idiom). Kept for SQL-text consumers;
-    * Scala callers should prefer [[column]], which has no registry
-    * ordering invariant. */
-  def register(spark: org.apache.spark.sql.SparkSession,
-               vectors: Broadcast[java.util.HashMap[java.lang.Long, Array[Int]]]): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot_lookup", exprs => IntDotLookup(exprs(0), exprs(1), vectors), "built-in")
 
   /** Pack one quantized vector into the Int map representation with a
     * losslessness check: ±10⁴-scaled unit-norm components are ≤ 10⁴ in

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,7 +70,7 @@ object PortableShingleHash {
     val md = md5Local.get()
     val total = tokens.numElements()
     // total == 0 mirrors the composed spelling exactly (round-10 advice:
-    // the registered SQL function must agree with the composed form on
+    // the native function must agree with the composed form on
     // every input it admits, not just split() output, which is never
     // empty): for n ≥ 2 shingles() emits ONE empty shingle on an empty
     // array (sequence(0, greatest(size−n, 0)) = [0]) → one hash of "";
@@ -100,10 +100,7 @@ object PortableShingleHash {
     new GenericArrayData(out)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "portable_shingle_hash", exprs => {
-        val n = exprs(1).eval(null).asInstanceOf[Int]
-        PortableShingleHash(exprs.head, n)
-      }, "built-in")
+  /** The n-gram hashes of `tokens` as a Column (GraftColumnBridge). */
+  def column(tokens: Column, n: Int): Column =
+    GraftColumnBridge.column(PortableShingleHash(GraftColumnBridge.expression(tokens), n))
 }

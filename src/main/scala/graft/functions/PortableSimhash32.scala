@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -76,7 +76,7 @@ object PortableSimhash32 {
     out
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "portable_simhash32", exprs => PortableSimhash32(exprs.head), "built-in")
+  /** The 32-bit sign-fold of `hashes` as a Column (GraftColumnBridge). */
+  def column(hashes: Column): Column =
+    GraftColumnBridge.column(PortableSimhash32(GraftColumnBridge.expression(hashes)))
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -81,10 +81,7 @@ object ShingleHash {
     }
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "shingle_hash", exprs => {
-        val n = exprs(1).eval(null).asInstanceOf[Int]
-        ShingleHash(exprs.head, n)
-      }, "built-in")
+  /** The n-gram hashes of `tokens` as a Column (GraftColumnBridge). */
+  def column(tokens: Column, n: Int): Column =
+    GraftColumnBridge.column(ShingleHash(GraftColumnBridge.expression(tokens), n))
 }

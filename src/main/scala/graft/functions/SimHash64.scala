@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -42,10 +42,9 @@ object SimHash64 {
   private final val FnvOffset = 0xcbf29ce484222325L
   private final val FnvPrime = 0x100000001b3L
 
-  /** Expose as a SQL/`call_function` function on this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "built-in")
+  /** The 64-bit SimHash of `tokens` as a Column (GraftColumnBridge). */
+  def column(tokens: Column): Column =
+    GraftColumnBridge.column(SimHash64(GraftColumnBridge.expression(tokens)))
 
   /** FNV-1a 64 over UTF-8 bytes — deterministic, dependency-free. */
   def fnv1a64(s: UTF8String): Long = {

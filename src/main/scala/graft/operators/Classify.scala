@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.PortableShingleHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -236,19 +237,15 @@ object Dsir {
     * Reuses the LM family's fused 32-bit bigram hash so the DuckDB
     * replay is the pplOracle spelling mod Buckets. `carry` columns
     * (e.g. the target-domain label) ride the scan-local explode so the
-    * caller never joins the corpus back. Self-registers
-    * `portable_shingle_hash` (the spanOccurrences convention). */
+    * caller never joins the corpus back. */
   def featStream(docs: DataFrame, idCol: String, textCol: String,
                  carry: Seq[String] = Nil): DataFrame = {
-    // the FRAME's session, not the thread's active one (two sessions in
-    // one JVM have separate function registries — cf. spanOccurrences)
-    graft.functions.PortableShingleHash.register(docs.sparkSession)
     val base = docs.select((col(idCol).as("__id") +: carry.map(col) :+
         TextDedup.tokens(col(textCol)).as("__t")): _*)
       .filter(size(col("__t")) >= 2)
     val keep = col("__id") +: carry.map(col)
     base.select((keep :+
-        explode(call_function("portable_shingle_hash", col("__t"), lit(2))).as("__h")): _*)
+        explode(PortableShingleHash.column(col("__t"), 2)).as("__h")): _*)
       .select((keep :+ pmod(col("__h"), lit(Buckets)).as("__f")): _*)
   }
 

@@ -1,9 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.IntDot
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`embeddings.embedding`: array<float>[64] — FIXTURES.md), the
@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   *
   * One scorer: vectors are quantized to BIGINT components
   * (`quantize`, floor(x·10^4)) and scored by the integer dot product
-  * (`intDot`), so every score is exact and any IEEE engine replays it
-  * bit-for-bit. Search paths:
+  * (`graft.functions.IntDot`), so every score is exact and any IEEE
+  * engine replays it bit-for-bit. Search paths:
   *   - `bruteForceTopKInt` — exact top-k per query. The join is a
   *     broadcast of the (small) query set against the corpus, so the corpus
   *     is scanned once with no shuffle of vectors; ranking shuffles only
@@ -148,45 +148,18 @@ object Similarity {
   def quantize(vec: Column, scale: Int = 10000): Column =
     transform(vec, x => floor(x.cast("double") * scale).cast("long"))
 
-  /** Integer dot product of two quantized vectors. |x_i| ≤ scale ⇒ each
-    * term ≤ scale², 64 dims ≈ 6.4e9 ≪ Long.Max — no ANSI overflow.
-    *
-    * Round 13: resolves to the NATIVE fused-loop expression
-    * (graft.functions.IntDot) — the integer-family hot paths evaluate
-    * this millions of times per action and the interpreted HOF chain was
-    * the dominant per-row cost at 10×.
-    * Value-identical to [[intDotHof]] incl. null edges
-    * (NativeExprPropSpec). Callers outside this object must register the
-    * function on their session first (graft.functions.IntDot.register —
-    * Tables.register does it for every gate path; the operators here do
-    * it themselves). */
-  def intDot(a: Column, b: Column): Column = call_function("int_dot", a, b)
-
-  /** The composed HOF spelling of [[intDot]] — kept as the
-    * registration-free reference form the property spec pins the native
-    * expression against. */
-  def intDotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
-  /** Lazy per-session registration of the native integer-dot expression
-    * on the frame's session; idempotent, called at every operator entry
-    * that has a frame in hand. */
-  private def registerIntDot(df: DataFrame): Unit =
-    graft.functions.IntDot.register(df.sparkSession)
-
   /** Exact top-k by quantized integer dot product: broadcast query set,
     * one corpus scan, narrow rank shuffle.
     * Output: (query_id, vec_id, score BIGINT, rank). */
   def bruteForceTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                         queries: DataFrame, queryIdCol: String, queryVecCol: String,
                         k: Int, scale: Int = 10000): DataFrame = {
-    registerIntDot(corpus)
     val c = corpus.select(col(idCol), quantize(col(vecCol), scale).as("__cq"))
     val q = queries.select(col(queryIdCol), quantize(col(queryVecCol), scale).as("__qq"))
     val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol))
     c.crossJoin(broadcast(q))
       .filter(col(queryIdCol) =!= col(idCol))
-      .withColumn("score", intDot(col("__cq"), col("__qq")))
+      .withColumn("score", IntDot.column(col("__cq"), col("__qq")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col(queryIdCol).as("query_id"), col(idCol).as("vec_id"), col("score"), col("rank"))
@@ -260,7 +233,6 @@ object Similarity {
                              scale: Int = 10000): DataFrame = {
     require(probes <= bitsPerTable,
       s"probes ($probes) beyond the $bitsPerTable-bit signature flip bits no bucket key carries")
-    registerIntDot(queries)
     val planes = portableHyperplanes(dim, numTables, bitsPerTable, seed)
     val qq = queries.select(col(queryIdCol).as("query_id"),
       quantize(col(queryVecCol), scale).as("__qq"))
@@ -279,7 +251,7 @@ object Similarity {
     candidates
       .join(cq.select(col("vec_id"), col("__qv").as("__cv")), Seq("vec_id"))
       .join(broadcast(qq), Seq("query_id"))
-      .withColumn("score", intDot(col("__cv"), col("__qq")))
+      .withColumn("score", IntDot.column(col("__cv"), col("__qq")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "vec_id", "score", "rank")
@@ -299,7 +271,6 @@ object Similarity {
                  queries: DataFrame, queryIdCol: String, queryVecCol: String,
                  k: Int, nlist: Int = 16, nprobe: Int = 4,
                  scale: Int = 10000): DataFrame = {
-    registerIntDot(corpus)
     val cq = corpus.select(col(idCol).cast("long").as("vec_id"),
       quantize(col(vecCol), scale).as("__v"))
     val centroids = broadcast(cq.orderBy("vec_id").limit(nlist)
@@ -308,19 +279,19 @@ object Similarity {
       .groupBy("vec_id")
       .agg(first(col("__v")).as("__v"),
         max_by(col("__cid"),
-          struct(intDot(col("__v"), col("__cvec")).as("s"), (-col("__cid")).as("tb"))).as("__list"))
+          struct(IntDot.column(col("__v"), col("__cvec")).as("s"), (-col("__cid")).as("tb"))).as("__list"))
     val pw = Window.partitionBy("query_id").orderBy(col("__s").desc, col("__cid"))
     val probed = queries.select(col(queryIdCol).cast("long").as("query_id"),
         quantize(col(queryVecCol), scale).as("__qv"))
       .crossJoin(centroids)
-      .withColumn("__s", intDot(col("__qv"), col("__cvec")))
+      .withColumn("__s", IntDot.column(col("__qv"), col("__cvec")))
       .withColumn("__r", row_number().over(pw))
       .filter(col("__r") <= nprobe)
       .select(col("query_id"), col("__qv"), col("__cid").as("__list"))
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("vec_id"))
     assigned.join(broadcast(probed), Seq("__list"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("score", intDot(col("__v"), col("__qv")))
+      .withColumn("score", IntDot.column(col("__v"), col("__qv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "vec_id", "score", "rank")
@@ -342,7 +313,6 @@ object Similarity {
     * (CollapseProject, cf. TextDedup.minhashSignature). */
   private[graft] def portableQuantized(df: DataFrame, idCol: String, vecCol: String,
                                 scale: Int): DataFrame = {
-    registerIntDot(df)
     df.select(col(idCol), quantize(col(vecCol), scale).as("__qv"))
   }
 
@@ -766,7 +736,6 @@ object Similarity {
     * rather than cutting (CLAUDE.md). */
   private[graft] def semQuantized(corpus: DataFrame, idCol: String, vecCol: String,
                                   scale: Int = 10000): DataFrame = {
-    registerIntDot(corpus)
     corpus.select(col(idCol).cast("long").as("vec_id"),
       quantize(col(vecCol), scale).as("__v"))
   }
@@ -828,7 +797,7 @@ object Similarity {
   private def semAssignTo(q: DataFrame, centroids: DataFrame): DataFrame =
     q.crossJoin(centroids)
       .select(col("vec_id"), col("__cid"),
-        intDot(col("__v"), col("__cvec")).as("s"))
+        IntDot.column(col("__v"), col("__cvec")).as("s"))
       .groupBy("vec_id")
       .agg(max_by(struct(col("__cid"), col("s")),
         struct(col("s"), (-col("__cid")).as("tb"))).as("__a"))
@@ -872,7 +841,6 @@ object Similarity {
   def semDedupStats(corpus: DataFrame, idCol: String, vecCol: String,
                     minScore: Long, nlist: Int, scale: Int = 10000,
                     maxClusterSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
-    registerIntDot(corpus)
     val q = corpus.select(col(idCol).cast("long").as("vec_id"),
       quantize(col(vecCol), scale).as("__v"))
     // the assignment subtree (n × nlist dot products) feeds BOTH the
@@ -893,7 +861,7 @@ object Similarity {
     val verified = pairs
       .join(q.select(col("vec_id").as("id_a"), col("__v").as("__va")), Seq("id_a"))
       .join(q.select(col("vec_id").as("id_b"), col("__v").as("__vb")), Seq("id_b"))
-      .filter(intDot(col("__va"), col("__vb")) >= minScore)
+      .filter(IntDot.column(col("__va"), col("__vb")) >= minScore)
       .select("cid", "id_a", "id_b")
     val st = verified.groupBy("cid")
       .agg(count(lit(1)).as("n_pairs"), countDistinct(col("id_b")).as("n_dropped"))
@@ -962,7 +930,7 @@ object Similarity {
       .join(qE.select(col("vec_id").as("id_a"), col("__v").as("__va")), Seq("id_a"))
       .join(qI.select(col("vec_id").as("id_b"), col("__v").as("__vb")), Seq("id_b"))
       .select(col("cid"), col("id_a"), col("id_b"),
-        intDot(col("__va"), col("__vb")).as("score"))
+        IntDot.column(col("__va"), col("__vb")).as("score"))
       .filter(col("score") >= minScore)
   }
 
@@ -1001,14 +969,13 @@ object Similarity {
   def semStreamCrossPairs(vecStream: DataFrame, idCol: String, vecCol: String,
                           cents: Seq[(Long, Seq[Long])], existingIndex: DataFrame,
                           minScore: Long, scale: Int = 10000): DataFrame = {
-    registerIntDot(vecStream)
     vecStream.select(col(idCol).cast("long").as("id_b"),
         quantize(col(vecCol), scale).as("__vb"))
       .withColumn("__a", semAssignExpr(col("__vb"), cents))
       .select(col("id_b"), col("__vb"), col("__a").getField("cid").as("cid"))
       .join(existingIndex, Seq("cid"))
       .select(col("cid"), col("id_a"), col("id_b"),
-        intDot(col("__va"), col("__vb")).as("score"))
+        IntDot.column(col("__va"), col("__vb")).as("score"))
       .filter(col("score") >= minScore)
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.PortableShingleHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -69,12 +70,11 @@ object TableProfile {
     * estimate, hash-safe. */
   def sketchProfile(df: DataFrame, cols: Seq[String],
                     p: Int = Sketches.HllP): DataFrame = {
-    graft.functions.PortableShingleHash.register(df.sparkSession)
     val m = 1L << p
     require(p == Sketches.HllP, "HllNumerator is precomputed for p = HllP")
     val parts = cols.map { c =>
-      val h = element_at(call_function("portable_shingle_hash",
-        array(coalesce(col(c).cast("string"), lit(""))), lit(1)), 1)
+      val h = element_at(PortableShingleHash.column(
+        array(coalesce(col(c).cast("string"), lit(""))), 1), 1)
       df.select(
           when(col(c).isNull, lit(-1L)).otherwise(Sketches.hllBucket(h, p)).as("bucket"),
           when(col(c).isNull, lit(0)).otherwise(Sketches.hllRho(h, p)).as("__rho"))

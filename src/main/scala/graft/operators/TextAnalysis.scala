@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.PortableShingleHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -85,8 +86,8 @@ object TextAnalysis {
     * Sort the distinct shingle xxhash64 values, keep the k smallest, hash
     * the sketch to one 64-bit fingerprint. Deterministic; near-identical
     * documents produce identical fingerprints with high probability. */
-  def fingerprint(df: DataFrame, text: Column, shingleN: Int = 3, k: Int = 8): Column = {
-    val hashes = array_sort(array_distinct(TextDedup.shingleHashes(df, text, shingleN)))
+  def fingerprint(text: Column, shingleN: Int = 3, k: Int = 8): Column = {
+    val hashes = array_sort(array_distinct(TextDedup.shingleHashes(text, shingleN)))
     xxhash64(slice(hashes, lit(1), lit(k)))
   }
 
@@ -147,7 +148,7 @@ object TextAnalysis {
   def repetitionStats(df: DataFrame, idCol: String, textCol: String,
                       shingleN: Int = 2): DataFrame = {
     val sh = df.select(col(idCol),
-      explode(TextDedup.shingleHashes(df, col(textCol), shingleN)).as("sh"))
+      explode(TextDedup.shingleHashes(col(textCol), shingleN)).as("sh"))
     sh.groupBy(idCol, "sh").agg(count(lit(1)).as("c"))
       .groupBy(idCol).agg(sum("c").as("n_shingles"), max("c").as("max_rep"))
       .withColumn("rep_permille", expr("max_rep * 1000 div n_shingles"))
@@ -158,4 +159,27 @@ object TextAnalysis {
   def termFrequencies(df: DataFrame, textCol: String): DataFrame =
     df.select(explode(tokens(col(textCol))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
+
+  /** The bigram-LM family's (doc_id, k, k1) key stream: k = fused 32-bit
+    * hash of the bigram, k1 = fused hash of its prefix token. Both hash
+    * arrays are computed ONCE per document row and zipped BEFORE the
+    * explode, so each output row carries two longs — the first spelling
+    * carried the whole width-1 array through the explode (≈ array-length
+    * copies per document, ~84M longs at sf0.1) and that payload
+    * duplication was 2–3× the family's entire runtime (round-10
+    * profile, ProfileQ162). slice keeps the n−1 prefix positions, which
+    * is exactly the width-2 array's length. Shared by the batch LM
+    * entries and `StreamOps.lmBatchCounts`. */
+  private[graft] def lmKeyStream(d: DataFrame): DataFrame =
+    lmKeyStreamToks(d.select(col("doc_id"), tokens(col("text")).as("t")), "t")
+
+  /** [[lmKeyStream]] over a PRE-TOKENIZED frame (doc_id, tokCol array) —
+    * the gate-ensemble form (r18: one tokenize pass for span/ppl/NB). */
+  private[graft] def lmKeyStreamToks(d: DataFrame, tokCol: String): DataFrame =
+    d.select(col("doc_id"), col(tokCol).as("t")).filter(size(col("t")) >= 2)
+      .select(col("doc_id"),
+        PortableShingleHash.column(col("t"), 2).as("h2"),
+        slice(PortableShingleHash.column(col("t"), 1), lit(1), size(col("t")) - 1).as("h1p"))
+      .select(col("doc_id"), explode(arrays_zip(col("h2"), col("h1p"))).as("z"))
+      .select(col("doc_id"), col("z.h2").as("k"), col("z.h1p").as("k1"))
 }

@@ -66,10 +66,8 @@ object TextDedup {
   /** N-gram hashes straight from token bytes (graft.functions.ShingleHash):
     * no n-gram string materialization — the measured dominant cost of the
     * signature stage. */
-  def shingleHashes(df: DataFrame, text: Column, n: Int): Column = {
-    graft.functions.ShingleHash.register(df.sparkSession)
-    call_function("shingle_hash", tokens(text), lit(n))
-  }
+  def shingleHashes(text: Column, n: Int): Column =
+    graft.functions.ShingleHash.column(tokens(text), n)
 
   /** LSH band keys: signature split into `bands` bands of `rowsPerBand`,
     * each hashed to one bucket key. Returns array<long> of length `bands`. */
@@ -265,11 +263,8 @@ object TextDedup {
     * long, no n-gram string / hex-render / base-16 parse per shingle —
     * the composed form, which the DuckDB oracles still spell, is the
     * test reference in TierESpec). */
-  def portableShingleHashes(text: Column, n: Int): Column = {
-    graft.functions.PortableShingleHash.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("portable_shingle_hash", tokens(text), lit(n))
-  }
+  def portableShingleHashes(text: Column, n: Int): Column =
+    graft.functions.PortableShingleHash.column(tokens(text), n)
 
   /** Span length (in tokens) for exact-substring dedup (q173/q174) —
     * interpolated into both DuckDB texts, cf. PortableShingleN. 8 tokens
@@ -304,14 +299,9 @@ object TextDedup {
     * frame (r18: one tokenize pass for span/ppl/NB instead of three). */
   private[graft] def spanOccurrencesToks(df: DataFrame, idCol: String,
                                          tokCol: String, k: Int): DataFrame = {
-    // register on the FRAME's session, not the thread's active one: with
-    // two sessions in a JVM (newSession() clones a separate function
-    // registry) the active session can differ from the one that will
-    // analyze this plan, and the call would fail UNRESOLVED_ROUTINE
-    graft.functions.PortableShingleHash.register(df.sparkSession)
     df.filter(size(col(tokCol)) >= k)
       .select(col(idCol),
-        posexplode(call_function("portable_shingle_hash", col(tokCol), lit(k)))
+        posexplode(graft.functions.PortableShingleHash.column(col(tokCol), k))
           .as(Seq("__pos", "__h")))
   }
 
@@ -696,7 +686,7 @@ object TextDedup {
     // and the two verification joins.
     val sh = Checkpoints.cut(
       df.select(col(idCol),
-        array_distinct(shingleHashes(df, col(textCol), shingleN)).as("__sh")),
+        array_distinct(shingleHashes(col(textCol), shingleN)).as("__sh")),
       eager = false)
     val sig = sh.select(col(idCol), minhashSignature(col("__sh"), numHashes).as("__sig"))
     val keyed = sig.select(col(idCol),
@@ -1005,11 +995,8 @@ object TextDedup {
     * the q83 profile showed dominating). The composed HOF form, which
     * the q83 DuckDB text still replays, is the bit-equality test
     * reference in TierESpec. */
-  def portableSimhash32(tokenHashes: Column): Column = {
-    graft.functions.PortableSimhash32.register(
-      org.apache.spark.sql.SparkSession.active)
-    call_function("portable_simhash32", tokenHashes)
-  }
+  def portableSimhash32(tokenHashes: Column): Column =
+    graft.functions.PortableSimhash32.column(tokenHashes)
 
   /** Combination-banding layout shared by BOTH simhash pair generators and
     * the q83 DuckDB text. The round-7 scheme banded on single chunks (4
@@ -1270,10 +1257,9 @@ object TextDedup {
                    maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     require(maxHamming <= SimhashChunks - SimhashIntact,
       s"$SimhashChunks chunks with $SimhashIntact intact only guarantee hamming <= ${SimhashChunks - SimhashIntact}")
-    graft.functions.SimHash64.register(df.sparkSession)
     val sigs = df.select(
       col(idCol),
-      call_function("simhash64", tokens(col(textCol))).as("__sim"))
+      graft.functions.SimHash64.column(tokens(col(textCol))).as("__sim"))
     val chunkBits = 64 / SimhashChunks
     // combo key = the 5 chunk values packed into one 40-bit long via the
     // shared simhashComboKeys builder (round 14; integer keys shuffle

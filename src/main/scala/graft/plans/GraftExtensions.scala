@@ -10,11 +10,6 @@ import org.apache.spark.sql.SparkSessionExtensions
   * Injects:
   *   - [[RangeJoinRewrite]] — naive time-range joins become bucketized
   *     equi-joins instead of nested-loop joins.
-  *
-  * The native scalar functions (int_dot, …) are registered
-  * per-session by their own `register` (e.g. `graft.functions.IntDot`)
-  * — function registration is session-state, not an extension, so both
-  * paths work.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

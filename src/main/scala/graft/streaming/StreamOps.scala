@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.PortableShingleHash
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -243,14 +244,13 @@ object StreamOps {
     * to the hourly grouping). Output: (h, bucket, reg). */
   def hllHourlyUsers(events: DataFrame, p: Int = graft.operators.Sketches.HllP): DataFrame = {
     import graft.operators.Sketches
-    graft.functions.PortableShingleHash.register(SparkSession.active)
     events.withWatermark("ts", "10 minutes")
       .select(window(col("ts"), "1 hour").as("w"),
         // coalesce: portable_shingle_hash rejects containsNull arrays
         // (its split()-only contract); user_id is never null in events,
         // the coalesce just proves it to the type check
-        element_at(call_function("portable_shingle_hash",
-          array(coalesce(col("user_id").cast("string"), lit(""))), lit(1)), 1).as("__h"))
+        element_at(PortableShingleHash.column(
+          array(coalesce(col("user_id").cast("string"), lit(""))), 1), 1).as("__h"))
       .select(col("w"), Sketches.hllBucket(col("__h"), p).as("bucket"),
         Sketches.hllRho(col("__h"), p).as("__rho"))
       .groupBy(col("w"), col("bucket"))
@@ -273,11 +273,9 @@ object StreamOps {
   def cmsBuildStream(docStream: DataFrame, textCol: String,
                      width: Long = graft.operators.Sketches.CmsWidth): DataFrame = {
     import graft.operators.Sketches
-    graft.functions.PortableShingleHash.register(SparkSession.active)
     docStream
       .select(explode(split(col(textCol), " ")).as("token"))
-      .select(element_at(call_function("portable_shingle_hash",
-        array(col("token")), lit(1)), 1).as("__h"))
+      .select(element_at(PortableShingleHash.column(array(col("token")), 1), 1).as("__h"))
       .select(explode(array(Sketches.BloomHashes.indices.map { i =>
         struct(lit(i).as("i"), Sketches.cmsPosition(col("__h"), i, width).as("p"))
       }: _*)).as("__ip"))
@@ -323,23 +321,14 @@ object StreamOps {
     * `lmModelStream` — one document micro-batch in, its (k, k1, m)
     * count table out. Carries (long, long) keys only; k1 is the
     * bigram's prefix hash, so BOTH marginals (c2 by k, c1 by k1) fall
-    * out of the merged table by summation. */
-  def lmBatchCounts(docs: DataFrame, textCol: String): DataFrame = {
-    graft.functions.PortableShingleHash.register(SparkSession.active)
-    // both hash arrays computed once per document and zipped BEFORE the
-    // explode — carrying the width-1 array through the explode
-    // duplicates it per bigram position (the round-10 ProfileQ162
-    // finding; see SparkEntry.lmKeyStream)
-    docs
-      .select(split(col(textCol), " ").as("t")).filter(size(col("t")) >= 2)
-      .select(
-        call_function("portable_shingle_hash", col("t"), lit(2)).as("h2"),
-        expr("slice(portable_shingle_hash(t, 1), 1, size(t) - 1)").as("h1p"))
-      .select(explode(arrays_zip(col("h2"), col("h1p"))).as("z"))
-      .select(col("z.h2").as("k"), col("z.h1p").as("k1"))
+    * out of the merged table by summation. The keys are the batch LM
+    * entries' (`TextAnalysis.lmKeyStreamToks`). */
+  def lmBatchCounts(docs: DataFrame, textCol: String): DataFrame =
+    graft.operators.TextAnalysis
+      .lmKeyStreamToks(docs.select(col("doc_id"), split(col(textCol), " ").as("t")), "t")
       .groupBy("k", "k1")
       .agg(count(lit(1)).as("m"))
-  }
+
 
   /** Streaming bigram-LM model build WITHOUT a state store: because
     * bigram counts are ADDITIVE (q161's key-wise merge), the streaming
@@ -488,7 +477,6 @@ object StreamOps {
                       shingleN: Int = 3,
                       bits: Long = graft.operators.Sketches.BloomBits): DataFrame = {
     import graft.operators.Sketches
-    graft.functions.PortableShingleHash.register(SparkSession.active)
     val nWords = (bits / 32).toInt
     val words = new Array[Long](nWords)
     filter.collect().foreach { r =>
@@ -507,8 +495,7 @@ object StreamOps {
       .select(col(idCol), split(col(textCol), " ").as("__t"))
       .filter(size(col("__t")) >= shingleN)
       .select(col(idCol),
-        array_distinct(call_function("portable_shingle_hash",
-          col("__t"), lit(shingleN))).as("__hs"))
+        array_distinct(PortableShingleHash.column(col("__t"), shingleN)).as("__hs"))
       .select(col(idCol),
         size(col("__hs")).cast("long").as("n_shingles"),
         aggregate(col("__hs"), lit(0L),

@@ -48,6 +48,8 @@ object ClusterCheck {
       .config("spark.executor.memory", "2g")
       .config("spark.executor.extraClassPath", classesDir)
       .config("spark.executor.extraJavaOptions", addOpens)
+      // the production optimizer (RangeJoinRewrite), as Engine.session has
+      .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // deployment-mode proof: with SPARK_GRAFT_CHECKPOINT_DIR set, every

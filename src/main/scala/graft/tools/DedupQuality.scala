@@ -112,13 +112,12 @@ object DedupQuality {
     * by exact verification, so the single statistic is banding recall —
     * the round-12 receipt, re-taken per config change (multi-probe,
     * round 13). */
-  def measureEmbedPairs(spark: SparkSession, emb: DataFrame): (Long, Long, Double) = {
+  def measureEmbedPairs(emb: DataFrame): (Long, Long, Double) = {
     import graft.operators.Similarity
-    graft.functions.IntDot.register(spark)
     val q = emb.select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
     val truth = q.as("a").crossJoin(q.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
-      .withColumn("dot", Similarity.intDot(col("a.qv"), col("b.qv")))
+      .withColumn("dot", graft.functions.IntDot.column(col("a.qv"), col("b.qv")))
       .filter(col("dot") >= graft.SparkEntry.EmbedMinScore).count()
     val n = emb.count()
     val bits = Similarity.recommendedBits(n, 32)
@@ -131,13 +130,12 @@ object DedupQuality {
 
   /** Exact ≥-threshold near-dup pair truth over the quantized vectors —
     * shared by the cluster-visibility measurements below. */
-  private def embedTruth(spark: SparkSession, emb: DataFrame): DataFrame = {
+  private def embedTruth(emb: DataFrame): DataFrame = {
     import graft.operators.Similarity
-    graft.functions.IntDot.register(spark)
     val q = emb.select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
     q.as("a").crossJoin(q.as("b"))
       .filter(col("a.vec_id") < col("b.vec_id"))
-      .withColumn("dot", Similarity.intDot(col("a.qv"), col("b.qv")))
+      .withColumn("dot", graft.functions.IntDot.column(col("a.qv"), col("b.qv")))
       .filter(col("dot") >= graft.SparkEntry.EmbedMinScore)
       .select(col("a.vec_id").as("ia"), col("b.vec_id").as("ib"))
   }
@@ -159,9 +157,9 @@ object DedupQuality {
     * cluster (the published method's known blind spot — cross-cluster
     * near-dups; Abbas et al. 2023 accept it for the k ≪ n win). This
     * quantifies that blind spot on the actual corpus. */
-  def measureSem(spark: SparkSession, emb: DataFrame, nlist: Int): (Long, Long, Double) = {
+  def measureSem(emb: DataFrame, nlist: Int): (Long, Long, Double) = {
     import graft.operators.Similarity
-    sameClusterFraction(embedTruth(spark, emb),
+    sameClusterFraction(embedTruth(emb),
       Similarity.semAssign(emb, "vec_id", "embedding", nlist = nlist))
   }
 
@@ -468,10 +466,10 @@ object DedupQuality {
       val (found, truth, recall) = measure(spark, docs, Some(jt))
       println(f"[dedupq] $d minhash banding recall: $found/$truth = $recall%.3f")
       val emb = Tables.table(spark, d, "embeddings")
-      val (ef, et, er) = measureEmbedPairs(spark, emb)
+      val (ef, et, er) = measureEmbedPairs(emb)
       println(f"[dedupq] $d embed-LSH pair recall (shipped multi-probe point): $ef/$et = $er%.3f")
       val k = math.max(16, math.min(4096, math.ceil(emb.count() / 125.0).toInt))
-      val (sf, st, sr) = measureSem(spark, emb, k)
+      val (sf, st, sr) = measureSem(emb, k)
       println(f"[dedupq] $d semdedup cluster recall (nlist=$k%d): $sf/$st = $sr%.3f")
       val (lo, fpv, rmx, hill) = measureSemSeedingBound(spark, emb, k)
       println(f"[dedupq] $d semdedup seeding bound (nlist=$k%d): lowest-id=$lo%.3f " +

@@ -130,13 +130,12 @@ object ScaleTenX {
       //      top-k wants candidates, pair-gen wants tight buckets; the
       //      pair rule's width is NOT the search sizing).
       import graft.operators.Similarity
-      graft.functions.IntDot.register(spark)
       val embBase = spark.read.parquet(s"$srcDir/embeddings.parquet")
       val qb = embBase.select(col("vec_id"),
         Similarity.quantize(col("embedding")).as("qv"))
       val truth = qb.as("a").crossJoin(qb.as("b"))
         .filter(col("a.vec_id") < col("b.vec_id"))
-        .withColumn("dot", Similarity.intDot(col("a.qv"), col("b.qv")))
+        .withColumn("dot", graft.functions.IntDot.column(col("a.qv"), col("b.qv")))
         .filter(col("dot") >= graft.SparkEntry.EmbedMinScore)
         .select(col("a.vec_id").as("id_a"), col("b.vec_id").as("id_b"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

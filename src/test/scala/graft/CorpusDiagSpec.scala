@@ -48,7 +48,6 @@ class CorpusDiagSpec extends AnyFunSuite {
     // composes (each stage is independently oracle-checked; this pins
     // the left-join + coalesce composition and the band accounting)
     val d = Tables.table(spark, dir, "documents")
-    graft.functions.PortableShingleHash.register(spark)
     val span = TextDedup.spanRemovalStats(d, "doc_id", "text")
       .select(col("doc_id"), (col("kept_bp") >= SparkEntry.SpanKeepBp).cast("long").as("g1"))
     val ppl = SparkEntry.pplScoresAll(spark, dir)

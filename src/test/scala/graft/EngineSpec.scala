@@ -68,15 +68,25 @@ class EngineSpec extends AnyFunSuite {
     // local-cluster master and executor JVM options Engine.session does
     // not take. src/test is scanned too; the needle is split so this
     // file does not match itself.
-    val needle = "SparkSession" + ".builder()"
+    assert(sourcesContaining("SparkSession" + ".builder()") ==
+      Set("main/scala/graft/Engine.scala", "main/scala/graft/tools/ClusterCheck.scala"))
+  }
+
+  test("no source registers a session function") {
+    // every native expression reaches a plan through its `column` builder,
+    // so a frame on any session resolves; a temp function would bind to
+    // one session's registry only (needle split as above)
+    assert(sourcesContaining("createOrReplace" + "TempFunction").isEmpty)
+  }
+
+  /** The .scala files under src/ whose text contains `needle`, relative to src/. */
+  private def sourcesContaining(needle: String): Set[String] = {
     val root = java.nio.file.Paths.get("src")
     val files = java.nio.file.Files.walk(root)
-    val builders =
-      try files.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(needle))
-        .map(p => root.relativize(p).toString).toSet
-      finally files.close()
-    assert(builders == Set("main/scala/graft/Engine.scala", "main/scala/graft/tools/ClusterCheck.scala"))
+    try files.iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8").contains(needle))
+      .map(p => root.relativize(p).toString).toSet
+    finally files.close()
   }
 }

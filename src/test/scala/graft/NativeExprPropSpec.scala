@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{MinHash, ShingleHash, SimHash64}
+import graft.functions.{IntDot, MinHash, ShingleHash, SimHash64}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.BoundReference
@@ -29,28 +29,24 @@ class NativeExprPropSpec extends AnyFunSuite {
       Gen.alphaNumStr.map(_.take(6)), Gen.oneOf("a", "b", "über", "東京", ""))))
 
   test("shingle_hash agrees with scalar reference on arbitrary tokens") {
-    ShingleHash.register(spark)
     check(forAll(tokenGen, Gen.choose(1, 4)) { (toks, n) =>
       val got = Seq(Tuple1(toks)).toDF("t")
-        .select(call_function("shingle_hash", col("t"), lit(n)).as("h"))
+        .select(ShingleHash.column(col("t"), n).as("h"))
         .as[Seq[Long]].head()
       got == ShingleHash.referenceOf(toks, n)
     }, "shingle_hash")
   }
 
   test("simhash64 agrees with scalar reference on arbitrary tokens") {
-    SimHash64.register(spark)
     check(forAll(tokenGen) { toks =>
       val got = Seq(Tuple1(toks)).toDF("t")
-        .select(call_function("simhash64", col("t")).as("h"))
+        .select(SimHash64.column(col("t")).as("h"))
         .as[Long].head()
       got == SimHash64.referenceOf(toks)
     }, "simhash64")
   }
 
   test("int_dot agrees with the HOF spelling on arbitrary long vectors (incl. null edges)") {
-    graft.functions.IntDot.register(spark)
-    import graft.operators.Similarity
     // unequal lengths and null elements must NULL out exactly like
     // zip_with+aggregate (pad-with-null poisons the fold)
     val elemGen = Gen.frequency(
@@ -62,8 +58,8 @@ class NativeExprPropSpec extends AnyFunSuite {
     } yield (a, b)
     check(forAll(vecGen) { case (a, b) =>
       val df = Seq((a, b)).toDF("a", "b")
-        .select(call_function("int_dot", col("a"), col("b")).as("n"),
-          Similarity.intDotHof(col("a"), col("b")).as("h"))
+        .select(IntDot.column(col("a"), col("b")).as("n"),
+          intDotHof(col("a"), col("b")).as("h"))
       val r = df.head()
       (r.isNullAt(0) && r.isNullAt(1)) ||
         (!r.isNullAt(0) && !r.isNullAt(1) && r.getLong(0) == r.getLong(1))
@@ -72,7 +68,6 @@ class NativeExprPropSpec extends AnyFunSuite {
 
   test("portable_buckets agrees with the composed when(intDot>=0) form (incl. mismatch edge)") {
     import graft.operators.Similarity
-    graft.functions.IntDot.register(spark)
     // random small operating points + random vectors, INCLUDING wrong-
     // length vectors (the composed form's intDot-null → key-0 edge)
     val pointGen = for {
@@ -87,7 +82,7 @@ class NativeExprPropSpec extends AnyFunSuite {
       val df = Seq(Tuple1(v)).toDF("__qv")
       val composed = df.select(array(planes.map { tbl =>
         tbl.zipWithIndex.map { case (p, b) =>
-          when(Similarity.intDot(col("__qv"), typedLit(p.toSeq)) >= 0, lit(1L << b))
+          when(IntDot.column(col("__qv"), typedLit(p.toSeq)) >= 0, lit(1L << b))
             .otherwise(lit(0L))
         }.reduce(_ + _)
       }: _*).as("k")).as[Seq[Long]].head()
@@ -100,7 +95,6 @@ class NativeExprPropSpec extends AnyFunSuite {
 
   test("argmax_int_dot agrees with the composed array_max assignment (incl. mismatch edge)") {
     import graft.operators.Similarity
-    graft.functions.IntDot.register(spark)
     val centGen = Gen.choose(1, 6).flatMap(n =>
       Gen.listOfN(n, Gen.zip(Gen.choose(0L, 50L), Gen.listOfN(8, Gen.choose(-100L, 100L)))))
     val vecGen = Gen.oneOf(Gen.const(8), Gen.const(7))
@@ -126,7 +120,6 @@ class NativeExprPropSpec extends AnyFunSuite {
     // semantics). Evaluated through a real distributed plan so the
     // doGenCode path (addReferenceObj + lazily-initialized map state)
     // is what runs.
-    graft.functions.IntDot.register(spark)
     val vecGen = Gen.listOfN(8, Gen.choose(-10000L, 10000L))
     check(forAll(Gen.listOfN(6, vecGen), Gen.choose(0L, 9L), Gen.choose(0L, 9L)) {
       (vecs, ia, ib) =>
@@ -134,9 +127,6 @@ class NativeExprPropSpec extends AnyFunSuite {
         vecs.zipWithIndex.foreach { case (v, i) =>
           m.put(i.toLong, graft.functions.IntDotLookup.pack(v)) }
         val bc = spark.sparkContext.broadcast(m)
-        // the production spelling (direct Column, no registry); the
-        // registry form stays available for SQL-text consumers and is
-        // exercised once below
         val r = Seq((ia, ib)).toDF("id_a", "id_b")
           .select(graft.functions.IntDotLookup.column(col("id_a"), col("id_b"), bc).as("s"))
           .head()
@@ -149,13 +139,12 @@ class NativeExprPropSpec extends AnyFunSuite {
           case _ => false
         }
     }, "int_dot_lookup")
-    // registry form smoke: one resolution through SQL-text binding
+    // fixed-value smoke: one known dot through the same column builder
     val m = new java.util.HashMap[java.lang.Long, Array[Int]]()
     m.put(0L, Array(2, 3)); m.put(1L, Array(5, 7))
     val bc = spark.sparkContext.broadcast(m)
-    graft.functions.IntDotLookup.register(spark, bc)
     assert(Seq((0L, 1L)).toDF("id_a", "id_b")
-      .select(call_function("int_dot_lookup", col("id_a"), col("id_b")).as("s"))
+      .select(graft.functions.IntDotLookup.column(col("id_a"), col("id_b"), bc).as("s"))
       .head().getLong(0) == 2L * 5L + 3L * 7L)
   }
 
@@ -188,11 +177,36 @@ class NativeExprPropSpec extends AnyFunSuite {
     assert(aRow.isNullAt(0), "argmax_int_dot(NULL) must be NULL")
   }
 
+  test("native column builders resolve on a session that is never made active") {
+    // every builder wraps its expression in the Column itself, so a frame
+    // on a second session (spark.newSession() is never the active one)
+    // resolves without any per-session setup
+    import graft.operators.TextDedup
+    val other = spark.newSession()
+    val rows = Seq(("a b c a b d", Seq(1L, -2L, 3L), Seq(4L, 5L, -6L)))
+    def build(s: org.apache.spark.sql.SparkSession) =
+      s.createDataFrame(rows).toDF("text", "a", "b").select(
+        TextDedup.shingleHashes(col("text"), 2).as("sh"),
+        TextDedup.portableShingleHashes(col("text"), 2).as("psh"),
+        TextDedup.portableSimhash32(TextDedup.portableShingleHashes(col("text"), 1)).as("ps32"),
+        SimHash64.column(TextDedup.tokens(col("text"))).as("s64"),
+        IntDot.column(col("a"), col("b")).as("dot"))
+    assert(!org.apache.spark.sql.SparkSession.getActiveSession.contains(other))
+    val got = build(other).collect().toSeq
+    assert(got == build(spark).collect().toSeq)
+    assert(got.head.getLong(4) == 4L - 10L - 18L)
+  }
+
+  /** The composed HOF spelling of `IntDot` — the reference form the
+    * native expression is pinned against. */
+  private def intDotHof(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
+
   /** The composed array_max spelling of `Similarity.semAssignExpr` — the
     * cross-check reference for its native expression. */
   private def semAssignExprComposed(vec: Column, cents: Seq[(Long, Seq[Long])]): Column = {
     val entries = cents.map { case (cid, cv) =>
-      struct(graft.operators.Similarity.intDot(vec, typedlit(cv)).as("s"), lit(-cid).as("negcid"))
+      struct(IntDot.column(vec, typedlit(cv)).as("s"), lit(-cid).as("negcid"))
     }
     val best = array_max(array(entries: _*))
     struct((-best.getField("negcid")).as("cid"), best.getField("s").as("s"))

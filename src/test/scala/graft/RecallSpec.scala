@@ -205,7 +205,7 @@ class RecallSpec extends AnyFunSuite {
     // catching a probing/cap regression (the 10× receipt lives in
     // BASELINE.md via ScaleTenX).
     val (found, truth, recall) = graft.tools.DedupQuality.measureEmbedPairs(
-      spark, Tables.table(spark, TestSpark.sf01, "embeddings"))
+      Tables.table(spark, TestSpark.sf01, "embeddings"))
     assert(truth > 0, "no exact near-dup vector pairs at the oracle SF — the embedding fixture degenerated")
     assert(recall >= 0.25,
       f"embed-LSH pair recall $found/$truth = $recall%.3f < 0.25 at the shipped multi-probe point — " +

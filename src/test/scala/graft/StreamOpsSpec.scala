@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.PortableShingleHash
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -30,12 +31,11 @@ class StreamOpsSpec extends AnyFunSuite {
       StreamOps.hllHourlyUsers(StreamOps.eventsStream(spark, TestSpark.sf0001)),
       "stream_hll")
       .orderBy("h", "bucket").collect()
-    graft.functions.PortableShingleHash.register(spark)
     val batch = Sketches.hllBuild(
       Tables.table(spark, TestSpark.sf0001, "events")
         .select(date_trunc("hour", col("ts")).as("h"),
-          element_at(call_function("portable_shingle_hash",
-            array(coalesce(col("user_id").cast("string"), lit(""))), lit(1)), 1).as("hk")),
+          element_at(PortableShingleHash.column(
+            array(coalesce(col("user_id").cast("string"), lit(""))), 1), 1).as("hk")),
       Seq("h"), "hk")
       .orderBy("h", "bucket").collect()
     assert(streamed.length == batch.length && batch.nonEmpty)
@@ -50,11 +50,9 @@ class StreamOpsSpec extends AnyFunSuite {
     val streamed = StreamOps.runToCompletion(spark,
       StreamOps.cmsBuildStream(stream, "text"), "stream_cms")
       .collect().map(r => (r.getAs[Int]("i"), r.getAs[Long]("p")) -> r.getAs[Long]("s")).toMap
-    graft.functions.PortableShingleHash.register(spark)
     val hc = docs.select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("c"))
-      .select(element_at(call_function("portable_shingle_hash",
-        array(col("token")), lit(1)), 1).as("h"), col("c"))
+      .select(element_at(PortableShingleHash.column(array(col("token")), 1), 1).as("h"), col("c"))
       .groupBy("h").agg(sum(col("c")).as("c"))
     val batch = Sketches.countMinBuild(hc, "h", "c")
       .collect().map(r => (r.getAs[Int]("i"), r.getAs[Long]("p")) -> r.getAs[Long]("s")).toMap
@@ -80,12 +78,11 @@ class StreamOpsSpec extends AnyFunSuite {
     // spanned batches (round 11: each batch overwrites its own
     // batchId-derived subpath so checkpoint replays are idempotent)
     assert(new java.io.File(s"$tmp/partials").listFiles().count(_.getName.startsWith("batch=")) > 1)
-    graft.functions.PortableShingleHash.register(spark)
     val batch = docs
       .select(col("doc_id"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 2)
       .select(
-        call_function("portable_shingle_hash", col("t"), lit(1)).as("u"),
-        posexplode(call_function("portable_shingle_hash", col("t"), lit(2))))
+        PortableShingleHash.column(col("t"), 1).as("u"),
+        posexplode(PortableShingleHash.column(col("t"), 2)))
       .select(col("col").as("k"), element_at(col("u"), col("pos") + lit(1)).as("k1"))
       .groupBy("k", "k1").agg(count(lit(1)).as("m"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
@@ -425,12 +422,11 @@ class StreamOpsSpec extends AnyFunSuite {
     // per-doc rollups, or one of the two bit paths is wrong.
     import spark.implicits._
     import graft.operators.Sketches
-    graft.functions.PortableShingleHash.register(spark)
     val docs = Tables.table(spark, TestSpark.sf0001, "documents")
     val sh = docs.filter(col("doc_id") % 7 === 0)
       .select(col("doc_id"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 3)
       .select(col("doc_id"),
-        explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+        explode(PortableShingleHash.column(col("t"), 3)).as("h"))
       .distinct()
     val filt = Sketches.bloomBuild(sh, "h")
     val probeDocs = docs.filter(col("doc_id") % 7 =!= 0)
@@ -440,7 +436,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val probeSh = probeDocs
       .select(col("doc_id"), split(col("text"), " ").as("t")).filter(size(col("t")) >= 3)
       .select(col("doc_id"),
-        explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+        explode(PortableShingleHash.column(col("t"), 3)).as("h"))
       .distinct()
     val viaJoin = Sketches.bloomMaybeContains(probeSh, filt, "h", Seq("doc_id"))
       .groupBy("doc_id")
@@ -461,7 +457,6 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("streaming KMV state equals the batch sketch on closed input") {
     import graft.operators.Sketches
-    graft.functions.PortableShingleHash.register(spark)
     val docs = Tables.table(spark, TestSpark.sf0001, "documents")
     val stream = spark.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(TestSpark.sf0001)
@@ -469,7 +464,7 @@ class StreamOpsSpec extends AnyFunSuite {
       .select(col("source").as("g"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("g"), explode(array_distinct(
-        call_function("portable_shingle_hash", col("t"), lit(3)))).as("h"))
+        PortableShingleHash.column(col("t"), 3))).as("h"))
       .withColumn("id", lit(0L)).withColumn("v", lit(0L))
     val raw = StreamOps.runUpdate(spark,
       StreamOps.kSmallestStream(rows, Sketches.DefaultKmvK), "stream_kmv")
@@ -480,7 +475,7 @@ class StreamOpsSpec extends AnyFunSuite {
     val sh = docs.select(col("source"), split(col("text"), " ").as("t"))
       .filter(size(col("t")) >= 3)
       .select(col("source"),
-        explode(call_function("portable_shingle_hash", col("t"), lit(3))).as("h"))
+        explode(PortableShingleHash.column(col("t"), 3)).as("h"))
     val batch = Sketches.kmvSketch(sh, "source", "h", Sketches.DefaultKmvK)
       .orderBy("source").collect()
       .map(r => r.getString(0) -> r.getSeq[Long](1).toVector)
@@ -532,13 +527,12 @@ class StreamOpsSpec extends AnyFunSuite {
 
   test("streaming hash-sample quantiles equal the batch q150 path on closed input") {
     import graft.operators.Sketches
-    graft.functions.PortableShingleHash.register(spark)
     val docs = Tables.table(spark, TestSpark.sf0001, "documents")
     val stream = spark.readStream.schema(docs.schema)
       .option("pathGlobFilter", "documents.parquet").parquet(TestSpark.sf0001)
     val rows = stream.select(col("lang").as("g"),
-      element_at(call_function("portable_shingle_hash",
-        array(coalesce(col("doc_id").cast("string"), lit(""))), lit(1)), 1).as("h"),
+      element_at(PortableShingleHash.column(
+        array(coalesce(col("doc_id").cast("string"), lit(""))), 1), 1).as("h"),
       col("doc_id").as("id"), col("n_chars").cast("long").as("v"))
     val raw = StreamOps.runUpdate(spark,
       StreamOps.kSmallestStream(rows, Sketches.DefaultSampleK), "stream_sample")
@@ -552,8 +546,8 @@ class StreamOpsSpec extends AnyFunSuite {
       .map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
     val keyed = docs.select(col("lang"), col("doc_id"),
       col("n_chars").cast("long").as("n_chars"),
-      element_at(call_function("portable_shingle_hash",
-        array(coalesce(col("doc_id").cast("string"), lit(""))), lit(1)), 1).as("h"))
+      element_at(PortableShingleHash.column(
+        array(coalesce(col("doc_id").cast("string"), lit(""))), 1), 1).as("h"))
     val batch = Sketches.sampleQuantiles(
         Sketches.hashSample(keyed, Seq("lang"), "doc_id", "h"),
         Seq("lang"), "n_chars", "doc_id", "h", qs)

@@ -62,9 +62,8 @@ class TierESpec extends AnyFunSuite {
   }
 
   test("shingle_hash expression matches scalar reference, incl. short/empty inputs") {
-    graft.functions.ShingleHash.register(spark)
     val df = Seq((1L, "alpha beta gamma delta"), (2L, "one two"), (3L, "solo"), (4L, "")).toDF("id", "text")
-    val got = df.select(col("id"), call_function("shingle_hash", split(col("text"), " "), lit(3)).as("h"))
+    val got = df.select(col("id"), graft.functions.ShingleHash.column(split(col("text"), " "), 3).as("h"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(got(1L) == graft.functions.ShingleHash.referenceOf(Seq("alpha", "beta", "gamma", "delta"), 3))
     assert(got(1L).length == 2)
@@ -182,11 +181,10 @@ class TierESpec extends AnyFunSuite {
   }
 
   test("fused hash matches composed on inputs split() cannot produce (r10 advice)") {
-    // the registered SQL function admits any null-free array<string> —
+    // the native expression admits any null-free array<string> —
     // empty arrays must agree with the composed form for every n
     // (n ≥ 2: one hash of ""; n == 1: zero hashes), and arrays WITH
     // nulls must be rejected at type check, not silently hashed
-    graft.functions.PortableShingleHash.register(spark)
     for (n <- Seq(1, 2, 3)) {
       // slice(split(…), 1, 0): an EMPTY array that keeps split()'s
       // containsNull = false (array().cast(…) flips it to true and the
@@ -194,14 +192,15 @@ class TierESpec extends AnyFunSuite {
       val diff = spark.range(1)
         .select(expr("slice(split('x', ','), 1, 0)").as("t"))
         .select(
-          call_function("portable_shingle_hash", col("t"), lit(n)).as("fused"),
+          graft.functions.PortableShingleHash.column(col("t"), n).as("fused"),
           transform(TextDedup.shingles(col("t"), n),
             s => conv(substring(md5(s), 1, 8), 16, 10).cast("long")).as("composed"))
         .filter(not(col("fused") === col("composed"))).count()
       assert(diff == 0L, s"empty-array divergence at n=$n")
     }
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT portable_shingle_hash(array('a', CAST(NULL AS STRING)), 2)").collect()
+      spark.range(1).select(graft.functions.PortableShingleHash.column(
+        array(lit("a"), lit(null).cast("string")), 2)).collect()
     }
     assert(err.getMessage.toLowerCase.contains("without null"))
   }
@@ -256,8 +255,7 @@ class TierESpec extends AnyFunSuite {
   test("simhash expression matches scalar reference and codegen evaluates") {
     val texts = Seq("spark shuffles data across executors", "a b c", "")
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
-    SimHash64.register(spark)
-    val got = df.select(col("id"), call_function("simhash64", split(col("text"), " ")).as("h"))
+    val got = df.select(col("id"), SimHash64.column(split(col("text"), " ")).as("h"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     texts.zipWithIndex.foreach { case (t, i) =>
       assert(got(i.toLong) == SimHash64.referenceOf(t.split(" ").toSeq), s"text $i")
@@ -353,12 +351,12 @@ class TierESpec extends AnyFunSuite {
 
   test("fingerprint is stable and shared by identical docs only (on sample)") {
     val docs = Tables.table(spark, TestSpark.sf0001, "documents").limit(50)
-    val fp1 = docs.select(col("doc_id"), TextAnalysis.fingerprint(docs, col("text")).as("fp")).collect()
-    val fp2 = docs.select(col("doc_id"), TextAnalysis.fingerprint(docs, col("text")).as("fp")).collect()
+    val fp1 = docs.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp")).collect()
+    val fp2 = docs.select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp")).collect()
     assert(fp1.map(_.toSeq).toSeq == fp2.map(_.toSeq).toSeq, "deterministic")
     val planted = Seq((1L, "alpha beta gamma delta epsilon zeta"), (2L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text")
-    val fps = planted.select(TextAnalysis.fingerprint(planted, col("text"))).as[Long].collect()
+    val fps = planted.select(TextAnalysis.fingerprint(col("text"))).as[Long].collect()
     assert(fps(0) == fps(1))
   }
 
@@ -1184,14 +1182,13 @@ class TierESpec extends AnyFunSuite {
   }
 
   test("q160 weighted sampling: SQL-text key equals the fused width-1 hash; weight bias; determinism") {
-    graft.functions.PortableShingleHash.register(spark)
     // the declared Spark text's conv(substring(md5)) key must equal the
     // fused PortableShingleHash width-1 value on the same strings — the
     // documented 32-bit equivalence the dual DuckDB text relies on
-    val mism = spark.sql(
-      "SELECT COUNT(*) AS n FROM (SELECT CAST(id AS STRING) AS s FROM range(200)) " +
-        "WHERE CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT) != " +
-        "element_at(portable_shingle_hash(array(s), 1), 1)").head().getLong(0)
+    val mism = spark.range(200).select(col("id").cast("string").as("s"))
+      .filter(conv(substring(md5(col("s")), 1, 8), 16, 10).cast("long") =!=
+        element_at(graft.functions.PortableShingleHash.column(array(col("s")), 1), 1))
+      .count()
     assert(mism == 0L)
     // priority is monotone non-increasing in the weight (heavier docs
     // never sink later in the order) and the whole query is deterministic
