@@ -1,9 +1,9 @@
 package graft.operators
 
+import graft.functions.IntDot
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.IntDot
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`embeddings.embedding`: array<float>[64] — FIXTURES.md), the
@@ -312,9 +312,8 @@ object Similarity {
     * projection: the bucket expressions reference __qv tables×bits times
     * (CollapseProject, cf. TextDedup.minhashSignature). */
   private[graft] def portableQuantized(df: DataFrame, idCol: String, vecCol: String,
-                                scale: Int): DataFrame = {
+                                scale: Int): DataFrame =
     df.select(col(idCol), quantize(col(vecCol), scale).as("__qv"))
-  }
 
   /** (table, bucket) key stream of the portable embedding-LSH bucketing —
     * the EXACT keys `portableEmbedPairs` pairs on, factored out so the
@@ -735,10 +734,9 @@ object Similarity {
     * semantic-cluster family. Cheap cast pass; re-derive per reference
     * rather than cutting (CLAUDE.md). */
   private[graft] def semQuantized(corpus: DataFrame, idCol: String, vecCol: String,
-                                  scale: Int = 10000): DataFrame = {
+                                  scale: Int = 10000): DataFrame =
     corpus.select(col(idCol).cast("long").as("vec_id"),
       quantize(col(vecCol), scale).as("__v"))
-  }
 
   /** The `nlist` lowest-id vectors as a broadcast centroid frame
     * (__cid, __cvec) — the deterministic seed set any engine reproduces. */

@@ -298,12 +298,11 @@ object TextDedup {
     * — the form the gate-ensemble entries feed from their shared token
     * frame (r18: one tokenize pass for span/ppl/NB instead of three). */
   private[graft] def spanOccurrencesToks(df: DataFrame, idCol: String,
-                                         tokCol: String, k: Int): DataFrame = {
+                                         tokCol: String, k: Int): DataFrame =
     df.filter(size(col(tokCol)) >= k)
       .select(col(idCol),
         posexplode(graft.functions.PortableShingleHash.column(col(tokCol), k))
           .as(Seq("__pos", "__h")))
-  }
 
   /** Exact-substring (k-token span) sharing report — the span-level
     * complement to the document-level dedup family: minhash/simhash say

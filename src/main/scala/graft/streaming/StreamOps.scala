@@ -329,7 +329,6 @@ object StreamOps {
       .groupBy("k", "k1")
       .agg(count(lit(1)).as("m"))
 
-
   /** Streaming bigram-LM model build WITHOUT a state store: because
     * bigram counts are ADDITIVE (q161's key-wise merge), the streaming
     * form doesn't need stateful aggregation at all — each micro-batch

@@ -48,7 +48,7 @@ object ClusterCheck {
       .config("spark.executor.memory", "2g")
       .config("spark.executor.extraClassPath", classesDir)
       .config("spark.executor.extraJavaOptions", addOpens)
-      // the production optimizer (RangeJoinRewrite), as Engine.session has
+      // the optimizer rules Engine.session installs (RangeJoinRewrite)
       .withExtensions(new graft.plans.GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
