@@ -842,7 +842,7 @@ private[graft] object CurationEntries {
         s"${quantEmbCte("qe", "qv")}, " +
         "vp AS (SELECT id_a, id_b, n_inter, n_union FROM v WHERE n_inter * 10 >= n_union * 9), " +
         "md AS (SELECT vp.id_a, vp.id_b, vp.n_inter, vp.n_union, " +
-        "CAST(list_sum(list_transform(range(1, 65), i -> a.qv[i] * b.qv[i])) AS BIGINT) AS dot " +
+        s"CAST(list_sum(list_transform(range(1, ${Similarity.EmbedDim + 1}), i -> a.qv[i] * b.qv[i])) AS BIGINT) AS dot " +
         "FROM vp JOIN qe a ON a.vec_id = vp.id_a JOIN qe b ON b.vec_id = vp.id_b) " +
         "SELECT id_a, id_b, n_inter, n_union, dot, " +
         s"CAST(CASE WHEN dot < $EmbedMinScore THEN 1 ELSE 0 END AS BIGINT) AS divergent " +

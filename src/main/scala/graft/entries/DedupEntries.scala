@@ -45,7 +45,7 @@ private[graft] object DedupEntries {
       s"AND a.j = ($minCombo)[CAST(list_sum(list_transform(range(0, $nChunks), " +
       s"c -> CASE WHEN ((xor(a.sim, b.sim) >> ($chunkBits * c)) & $mask) = 0 THEN (1 << c) ELSE 0 END)) AS INT) + 1]) " +
       "SELECT id_a, id_b, CAST(bit_count(xor(sa, sb)) AS BIGINT) AS hamming " +
-      s"FROM pairs WHERE bit_count(xor(sa, sb)) <= 3$extraWhere " +
+      s"FROM pairs WHERE bit_count(xor(sa, sb)) <= ${TextDedup.SimhashMaxHamming}$extraWhere " +
       "ORDER BY id_a, id_b LIMIT 100"
   }
 

@@ -3,6 +3,7 @@ package entries
 
 import graft.SparkEntry._
 import graft.operators.{Checkpoints, Similarity, TextDedup}
+import graft.operators.Similarity.{EmbedDim, PlaneSeed}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -64,11 +65,14 @@ private[graft] object EmbeddingEntries {
   }
 
   /** Shared CTE chain replaying the portable embedding-LSH pipeline in
-    * DuckDB (q84 pair check, q97 clustering): quantized integer vectors,
-    * hyperplanes as a generated VALUES table
-    * (Similarity.portableHyperplanes — one source of truth), bucket
+    * DuckDB (q84 pair check, q97 clustering): quantized integer vectors
+    * (quantEmbCte, QuantScale), hyperplanes as a generated VALUES table
+    * (Similarity.portableHyperplanes at EmbedDim and PlaneSeed), bucket
     * signatures via sign-bit sums, candidate pairs, integer-dot
-    * verification. Ends with CTE `v(id_a, id_b, score)`. */
+    * verification over `range(1, EmbedDim + 1)`. Those are the constants
+    * the Spark operators read — none is an operator parameter, so the
+    * replay cannot drift from a caller's setting. Ends with CTE
+    * `v(id_a, id_b, score)`. */
   private def embedLshReplayCtes(embedBits: Int): String = {
     // embedBits: oracleSqlFor (OracleParams) derives it from the SAME dir
     // the Spark entries size against; the table count derives from the
@@ -77,8 +81,8 @@ private[graft] object EmbeddingEntries {
     // likewise — so the replay banding is value-identical by
     // construction
     val probes = embedProbesFor(embedBits)
-    val planes = graft.operators.Similarity.portableHyperplanes(
-      64, embedTablesFor(embedBits), embedBits)
+    val planes = Similarity.portableHyperplanes(
+      EmbedDim, embedTablesFor(embedBits), embedBits, PlaneSeed)
     val vals = planes.zipWithIndex.flatMap { case (tbl, t) =>
       tbl.zipWithIndex.map { case (p, b) =>
         s"($t, $b, ${p.mkString("[", ", ", "]")})"
@@ -86,7 +90,7 @@ private[graft] object EmbeddingEntries {
     }.mkString(", ")
     s"${quantEmbCte("c", "qv")}, " +
       s"hp AS (SELECT * FROM (VALUES $vals) AS x(t, b, h)), " +
-      "sc AS (SELECT c.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, 65), i -> c.qv[i] * hp.h[i])) AS BIGINT) AS s FROM c, hp), " +
+      s"sc AS (SELECT c.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> c.qv[i] * hp.h[i])) AS BIGINT) AS s FROM c, hp), " +
       "bk0 AS (SELECT vec_id, t, CAST(SUM(CASE WHEN s >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bkt FROM sc GROUP BY vec_id, t), " +
       // bsz ≤ cap on the HOME side mirrors the Spark degenerate-bucket
       // guard (TextDedup.DefaultMaxBucketSize); pb is the DIRECTIONAL
@@ -101,7 +105,7 @@ private[graft] object EmbeddingEntries {
       "pr AS (SELECT DISTINCT least(p.vec_id, h.vec_id) AS id_a, greatest(p.vec_id, h.vec_id) AS id_b " +
       "FROM pb p JOIN bk h ON h.t = p.t AND h.bkt = p.pbkt AND h.vec_id <> p.vec_id " +
       s"WHERE h.bsz <= ${graft.operators.TextDedup.DefaultMaxBucketSize}), " +
-      "v AS (SELECT id_a, id_b, CAST(list_sum(list_transform(range(1, 65), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
+      s"v AS (SELECT id_a, id_b, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
       "FROM pr JOIN c ca ON ca.vec_id = pr.id_a JOIN c cb ON cb.vec_id = pr.id_b)"
   }
 
@@ -114,7 +118,7 @@ private[graft] object EmbeddingEntries {
   private def semClusterCtes(semNlist: Int): String =
     s"${quantEmbCte("c", "qv")}, " +
       s"cent AS (SELECT vec_id AS cid, qv AS cv FROM c ORDER BY vec_id LIMIT $semNlist), " +
-      "sc AS (SELECT c.vec_id, cent.cid, CAST(list_sum(list_transform(range(1, 65), i -> c.qv[i] * cent.cv[i])) AS BIGINT) AS s FROM c, cent), " +
+      s"sc AS (SELECT c.vec_id, cent.cid, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> c.qv[i] * cent.cv[i])) AS BIGINT) AS s FROM c, cent), " +
       "asg AS (SELECT vec_id, cid, s FROM (SELECT vec_id, cid, s, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cid) AS r FROM sc) WHERE r = 1), " +
       "csz AS (SELECT cid, COUNT(*) AS n_members FROM asg GROUP BY cid)"
 
@@ -131,7 +135,7 @@ private[graft] object EmbeddingEntries {
       s"pr AS (SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b FROM asg a " +
       s"JOIN asg b ON a.cid = b.cid AND a.vec_id < $IncrementalSplitId AND b.vec_id >= $IncrementalSplitId " +
       s"JOIN csze ON csze.cid = a.cid WHERE csze.ne <= ${graft.operators.TextDedup.DefaultMaxBucketSize}), " +
-      "v AS (SELECT pr.cid, id_a, id_b, CAST(list_sum(list_transform(range(1, 65), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
+      s"v AS (SELECT pr.cid, id_a, id_b, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
       "FROM pr JOIN c ca ON ca.vec_id = pr.id_a JOIN c cb ON cb.vec_id = pr.id_b) " +
       s"SELECT cid, id_a, id_b, score FROM v WHERE score >= $EmbedMinScore " +
       "ORDER BY id_a, id_b LIMIT 100"
@@ -283,7 +287,7 @@ private[graft] object EmbeddingEntries {
         "pr AS (SELECT a.cid, a.vec_id AS id_a, b.vec_id AS id_b FROM asg a JOIN asg b ON a.cid = b.cid AND a.vec_id < b.vec_id " +
         s"JOIN csz ON csz.cid = a.cid WHERE csz.n_members <= ${graft.operators.TextDedup.DefaultMaxBucketSize}), " +
         "v AS (SELECT pr.cid, id_a, id_b FROM pr JOIN c ca ON ca.vec_id = pr.id_a JOIN c cb ON cb.vec_id = pr.id_b " +
-        s"WHERE CAST(list_sum(list_transform(range(1, 65), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) >= $EmbedMinScore), " +
+        s"WHERE CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) >= $EmbedMinScore), " +
         "st AS (SELECT cid, COUNT(*) AS n_pairs, COUNT(DISTINCT id_b) AS n_dropped FROM v GROUP BY cid) " +
         "SELECT csz.cid, csz.n_members, CAST(COALESCE(st.n_pairs, 0) AS BIGINT) AS n_pairs, " +
         "CAST(COALESCE(st.n_dropped, 0) AS BIGINT) AS n_dropped " +
@@ -360,14 +364,14 @@ private[graft] object EmbeddingEntries {
     // and ranking all hash-match; recall-pinned in RecallSpec.
     // round 15: the q220 LSH ANN replayed literally — the SAME
     // ±1 hyperplanes as VALUES (one source of truth:
-    // portableHyperplanes at the SELF-SIZED search point, seed 11 —
+    // portableHyperplanes at the SELF-SIZED search point, PlaneSeed —
     // round 16: the triple is dir-derived, annSearchPointFor),
     // bucketing via sign-bit sums, query-side full-XOR probe fan-out
     // (search shape: only the query probes — xor, not the pair-gen
     // path's directional 0→1 flips), integer-dot ranking
     Entry("q220_ann_lsh_portable", annLshTopK, Some { p =>
       val (annTables, annBits, annProbes) = p.annPoint
-      val planes = graft.operators.Similarity.portableHyperplanes(64, annTables, annBits, 11L)
+      val planes = Similarity.portableHyperplanes(EmbedDim, annTables, annBits, PlaneSeed)
       val vals = planes.zipWithIndex.flatMap { case (tbl, t) =>
         tbl.zipWithIndex.map { case (p, b) =>
           s"($t, $b, ${p.mkString("[", ", ", "]")})"
@@ -375,7 +379,7 @@ private[graft] object EmbeddingEntries {
       }.mkString(", ")
       s"WITH ${quantEmbCte("c", "qv")}, " +
         s"hp AS (SELECT * FROM (VALUES $vals) AS x(t, b, h)), " +
-        "sc AS (SELECT c.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, 65), i -> c.qv[i] * hp.h[i])) AS BIGINT) AS s FROM c, hp), " +
+        s"sc AS (SELECT c.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> c.qv[i] * hp.h[i])) AS BIGINT) AS s FROM c, hp), " +
         "bk0 AS (SELECT vec_id, t, CAST(SUM(CASE WHEN s >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bkt FROM sc GROUP BY vec_id, t), " +
         // round 16: the index caps corpus posting lists per (t, bkt) —
         // the phashTopK discipline, mirrored so drops agree cross-engine
@@ -384,7 +388,7 @@ private[graft] object EmbeddingEntries {
         s"qb AS (SELECT vec_id AS query_id, t, unnest(list_prepend(bkt, list_transform(range(0, $annProbes), j -> xor(bkt, 1::BIGINT << j)))) AS bkt " +
         "FROM bk0 WHERE vec_id < 5), " +
         "cand AS (SELECT DISTINCT qb.query_id, bk.vec_id FROM qb JOIN bk ON bk.t = qb.t AND bk.bkt = qb.bkt AND bk.vec_id <> qb.query_id), " +
-        "sv AS (SELECT cand.query_id, cand.vec_id, CAST(list_sum(list_transform(range(1, 65), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
+        s"sv AS (SELECT cand.query_id, cand.vec_id, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
         "FROM cand JOIN c ca ON ca.vec_id = cand.query_id JOIN c cb ON cb.vec_id = cand.vec_id), " +
         "ranked AS (SELECT query_id, vec_id, score, " +
         "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank FROM sv) " +
@@ -432,7 +436,7 @@ private[graft] object EmbeddingEntries {
       out.orderBy("query_id", "rank").limit(100)
     }, Some { p =>
       val (annTables, annBits, annProbes) = p.annPoint
-      val planes = graft.operators.Similarity.portableHyperplanes(64, annTables, annBits, 11L)
+      val planes = Similarity.portableHyperplanes(EmbedDim, annTables, annBits, PlaneSeed)
       val vals = planes.zipWithIndex.flatMap { case (tbl, t) =>
         tbl.zipWithIndex.map { case (p, b) =>
           s"($t, $b, ${p.mkString("[", ", ", "]")})"
@@ -442,17 +446,17 @@ private[graft] object EmbeddingEntries {
         s"cor AS (SELECT * FROM c WHERE vec_id < $IncrementalSplitId), " +
         s"qs AS (SELECT * FROM c WHERE vec_id >= $IncrementalSplitId), " +
         s"hp AS (SELECT * FROM (VALUES $vals) AS x(t, b, h)), " +
-        "sc AS (SELECT cor.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, 65), i -> cor.qv[i] * hp.h[i])) AS BIGINT) AS s FROM cor, hp), " +
+        s"sc AS (SELECT cor.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> cor.qv[i] * hp.h[i])) AS BIGINT) AS s FROM cor, hp), " +
         "bk0 AS (SELECT vec_id, t, CAST(SUM(CASE WHEN s >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bkt FROM sc GROUP BY vec_id, t), " +
         // the q220 cap rule on the STATIC index side (lshAnnIndex caps
         // at build time; the query stream is never capped)
         "bk AS (SELECT * FROM (SELECT *, COUNT(*) OVER (PARTITION BY t, bkt) AS bsz FROM bk0) " +
         s"WHERE bsz <= ${graft.operators.TextDedup.DefaultMaxBucketSize}), " +
-        "qsc AS (SELECT qs.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, 65), i -> qs.qv[i] * hp.h[i])) AS BIGINT) AS s FROM qs, hp), " +
+        s"qsc AS (SELECT qs.vec_id, hp.t, hp.b, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> qs.qv[i] * hp.h[i])) AS BIGINT) AS s FROM qs, hp), " +
         "qbk AS (SELECT vec_id, t, CAST(SUM(CASE WHEN s >= 0 THEN (1::BIGINT << b) ELSE 0 END) AS BIGINT) AS bkt FROM qsc GROUP BY vec_id, t), " +
         s"qb AS (SELECT vec_id AS query_id, t, unnest(list_prepend(bkt, list_transform(range(0, $annProbes), j -> xor(bkt, 1::BIGINT << j)))) AS bkt FROM qbk), " +
         "cand AS (SELECT DISTINCT qb.query_id, bk.vec_id FROM qb JOIN bk ON bk.t = qb.t AND bk.bkt = qb.bkt AND bk.vec_id <> qb.query_id), " +
-        "sv AS (SELECT cand.query_id, cand.vec_id, CAST(list_sum(list_transform(range(1, 65), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
+        s"sv AS (SELECT cand.query_id, cand.vec_id, CAST(list_sum(list_transform(range(1, ${EmbedDim + 1}), i -> ca.qv[i] * cb.qv[i])) AS BIGINT) AS score " +
         "FROM cand JOIN c ca ON ca.vec_id = cand.query_id JOIN c cb ON cb.vec_id = cand.vec_id), " +
         "ranked AS (SELECT query_id, vec_id, score, " +
         "row_number() OVER (PARTITION BY query_id ORDER BY score DESC, vec_id) AS rank FROM sv) " +

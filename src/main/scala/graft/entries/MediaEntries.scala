@@ -158,7 +158,7 @@ private[graft] object MediaEntries {
 
   private def phashBandingReplaySql(bszExpr: String, extraWhere: String): String =
     phashBandingReplaySql(bszExpr, extraWhere,
-      graft.operators.TextDedup.SimhashIntact, maxHamming = 3)
+      TextDedup.SimhashIntact, TextDedup.SimhashMaxHamming)
 
   private def phashBandingReplaySql(bszExpr: String, extraWhere: String,
                                     intact: Int, maxHamming: Int): String = {

@@ -3,6 +3,7 @@ package entries
 
 import graft.SparkEntry._
 import graft.functions.PortableShingleHash
+import graft.streaming.StreamOps.SessionGapMinutes
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -58,11 +59,11 @@ private[graft] object StreamEntries {
       ("WITH e AS (SELECT user_id, event_id, date_trunc('second', ts) AS ts2, value FROM events), " +
         "t1 AS (SELECT user_id, event_id, ts2, value, " +
         "CASE WHEN lag(ts2) OVER (PARTITION BY user_id ORDER BY ts2, event_id) IS NULL " +
-        "OR ts2 >= lag(ts2) OVER (PARTITION BY user_id ORDER BY ts2, event_id) + INTERVAL 30 MINUTE " +
+        s"OR ts2 >= lag(ts2) OVER (PARTITION BY user_id ORDER BY ts2, event_id) + INTERVAL $SessionGapMinutes MINUTE " +
         "THEN 1 ELSE 0 END AS new_sess FROM e), " +
         "t2 AS (SELECT user_id, ts2, value, SUM(new_sess) OVER (PARTITION BY user_id " +
         "ORDER BY ts2, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid FROM t1) " +
-        "SELECT user_id, MIN(ts2) AS session_start, MAX(ts2) + INTERVAL 30 MINUTE AS session_end, " +
+        s"SELECT user_id, MIN(ts2) AS session_start, MAX(ts2) + INTERVAL $SessionGapMinutes MINUTE AS session_end, " +
         "COUNT(*) AS n_events, CAST(SUM(CAST(value AS DECIMAL(18,2))) * 100 AS BIGINT) AS value_cents " +
         "FROM t2 GROUP BY user_id, sid ORDER BY user_id, session_start LIMIT 100"))),
     // Stream-static dimension enrichment run to completion on the closed

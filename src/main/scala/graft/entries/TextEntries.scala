@@ -4,6 +4,7 @@ package entries
 import graft.SparkEntry._
 import graft.functions.PortableShingleHash
 import graft.operators.{Bpe, Checkpoints, TextAnalysis, TextDedup}
+import graft.operators.TextAnalysis.{FingerprintK, FingerprintShingleN, TfIdfScale}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -129,10 +130,10 @@ private[graft] object TextEntries {
     }, Some(_ =>
       ("WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents), " +
         "sh AS (SELECT doc_id, " +
-        "list_sort(list_distinct(list_transform(range(0, greatest(len(toks) - 3, 0) + 1), " +
-        "i -> CAST(('0x' || substr(md5(array_to_string(toks[i+1:i+3], ' ')), 1, 8)) AS BIGINT)))) AS hs " +
+        s"list_sort(list_distinct(list_transform(range(0, greatest(len(toks) - $FingerprintShingleN, 0) + 1), " +
+        s"i -> CAST(('0x' || substr(md5(array_to_string(toks[i+1:i+$FingerprintShingleN], ' ')), 1, 8)) AS BIGINT)))) AS hs " +
         "FROM t) " +
-        "SELECT doc_id, CAST(list_sum(hs[1:8]) AS BIGINT) AS fp " +
+        s"SELECT doc_id, CAST(list_sum(hs[1:$FingerprintK]) AS BIGINT) AS fp " +
         "FROM sh ORDER BY doc_id LIMIT 100"))),
     // Text normalization (lower/strip/collapse) over the punctuation-rich
     // props JSON — shared regex subset, dual text only for DuckDB's 'g' flag
@@ -751,8 +752,8 @@ private[graft] object TextEntries {
       ("WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents), " +
         "tf AS (SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token), " +
         "docfreq AS (SELECT token, COUNT(*) AS df FROM (SELECT DISTINCT doc_id, token FROM toks) GROUP BY token), " +
-        "s AS (SELECT tf.doc_id, tf.token, tf.tf, docfreq.df, (tf.tf * 1000) // docfreq.df AS score_k, " +
-        "row_number() OVER (PARTITION BY tf.doc_id ORDER BY (tf.tf * 1000) // docfreq.df DESC, tf.token) AS rnk " +
+        s"s AS (SELECT tf.doc_id, tf.token, tf.tf, docfreq.df, (tf.tf * $TfIdfScale) // docfreq.df AS score_k, " +
+        s"row_number() OVER (PARTITION BY tf.doc_id ORDER BY (tf.tf * $TfIdfScale) // docfreq.df DESC, tf.token) AS rnk " +
         "FROM tf JOIN docfreq USING (token)) " +
         "SELECT doc_id, token, tf, df, score_k, rnk FROM s WHERE rnk <= 3 " +
         "ORDER BY doc_id, rnk LIMIT 100"))),

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   * histogram, exactly like the reference BPE trainers (which iterate a
   * word-frequency dict, never the corpus; Sennrich et al. 2016,
   * arXiv:1508.07909 — the reference repo has no tokenizer training).
-  * `maxVocab` caps driver memory, with deterministic (count DESC, word)
+  * `MaxVocab` caps driver memory, with deterministic (count DESC, word)
   * selection: the dropped tail is the lowest-signal mass by
   * construction. Segmentation is scan-local (`mapPartitions`, the
   * `packSequences` class — an imperative per-word merge loop no
@@ -36,6 +36,10 @@ object Bpe {
 
   /** A learned merge: adjacent symbol pair → its rank (0 = learned first). */
   final case class Merge(left: String, right: String, rank: Int)
+
+  /** `train` learns from the MaxVocab most frequent words (count desc,
+    * word asc) — the driver-side histogram bound. */
+  val MaxVocab = 100000
 
   /** End-of-word sentinel symbol, kept out of any plausible corpus
     * character by the '<'/'>' framing (the Sennrich convention). */
@@ -57,14 +61,13 @@ object Bpe {
     * map — byte-identical merge sequence to the rescan form (the
     * deterministic argmax: highest count, then lexicographically
     * smallest (left, right); BpePropSpec/TierESpec pin it). */
-  def train(df: DataFrame, textCol: String, nMerges: Int,
-            maxVocab: Int = 100000): Seq[Merge] = {
+  def train(df: DataFrame, textCol: String, nMerges: Int): Seq[Merge] = {
     val hist: Array[(String, Long)] = df
       .select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("w"))
-      .limit(maxVocab)
+      .limit(MaxVocab)
       .collect().map(r => r.getString(0) -> r.getLong(1))
     val words: Array[Array[String]] =
       hist.map { case (w, _) => w.map(_.toString).toArray :+ EndOfWord }

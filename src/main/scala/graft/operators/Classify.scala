@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *
   * 100 TB shape: the persisted count tables are keyed aggregates
   * (label × token / 64 feature buckets — the postings/sketch class);
-  * the SCORING model is explicitly bounded (vocab capped at `maxVocab`
+  * the SCORING model is explicitly bounded (vocab capped at `DefaultVocab`
   * by global count with a deterministic tie-break, label set bounded by
   * the task), so it broadcasts at any corpus scale and scoring is one
   * corpus scan + per-doc hash aggregation. No payload crosses a shuffle:
@@ -39,8 +39,8 @@ object NaiveBayes {
     * bits of log₂ — enough to rank 5 labels without ties dominating. */
   val Scale = 1024L
 
-  /** Bounded scoring model. `vocab` ≤ maxVocab rows; `deltas` ≤
-    * maxVocab × |labels| rows of per-(label, token) bit REBATES below
+  /** Bounded scoring model. `vocab` ≤ DefaultVocab rows; `deltas` ≤
+    * DefaultVocab × |labels| rows of per-(label, token) bit REBATES below
     * the unseen-token cost (the rearrangement that keeps scoring an
     * INNER join — see `score`); `labelStats` = |labels| rows of
     * (unseen-token bits, prior bits). All three broadcast. */
@@ -74,18 +74,18 @@ object NaiveBayes {
     * two scalars the bit formulas need (train doc total, label count)
     * come off the |labels|-row doc-count slice — a bounded head(), the
     * manifest-sized driver action class. */
-  def modelFromCounts(artifact: DataFrame, maxVocab: Int = DefaultVocab): NbModel = {
+  def modelFromCounts(artifact: DataFrame): NbModel = {
     val a = Checkpoints.cut(artifact, eager = true)
     val tc = a.filter(col("__kind") === "t").select("__lab", "__tok", "__n")
     val dl = a.filter(col("__kind") === "d").select("__lab", "__n")
 
     val vocab = Checkpoints.cut(
       tc.groupBy("__tok").agg(sum("__n").as("__vn"))
-        .orderBy(col("__vn").desc, col("__tok")).limit(maxVocab).select("__tok"),
+        .orderBy(col("__vn").desc, col("__tok")).limit(DefaultVocab).select("__tok"),
       eager = true)
     val v = vocab.count()
 
-    // in-vocab per-label token counts and totals — all ≤ maxVocab × |labels|.
+    // in-vocab per-label token counts and totals — all ≤ DefaultVocab × |labels|.
     // nl is cut EAGERLY: the materialization IS the job the fail-fast
     // check below needs anyway, and ls + deltas then reuse the ≤|labels|
     // materialized rows instead of re-aggregating perLab twice (r12
@@ -129,12 +129,11 @@ object NaiveBayes {
   }
 
   /** One-shot model from a labeled doc set. */
-  def model(labeled: DataFrame, textCol: String, labelCol: String,
-            maxVocab: Int = DefaultVocab): NbModel =
-    modelFromCounts(counts(labeled, textCol, labelCol), maxVocab)
+  def model(labeled: DataFrame, textCol: String, labelCol: String): NbModel =
+    modelFromCounts(counts(labeled, textCol, labelCol))
 
   /** Driver-resident model artifact — the three bounded frames collected
-    * (vocab ≤ maxVocab, deltas ≤ maxVocab × |labels|, labelStats =
+    * (vocab ≤ DefaultVocab, deltas ≤ DefaultVocab × |labels|, labelStats =
     * |labels| rows; a few tens of KB). The deployment shape of a trained
     * model is persisted DATA, not live executor blocks: a block-backed
     * NbModel dies with any blanket unpersist (the Bench inter-entry

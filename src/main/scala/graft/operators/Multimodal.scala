@@ -761,18 +761,16 @@ object Multimodal {
   val VhashIntact = 3
   val VhashMaxHamming = 5
 
-  def phashPairs(features: DataFrame, idCol: String = "media_id",
-                 hashCol: String = "phash", maxHamming: Int = 3,
-                 maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
+  def phashPairs(features: DataFrame, hashCol: String = "phash",
+                 maxHamming: Int = TextDedup.SimhashMaxHamming,
                  intact: Int = TextDedup.SimhashIntact): DataFrame = {
     require(maxHamming <= TextDedup.SimhashChunks - intact,
       s"${TextDedup.SimhashChunks} chunks with $intact intact only guarantee " +
         s"hamming <= ${TextDedup.SimhashChunks - intact}")
     val chunkBits = 64 / TextDedup.SimhashChunks
-    val sigs = features.select(col(idCol), col(hashCol).cast("long").as("__sim"))
+    val sigs = features.select(col("media_id"), col(hashCol).cast("long").as("__sim"))
     TextDedup.simhashEmitPairs(
-      TextDedup.simhashComboKeys(sigs, chunkBits, intact), chunkBits, maxHamming,
-      maxBucketSize, intact)
+      TextDedup.simhashComboKeys(sigs, chunkBits, intact), chunkBits, maxHamming, intact)
   }
 
   /** Incremental perceptual near-dup: pairs between an EXISTING
@@ -786,13 +784,7 @@ object Multimodal {
     * streaming incoming side (q218) caps corpus-side occupancy only —
     * the rule `TextDedup.crossBucketPairs` derives from its input. */
   def phashCrossPairs(existing: DataFrame, incoming: DataFrame,
-                      idCol: String = "media_id", hashCol: String = "phash",
-                      maxHamming: Int = 3,
-                      maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                      intact: Int = TextDedup.SimhashIntact): DataFrame = {
-    require(maxHamming <= TextDedup.SimhashChunks - intact,
-      s"${TextDedup.SimhashChunks} chunks with $intact intact only guarantee " +
-        s"hamming <= ${TextDedup.SimhashChunks - intact}")
+                      hashCol: String = "phash"): DataFrame = {
     val chunkBits = 64 / TextDedup.SimhashChunks
     // cut the (id, sig) frame before the combo explode: each side is
     // referenced twice downstream (occupancy aggregate + join side of
@@ -802,12 +794,11 @@ object Multimodal {
     // portableSimhashChunkKeys(cutSigs). Streaming sides (q218's
     // per-trigger batch) cannot be checkpointed and are referenced once.
     def keys(df: DataFrame) = {
-      val sigs0 = df.select(col(idCol), col(hashCol).cast("long").as("__sim"))
+      val sigs0 = df.select(col("media_id"), col(hashCol).cast("long").as("__sim"))
       val sigs = if (df.isStreaming) sigs0 else Checkpoints.cut(sigs0, eager = false)
-      TextDedup.simhashComboKeys(sigs, chunkBits, intact)
+      TextDedup.simhashComboKeys(sigs, chunkBits)
     }
-    TextDedup.simhashCrossEmitPairs(keys(existing), keys(incoming),
-      chunkBits, maxHamming, maxBucketSize, intact)
+    TextDedup.simhashCrossEmitPairs(keys(existing), keys(incoming), chunkBits)
   }
 
   /** Hamming TOP-K similarity search over a 64-bit perceptual-hash
@@ -829,9 +820,9 @@ object Multimodal {
     * Scale shape: the chunk index is a keys-only (chunk, value, id)
     * exchange — hashes join back AFTER the candidate pairs form; the
     * per-(chunk, value) corpus posting list is capped at
-    * `maxBucketSize` (a degenerate value — monochrome images all
-    * hashing alike — otherwise multiplies every query landing on it;
-    * the cap is mirrored in the q219 replay, so drops agree
+    * `TextDedup.DefaultMaxBucketSize` (a degenerate value — monochrome
+    * images all hashing alike — otherwise multiplies every query landing
+    * on it; the cap is mirrored in the q219 replay, so drops agree
     * cross-engine). Output: (query_id, media_id, hamming, rank ≤ k). */
   /** MIH substring-count rule (Norouzi et al. 2012 §search cost): with
     * m chunks of 64/m bits over n items, expected posting-list length is
@@ -852,10 +843,8 @@ object Multimodal {
   }
 
   def phashTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                idCol: String = "media_id", hashCol: String = "phash",
-                queryIdCol: String = "query_id",
-                chunks: Int = TextDedup.SimhashChunks,
-                maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
+                chunks: Int = TextDedup.SimhashChunks): DataFrame = {
+    val (idCol, hashCol, queryIdCol) = ("media_id", "phash", "query_id")
     require(64 % chunks == 0 && chunks >= 2,
       s"chunk count $chunks must divide 64 (radius = chunks - 1)")
     val chunkBits = 64 / chunks
@@ -868,7 +857,7 @@ object Multimodal {
     val corpusKeys = chunkKeys(corpus, idCol)
     val eligible = corpusKeys.groupBy("__c", "__v")
       .agg(count(lit(1)).as("__n"))
-      .filter(col("__n") <= maxBucketSize)
+      .filter(col("__n") <= TextDedup.DefaultMaxBucketSize)
       .select("__c", "__v")
     val cand = chunkKeys(queries, queryIdCol)
       .join(corpusKeys.join(eligible, Seq("__c", "__v"))
@@ -898,11 +887,10 @@ object Multimodal {
   /** Occupancy audit for the phash combo buckets: (combo, ckey, n) —
     * DriftGuardSpec's margin probe for the q209/q210 fixture (cf.
     * `TextDedup.portableSimhashBucketSizes`). */
-  def phashBucketSizes(features: DataFrame, idCol: String = "media_id",
-                       hashCol: String = "phash",
+  def phashBucketSizes(features: DataFrame, hashCol: String = "phash",
                        intact: Int = TextDedup.SimhashIntact): DataFrame =
     TextDedup.simhashComboKeys(
-        features.select(col(idCol), col(hashCol).cast("long").as("__sim")),
+        features.select(col("media_id"), col(hashCol).cast("long").as("__sim")),
         64 / TextDedup.SimhashChunks, intact)
       .groupBy(col("__combo").as("combo"), col("__ckey").as("ckey"))
       .agg(count(lit(1)).as("n"))

@@ -42,11 +42,13 @@ object Scale {
     * NTILE's ascending convention up to boundary ties/approximation —
     * exact NTILE also splits equal values across buckets by position,
     * which no value-based method can reproduce. */
+  private val QuantileAccuracy = 10000
+
   def ntileByQuantiles(df: DataFrame, valueCol: String, n: Int,
-                       outCol: String = "ntile", accuracy: Int = 10000): DataFrame = {
+                       outCol: String = "ntile"): DataFrame = {
     val probs = (1 until n).map(_.toDouble / n)
     val boundaries = df.select(
-      percentile_approx(col(valueCol), typedLit(probs), lit(accuracy)).as("b"))
+      percentile_approx(col(valueCol), typedLit(probs), lit(QuantileAccuracy)).as("b"))
       .head().getSeq[Any](0).map {
         // covers every numeric boundary type percentile_approx can return
         // (Double, BigDecimal, Long, Integer, Float, Short, Byte)
@@ -184,14 +186,15 @@ object Scale {
     * `method`: "xxhash64" (default — fastest, engine-specific values) or
     * "md5" (first 8 hex chars of the key's md5 as an unsigned 32-bit int —
     * slower but portable: any engine with md5 computes the identical
-    * split, which is what puts q69 under the cross-engine oracle). */
+    * split, which is what puts q69 under the cross-engine oracle). The
+    * label ("train"/"test") lands in column `split`. */
   def hashSplit(df: DataFrame, keyCol: String, trainPct: Int,
-                outCol: String = "split", method: String = "xxhash64"): DataFrame = {
+                method: String = "xxhash64"): DataFrame = {
     val h = method match {
       case "md5" => conv(substring(md5(col(keyCol).cast("string")), 1, 8), 16, 10).cast("long")
       case _     => xxhash64(col(keyCol))
     }
-    df.withColumn(outCol,
+    df.withColumn("split",
       when(pmod(h, lit(100)) < trainPct, lit("train")).otherwise(lit("test")))
   }
 

@@ -33,6 +33,27 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
+  /** Embedding width (`embeddings.embedding`, FIXTURES.md): the length of
+    * every hyperplane and the `range(1, EmbedDim + 1)` dot the DuckDB
+    * replay texts spell. */
+  val EmbedDim = 64
+
+  /** `quantize`'s fixed-point scale: floor(x · QuantScale) per component.
+    * SparkEntry.quantEmbCte interpolates it into the replay texts. */
+  val QuantScale = 10000
+
+  /** Seed of the ±1 LSH hyperplanes; the replay texts build their
+    * VALUES table from `portableHyperplanes(EmbedDim, …, PlaneSeed)`. */
+  val PlaneSeed = 11L
+
+  /** The pair family's base operating point (6 bits × 8 tables — q84's
+    * design point) and the sign-agreement probability of its threshold
+    * (cosine 0.25): 1 − arccos(0.25)/π ≈ 0.580 — the inputs of the
+    * recall-preserving table rules below. */
+  val PairBaseBits = 6
+  val PairBaseTables = 8
+  val ThresholdPBit: Double = 1.0 - math.acos(0.25) / math.Pi
+
   /** Sizing rule for hyperplane-LSH signature width: with n corpus
     * vectors and b bits per table, expected bucket occupancy is n/2^b, so
     * b ≈ log₂(n / targetOccupancy). Occupancy is the knob that matters:
@@ -63,25 +84,25 @@ object Similarity {
     * loss (measured at 10×: pair recall 0.298 → 0.043 with tables
     * pinned at 8 — BASELINE.md round 12), while bits+tables sizing
     * holds the threshold collision probability 1−(1−pBit^bits)^L fixed
-    * by construction. pBit defaults to the sign-agreement probability
-    * of the q84 design threshold (cosine 0.25): 1 − arccos(0.25)/π ≈
-    * 0.580. Floor at `baseTables` (never fewer than the base operating
-    * point); cap at 128 — past that, per-table work is cheap but the
-    * banding fan-out constant matters, and a corpus needing >128 tables
+    * by construction, with pBit = `ThresholdPBit` and the base point
+    * `PairBaseBits` × `PairBaseTables`. Floor at the base table count
+    * (never fewer than the base operating point); cap at 128 — past
+    * that, per-table work is cheap but the banding fan-out constant
+    * matters, and a corpus needing >128 tables
     * (bits ≈ 17, n ≈ 4M per partition-group) should shard the corpus
     * before the LSH instead. */
-  def recommendedTables(bits: Int, baseBits: Int = 6, baseTables: Int = 8,
-                        pBit: Double = 1.0 - math.acos(0.25) / math.Pi): Int = {
-    require(bits >= 1 && baseTables >= 1 && pBit > 0 && pBit < 1)
+  def recommendedTables(bits: Int): Int = {
+    require(bits >= 1)
     // minimal L with 1−(1−pBit^bits)^L ≥ the base point's collision
     // probability — exact by construction (a multiplicative
     // (1/pBit)^Δ scale-up undershoots by the ceil discretization);
     // the 1e-9 slack absorbs float error at bits == baseBits, where
     // the quotient is 8.000000x and must ceil to 8, not 9
-    val baseCollide = 1.0 - math.pow(1.0 - math.pow(pBit, baseBits.toDouble), baseTables.toDouble)
+    val baseCollide = 1.0 - math.pow(1.0 - math.pow(ThresholdPBit, PairBaseBits.toDouble),
+      PairBaseTables.toDouble)
     val l = math.ceil(
-      math.log1p(-baseCollide) / math.log1p(-math.pow(pBit, bits.toDouble)) - 1e-9).toInt
-    math.max(baseTables, math.min(128, l))
+      math.log1p(-baseCollide) / math.log1p(-math.pow(ThresholdPBit, bits.toDouble)) - 1e-9).toInt
+    math.max(PairBaseTables, math.min(128, l))
   }
 
   /** Recall-preserving table count under 1-bit MULTI-PROBE (round 13;
@@ -98,10 +119,11 @@ object Similarity {
     * (keys only — the fan-out never carries vectors). Floor 2 (never a
     * single table — one bad table would be the whole pair stream); cap
     * 128 as in the base rule. */
-  def recommendedTablesProbed(bits: Int, baseBits: Int = 6, baseTables: Int = 8,
-                              pBit: Double = 1.0 - math.acos(0.25) / math.Pi,
+  def recommendedTablesProbed(bits: Int, baseBits: Int = PairBaseBits,
+                              baseTables: Int = PairBaseTables,
                               baseProbed: Boolean = false): Int = {
-    require(bits >= 1 && baseTables >= 1 && pBit > 0 && pBit < 1)
+    require(bits >= 1 && baseTables >= 1)
+    val pBit = ThresholdPBit
     def pT(b: Int): Double = math.pow(pBit, b.toDouble) +
       b * math.pow(pBit, (b - 1).toDouble) * (1.0 - pBit)
     // baseProbed: the base operating point itself ran multi-probe (the
@@ -138,24 +160,24 @@ object Similarity {
     (tables, bits, bits)
   }
 
-  /** Fixed-point quantization: floor(x · 10^4) per component, BIGINT.
+  /** Fixed-point quantization: floor(x · QuantScale) per component, BIGINT.
     * float→double widening is exact and floor is rounding-mode-free, so
     * Spark and any IEEE-double SQL engine derive the IDENTICAL integer
     * vector from the same parquet floats — what makes similarity scores
     * hash-comparable cross-engine (float cosine never is: summation order
     * and ulp drift differ). For unit-norm embeddings the integer dot
     * product is a monotone stand-in for cosine up to quantization error. */
-  def quantize(vec: Column, scale: Int = 10000): Column =
-    transform(vec, x => floor(x.cast("double") * scale).cast("long"))
+  def quantize(vec: Column): Column =
+    transform(vec, x => floor(x.cast("double") * QuantScale).cast("long"))
 
   /** Exact top-k by quantized integer dot product: broadcast query set,
     * one corpus scan, narrow rank shuffle.
     * Output: (query_id, vec_id, score BIGINT, rank). */
   def bruteForceTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                         queries: DataFrame, queryIdCol: String, queryVecCol: String,
-                        k: Int, scale: Int = 10000): DataFrame = {
-    val c = corpus.select(col(idCol), quantize(col(vecCol), scale).as("__cq"))
-    val q = queries.select(col(queryIdCol), quantize(col(queryVecCol), scale).as("__qq"))
+                        k: Int): DataFrame = {
+    val c = corpus.select(col(idCol), quantize(col(vecCol)).as("__cq"))
+    val q = queries.select(col(queryIdCol), quantize(col(queryVecCol)).as("__qq"))
     val w = Window.partitionBy(queryIdCol).orderBy(col("score").desc, col(idCol))
     c.crossJoin(broadcast(q))
       .filter(col(queryIdCol) =!= col(idCol))
@@ -176,13 +198,10 @@ object Similarity {
   def lshTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, queryIdCol: String, queryVecCol: String,
                  k: Int, numTables: Int = 4, bitsPerTable: Int = 4,
-                 dim: Int = 64, seed: Long = 11L, probes: Int = 4,
-                 scale: Int = 10000,
-                 maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
-    val (cq, cKeys) = lshAnnIndex(corpus, idCol, vecCol, numTables,
-      bitsPerTable, dim, seed, scale, maxBucketSize)
+                 probes: Int = 4): DataFrame = {
+    val (cq, cKeys) = lshAnnIndex(corpus, idCol, vecCol, numTables, bitsPerTable)
     lshTopKIntAgainstIndex(cq, cKeys, queries, queryIdCol, queryVecCol,
-      k, numTables, bitsPerTable, dim, seed, probes, scale)
+      k, numTables, bitsPerTable, probes)
   }
 
   /** The CORPUS side of the portable LSH ANN, factored as a persisted
@@ -192,12 +211,9 @@ object Similarity {
     * query micro-batch against the SAME materialized frames instead of
     * re-deriving signatures per trigger. */
   def lshAnnIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                  numTables: Int = 4, bitsPerTable: Int = 4,
-                  dim: Int = 64, seed: Long = 11L,
-                  scale: Int = 10000,
-                  maxBucketSize: Int = TextDedup.DefaultMaxBucketSize): (DataFrame, DataFrame) = {
-    val planes = portableHyperplanes(dim, numTables, bitsPerTable, seed)
-    val cq = portableQuantized(corpus, idCol, vecCol, scale)
+                  numTables: Int = 4, bitsPerTable: Int = 4): (DataFrame, DataFrame) = {
+    val planes = portableHyperplanes(EmbedDim, numTables, bitsPerTable, PlaneSeed)
+    val cq = portableQuantized(corpus, idCol, vecCol)
       .select(col(idCol).as("vec_id"), col("__qv"))
     // capped at BUILD time (round 16 — the phashTopK posting-list
     // discipline): an over-cap bucket's keys never enter the index, so
@@ -214,7 +230,7 @@ object Similarity {
     // anyway (the scaladoc contract); re-derivation stays.
     val keys = portableBucketKeys(cq, "vec_id", planes)
     val eligible = keys.groupBy("__t", "__bkt")
-      .agg(count(lit(1)).as("__n")).filter(col("__n") <= maxBucketSize)
+      .agg(count(lit(1)).as("__n")).filter(col("__n") <= TextDedup.DefaultMaxBucketSize)
       .select("__t", "__bkt")
     (cq, keys.join(eligible, Seq("__t", "__bkt")))
   }
@@ -229,13 +245,12 @@ object Similarity {
   def lshTopKIntAgainstIndex(cq: DataFrame, cKeys: DataFrame,
                              queries: DataFrame, queryIdCol: String, queryVecCol: String,
                              k: Int, numTables: Int = 4, bitsPerTable: Int = 4,
-                             dim: Int = 64, seed: Long = 11L, probes: Int = 4,
-                             scale: Int = 10000): DataFrame = {
+                             probes: Int = 4): DataFrame = {
     require(probes <= bitsPerTable,
       s"probes ($probes) beyond the $bitsPerTable-bit signature flip bits no bucket key carries")
-    val planes = portableHyperplanes(dim, numTables, bitsPerTable, seed)
+    val planes = portableHyperplanes(EmbedDim, numTables, bitsPerTable, PlaneSeed)
     val qq = queries.select(col(queryIdCol).as("query_id"),
-      quantize(col(queryVecCol), scale).as("__qq"))
+      quantize(col(queryVecCol)).as("__qq"))
     val qHome = portableBucketKeys(
       qq.select(col("query_id"), col("__qq").as("__qv")), "query_id", planes)
     val qKeys =
@@ -269,10 +284,9 @@ object Similarity {
     * nprobe. */
   def ivfTopKInt(corpus: DataFrame, idCol: String, vecCol: String,
                  queries: DataFrame, queryIdCol: String, queryVecCol: String,
-                 k: Int, nlist: Int = 16, nprobe: Int = 4,
-                 scale: Int = 10000): DataFrame = {
+                 k: Int, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
     val cq = corpus.select(col(idCol).cast("long").as("vec_id"),
-      quantize(col(vecCol), scale).as("__v"))
+      quantize(col(vecCol)).as("__v"))
     val centroids = broadcast(cq.orderBy("vec_id").limit(nlist)
       .select(col("vec_id").as("__cid"), col("__v").as("__cvec")))
     val assigned = cq.crossJoin(centroids)
@@ -282,7 +296,7 @@ object Similarity {
           struct(IntDot.column(col("__v"), col("__cvec")).as("s"), (-col("__cid")).as("tb"))).as("__list"))
     val pw = Window.partitionBy("query_id").orderBy(col("__s").desc, col("__cid"))
     val probed = queries.select(col(queryIdCol).cast("long").as("query_id"),
-        quantize(col(queryVecCol), scale).as("__qv"))
+        quantize(col(queryVecCol)).as("__qv"))
       .crossJoin(centroids)
       .withColumn("__s", IntDot.column(col("__qv"), col("__cvec")))
       .withColumn("__r", row_number().over(pw))
@@ -301,9 +315,10 @@ object Similarity {
     * quantized integer vectors, sign(dot(qv, plane)) is exact integer
     * arithmetic any engine reproduces — unlike Gaussian float hyperplanes,
     * whose dots can straddle zero differently at the last ulp.
-    * |dot| ≤ 64·10^4 ≪ Long.Max. */
+    * |dot| ≤ 64·10^4 ≪ Long.Max. Callers pass `EmbedDim` and `PlaneSeed`,
+    * as the replay texts do. */
   def portableHyperplanes(dim: Int, tables: Int, bits: Int,
-                          seed: Long = 11L): Seq[Seq[Array[Long]]] = {
+                          seed: Long): Seq[Seq[Array[Long]]] = {
     val rng = new scala.util.Random(seed)
     Seq.fill(tables)(Seq.fill(bits)(Array.fill(dim)(if (rng.nextBoolean()) 1L else -1L)))
   }
@@ -311,9 +326,8 @@ object Similarity {
   /** Quantized-vector frame (id, __qv) — materialized in its own
     * projection: the bucket expressions reference __qv tables×bits times
     * (CollapseProject, cf. TextDedup.minhashSignature). */
-  private[graft] def portableQuantized(df: DataFrame, idCol: String, vecCol: String,
-                                scale: Int): DataFrame =
-    df.select(col(idCol), quantize(col(vecCol), scale).as("__qv"))
+  private[graft] def portableQuantized(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol), quantize(col(vecCol)).as("__qv"))
 
   /** (table, bucket) key stream of the portable embedding-LSH bucketing —
     * the EXACT keys `portableEmbedPairs` pairs on, factored out so the
@@ -340,11 +354,9 @@ object Similarity {
     * quadratic-work failure mode, cf. TextDedup.portableOversizeBuckets).
     * Aggregate-only; never collects bucket members. */
   def portableEmbedBucketSizes(corpus: DataFrame, idCol: String, vecCol: String,
-                               tables: Int = 8, bits: Int = 6,
-                               dim: Int = 64, seed: Long = 11L,
-                               scale: Int = 10000): DataFrame = {
-    val planes = portableHyperplanes(dim, tables, bits, seed)
-    portableBucketKeys(portableQuantized(corpus, idCol, vecCol, scale), idCol, planes)
+                               tables: Int = 8, bits: Int = 6): DataFrame = {
+    val planes = portableHyperplanes(EmbedDim, tables, bits, PlaneSeed)
+    portableBucketKeys(portableQuantized(corpus, idCol, vecCol), idCol, planes)
       .groupBy(col("__t").as("t"), col("__bkt").as("bkt"))
       .agg(count(lit(1)).as("n"))
   }
@@ -416,11 +428,11 @@ object Similarity {
     * are the home keys, so every within-bucket pair arrives twice (once
     * from each member). */
   private[graft] def probedRawPairs(keys: DataFrame, idCol: String,
-                             maxBucketSize: Int, probes: Int): DataFrame = {
+                             probes: Int): DataFrame = {
     val home = keys
       .groupBy("__t", "__bkt")
       .agg(collect_list(col(idCol)).as("__ids"))
-      .filter(size(col("__ids")) <= maxBucketSize)
+      .filter(size(col("__ids")) <= TextDedup.DefaultMaxBucketSize)
     // the capped home lists carry ≤ n×L ids total (metadata-sized by the
     // verify bound) — forcing the broadcast keeps the candidate join
     // map-side at data sizes where AQE's post-aggregate size estimate
@@ -501,14 +513,11 @@ object Similarity {
     * Output: (id_a, id_b, score BIGINT), id_a < id_b. */
   def portableEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
                          minScore: Long, tables: Int = 8, bits: Int = 6,
-                         dim: Int = 64, seed: Long = 11L,
-                         scale: Int = 10000,
-                         maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                         probes: Int = 0): DataFrame = {
+                         dim: Int = EmbedDim, probes: Int = 0): DataFrame = {
     require(probes <= bits,
       s"probes ($probes) beyond the $bits-bit signature flip bits no bucket key carries")
-    val planes = portableHyperplanes(dim, tables, bits, seed)
-    val q = portableQuantized(corpus, idCol, vecCol, scale)
+    val planes = portableHyperplanes(dim, tables, bits, PlaneSeed)
+    val q = portableQuantized(corpus, idCol, vecCol)
     broadcastVerify(Seq(q), dim, "shardedEmbedPairs", minScore) {
       // Bucketing fans out KEYS ONLY — compact (t, bkt, id) triples,
       // never the vectors: carrying __qv here duplicates every vector
@@ -520,7 +529,7 @@ object Similarity {
       // (the q82 lineage rule; measured 18.1 → 14.5 s at 10× —
       // BASELINE.md round 14).
       val keys = Checkpoints.cut(portableBucketKeys(q, idCol, planes), eager = true)
-      probedRawPairs(keys, idCol, maxBucketSize, probes)
+      probedRawPairs(keys, idCol, probes)
     }
   }
 
@@ -539,13 +548,10 @@ object Similarity {
   def portableCrossEmbedPairs(existing: DataFrame, incoming: DataFrame,
                               idCol: String, vecCol: String,
                               minScore: Long, tables: Int = 8, bits: Int = 6,
-                              dim: Int = 64, seed: Long = 11L,
-                              scale: Int = 10000,
-                              maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
-                              probes: Int = 0): DataFrame = {
-    val planes = portableHyperplanes(dim, tables, bits, seed)
-    val qOld = portableQuantized(existing, idCol, vecCol, scale)
-    val qNew = portableQuantized(incoming, idCol, vecCol, scale)
+                              dim: Int = EmbedDim, probes: Int = 0): DataFrame = {
+    val planes = portableHyperplanes(dim, tables, bits, PlaneSeed)
+    val qOld = portableQuantized(existing, idCol, vecCol)
+    val qNew = portableQuantized(incoming, idCol, vecCol)
     broadcastVerify(Seq(qOld, qNew), dim, "shardedCrossEmbedPairs", minScore) {
       // Cut each side's bucket-key stream once (r17 optimization round —
       // the q82 N-references rule): crossCandidatesRaw references each
@@ -553,7 +559,7 @@ object Similarity {
       // otherwise re-runs the tables×-dot signature pass.
       val bOld = Checkpoints.cut(portableBucketKeys(qOld, idCol, planes), eager = false)
       val bNew = Checkpoints.cut(portableBucketKeys(qNew, idCol, planes), eager = false)
-      crossCandidatesRaw(bOld, bNew, idCol, maxBucketSize, probes)
+      crossCandidatesRaw(bOld, bNew, idCol, probes)
     }
   }
 
@@ -570,12 +576,12 @@ object Similarity {
     * available, whichever side holds the 0 bit. At `probes` = 0 both
     * joins emit every same-bucket pair, so each arrives twice. */
   private[graft] def crossCandidatesRaw(bOld: DataFrame, bNew: DataFrame,
-      idCol: String, maxBucketSize: Int, probes: Int): DataFrame = {
+      idCol: String, probes: Int): DataFrame = {
     val occ = bOld.select("__t", "__bkt").unionAll(bNew.select("__t", "__bkt"))
       .groupBy("__t", "__bkt").agg(count(lit(1)).as("__n"))
-    val okOld = bOld.join(occ.filter(col("__n") <= maxBucketSize), Seq("__t", "__bkt"))
+    val okOld = bOld.join(occ.filter(col("__n") <= TextDedup.DefaultMaxBucketSize), Seq("__t", "__bkt"))
       .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
-    val okNew = bNew.join(occ.filter(col("__n") <= maxBucketSize), Seq("__t", "__bkt"))
+    val okNew = bNew.join(occ.filter(col("__n") <= TextDedup.DefaultMaxBucketSize), Seq("__t", "__bkt"))
       .select(col("__t"), col("__bkt"), col(idCol).as("id_b"))
     val prOld = probedBucketKeys(bOld, idCol, probes)
       .select(col("__t"), col("__bkt"), col(idCol).as("id_a"))
@@ -614,12 +620,10 @@ object Similarity {
     * budget; a corpus under it runs ONE within-shard job. EAGER: jobs
     * run at call time. Output: (id_a, id_b, score BIGINT), id_a < id_b. */
   def shardedEmbedPairs(corpus: DataFrame, idCol: String, vecCol: String,
-      minScore: Long, tables: Int = 8, bits: Int = 6, dim: Int = 64,
-      seed: Long = 11L, scale: Int = 10000,
-      maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
+      minScore: Long, tables: Int = 8, bits: Int = 6,
       probes: Int = 0, shardRows: Long = -1L, workDir: String): DataFrame =
-    shardedJobs(corpus, None, idCol, vecCol, minScore, tables, bits, dim,
-      seed, scale, maxBucketSize, probes, shardRows, -1L, workDir)
+    shardedJobs(corpus, None, idCol, vecCol, minScore, tables, bits,
+      probes, shardRows, -1L, workDir)
 
   /** Sharded INCREMENTAL near-dup — the daily-crawl twin of
     * [[shardedEmbedPairs]] (round 17): an incoming batch deduped against
@@ -649,14 +653,11 @@ object Similarity {
     * BIGINT) — directional, like [[portableCrossEmbedPairs]]. */
   def shardedCrossEmbedPairs(existing: DataFrame, incoming: DataFrame,
       idCol: String, vecCol: String, minScore: Long,
-      tables: Int = 8, bits: Int = 6, dim: Int = 64,
-      seed: Long = 11L, scale: Int = 10000,
-      maxBucketSize: Int = TextDedup.DefaultMaxBucketSize,
+      tables: Int = 8, bits: Int = 6,
       probes: Int = 0, shardRowsExisting: Long = -1L,
       shardRowsIncoming: Long = -1L, workDir: String): DataFrame =
     shardedJobs(existing, Some(incoming), idCol, vecCol, minScore, tables,
-      bits, dim, seed, scale, maxBucketSize, probes, shardRowsExisting,
-      shardRowsIncoming, workDir)
+      bits, probes, shardRowsExisting, shardRowsIncoming, workDir)
 
   /** The one job loop of the sharded runners — symmetric over side `a`
     * alone (`b` empty: jobs i ≤ j) or cross from `a` to `b` (every
@@ -678,19 +679,18 @@ object Similarity {
     * tables; sequential here bounds ONE JVM's memory. */
   private def shardedJobs(a: DataFrame, b: Option[DataFrame],
       idCol: String, vecCol: String, minScore: Long, tables: Int, bits: Int,
-      dim: Int, seed: Long, scale: Int, maxBucketSize: Int, probes: Int,
-      shardRowsA: Long, shardRowsB: Long, workDir: String): DataFrame = {
+      probes: Int, shardRowsA: Long, shardRowsB: Long, workDir: String): DataFrame = {
     val spark = a.sparkSession
-    val planes = portableHyperplanes(dim, tables, bits, seed)
+    val planes = portableHyperplanes(EmbedDim, tables, bits, PlaneSeed)
     // materialize pass: ONE quantize+signature scan per side, both
     // tables partitioned by the side's deterministic id-hash shard so
     // every job's read prunes to its own files
     def materialize(side: DataFrame, shardRows: Long, tag: String) = {
-      val bound = if (shardRows > 0) shardRows else broadcastVerifyMaxRows(dim) / 2
+      val bound = if (shardRows > 0) shardRows else broadcastVerifyMaxRows(EmbedDim) / 2
       val s = math.max(1, math.ceil(side.count().toDouble / bound).toInt)
       val quantPath = s"$workDir/quantized_$tag"
       val keysPath = s"$workDir/keys_$tag"
-      portableQuantized(side, idCol, vecCol, scale)
+      portableQuantized(side, idCol, vecCol)
         .withColumn("__shard", pmod(xxhash64(col(idCol)), lit(s.toLong)))
         .write.mode("overwrite").partitionBy("__shard").parquet(quantPath)
       val qt = spark.read.parquet(quantPath)
@@ -706,8 +706,8 @@ object Similarity {
     for (i <- 0 until sA; j <- (if (symmetric) i else 0) until sB) {
       val within = symmetric && i == j
       val cands =
-        if (within) probedRawPairs(kA(i), idCol, maxBucketSize, probes)
-        else crossCandidatesRaw(kA(i), kB(j), idCol, maxBucketSize, probes)
+        if (within) probedRawPairs(kA(i), idCol, probes)
+        else crossCandidatesRaw(kA(i), kB(j), idCol, probes)
       // UNTRACKED broadcast, destroyed per job — Broadcasts.track is for
       // handles that must outlive the call (a harness frees them between
       // entries); here the job's write is the last reference. UNBOUNDED:
@@ -733,16 +733,15 @@ object Similarity {
   /** (vec_id, __v) quantized frame — the shared entry point of the
     * semantic-cluster family. Cheap cast pass; re-derive per reference
     * rather than cutting (CLAUDE.md). */
-  private[graft] def semQuantized(corpus: DataFrame, idCol: String, vecCol: String,
-                                  scale: Int = 10000): DataFrame =
+  private[graft] def semQuantized(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     corpus.select(col(idCol).cast("long").as("vec_id"),
-      quantize(col(vecCol), scale).as("__v"))
+      quantize(col(vecCol)).as("__v"))
 
   /** The `nlist` lowest-id vectors as a broadcast centroid frame
     * (__cid, __cvec) — the deterministic seed set any engine reproduces. */
   def semCentroids(corpus: DataFrame, idCol: String, vecCol: String,
-                   nlist: Int, scale: Int = 10000): DataFrame =
-    broadcast(semQuantized(corpus, idCol, vecCol, scale).orderBy("vec_id").limit(nlist)
+                   nlist: Int): DataFrame =
+    broadcast(semQuantized(corpus, idCol, vecCol).orderBy("vec_id").limit(nlist)
       .select(col("vec_id").as("__cid"), col("__v").as("__cvec")))
 
   /** Greedy k-center (Gonzalez 1985) farthest-point seeding over
@@ -770,8 +769,8 @@ object Similarity {
     * chosen set, ties to the lowest id. Returns the
     * `collectCentroids` shape `semAssignExpr` consumes. */
   def semCentroidsFarthest(corpus: DataFrame, idCol: String, vecCol: String,
-                           nlist: Int, scale: Int = 10000): Seq[(Long, Seq[Long])] = {
-    val q = semQuantized(corpus, idCol, vecCol, scale)
+                           nlist: Int): Seq[(Long, Seq[Long])] = {
+    val q = semQuantized(corpus, idCol, vecCol)
     val seeds = scala.collection.mutable.ArrayBuffer[(Long, Seq[Long])]()
     q.orderBy("vec_id").limit(1).collect()
       .foreach(r => seeds += ((r.getLong(0), r.getSeq[Long](1))))
@@ -817,9 +816,9 @@ object Similarity {
     * wider than (vec_id, cid, s). Output: (vec_id, cid, s BIGINT).
     */
   def semAssign(corpus: DataFrame, idCol: String, vecCol: String,
-                nlist: Int, scale: Int = 10000): DataFrame =
-    semAssignTo(semQuantized(corpus, idCol, vecCol, scale),
-      semCentroids(corpus, idCol, vecCol, nlist, scale))
+                nlist: Int): DataFrame =
+    semAssignTo(semQuantized(corpus, idCol, vecCol),
+      semCentroids(corpus, idCol, vecCol, nlist))
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
     * embedding space, then search for semantic duplicates ONLY within
@@ -837,16 +836,16 @@ object Similarity {
     * back for candidate pairs alone. Output: one row per cluster —
     * (cid, n_members, n_pairs, n_dropped), all BIGINT. */
   def semDedupStats(corpus: DataFrame, idCol: String, vecCol: String,
-                    minScore: Long, nlist: Int, scale: Int = 10000,
+                    minScore: Long, nlist: Int,
                     maxClusterSize: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
     val q = corpus.select(col(idCol).cast("long").as("vec_id"),
-      quantize(col(vecCol), scale).as("__v"))
+      quantize(col(vecCol)).as("__v"))
     // the assignment subtree (n × nlist dot products) feeds BOTH the
     // cluster sizes and the pair generator — cut its lineage once
     // (CLAUDE.md discipline: a frame referenced N times recomputes its
     // subtree N times per action)
     val asg = Checkpoints.cut(
-      semAssign(corpus, idCol, vecCol, nlist, scale).select("vec_id", "cid"),
+      semAssign(corpus, idCol, vecCol, nlist).select("vec_id", "cid"),
       eager = false)
     val csz = asg.groupBy("cid").agg(count(lit(1)).as("n_members"))
     val pairs = asg
@@ -883,9 +882,9 @@ object Similarity {
     * Output: the DROPPED manifest (cid, vec_id, proto_rank,
     * proto_score) — what a curation run logs before deleting. */
   def semPrototypeDrops(corpus: DataFrame, idCol: String, vecCol: String,
-                        nlist: Int, dropBp: Int, scale: Int = 10000): DataFrame = {
+                        nlist: Int, dropBp: Int): DataFrame = {
     val asg = Checkpoints.cut(
-      semAssign(corpus, idCol, vecCol, nlist, scale), eager = false)
+      semAssign(corpus, idCol, vecCol, nlist), eager = false)
     val csz = asg.groupBy("cid").agg(count(lit(1)).as("n_members"))
     val w = Window.partitionBy("cid").orderBy(col("s").desc, col("vec_id"))
     asg.withColumn("proto_rank", row_number().over(w))
@@ -910,11 +909,11 @@ object Similarity {
     * Output: (cid, id_a ∈ existing, id_b ∈ incoming, score BIGINT). */
   def semCrossPairs(existing: DataFrame, incoming: DataFrame,
                     idCol: String, vecCol: String,
-                    minScore: Long, nlist: Int, scale: Int = 10000,
+                    minScore: Long, nlist: Int,
                     maxExistingCluster: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
-    val qE = semQuantized(existing, idCol, vecCol, scale)
-    val qI = semQuantized(incoming, idCol, vecCol, scale)
-    val centroids = semCentroids(existing, idCol, vecCol, nlist, scale)
+    val qE = semQuantized(existing, idCol, vecCol)
+    val qI = semQuantized(incoming, idCol, vecCol)
+    val centroids = semCentroids(existing, idCol, vecCol, nlist)
     val asgE = Checkpoints.cut(
       semAssignTo(qE, centroids).select("vec_id", "cid"), eager = false)
     val asgI = semAssignTo(qI, centroids).select("vec_id", "cid")
@@ -942,13 +941,12 @@ object Similarity {
     * the quantized vector carried once (cluster-linear, never
     * pair-linear). */
   def semExistingIndex(existing: DataFrame, idCol: String, vecCol: String,
-                       nlist: Int, scale: Int = 10000,
-                       maxExistingCluster: Int = TextDedup.DefaultMaxBucketSize): DataFrame = {
-    val qE = semQuantized(existing, idCol, vecCol, scale)
-    val asgE = semAssignTo(qE, semCentroids(existing, idCol, vecCol, nlist, scale))
+                       nlist: Int): DataFrame = {
+    val qE = semQuantized(existing, idCol, vecCol)
+    val asgE = semAssignTo(qE, semCentroids(existing, idCol, vecCol, nlist))
       .select("vec_id", "cid")
     val eligible = asgE.groupBy("cid").agg(count(lit(1)).as("__ne"))
-      .filter(col("__ne") <= maxExistingCluster)
+      .filter(col("__ne") <= TextDedup.DefaultMaxBucketSize)
       .select("cid")
     asgE.join(eligible, Seq("cid"))
       .join(qE, Seq("vec_id"))
@@ -966,9 +964,9 @@ object Similarity {
     * id_b ∈ incoming, score BIGINT). */
   def semStreamCrossPairs(vecStream: DataFrame, idCol: String, vecCol: String,
                           cents: Seq[(Long, Seq[Long])], existingIndex: DataFrame,
-                          minScore: Long, scale: Int = 10000): DataFrame = {
+                          minScore: Long): DataFrame = {
     vecStream.select(col(idCol).cast("long").as("id_b"),
-        quantize(col(vecCol), scale).as("__vb"))
+        quantize(col(vecCol)).as("__vb"))
       .withColumn("__a", semAssignExpr(col("__vb"), cents))
       .select(col("id_b"), col("__vb"), col("__a").getField("cid").as("cid"))
       .join(existingIndex, Seq("cid"))

@@ -124,22 +124,22 @@ object Sketches {
     Seq((1664525L, 1013904223L), (22695477L, 1L), (1540483477L, 12345L))
 
   /** The k positions of key `h` as an array<long> column. */
-  def bloomPositions(h: Column, bits: Long = BloomBits): Column =
+  def bloomPositions(h: Column): Column =
     array(BloomHashes.map { case (c, d) =>
-      shiftright(h * lit(c) + lit(d), PosShift) % lit(bits)
+      shiftright(h * lit(c) + lit(d), PosShift) % lit(BloomBits)
     }: _*)
 
   /** The identical position list spelled for DuckDB (`unnest` operand). */
-  def bloomPosSql(hExpr: String, bits: Long = BloomBits): String =
+  def bloomPosSql(hExpr: String): String =
     BloomHashes.map { case (c, d) =>
-      s"((($hExpr) * $c + $d) // ${1L << PosShift}) % $bits"
+      s"((($hExpr) * $c + $d) // ${1L << PosShift}) % $BloomBits"
     }.mkString("[", ", ", "]")
 
   /** Build the filter from `hashCol` (32-bit portable keys): one
     * aggregate exchange of (word, mask) int/long pairs — element payloads
-    * never shuffle — into ≤ bits/32 (word, bits) rows. */
-  def bloomBuild(df: DataFrame, hashCol: String, bits: Long = BloomBits): DataFrame =
-    df.select(explode(bloomPositions(col(hashCol), bits)).as("__pos"))
+    * never shuffle — into ≤ BloomBits/32 (word, bits) rows. */
+  def bloomBuild(df: DataFrame, hashCol: String): DataFrame =
+    df.select(explode(bloomPositions(col(hashCol))).as("__pos"))
       .select(expr("__pos DIV 32").as("word"),
         expr("shiftleft(1L, CAST(__pos % 32 AS INT))").as("__mask"))
       .groupBy("word").agg(bit_or(col("__mask")).as("bits"))
@@ -150,10 +150,10 @@ object Sketches {
     * two small ints. (groupCols, hashCol) must be unique per row (feed a
     * distinct stream). */
   def bloomMaybeContains(probe: DataFrame, filter: DataFrame, hashCol: String,
-                         groupCols: Seq[String], bits: Long = BloomBits): DataFrame = {
+                         groupCols: Seq[String]): DataFrame = {
     val k = BloomHashes.size
     val keys = groupCols.map(col) :+ col(hashCol)
-    probe.select(keys :+ explode(bloomPositions(col(hashCol), bits)).as("__pos"): _*)
+    probe.select(keys :+ explode(bloomPositions(col(hashCol))).as("__pos"): _*)
       .select(keys ++ Seq(expr("__pos DIV 32").as("word"),
         expr("shiftleft(1L, CAST(__pos % 32 AS INT))").as("__mask")): _*)
       .join(broadcast(filter), Seq("word"), "left")
@@ -179,15 +179,15 @@ object Sketches {
   /** Per-row position of key `h` for depth row `i` — same middle-bits
     * extraction as the Bloom positions (without the shift the depth rows
     * would collide IDENTICALLY, making min-over-rows worthless). */
-  def cmsPosition(h: Column, i: Int, width: Long = CmsWidth): Column = {
+  def cmsPosition(h: Column, i: Int): Column = {
     val (c, d) = BloomHashes(i)
-    shiftright(h * lit(c) + lit(d), PosShift) % lit(width)
+    shiftright(h * lit(c) + lit(d), PosShift) % lit(CmsWidth)
   }
 
   /** The identical row-i position spelled for DuckDB. */
-  def cmsPosSql(hExpr: String, i: Int, width: Long = CmsWidth): String = {
+  def cmsPosSql(hExpr: String, i: Int): String = {
     val (c, d) = BloomHashes(i)
-    s"((($hExpr) * $c + $d) // ${1L << PosShift}) % $width"
+    s"((($hExpr) * $c + $d) // ${1L << PosShift}) % $CmsWidth"
   }
 
   /** Build the sketch from exact per-key partial counts `(hashCol,
@@ -195,10 +195,9 @@ object Sketches {
     * (map-side combine; key collisions at 32 bits merge upstream, which a
     * counter sketch does anyway and the DuckDB twin shares). Output:
     * (i, p, s) — depth row, position, summed count; ≤ depth·width rows. */
-  def countMinBuild(df: DataFrame, hashCol: String, countCol: String,
-                    width: Long = CmsWidth): DataFrame = {
+  def countMinBuild(df: DataFrame, hashCol: String, countCol: String): DataFrame = {
     val rows = BloomHashes.indices.map { i =>
-      df.select(lit(i).as("i"), cmsPosition(col(hashCol), i, width).as("p"),
+      df.select(lit(i).as("i"), cmsPosition(col(hashCol), i).as("p"),
         col(countCol).as("__c"))
     }
     rows.reduce(_ unionAll _).groupBy("i", "p").agg(sum(col("__c")).as("s"))
@@ -208,11 +207,10 @@ object Sketches {
     * d rows of the counter each position lands in. The sketch is a
     * fixed-size broadcast; exchanges carry (long, long) rows. Output: df's
     * columns + est. */
-  def countMinEstimate(df: DataFrame, cms: DataFrame, hashCol: String,
-                       width: Long = CmsWidth): DataFrame = {
+  def countMinEstimate(df: DataFrame, cms: DataFrame, hashCol: String): DataFrame = {
     val keyCols = df.columns.map(col).toSeq
     val posed = BloomHashes.indices.map { i =>
-      df.select(keyCols :+ lit(i).as("i") :+ cmsPosition(col(hashCol), i, width).as("p"): _*)
+      df.select(keyCols :+ lit(i).as("i") :+ cmsPosition(col(hashCol), i).as("p"): _*)
     }.reduce(_ unionAll _)
     posed.join(broadcast(cms), Seq("i", "p"))
       .groupBy(keyCols: _*)
@@ -275,23 +273,21 @@ object Sketches {
 
   /** (bucket, rho) of a 32-bit portable key — the register coordinates
     * shared by the batch build and the streaming register aggregate. */
-  def hllBucket(h: Column, p: Int = HllP): Column = h % lit(1L << p)
-  def hllRho(h: Column, p: Int = HllP): Column = {
-    val wbits = 32 - p
-    val w = shiftright(h, p) // h ∈ [0, 2^32) ⇒ identical to h DIV 2^p
-    when(w === 0L, lit(wbits + 1))
-      .otherwise(lit(wbits + 1) - length(bin(w)))
+  def hllBucket(h: Column): Column = h % lit(HllM)
+  def hllRho(h: Column): Column = {
+    val w = shiftright(h, HllP) // h ∈ [0, 2^32) ⇒ identical to h DIV 2^p
+    when(w === 0L, lit(HllWBits + 1))
+      .otherwise(lit(HllWBits + 1) - length(bin(w)))
   }
 
   /** Per-group HLL registers: (groupCols*, bucket, reg) with
     * reg = max rho over the group's elements landing in that bucket.
     * ≤ |groups|·m rows; absent buckets mean register 0 (handled by the
     * estimate's zero-bucket term, never materialized). */
-  def hllBuild(df: DataFrame, groupCols: Seq[String], hashCol: String,
-               p: Int = HllP): DataFrame = {
+  def hllBuild(df: DataFrame, groupCols: Seq[String], hashCol: String): DataFrame = {
     val gs = groupCols.map(col)
-    df.select(gs ++ Seq(hllBucket(col(hashCol), p).as("bucket"),
-        hllRho(col(hashCol), p).as("__rho")): _*)
+    df.select(gs ++ Seq(hllBucket(col(hashCol)).as("bucket"),
+        hllRho(col(hashCol)).as("__rho")): _*)
       .groupBy(gs :+ col("bucket"): _*)
       .agg(max(col("__rho")).cast("long").as("reg"))
   }
@@ -302,10 +298,8 @@ object Sketches {
     * safe to hash; est_corrected applies the linear-counting small-range
     * rule (est ≤ 2.5m and zero registers exist ⇒ m·ln(m/V)) and is
     * Scala-side only (ln is not portable). */
-  def hllEstimate(regs: DataFrame, groupCols: Seq[String],
-                  p: Int = HllP): DataFrame = {
-    val m = 1L << p
-    require(p == HllP, "HllNumerator is precomputed for p = HllP")
+  def hllEstimate(regs: DataFrame, groupCols: Seq[String]): DataFrame = {
+    val m = HllM
     val gs = groupCols.map(col)
     regs.groupBy(gs: _*)
       .agg(count(lit(1)).as("n_buckets"),
@@ -325,12 +319,11 @@ object Sketches {
 
   /** The identical per-group register CTE chain spelled for DuckDB
     * (group column `g`, key expression already aliased `h` in `src`). */
-  def hllRegSql(src: String, g: String, p: Int = HllP): String = {
-    val m = 1L << p
-    val wbits = 32 - p
+  def hllRegSql(src: String, g: String): String = {
+    val m = HllM
     s"SELECT $g, h % $m AS bucket, " +
-      s"MAX(CASE WHEN h // $m = 0 THEN ${wbits + 1} " +
-      s"ELSE ${wbits + 1} - length(bin(h // $m)) END) AS reg " +
+      s"MAX(CASE WHEN h // $m = 0 THEN ${HllWBits + 1} " +
+      s"ELSE ${HllWBits + 1} - length(bin(h // $m)) END) AS reg " +
       s"FROM $src GROUP BY $g, h % $m"
   }
 

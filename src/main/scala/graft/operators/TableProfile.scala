@@ -68,16 +68,14 @@ object TableProfile {
     * Output per column: (col_name, n_rows, n_null, n_buckets, s_scaled,
     * est_distinct) — est_distinct is the q148 FLOOR'd-double raw
     * estimate, hash-safe. */
-  def sketchProfile(df: DataFrame, cols: Seq[String],
-                    p: Int = Sketches.HllP): DataFrame = {
-    val m = 1L << p
-    require(p == Sketches.HllP, "HllNumerator is precomputed for p = HllP")
+  def sketchProfile(df: DataFrame, cols: Seq[String]): DataFrame = {
+    val m = Sketches.HllM
     val parts = cols.map { c =>
       val h = element_at(PortableShingleHash.column(
         array(coalesce(col(c).cast("string"), lit(""))), 1), 1)
       df.select(
-          when(col(c).isNull, lit(-1L)).otherwise(Sketches.hllBucket(h, p)).as("bucket"),
-          when(col(c).isNull, lit(0)).otherwise(Sketches.hllRho(h, p)).as("__rho"))
+          when(col(c).isNull, lit(-1L)).otherwise(Sketches.hllBucket(h)).as("bucket"),
+          when(col(c).isNull, lit(0)).otherwise(Sketches.hllRho(h)).as("__rho"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("__n"), max(col("__rho")).cast("long").as("reg"))
         .agg(sum(col("__n")).as("n_rows"),

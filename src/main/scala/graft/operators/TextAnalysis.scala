@@ -82,13 +82,19 @@ object TextAnalysis {
           .otherwise(floor((aggregate(t, lit(0), (acc, w) => acc + length(w)) * 10) / size(t))))
   }
 
+  /** Both fingerprints' sketch: the FingerprintK smallest distinct hashes
+    * of FingerprintShingleN-token shingles. The q49 DuckDB text
+    * interpolates both. */
+  val FingerprintShingleN = 3
+  val FingerprintK = 8
+
   /** Document fingerprint: min-k sketch of shingle hashes (winnowing-style).
     * Sort the distinct shingle xxhash64 values, keep the k smallest, hash
     * the sketch to one 64-bit fingerprint. Deterministic; near-identical
     * documents produce identical fingerprints with high probability. */
-  def fingerprint(text: Column, shingleN: Int = 3, k: Int = 8): Column = {
-    val hashes = array_sort(array_distinct(TextDedup.shingleHashes(text, shingleN)))
-    xxhash64(slice(hashes, lit(1), lit(k)))
+  def fingerprint(text: Column): Column = {
+    val hashes = array_sort(array_distinct(TextDedup.shingleHashes(text, FingerprintShingleN)))
+    xxhash64(slice(hashes, lit(1), lit(FingerprintK)))
   }
 
   /** Engine-portable min-k fingerprint: same sketch as `fingerprint` but
@@ -97,17 +103,21 @@ object TextAnalysis {
     * sketch collapses to the BIGINT SUM of the k smallest values, so the
     * result is hash-checkable cross-engine. xxhash64 `fingerprint` stays
     * the production default (one fused pass, no md5 string round-trip). */
-  def fingerprintPortable(text: Column, shingleN: Int = 3, k: Int = 8): Column = {
+  def fingerprintPortable(text: Column): Column = {
     // round 9: the fused PortableShingleHash expression replaces the
     // conv(substring(md5)) per-shingle round-trip (bit-identical values;
     // see TextDedup.portableShingleHashes)
     val hs = array_sort(array_distinct(
-      TextDedup.portableShingleHashes(text, shingleN)))
-    aggregate(slice(hs, 1, k), lit(0L), (acc, x) => acc + x)
+      TextDedup.portableShingleHashes(text, FingerprintShingleN)))
+    aggregate(slice(hs, 1, FingerprintK), lit(0L), (acc, x) => acc + x)
   }
 
+  /** `tfIdfTopTerms`' integer score scale — interpolated into the q79
+    * DuckDB text. */
+  val TfIdfScale = 1000L
+
   /** TF-IDF-style top-k terms per document, integer-exact: score =
-    * tf·scale div df (the log-free surrogate — monotone in tf/df, which
+    * tf·TfIdfScale div df (the log-free surrogate — monotone in tf/df, which
     * is what the per-document RANKING needs; exact IDF logs are floats
     * and would break cross-engine hashing). ONE explode of the corpus:
     * tf shuffles (doc, token); df is derived from the tf aggregate —
@@ -116,14 +126,14 @@ object TextAnalysis {
     * corpus-wide distinct shuffle. Both remaining shuffles are linear.
     * Output: (doc_id, token, tf, df, score_k, rnk), rnk 1..k. */
   def tfIdfTopTerms(df: DataFrame, idCol: String, textCol: String,
-                    k: Int = 3, scale: Long = 1000L): DataFrame = {
+                    k: Int = 3): DataFrame = {
     val toks = df.select(col(idCol), explode(tokens(col(textCol))).as("token"))
     val tf = toks.groupBy(idCol, "token").agg(count(lit(1)).as("tf"))
     val docFreq = tf.groupBy("token").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(idCol).orderBy(col("score_k").desc, col("token"))
     tf.join(docFreq, "token")
-      .withColumn("score_k", expr(s"tf * $scale div df"))
+      .withColumn("score_k", expr(s"tf * $TfIdfScale div df"))
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= k)
       .select(col(idCol), col("token"), col("tf"), col("df"), col("score_k"), col("rnk"))

@@ -144,21 +144,21 @@ object TextDedup {
   val EditPrefixLen = 16
   val EditMaxDist = 64
 
-  /** The PREFIX block key: first `prefixLen` characters. */
-  private[graft] def prefixKey(text: Column, prefixLen: Int): Column =
-    substring(text, 1, prefixLen)
+  /** The PREFIX block key: first `EditPrefixLen` characters. */
+  private[graft] def prefixKey(text: Column): Column =
+    substring(text, 1, EditPrefixLen)
 
   /** The SUFFIX block key (round 10 — the second blocking pass closing
     * the recall hole PLANS.md documents for prefix-only blocking): the
-    * LAST `prefixLen` characters, spelled as a positive-start substr —
-    * `substr(text, greatest(length(text) − prefixLen + 1, 1), prefixLen)`
+    * LAST `EditPrefixLen` characters, spelled as a positive-start substr —
+    * `substr(text, greatest(length(text) − EditPrefixLen + 1, 1), EditPrefixLen)`
     * — because `length`/`substr`/`greatest` count characters identically
     * in Spark and DuckDB, while string `reverse` does NOT (Spark reverses
     * code points, DuckDB grapheme clusters — combining characters would
-    * diverge). Shorter-than-prefixLen documents key on their whole text,
-    * same clamping as the prefix pass. */
-  private[graft] def suffixKey(text: Column, prefixLen: Int): Column =
-    text.substr(greatest(length(text) - (prefixLen - 1), lit(1)), lit(prefixLen))
+    * diverge). Shorter-than-EditPrefixLen documents key on their whole
+    * text, same clamping as the prefix pass. */
+  private[graft] def suffixKey(text: Column): Column =
+    text.substr(greatest(length(text) - (EditPrefixLen - 1), lit(1)), lit(EditPrefixLen))
 
   /** Fuzzy-duplicate pairs by EDIT DISTANCE with prefix blocking — the
     * character-level complement to set-similarity dedup (minhash catches
@@ -199,22 +199,19 @@ object TextDedup {
     *     rowsets are identical.
     * Output: (id_a, id_b, dist), id_a < id_b. */
   def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
-                        prefixLen: Int = EditPrefixLen,
-                        maxDist: Int = EditMaxDist,
                         maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
     def blocked(key: Column): DataFrame =
       bucketPairs(df.select(key.as("__k"), col(idCol)), Seq("__k"), idCol, maxBucketSize)
-    val p1 = blocked(prefixKey(col(textCol), prefixLen))
-    val p2 = blocked(suffixKey(col(textCol), prefixLen))
+    val p1 = blocked(prefixKey(col(textCol)))
+    val p2 = blocked(suffixKey(col(textCol)))
     def withText(pairs: DataFrame): DataFrame = pairs
       .join(df.select(col(idCol).as("id_a"), col(textCol).as("__ta")), Seq("id_a"))
       .join(df.select(col(idCol).as("id_b"), col(textCol).as("__tb")), Seq("id_b"))
     withText(p1)
-      .unionByName(withText(p2).filter(
-        prefixKey(col("__ta"), prefixLen) =!= prefixKey(col("__tb"), prefixLen)))
+      .unionByName(withText(p2).filter(prefixKey(col("__ta")) =!= prefixKey(col("__tb"))))
       .select(col("id_a"), col("id_b"),
-        levenshtein(col("__ta"), col("__tb"), maxDist).as("dist"))
-      .filter(col("dist") >= 0) // 3-arg levenshtein returns -1 above maxDist
+        levenshtein(col("__ta"), col("__tb"), EditMaxDist).as("dist"))
+      .filter(col("dist") >= 0) // 3-arg levenshtein returns -1 above EditMaxDist
   }
 
   /** Incremental edit-distance dedup: fuzzy pairs between an EXISTING
@@ -237,22 +234,18 @@ object TextDedup {
     * joined back to itself by id, and it is batch-sized).
     * Output: (id_a ∈ existing, id_b ∈ incoming, dist ≤ maxDist). */
   def editDistanceCrossPairs(existing: DataFrame, incoming: DataFrame,
-                             idCol: String, textCol: String,
-                             prefixLen: Int = EditPrefixLen,
-                             maxDist: Int = EditMaxDist,
-                             maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+                             idCol: String, textCol: String): DataFrame = {
     def crossPass(keyOf: Column => Column): DataFrame =
       crossBucketPairs(
           existing.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_a")),
           incoming.select(keyOf(col(textCol)).as("__k"), col(idCol).as("id_b"),
             col(textCol).as("__tb")),
-          Seq("__k"), maxBucketSize)
+          Seq("__k"), DefaultMaxBucketSize)
         .join(existing.select(col(idCol).as("id_a"), col(textCol).as("__ta")), Seq("id_a"))
-    crossPass(t => prefixKey(t, prefixLen))
-      .unionByName(crossPass(t => suffixKey(t, prefixLen)).filter(
-        prefixKey(col("__ta"), prefixLen) =!= prefixKey(col("__tb"), prefixLen)))
+    crossPass(prefixKey)
+      .unionByName(crossPass(suffixKey).filter(prefixKey(col("__ta")) =!= prefixKey(col("__tb"))))
       .select(col("id_a"), col("id_b"),
-        levenshtein(col("__ta"), col("__tb"), maxDist).as("dist"))
+        levenshtein(col("__ta"), col("__tb"), EditMaxDist).as("dist"))
       .filter(col("dist") >= 0)
   }
 
@@ -289,19 +282,18 @@ object TextDedup {
     * them; PortableShingleHash's clamped whole-doc hash would otherwise
     * cover positions past the document's end in the removal accounting).
     * Mirrored as `len(t) >= k` in the q173/q174 DuckDB texts. */
-  private def spanOccurrences(df: DataFrame, idCol: String, textCol: String,
-                              k: Int): DataFrame =
+  private def spanOccurrences(df: DataFrame, idCol: String, textCol: String): DataFrame =
     spanOccurrencesToks(
-      df.select(col(idCol), tokens(col(textCol)).as("__t")), idCol, "__t", k)
+      df.select(col(idCol), tokens(col(textCol)).as("__t")), idCol, "__t")
 
   /** [[spanOccurrences]] over a PRE-TOKENIZED frame (idCol, tokCol array)
     * — the form the gate-ensemble entries feed from their shared token
     * frame (r18: one tokenize pass for span/ppl/NB instead of three). */
   private[graft] def spanOccurrencesToks(df: DataFrame, idCol: String,
-                                         tokCol: String, k: Int): DataFrame =
-    df.filter(size(col(tokCol)) >= k)
+                                         tokCol: String): DataFrame =
+    df.filter(size(col(tokCol)) >= SpanK)
       .select(col(idCol),
-        posexplode(graft.functions.PortableShingleHash.column(col(tokCol), k))
+        posexplode(graft.functions.PortableShingleHash.column(col(tokCol), SpanK))
           .as(Seq("__pos", "__h")))
 
   /** Exact-substring (k-token span) sharing report — the span-level
@@ -317,9 +309,8 @@ object TextDedup {
     * (aggregation is linear regardless of span popularity — unlike pair
     * generators, a million-occurrence boilerplate span costs one
     * aggregate row here). */
-  def sharedSpanStats(df: DataFrame, idCol: String, textCol: String,
-                      k: Int = SpanK): DataFrame =
-    spanOccurrences(df, idCol, textCol, k)
+  def sharedSpanStats(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    spanOccurrences(df, idCol, textCol)
       .groupBy("__h")
       .agg(count(lit(1)).as("n_occ"),
         countDistinct(col(idCol)).as("n_docs"),
@@ -339,9 +330,8 @@ object TextDedup {
     * per-hash occurrence count rides a window over the hash key (the
     * q138 one-exchange shape — high-cardinality partitioning, never a
     * global window), then one per-doc aggregate. */
-  def rareSpanStats(df: DataFrame, idCol: String, textCol: String,
-                    k: Int = SpanK): DataFrame = {
-    val occ = spanOccurrences(df, idCol, textCol, k)
+  def rareSpanStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val occ = spanOccurrences(df, idCol, textCol)
     occ
       .withColumn("__n", count(lit(1)).over(
         org.apache.spark.sql.expressions.Window.partitionBy("__h")))
@@ -357,24 +347,23 @@ object TextDedup {
     * index(A ∪ B) = key-wise merge of index(A), index(B), which is what
     * lets a daily batch update the corpus index without re-scanning the
     * corpus (`spanRemovalStatsCross`). */
-  def spanIndex(df: DataFrame, idCol: String, textCol: String,
-                k: Int = SpanK): DataFrame =
-    spanOccurrences(df, idCol, textCol, k)
+  def spanIndex(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    spanOccurrences(df, idCol, textCol)
       .groupBy("__h")
       .agg(count(lit(1)).as("__n"),
         min(col(idCol) * SpanPosPack + col("__pos")).as("__canon"))
 
   /** Shared removal tail: non-canonical occurrences of shared spans →
-    * coverage explode ×k → distinct-position count per doc → stats for
+    * coverage explode ×SpanK → distinct-position count per doc → stats for
     * every document of `docLens` (zero-removal docs included). `spans` =
     * (h, __n, __canon) with n ≥ 2 already filtered; `docLens` =
     * (idCol, n_tokens) — callers derive it from text or a shared token
     * frame. */
   private def spanRemovalTail(docLens: DataFrame, occ: DataFrame, spans: DataFrame,
-                              idCol: String, k: Int): DataFrame = {
+                              idCol: String): DataFrame = {
     val removedPerDoc = occ.join(spans.select("__h", "__canon"), Seq("__h"))
       .filter(col(idCol) * SpanPosPack + col("__pos") =!= col("__canon"))
-      .select(col(idCol), explode(sequence(col("__pos"), col("__pos") + (k - 1))).as("__p"))
+      .select(col(idCol), explode(sequence(col("__pos"), col("__pos") + (SpanK - 1))).as("__p"))
       .groupBy(idCol).agg(countDistinct(col("__p")).as("__nr"))
     docLens
       .join(removedPerDoc, Seq(idCol), "left")
@@ -394,20 +383,18 @@ object TextDedup {
     * splits across micro-batches, so batch-local scoring against the
     * static table is complete, with zero streaming state. */
   def spanRemovalStatsAgainstIndex(docs: DataFrame, spans: DataFrame,
-                                   idCol: String, textCol: String,
-                                   k: Int = SpanK): DataFrame =
+                                   idCol: String, textCol: String): DataFrame =
     spanRemovalTail(docLensOf(docs, idCol, textCol),
-      spanOccurrences(docs, idCol, textCol, k), spans, idCol, k)
+      spanOccurrences(docs, idCol, textCol), spans, idCol)
 
   /** [[spanRemovalStatsAgainstIndex]] over a PRE-TOKENIZED frame — the
     * streaming gate ensemble's per-batch form (one tokenize pass shared
     * by span/ppl/NB; the caller lineage-cuts the token frame). */
   def spanRemovalStatsAgainstIndexToks(docs: DataFrame, spans: DataFrame,
-                                       idCol: String, tokCol: String,
-                                       k: Int = SpanK): DataFrame =
+                                       idCol: String, tokCol: String): DataFrame =
     spanRemovalTail(
       docs.select(col(idCol), size(col(tokCol)).cast("long").as("n_tokens")),
-      spanOccurrencesToks(docs, idCol, tokCol, k), spans, idCol, k)
+      spanOccurrencesToks(docs, idCol, tokCol), spans, idCol)
 
   /** Incremental span removal: stats for an INCOMING batch against an
     * EXISTING corpus — the daily-crawl form of `spanRemovalStats` (cf.
@@ -421,20 +408,19 @@ object TextDedup {
     * `spanRemovalStats` on the concatenated corpus restricted to
     * incoming docs (the q175 oracle). */
   def spanRemovalStatsCross(existing: DataFrame, incoming: DataFrame,
-                            idCol: String, textCol: String,
-                            k: Int = SpanK): DataFrame = {
+                            idCol: String, textCol: String): DataFrame = {
     // the batch occurrence stream feeds both the index merge and the
     // removal join — cut once (cf. spanRemovalStats)
     val occNew = Checkpoints.cut(
-      spanOccurrences(incoming, idCol, textCol, k), eager = false)
-    val merged = spanIndex(existing, idCol, textCol, k)
+      spanOccurrences(incoming, idCol, textCol), eager = false)
+    val merged = spanIndex(existing, idCol, textCol)
       .unionByName(occNew.groupBy("__h")
         .agg(count(lit(1)).as("__n"),
           min(col(idCol) * SpanPosPack + col("__pos")).as("__canon")))
       .groupBy("__h")
       .agg(sum("__n").as("__n"), min("__canon").as("__canon"))
       .filter(col("__n") >= 2)
-    spanRemovalTail(docLensOf(incoming, idCol, textCol), occNew, merged, idCol, k)
+    spanRemovalTail(docLensOf(incoming, idCol, textCol), occNew, merged, idCol)
   }
 
   /** Exact-substring span REMOVAL stats (Lee et al. 2021's dedup
@@ -451,41 +437,42 @@ object TextDedup {
     * REMOVABLE occurrences only → distinct positions → per-doc count.
     * Linear end to end; the ×k fan-out applies only to duplicated
     * spans, which dedup's premise says are the minority. */
-  def spanRemovalStats(df: DataFrame, idCol: String, textCol: String,
-                       k: Int = SpanK): DataFrame =
+  def spanRemovalStats(df: DataFrame, idCol: String, textCol: String): DataFrame =
     spanRemovalStatsToks(
-      df.select(col(idCol), tokens(col(textCol)).as("__t")), idCol, "__t", k)
+      df.select(col(idCol), tokens(col(textCol)).as("__t")), idCol, "__t")
 
   /** [[spanRemovalStats]] over a PRE-TOKENIZED frame (idCol, tokCol
     * array) — the gate-ensemble form (r18): q201/q203 tokenize the
     * corpus ONCE and feed the same cut token frame to all three gates. */
-  def spanRemovalStatsToks(df: DataFrame, idCol: String, tokCol: String,
-                           k: Int = SpanK): DataFrame = {
+  def spanRemovalStatsToks(df: DataFrame, idCol: String, tokCol: String): DataFrame = {
     // occ feeds BOTH the span aggregate and the removal join — cut the
     // md5 window-hash pass once instead of recomputing it per reference
     // (the q82 lineage-cut rule; the occurrence stream is 3 longs/row)
-    val occ = Checkpoints.cut(spanOccurrencesToks(df, idCol, tokCol, k), eager = false)
+    val occ = Checkpoints.cut(spanOccurrencesToks(df, idCol, tokCol), eager = false)
     val spans = occ.groupBy("__h")
       .agg(count(lit(1)).as("__n"),
         min(col(idCol) * SpanPosPack + col("__pos")).as("__canon"))
       .filter(col("__n") >= 2)
     spanRemovalTail(
       df.select(col(idCol), size(col(tokCol)).cast("long").as("n_tokens")),
-      occ, spans, idCol, k)
+      occ, spans, idCol)
   }
 
-  /** Parameters shared by `portablePairStats` and the q82 DuckDB oracle
-    * text (SparkEntry interpolates them into the SQL) — one compile-time
-    * source of truth so changing them cannot silently desynchronize the
-    * two texts. */
+  /** The portable minhash operating point, shared by the whole portable
+    * family (`portablePairStats`, its cross/index/audit forms,
+    * `StreamOps.dedupAgainstCorpus`) and the q82/q124 DuckDB text
+    * (SparkEntry.minhashReplayCtes interpolates them) — read by both
+    * sides, never passed, so the two texts cannot desynchronize.
+    * `MinhashSeed` seeds `affineCoeffs`. */
   val PortableShingleN = 3
   val PortableNumHashes = 16
   val PortableBands = 4
+  val MinhashSeed = 7L
 
   /** Deterministic affine coefficients for universal-hash permutations:
     * odd multipliers < 2^29, so a·h + b < 2^61 for 32-bit h — no overflow
     * under ANSI in Spark and identical BIGINT math in any SQL engine. */
-  def affineCoeffs(numHashes: Int, seed: Long = 7L): Seq[(Long, Long)] = {
+  def affineCoeffs(numHashes: Int, seed: Long = MinhashSeed): Seq[(Long, Long)] = {
     val rng = new scala.util.Random(seed)
     Seq.fill(numHashes)((rng.nextInt(1 << 28).toLong * 2 + 1, rng.nextInt(1 << 28).toLong))
   }
@@ -510,16 +497,11 @@ object TextDedup {
     * triples, pairs by double explode (`bucketPairs`), no self-join.
     * Output: (id_a, id_b, n_inter, n_union) — threshold on
     * n_inter/n_union is the caller's (integer cross-multiply). */
-  def portablePairStats(df: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = PortableShingleN,
-                        numHashes: Int = PortableNumHashes,
-                        bands: Int = PortableBands,
-                        seed: Long = 7L,
-                        maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val (base, banded) = portableBanded(df, idCol, textCol, shingleN, numHashes, bands, seed)
+  def portablePairStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (base, banded) = portableIndexFrames(df, idCol, textCol)
     // the degenerate-bucket guard of bucketPairs is mirrored into the q82
     // DuckDB text (see DefaultMaxBucketSize)
-    bucketPairs(banded, Seq("__band", "__bkey"), idCol, maxBucketSize)
+    bucketPairs(banded, Seq("__band", "__bkey"), idCol, DefaultMaxBucketSize)
       .distinct()
       .join(base.select(col(idCol).as("id_a"), col("__hs").as("__ha")), Seq("id_a"))
       .join(base.select(col(idCol).as("id_b"), col("__hs").as("__hb")), Seq("id_b"))
@@ -530,13 +512,17 @@ object TextDedup {
 
   /** Shared banding stage of the portable minhash pipeline: returns
     * (base = (id, __hs) distinct-shingle-hash sets, banded = (id, __band,
-    * __bkey) band-key triples). Factored out so `portableOversizeBuckets`
-    * audits the EXACT buckets `portablePairStats` pairs on. */
-  private def portableBanded(df: DataFrame, idCol: String, textCol: String,
-                             shingleN: Int, numHashes: Int, bands: Int,
-                             seed: Long): (DataFrame, DataFrame) = {
-    val rowsPerBand = numHashes / bands
-    val coeffs = affineCoeffs(numHashes, seed)
+    * __bkey) band-key triples), so `portableOversizeBuckets` audits the
+    * EXACT buckets `portablePairStats` pairs on. Also the public
+    * corpus-index frames of incremental/streaming dedup: a production
+    * pipeline computes these ONCE per corpus snapshot and persists both
+    * (banding is per-document, so stored frames stay valid as batches
+    * arrive); `portableCrossPairStats` re-derives them per call only
+    * because its oracle needs the self-contained form. */
+  def portableIndexFrames(df: DataFrame, idCol: String,
+                          textCol: String): (DataFrame, DataFrame) = {
+    val rowsPerBand = PortableNumHashes / PortableBands
+    val coeffs = affineCoeffs(PortableNumHashes)
     // Empty shingle sets are dropped BEFORE banding: every such document
     // shares the all-Long.MaxValue signature, so they land in one
     // degenerate bucket and pair with each other as n_inter=0/n_union=0
@@ -551,7 +537,7 @@ object TextDedup {
     // configured a checkpoint dir (deployment), localCheckpoint otherwise.
     val base = Checkpoints.cut(
       df.select(col(idCol),
-          array_distinct(portableShingleHashes(col(textCol), shingleN)).as("__hs"))
+          array_distinct(portableShingleHashes(col(textCol), PortableShingleN)).as("__hs"))
         .filter(size(col("__hs")) > 0),
       eager = false)
     // Banding fans out KEYS ONLY — compact (band, bkey, id) triples, never
@@ -563,7 +549,7 @@ object TextDedup {
     val sig = base.select(col(idCol),
       affineSignature(col("__hs"), coeffs).as("__sig"))
     val banded = sig.select(col(idCol),
-      posexplode(portableBandKeys(col("__sig"), bands, rowsPerBand)).as(Seq("__band", "__bkey")))
+      posexplode(portableBandKeys(col("__sig"), PortableBands, rowsPerBand)).as(Seq("__band", "__bkey")))
     (base, banded)
   }
 
@@ -582,31 +568,12 @@ object TextDedup {
     * blow-up the cap exists to prevent); a curation run executes this
     * alongside `portablePairStats` when it needs the dropped boilerplate
     * clusters on record. Aggregate-only — never collects bucket members. */
-  def portableOversizeBuckets(df: DataFrame, idCol: String, textCol: String,
-                              shingleN: Int = PortableShingleN,
-                              numHashes: Int = PortableNumHashes,
-                              bands: Int = PortableBands,
-                              seed: Long = 7L,
-                              maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val (_, banded) = portableBanded(df, idCol, textCol, shingleN, numHashes, bands, seed)
+  def portableOversizeBuckets(df: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val (_, banded) = portableIndexFrames(df, idCol, textCol)
     banded.groupBy(col("__band").as("band"), col("__bkey").as("bucket_key"))
       .agg(count(lit(1)).as("bucket_size"))
-      .filter(col("bucket_size") > maxBucketSize)
+      .filter(col("bucket_size") > DefaultMaxBucketSize)
   }
-
-  /** Public corpus-index frames for incremental/streaming dedup:
-    * base = (id, __hs distinct shingle-hash set), banded = (id, __band,
-    * __bkey). A production pipeline computes these ONCE per corpus
-    * snapshot and persists both (banding is per-document, so stored
-    * frames stay valid as batches arrive); `portableCrossPairStats`
-    * re-derives them per call only because its oracle needs the
-    * self-contained form. */
-  def portableIndexFrames(df: DataFrame, idCol: String, textCol: String,
-                          shingleN: Int = PortableShingleN,
-                          numHashes: Int = PortableNumHashes,
-                          bands: Int = PortableBands,
-                          seed: Long = 7L): (DataFrame, DataFrame) =
-    portableBanded(df, idCol, textCol, shingleN, numHashes, bands, seed)
 
   /** Incremental near-dup: candidate pairs between an EXISTING corpus and
     * an INCOMING batch — the daily-crawl shape, where recomputing all
@@ -626,18 +593,13 @@ object TextDedup {
     * pairs (which is what the q124 oracle replays). Output: (id_a ∈
     * existing, id_b ∈ incoming, n_inter, n_union). */
   def portableCrossPairStats(existing: DataFrame, incoming: DataFrame,
-                             idCol: String, textCol: String,
-                             shingleN: Int = PortableShingleN,
-                             numHashes: Int = PortableNumHashes,
-                             bands: Int = PortableBands,
-                             seed: Long = 7L,
-                             maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    val (baseOld, bandedOld) = portableBanded(existing, idCol, textCol, shingleN, numHashes, bands, seed)
-    val (baseNew, bandedNew) = portableBanded(incoming, idCol, textCol, shingleN, numHashes, bands, seed)
+                             idCol: String, textCol: String): DataFrame = {
+    val (baseOld, bandedOld) = portableIndexFrames(existing, idCol, textCol)
+    val (baseNew, bandedNew) = portableIndexFrames(incoming, idCol, textCol)
     crossBucketPairs(
         bandedOld.select(col("__band"), col("__bkey"), col(idCol).as("id_a")),
         bandedNew.select(col("__band"), col("__bkey"), col(idCol).as("id_b")),
-        Seq("__band", "__bkey"), maxBucketSize)
+        Seq("__band", "__bkey"), DefaultMaxBucketSize)
       .select("id_a", "id_b")
       .distinct()
       .join(baseOld.select(col(idCol).as("id_a"), col("__hs").as("__ha")), Seq("id_a"))
@@ -671,12 +633,15 @@ object TextDedup {
       .agg(max(size(array_intersect(col("__ct"), col("__bt")))).cast("long").as("max_overlap"))
   }
 
+  /** `nearDupPairs`' signature: 64 xxhash64 permutations in 16 bands. */
+  private val NearDupHashes = 64
+  private val NearDupBands = 16
+
   /** MinHash LSH candidates (band keys → `bucketPairs`, buckets over
     * `DefaultMaxBucketSize` dropped) verified by exact shingle-set
     * Jaccard ≥ threshold. Output: (id_a, id_b, jaccard). */
   def nearDupPairs(df: DataFrame, idCol: String, textCol: String,
-                   threshold: Double, shingleN: Int = 3,
-                   numHashes: Int = 64, bands: Int = 16): DataFrame = {
+                   threshold: Double, shingleN: Int = 3): DataFrame = {
     // ONE shingle-hash pass (r17 optimization round; previously three —
     // the signature stage hashed the text and each verification join
     // side re-ran it): the distinct hash-set frame is cut once and feeds
@@ -687,9 +652,10 @@ object TextDedup {
       df.select(col(idCol),
         array_distinct(shingleHashes(col(textCol), shingleN)).as("__sh")),
       eager = false)
-    val sig = sh.select(col(idCol), minhashSignature(col("__sh"), numHashes).as("__sig"))
+    val sig = sh.select(col(idCol), minhashSignature(col("__sh"), NearDupHashes).as("__sig"))
     val keyed = sig.select(col(idCol),
-      posexplode(bandKeys(col("__sig"), bands, numHashes / bands)).as(Seq("__band", "__key")))
+      posexplode(bandKeys(col("__sig"), NearDupBands, NearDupHashes / NearDupBands))
+        .as(Seq("__band", "__key")))
     val cands = bucketPairs(keyed, Seq("__band", "__key"), idCol, DefaultMaxBucketSize)
       .distinct()
     // verification joins the distinct shingle-HASH sets: set arithmetic on
@@ -741,7 +707,7 @@ object TextDedup {
     *     count is fused into the pass, not a second job (which also makes
     *     an every-round convergence check free, so no every-2nd-round
     *     staleness is needed). */
-  def connectedComponents(edges: DataFrame, maxIter: Int = 25,
+  def connectedComponents(edges: DataFrame,
                           contractionMinEdges: Long = CcContractionMinEdges,
                           localMaxEdges: Long = CcLocalMaxEdges): DataFrame = {
     val sym = Checkpoints.cut(
@@ -788,8 +754,8 @@ object TextDedup {
           sym.select(col("src").as("id")).distinct()
             .withColumn("cluster", col("id")),
           eager = true)
-        if (symEdges < contractionMinEdges) hashMinLoop(sym, labels0, maxIter)
-        else contractedCc(sym, labels0, maxIter)
+        if (symEdges < contractionMinEdges) hashMinLoop(sym, labels0)
+        else contractedCc(sym, labels0)
       }
     Checkpoints.free(sym)
     out
@@ -867,8 +833,7 @@ object TextDedup {
     * min-composition preserves the global minimum (per-vertex equality
     * vs the flat loop pinned by CcContractionSpec). `lastCcRounds`
     * counts the full-graph round plus the quotient rounds. */
-  private[graft] def contractedCc(sym: DataFrame, labels0: DataFrame,
-                                  maxIter: Int): DataFrame = {
+  private[graft] def contractedCc(sym: DataFrame, labels0: DataFrame): DataFrame = {
     val (labels1, changed1) = ccRound(sym, labels0)
     if (changed1 == 0) {
       lastCcRounds = 1
@@ -887,7 +852,7 @@ object TextDedup {
         contracted.select(col("src").as("id")).distinct()
           .withColumn("cluster", col("id")),
         eager = true)
-      val comp = hashMinLoop(contracted, compLabels0, maxIter)
+      val comp = hashMinLoop(contracted, compLabels0)
       val quotientRounds = lastCcRounds
       Checkpoints.free(contracted)
       val composed = labels1.as("l")
@@ -940,21 +905,24 @@ object TextDedup {
     (jumped.select("id", "cluster"), changed)
   }
 
+  /** Round budget of [[hashMinLoop]]: pointer jumping converges in
+    * O(log diameter) rounds (~20 for a 1M-document chain). */
+  val CcMaxIter = 25
+
   /** The hash-min iteration on an (already cut) edge set — the former
     * inline loop body, factored so the contraction prelude can run it on
     * the quotient graph. */
-  private[graft] def hashMinLoop(sym: DataFrame, labels0: DataFrame,
-                          maxIter: Int): DataFrame = {
+  private[graft] def hashMinLoop(sym: DataFrame, labels0: DataFrame): DataFrame = {
     var labels = labels0
     var changed = 1L
     var i = 0
-    while (changed > 0 && i < maxIter) {
+    while (changed > 0 && i < CcMaxIter) {
       val (next, chg) = ccRound(sym, labels)
       labels = next
       changed = chg
       i += 1
     }
-    require(changed == 0, s"connectedComponents did not converge in $maxIter rounds")
+    require(changed == 0, s"connectedComponents did not converge in $CcMaxIter rounds")
     lastCcRounds = i
     labels
   }
@@ -1015,6 +983,9 @@ object TextDedup {
     * clusters — genuine boilerplate, `DefaultMaxBucketSize`'s job. */
   val SimhashChunks = 8
   val SimhashIntact = 5
+  /** The hamming radius the 5-of-8 layout is pigeonhole-complete for —
+    * every text simhash generator's threshold, and the q83/q210 texts'. */
+  val SimhashMaxHamming: Int = SimhashChunks - SimhashIntact
 
   /** All C(SimhashChunks, SimhashIntact) chunk-index subsets, in
     * deterministic lexicographic order (mirrored into the q83 text). */
@@ -1058,11 +1029,7 @@ object TextDedup {
     * every integer derivable bit-exactly in any engine, so the q83 oracle
     * hash-checks the whole pipeline (cf. `portablePairStats` for the
     * MinHash family). Output: (id_a, id_b, hamming). */
-  def portableSimhashPairs(df: DataFrame, idCol: String, textCol: String,
-                           maxHamming: Int = 3,
-                           maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(maxHamming <= SimhashChunks - SimhashIntact,
-      s"$SimhashChunks chunks with $SimhashIntact intact only guarantee hamming <= ${SimhashChunks - SimhashIntact}")
+  def portableSimhashPairs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // token hashes materialized first: the 32 bit-folds of
     // portableSimhash32 each reference the array (CollapseProject note on
     // minhashSignature)
@@ -1076,7 +1043,7 @@ object TextDedup {
     // degenerate-bucket guard (cf. DefaultMaxBucketSize), mirrored into
     // the q83 DuckDB text
     simhashEmitPairs(portableSimhashChunkKeys(df, idCol, textCol),
-      32 / SimhashChunks, maxHamming, maxBucketSize)
+      32 / SimhashChunks, SimhashMaxHamming)
   }
 
   /** (id, __combo, __ckey, __sim) combo-key stream of the portable simhash
@@ -1146,14 +1113,14 @@ object TextDedup {
     * emission, then `simhashVerify`. `chunks` = (__combo, __ckey,
     * id-col, __sim). */
   private[graft] def simhashEmitPairs(chunks: DataFrame, chunkBits: Int,
-                                          maxHamming: Int, maxBucketSize: Int,
+                                          maxHamming: Int,
                                           intact: Int = SimhashIntact): DataFrame = {
     val idCol = chunks.columns.filterNot(c => c.startsWith("__")).head
     val pairs = chunks
       .groupBy("__combo", "__ckey")
       .agg(sort_array(collect_list(
         struct(col(idCol).as("id"), col("__sim").as("sim")))).as("__m"))
-      .filter(size(col("__m")).between(2, maxBucketSize))
+      .filter(size(col("__m")).between(2, DefaultMaxBucketSize))
       // strict upper triangle emitted DIRECTLY (round 14, ProfileQ83):
       // the list is sorted by (unique) id, so pairing each element with
       // its suffix slice yields exactly the id_a < id_b pairs — m(m−1)/2
@@ -1207,11 +1174,10 @@ object TextDedup {
     * expensive (per-token md5 + bit-folds for text, decode + resize +
     * dHash for media) cut the (id, __sim) frame BEFORE the combo explode
     * (r17 optimization round; the cut carries n rows, not 56n exploded
-    * key rows). */
+    * key rows). Both cross callers run the text point: 5-of-8 combos,
+    * `SimhashMaxHamming`. */
   private[graft] def simhashCrossEmitPairs(chunksOld: DataFrame, chunksNew: DataFrame,
-                                           chunkBits: Int, maxHamming: Int,
-                                           maxBucketSize: Int,
-                                           intact: Int = SimhashIntact): DataFrame = {
+                                           chunkBits: Int): DataFrame = {
     val idOld = chunksOld.columns.filterNot(_.startsWith("__")).head
     val idNew = chunksNew.columns.filterNot(_.startsWith("__")).head
     val pairs = crossBucketPairs(
@@ -1219,10 +1185,10 @@ object TextDedup {
           col(idOld).as("id_a"), col("__sim").as("__sa")),
         chunksNew.select(col("__combo"), col("__ckey"),
           col(idNew).as("id_b"), col("__sim").as("__sb")),
-        Seq("__combo", "__ckey"), maxBucketSize)
+        Seq("__combo", "__ckey"), DefaultMaxBucketSize)
       .filter(col("id_a") < col("id_b"))
     simhashVerify(pairs, col("id_a"), col("id_b"), col("__sa"), col("__sb"),
-      chunkBits, maxHamming, intact)
+      chunkBits, SimhashMaxHamming, SimhashIntact)
   }
 
   /** Incremental portable SimHash near-dup: candidate pairs between an
@@ -1235,16 +1201,11 @@ object TextDedup {
     * oracle mirrors. Output: (id_a ∈ existing, id_b ∈ incoming,
     * hamming). */
   def portableSimhashCrossPairs(existing: DataFrame, incoming: DataFrame,
-                                idCol: String, textCol: String,
-                                maxHamming: Int = 3,
-                                maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    require(maxHamming <= SimhashChunks - SimhashIntact,
-      s"$SimhashChunks chunks with $SimhashIntact intact only guarantee hamming <= ${SimhashChunks - SimhashIntact}")
+                                idCol: String, textCol: String): DataFrame =
     simhashCrossEmitPairs(
       portableSimhashChunkKeys(existing, idCol, textCol, cutSigs = true),
       portableSimhashChunkKeys(incoming, idCol, textCol, cutSigs = true),
-      32 / SimhashChunks, maxHamming, maxBucketSize)
-  }
+      32 / SimhashChunks)
 
   /** SimHash near-dup: 64-bit signatures combination-banded over 8×8-bit
     * chunks (hamming ≤ 3 ⇒ some 5 chunks intact — see `SimhashChunks`),
@@ -1252,8 +1213,7 @@ object TextDedup {
     * (five 8-bit chunks packed by combo position), so key space scales to
     * 10¹²-doc corpora. Output: (id_a, id_b, hamming). */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3,
-                   maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+                   maxHamming: Int = SimhashMaxHamming): DataFrame = {
     require(maxHamming <= SimhashChunks - SimhashIntact,
       s"$SimhashChunks chunks with $SimhashIntact intact only guarantee hamming <= ${SimhashChunks - SimhashIntact}")
     val sigs = df.select(
@@ -1270,6 +1230,6 @@ object TextDedup {
     // SimHash64 subtree once per side (the twin measured that shape ~2×
     // slower at sf0.1)
     // degenerate-bucket guard (cf. DefaultMaxBucketSize)
-    simhashEmitPairs(chunks, chunkBits, maxHamming, maxBucketSize)
+    simhashEmitPairs(chunks, chunkBits, maxHamming)
   }
 }

@@ -28,6 +28,17 @@ case class KSmallState(hs: Seq[Long], ids: Seq[Long], vs: Seq[Long], nMerged: Lo
   */
 object StreamOps {
 
+  /** Event-time watermark of every windowed aggregate, session, join and
+    * dedup here. */
+  val Watermark = "10 minutes"
+
+  /** `userSessions`' inactivity gap; the q89 DuckDB replay spells it as
+    * `INTERVAL SessionGapMinutes MINUTE`. */
+  val SessionGapMinutes = 30
+
+  /** `bloomGateStream`'s shingle width — the q145/q147 filter keys. */
+  private val BloomShingleN = 3
+
   /** The events stream schema with `ts` as a raw long — the shape a
     * TIMESTAMP(NANOS) events.parquet reads as under
     * `spark.sql.legacy.parquet.nanosAsLong`. Testdata generations have
@@ -71,23 +82,23 @@ object StreamOps {
     * the streaming form of Q32. Works identically on a batch DataFrame
     * (window() is the same expression), which is how equivalence is tested. */
   def hourlyByType(events: DataFrame, withWatermarkCol: Boolean = true): DataFrame = {
-    val src = if (withWatermarkCol) events.withWatermark("ts", "10 minutes") else events
+    val src = if (withWatermarkCol) events.withWatermark("ts", Watermark) else events
     src.groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 2))).as("total"))
       .select(col("w.start").as("h"), col("event_type"), col("n"), col("total"))
   }
 
-  /** Session windows per user: events within `gap` of each other merge into
-    * one session (streaming sessionization). Merge semantics: an event at
-    * t joins the session iff t < last_event_ts + gap (strictly less — an
-    * event landing exactly at the gap boundary starts a NEW session),
-    * session_end = last_event_ts + gap. The q89 DuckDB replay mirrors the
+  /** Session windows per user: events within `SessionGapMinutes` of each
+    * other merge into one session (streaming sessionization). Merge
+    * semantics: an event at t joins the session iff t < last_event_ts +
+    * gap (strictly less — an event landing exactly at the gap boundary
+    * starts a NEW session), session_end = last_event_ts + gap. The q89 DuckDB replay mirrors the
     * boundary with `ts >= lag(ts) + gap ⇒ new session`. The value sum is
     * DECIMAL(18,2) like hourlyByType so callers can expose exact cents. */
-  def userSessions(events: DataFrame, gap: String = "30 minutes"): DataFrame =
-    events.withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), gap).as("s"), col("user_id"))
+  def userSessions(events: DataFrame): DataFrame =
+    events.withWatermark("ts", Watermark)
+      .groupBy(session_window(col("ts"), s"$SessionGapMinutes minutes").as("s"), col("user_id"))
       .agg(count(lit(1)).as("n_events"),
         sum(col("value").cast(DecimalType(18, 2))).as("session_value"))
       .select(col("s.start").as("session_start"), col("s.end").as("session_end"),
@@ -124,9 +135,8 @@ object StreamOps {
     * O(all keys ever) — the right default at 100 TB/day. Contrast with
     * `streamingDedup` (flatMapGroupsWithState), which demonstrates custom
     * unbounded state for exactly-once-per-key-ever semantics. */
-  def dedupWithinWatermark(events: DataFrame, keyCols: Seq[String],
-                           watermark: String = "10 minutes"): DataFrame =
-    events.withWatermark("ts", watermark)
+  def dedupWithinWatermark(events: DataFrame, keyCols: Seq[String]): DataFrame =
+    events.withWatermark("ts", Watermark)
       .dropDuplicatesWithinWatermark(keyCols)
 
   /** Stream-stream interval join (attribution shape): for every `leftType`
@@ -145,11 +155,11 @@ object StreamOps {
     val l = events.filter(col("event_type") === leftType)
       .select(col("event_id").as("id_a"), col("user_id").as("u_a"),
         date_trunc("second", col("ts")).as("ts_a"))
-      .withWatermark("ts_a", "10 minutes")
+      .withWatermark("ts_a", Watermark)
     val r = events.filter(col("event_type") === rightType)
       .select(col("event_id").as("id_b"), col("user_id").as("u_b"),
         date_trunc("second", col("ts")).as("ts_b"))
-      .withWatermark("ts_b", "10 minutes")
+      .withWatermark("ts_b", Watermark)
     l.join(r, col("u_a") === col("u_b") &&
         col("ts_b") >= col("ts_a") &&
         col("ts_b") <= col("ts_a") + expr(s"INTERVAL $withinSeconds SECONDS") &&
@@ -204,25 +214,20 @@ object StreamOps {
     * on n_inter/n_union is the caller's (integer cross-multiply). */
   def dedupAgainstCorpus(docStream: DataFrame,
                          corpusBase: DataFrame, corpusBanded: DataFrame,
-                         idCol: String, textCol: String,
-                         shingleN: Int = graft.operators.TextDedup.PortableShingleN,
-                         numHashes: Int = graft.operators.TextDedup.PortableNumHashes,
-                         bands: Int = graft.operators.TextDedup.PortableBands,
-                         seed: Long = 7L,
-                         maxBucketSize: Int = graft.operators.TextDedup.DefaultMaxBucketSize): DataFrame = {
-    import graft.operators.TextDedup
-    val coeffs = TextDedup.affineCoeffs(numHashes, seed)
+                         idCol: String, textCol: String): DataFrame = {
+    import graft.operators.TextDedup._
+    val coeffs = affineCoeffs(PortableNumHashes)
     val streamBanded = docStream
       .select(col(idCol).as("id_b"),
-        array_distinct(TextDedup.portableShingleHashes(col(textCol), shingleN)).as("__hb"))
+        array_distinct(portableShingleHashes(col(textCol), PortableShingleN)).as("__hb"))
       .filter(size(col("__hb")) > 0)
-      .withColumn("__sig", TextDedup.affineSignature(col("__hb"), coeffs))
+      .withColumn("__sig", affineSignature(col("__hb"), coeffs))
       .select(col("id_b"), col("__hb"),
-        posexplode(TextDedup.portableBandKeys(col("__sig"), bands, numHashes / bands))
+        posexplode(portableBandKeys(col("__sig"), PortableBands, PortableNumHashes / PortableBands))
           .as(Seq("__band", "__bkey")))
-    TextDedup.crossBucketPairs(
+    crossBucketPairs(
         corpusBanded.select(col("__band"), col("__bkey"), col(idCol).as("id_a")),
-        streamBanded, Seq("__band", "__bkey"), maxBucketSize)
+        streamBanded, Seq("__band", "__bkey"), DefaultMaxBucketSize)
       .join(corpusBase.select(col(idCol).as("id_a"), col("__hs").as("__ha")), Seq("id_a"))
       .select(col("id_a"), col("id_b"),
         size(array_intersect(col("__ha"), col("__hb"))).cast("long").as("n_inter"),
@@ -242,17 +247,17 @@ object StreamOps {
     * repo's 32-bit portable md5-derived values, so a DuckDB replay of
     * the register table is bit-identical (the q148 contract restricted
     * to the hourly grouping). Output: (h, bucket, reg). */
-  def hllHourlyUsers(events: DataFrame, p: Int = graft.operators.Sketches.HllP): DataFrame = {
+  def hllHourlyUsers(events: DataFrame): DataFrame = {
     import graft.operators.Sketches
-    events.withWatermark("ts", "10 minutes")
+    events.withWatermark("ts", Watermark)
       .select(window(col("ts"), "1 hour").as("w"),
         // coalesce: portable_shingle_hash rejects containsNull arrays
         // (its split()-only contract); user_id is never null in events,
         // the coalesce just proves it to the type check
         element_at(PortableShingleHash.column(
           array(coalesce(col("user_id").cast("string"), lit(""))), 1), 1).as("__h"))
-      .select(col("w"), Sketches.hllBucket(col("__h"), p).as("bucket"),
-        Sketches.hllRho(col("__h"), p).as("__rho"))
+      .select(col("w"), Sketches.hllBucket(col("__h")).as("bucket"),
+        Sketches.hllRho(col("__h")).as("__rho"))
       .groupBy(col("w"), col("bucket"))
       .agg(max(col("__rho")).cast("long").as("reg"))
       .select(col("w.start").as("h"), col("bucket"), col("reg"))
@@ -270,14 +275,13 @@ object StreamOps {
     * BUILD side where q147 streams the probe side. Output: (i, p, s) —
     * the `countMinBuild` cell schema, so the batch estimate/top-k tail
     * runs unchanged against it. */
-  def cmsBuildStream(docStream: DataFrame, textCol: String,
-                     width: Long = graft.operators.Sketches.CmsWidth): DataFrame = {
+  def cmsBuildStream(docStream: DataFrame, textCol: String): DataFrame = {
     import graft.operators.Sketches
     docStream
       .select(explode(split(col(textCol), " ")).as("token"))
       .select(element_at(PortableShingleHash.column(array(col("token")), 1), 1).as("__h"))
       .select(explode(array(Sketches.BloomHashes.indices.map { i =>
-        struct(lit(i).as("i"), Sketches.cmsPosition(col("__h"), i, width).as("p"))
+        struct(lit(i).as("i"), Sketches.cmsPosition(col("__h"), i).as("p"))
       }: _*)).as("__ip"))
       .select(col("__ip.i").as("i"), col("__ip.p").as("p"))
       .groupBy("i", "p")
@@ -472,11 +476,9 @@ object StreamOps {
     * n_flagged, flag_bp) — identical row shape and arithmetic to q145's
     * rollup, which is what its oracle hash-checks. */
   def bloomGateStream(docStream: DataFrame, filter: DataFrame,
-                      idCol: String, textCol: String,
-                      shingleN: Int = 3,
-                      bits: Long = graft.operators.Sketches.BloomBits): DataFrame = {
+                      idCol: String, textCol: String): DataFrame = {
     import graft.operators.Sketches
-    val nWords = (bits / 32).toInt
+    val nWords = (Sketches.BloomBits / 32).toInt
     val words = new Array[Long](nWords)
     filter.collect().foreach { r =>
       words(r.getAs[Long]("word").toInt) = r.getAs[Long]("bits")
@@ -485,16 +487,16 @@ object StreamOps {
     // all k positions set ⇒ maybe-in (identical arithmetic to
     // Sketches.bloomPositions: middle bits of h·C + D, 32-bit words)
     def flagged(h: Column): Column = Sketches.BloomHashes.map { case (c, d) =>
-      val p = shiftright(h * lit(c) + lit(d), Sketches.PosShift) % lit(bits)
+      val p = shiftright(h * lit(c) + lit(d), Sketches.PosShift) % lit(Sketches.BloomBits)
       val word = element_at(flit, shiftright(p, 5).cast("int") + 1)
       call_function("shiftright", word, (p % 32).cast("int"))
         .bitwiseAND(lit(1L)) =!= lit(0L)
     }.reduce(_ && _)
     docStream
       .select(col(idCol), split(col(textCol), " ").as("__t"))
-      .filter(size(col("__t")) >= shingleN)
+      .filter(size(col("__t")) >= BloomShingleN)
       .select(col(idCol),
-        array_distinct(PortableShingleHash.column(col("__t"), shingleN)).as("__hs"))
+        array_distinct(PortableShingleHash.column(col("__t"), BloomShingleN)).as("__hs"))
       .select(col(idCol),
         size(col("__hs")).cast("long").as("n_shingles"),
         aggregate(col("__hs"), lit(0L),

@@ -61,8 +61,8 @@ object DriftProbe {
         println(s"$d $lbl rows=${feats.count()} dropped=${ag2.getLong(0)} " +
           s"tot=${ag2.getLong(1)} maxBucket=${ag2.getLong(2)}")
       }
-      for ((lbl,k) <- Seq("prefix"->TextDedup.prefixKey(col("text"),TextDedup.EditPrefixLen),
-                          "suffix"->TextDedup.suffixKey(col("text"),TextDedup.EditPrefixLen))) {
+      for ((lbl,k) <- Seq("prefix"->TextDedup.prefixKey(col("text")),
+                          "suffix"->TextDedup.suffixKey(col("text")))) {
         val mx = docs.select(k.as("k")).groupBy("k").agg(count(lit(1)).as("n")).agg(max("n")).head().getLong(0)
         println(s"$d edit $lbl max=$mx")
       }

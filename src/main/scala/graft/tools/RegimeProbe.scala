@@ -95,7 +95,7 @@ object RegimeProbe {
       // stage is the driver-only number a cluster driver would pay.
       System.gc(); resetPeaks()
       val before = heapUsedMb()
-      val q = Similarity.portableQuantized(emb, "vec_id", "embedding", 10000)
+      val q = Similarity.portableQuantized(emb, "vec_id", "embedding")
         .select(col("vec_id"), col("__qv"))
       val m = Similarity.packedVerifyMap(Seq(q))
       System.gc()

@@ -52,17 +52,17 @@ class DriftGuardSpec extends AnyFunSuite {
 
   test("embeddings stay 64-dimensional (the quantized replay's range(1, 65) contract)") {
     // every quantized-embedding DuckDB text unrolls the dot product over
-    // range(1, 65), and the Spark operators default dim = 64 — a regen
-    // that changes the vector width would fail far from the cause
-    // (hash mismatches on every embedding entry). Pin the dimension
-    // loudly instead.
+    // range(1, Similarity.EmbedDim + 1), and the Spark operators build
+    // their planes at Similarity.EmbedDim — a regen that changes the
+    // vector width would fail far from the cause (hash mismatches on
+    // every embedding entry). Pin the dimension loudly instead.
     dirs.foreach { d =>
       val emb = Tables.table(spark, d, "embeddings")
       val dims = emb.select(size(col("embedding")).as("n")).distinct()
         .collect().map(_.getInt(0)).toSet
-      assert(dims == Set(64),
-        s"$d: embedding dims drifted to $dims — every quantEmbCte range(1, 65) " +
-          "and dim=64 default must be re-derived together")
+      assert(dims == Set(Similarity.EmbedDim),
+        s"$d: embedding dims drifted to $dims — Similarity.EmbedDim " +
+          s"(${Similarity.EmbedDim}) must move with the data")
     }
   }
 
@@ -95,9 +95,9 @@ class DriftGuardSpec extends AnyFunSuite {
     dirs.foreach { d =>
       val emb = Tables.table(spark, d, "embeddings")
       val (t, b, _) = Similarity.recommendedSearchPoint(emb.count())
-      val planes = Similarity.portableHyperplanes(64, t, b, 11L)
+      val planes = Similarity.portableHyperplanes(Similarity.EmbedDim, t, b, Similarity.PlaneSeed)
       val mx = Similarity.portableBucketKeys(
-          Similarity.portableQuantized(emb, "vec_id", "embedding", 10000)
+          Similarity.portableQuantized(emb, "vec_id", "embedding")
             .select(org.apache.spark.sql.functions.col("vec_id"),
               org.apache.spark.sql.functions.col("__qv")), "vec_id", planes)
         .groupBy("__t", "__bkt").count()
@@ -329,8 +329,8 @@ class DriftGuardSpec extends AnyFunSuite {
   test("edit-distance prefix/suffix block occupancy under cap with margin (q136/q141/q142)") {
     dirs.foreach { d =>
       val docs = Tables.table(spark, d, "documents")
-      Seq("prefix" -> TextDedup.prefixKey(col("text"), TextDedup.EditPrefixLen),
-          "suffix" -> TextDedup.suffixKey(col("text"), TextDedup.EditPrefixLen))
+      Seq("prefix" -> TextDedup.prefixKey(col("text")),
+          "suffix" -> TextDedup.suffixKey(col("text")))
         .foreach { case (label, key) =>
           val mx = docs.select(key.as("k")).groupBy("k").agg(count(lit(1)).as("n"))
             .agg(max("n")).head().getLong(0)

@@ -149,17 +149,18 @@ class RecallSpec extends AnyFunSuite {
   }
 
   test("broadcast-verify row bound derives from the vector dimension (round 14)") {
-    // the former flat 100000L silently encoded dim=64 (53 MB of
-    // array<long> payload); the bound now scales as budget/(dim*4) so a
-    // dim change moves the bound proportionally. Round 15: the
-    // fused single-broadcast verify admits 2x the rows of the r13
-    // two-broadcast point at the SAME measured peak memory. Round 17:
-    // the packed Array[Int] map representation (IntDotLookup.pack,
-    // lossless at the ±10⁴ quantization scale) halves per-row bytes
-    // again — 400k rows at dim 64 inside the same byte budget.
-    assert(Similarity.broadcastVerifyMaxRows(64) == 400000L,
-      "dim=64 must reproduce the measured byte envelope at the packed-Int representation")
-    assert(Similarity.broadcastVerifyMaxRows(512) == 50000L,
+    // the former flat 100000L silently encoded dim = Similarity.EmbedDim
+    // (53 MB of array<long> payload); the bound now scales as
+    // budget/(dim*4) so a dim change moves the bound proportionally.
+    // Round 15: the fused single-broadcast verify admits 2x the rows of
+    // the r13 two-broadcast point at the SAME measured peak memory.
+    // Round 17: the packed Array[Int] map representation
+    // (IntDotLookup.pack, lossless at the ±10⁴ quantization scale)
+    // halves per-row bytes again — 400k rows at EmbedDim inside the same
+    // byte budget.
+    assert(Similarity.broadcastVerifyMaxRows(Similarity.EmbedDim) == 400000L,
+      "dim = Similarity.EmbedDim must reproduce the measured byte envelope at the packed-Int representation")
+    assert(Similarity.broadcastVerifyMaxRows(8 * Similarity.EmbedDim) == 50000L,
       "8x the dimension must shrink the broadcastable row bound 8x")
     assertThrows[IllegalArgumentException](Similarity.broadcastVerifyMaxRows(0))
   }
