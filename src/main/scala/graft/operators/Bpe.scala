@@ -39,7 +39,7 @@ object Bpe {
 
   /** `train` learns from the MaxVocab most frequent words (count desc,
     * word asc) — the driver-side histogram bound. */
-  val MaxVocab = 100000
+  private val MaxVocab = 100000
 
   /** End-of-word sentinel symbol, kept out of any plausible corpus
     * character by the '<'/'>' framing (the Sennrich convention). */

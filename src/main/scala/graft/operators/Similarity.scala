@@ -50,9 +50,9 @@ object Similarity {
     * design point) and the sign-agreement probability of its threshold
     * (cosine 0.25): 1 − arccos(0.25)/π ≈ 0.580 — the inputs of the
     * recall-preserving table rules below. */
-  val PairBaseBits = 6
-  val PairBaseTables = 8
-  val ThresholdPBit: Double = 1.0 - math.acos(0.25) / math.Pi
+  private val PairBaseBits = 6
+  private val PairBaseTables = 8
+  private val ThresholdPBit: Double = 1.0 - math.acos(0.25) / math.Pi
 
   /** Sizing rule for hyperplane-LSH signature width: with n corpus
     * vectors and b bits per table, expected bucket occupancy is n/2^b, so

@@ -907,7 +907,7 @@ object TextDedup {
 
   /** Round budget of [[hashMinLoop]]: pointer jumping converges in
     * O(log diameter) rounds (~20 for a 1M-document chain). */
-  val CcMaxIter = 25
+  private val CcMaxIter = 25
 
   /** The hash-min iteration on an (already cut) edge set — the former
     * inline loop body, factored so the contraction prelude can run it on

@@ -30,7 +30,7 @@ object StreamOps {
 
   /** Event-time watermark of every windowed aggregate, session, join and
     * dedup here. */
-  val Watermark = "10 minutes"
+  private val Watermark = "10 minutes"
 
   /** `userSessions`' inactivity gap; the q89 DuckDB replay spells it as
     * `INTERVAL SessionGapMinutes MINUTE`. */
